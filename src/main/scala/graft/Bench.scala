@@ -186,8 +186,9 @@ object Bench {
     //    overwritten by a g30 solo run because both were "_subset");
     //  - SPARK_GRAFT_BENCH_OUT overrides outright for named experiments.
     val defaultName =
-      if (only.isEmpty) { if (cpus == "32") s"bench_$sf.json" else s"bench_${sf}_c$cpus.json" }
-      else s"bench_${sf}_subset_${selected.size}keys.json"
+      if (only.nonEmpty) s"bench_${sf}_subset_${selected.size}keys.json"
+      else if (cpus == GraftSession.DefaultCpus.toString) s"bench_$sf.json"
+      else s"bench_${sf}_c$cpus.json"
     val benchName = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultName)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(benchName), line.getBytes("UTF-8"))

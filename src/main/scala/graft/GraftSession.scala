@@ -16,8 +16,22 @@ object GraftSession {
     * local[32] regardless of the env (VERDICT r16 item 2). Non-local
     * callers pass their own master and are unaffected.
     */
-  private def defaultMaster: String =
-    s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
+  private def defaultMaster: String = s"local[${cpus(sys.env.get("SPARK_GRAFT_CPUS"))}]"
+
+  /** Local core count when `SPARK_GRAFT_CPUS` is unset; Bench names its
+    * full-sweep artifact without a core suffix only at this count.
+    */
+  val DefaultCpus = 32
+
+  /** `SPARK_GRAFT_CPUS` checked before it reaches a master string or an
+    * artifact name: unset means [[DefaultCpus]], anything but a positive
+    * integer fails fast instead of surfacing as a malformed `local[...]`.
+    */
+  def cpus(env: Option[String]): Int = env match {
+    case None => DefaultCpus
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$v'"))
+  }
 
   def create(appName: String = "graft", master: String = null): SparkSession = {
     val master0 = Option(master).getOrElse(defaultMaster)

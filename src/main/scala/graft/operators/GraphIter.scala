@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -11,73 +11,55 @@ import graft.Tables
   * discovery / influence ranking become synchronous iterations over an edge
   * DataFrame: each superstep is a bounded number of shuffles keyed by the
   * node id, every frontier/label set is localCheckpoint'ed so lineage stays
-  * O(1) in the iteration count, and convergence checks are scalar actions.
+  * O(1) in the iteration count. A convergence-driven loop either observes
+  * convergence on the pin job itself ([[connectedComponents]]) or reads it
+  * with a scalar action after the pin.
+  * A pinned frame plans as `Scan ExistingRDD` with unknown partitioning, so
+  * a pin never saves the next superstep's exchange on its key.
   */
 object GraphIter {
 
   /** Hash-min connected components over an undirected edge list.
     *
-    * Label = min node-id reachable; each superstep propagates neighbor
-    * minima (one shuffle for the message join, one for the min-aggregate)
-    * and converges in O(diameter) supersteps. Works on any (src, dst)
-    * string edge set.
+    * Label = min node-id reachable; converges in O(diameter) supersteps.
+    * Pregel-style, the state is one pinned row per node that carries its
+    * distinct neighbours next to its label, so the static edges never move
+    * again: a superstep explodes the lists into (neighbour, label) messages,
+    * unions them with the state rows and runs one min-aggregate by node —
+    * one exchange, then the pin. The pin job also counts the nodes whose
+    * label dropped (a `Dataset.observe` metric), so convergence costs no
+    * extra action. Works on any (src, dst) edge set, numeric or string ids.
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      // Repartition BEFORE deduping: HashPartitioning(dst) satisfies the
-      // (src, dst) clustering, so the dedup aggregate reuses the pinned
-      // message-join layout (localCheckpoint preserves outputPartitioning)
-      // instead of adding its own exchange.
-      .repartition(col("dst"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
     // Superstep 1 fused into the init: with identity labels the first
-    // min-propagation is exactly least(node, min neighbor), one aggregate
-    // over the edges — no materialized step-0 label table, no first
-    // message join. Every node appears as a src (sym is symmetric), so
-    // coverage is identical.
-    var labels = sym.groupBy(col("src").as("node")).agg(min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"))
+    // min-propagation is exactly least(node, min neighbour). Every node
+    // appears as a src (sym is symmetric), so coverage is complete.
+    var state = sym.groupBy(col("src").as("node"))
+      .agg(collect_set(col("dst")).as("nbrs"), min(col("dst")).as("mn"))
+      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs"))
       .localCheckpoint(true)
-    // Convergence: hash-min labels are monotone non-increasing per node
-    // and the node set is fixed, so for NUMERIC node ids the exact
-    // decimal sum of all labels strictly decreases iff any label changed
-    // — one shuffle-free aggregate over the just-checkpointed table
-    // replaces the per-iteration join+compare (which string-labeled
-    // graphs still use; decimal(38,0) keeps the sum exact far beyond
-    // any realistic node-id range, unlike a wrapping long sum).
-    val numericIds = labels.schema("label").dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = if (numericIds) labelSum(labels) else null
-    var converged = false
-    while (!converged) {
-      val msgs = sym
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("label"))
-      val next = labels.unionByName(msgs)
+    var changed = 1L
+    while (changed > 0) {
+      val obs = Observation()
+      // Each state row keeps its own label as `prev`; messages leave it null.
+      val next = state.withColumn("prev", col("label"))
+        .unionByName(state.select(explode(col("nbrs")).as("node"), col("label")),
+          allowMissingColumns = true)
         .groupBy("node")
-        .agg(min(col("label")).as("label"))
+        .agg(min(col("label")).as("label"), min(col("prev")).as("prev"),
+          first(col("nbrs"), ignoreNulls = true).as("nbrs"))
+        .observe(obs, count(when(col("label") < col("prev"), 1)).as("changed"))
+        .drop("prev")
         .localCheckpoint(true)
-      if (numericIds) {
-        val s = labelSum(next)
-        // Null sums = empty label table (empty edge input): converged.
-        converged = (s == null && prevSum == null) ||
-          (s != null && prevSum != null && s.compareTo(prevSum) == 0)
-        prevSum = s
-      } else {
-        converged = next
-          .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-          .filter(col("label") =!= col("prev"))
-          .isEmpty
-      }
-      labels.unpersist()
-      labels = next
+      // Labels never rise, so 0 drops is the fixpoint (a null count, from
+      // an empty input, unboxes to 0 too).
+      changed = obs.get("changed").asInstanceOf[Long]
+      state.unpersist()
+      state = next
     }
-    sym.unpersist()
-    labels
+    state.select(col("node"), col("label"))
   }
 
   /** INCREMENTAL connected components: fold a batch of NEW edges into an
@@ -226,12 +208,10 @@ object GraphIter {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    // Degree attached by a window count partitioned on the join key: ONE
-    // exchange both computes deg and pins the edge layout on src (the
-    // groupBy + self-join + explicit repartition it replaces cost two
-    // more). Dataset.localCheckpoint preserves outputPartitioning, so
-    // every superstep's join re-uses this layout and only the (small)
-    // rank table moves.
+    // Degree attached by a window count partitioned on src: ONE exchange
+    // computes deg (the groupBy + self-join it replaces cost two more).
+    // The pinned frame plans with unknown partitioning, so every
+    // superstep's join re-shuffles withDeg alongside the rank table.
     val withDeg = sym
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .localCheckpoint(true)

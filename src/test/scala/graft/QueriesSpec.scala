@@ -1746,6 +1746,60 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r(105L).contains(30L))
   }
 
+  // A 40-node string chain whose minimum id ("n00") sits at one end, so the
+  // label must travel all 39 hops; plus a second component and a self-loop.
+  private def stringChain(): org.apache.spark.sql.DataFrame = {
+    val ss = spark; import ss.implicits._
+    val chain = (0 until 39).map(i => (f"n${i + 1}%02d", f"n$i%02d"))
+    (chain ++ Seq(("x3", "x2"), ("x2", "x1"), ("s", "s"))).toDF("src", "dst")
+  }
+
+  test("connectedComponents labels a string-id graph exactly") {
+    val got = operators.GraphIter.connectedComponents(stringChain())
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = (0 until 40).map(i => f"n$i%02d" -> "n00").toMap ++
+      Seq("x1", "x2", "x3").map(_ -> "x1") + ("s" -> "s")
+    assert(got === want)
+  }
+
+  test("connectedComponents of an empty edge frame is empty") {
+    val ss = spark; import ss.implicits._
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(operators.GraphIter.connectedComponents(edges).collect().isEmpty)
+  }
+
+  test("connectedComponents runs at most 2 jobs per superstep") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        marks.add(Option(e.properties).flatMap(p => Option(p.getProperty("cc.mark"))).getOrElse(""))
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty("cc.mark", m)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty("cc.mark", null)
+    }
+    val edges = stringChain()
+    sc.addSparkListener(listener)
+    try {
+      mark("start")
+      operators.GraphIter.connectedComponents(edges)
+      mark("end")
+      // Listener delivery is asynchronous but ordered: once the end mark
+      // has arrived, every job between the marks has too.
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!marks.contains("end") && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    val seen = marks.toArray.toSeq.map(_.toString)
+    assert(seen.contains("end"), "end mark never reached the listener")
+    val jobs = seen.indexOf("end") - seen.indexOf("start") - 1
+    // 40 supersteps: the fused init plus 39 rounds (38 that move the
+    // label one hop, one that sees no change).
+    assert(jobs <= 2 * 40 + 4, s"$jobs jobs for 40 supersteps")
+  }
+
   test("g15 incremental CC is bit-identical to a full recompute") {
     val ss = spark; import ss.implicits._
     // Base: two components {1,2,3} and {10,11}; batch bridges 3-10 and
