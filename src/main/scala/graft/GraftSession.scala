@@ -131,12 +131,9 @@ object GraftSession {
     * retain — keep it to aggregates orders of magnitude smaller than the
     * corpus.
     */
-  def retainCheckpoint(df: DataFrame): DataFrame = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val appId = sc.applicationId
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = true)
-    sc.getPersistentRDDs.keySet.filterNot(before).foreach(id => retainedIds.add((appId, id)))
+  def retainCheckpoint(df: DataFrame): DataFrame = {
+    val out = Superstep.pin(df)
+    retainedIds.add((df.sparkSession.sparkContext.applicationId, Superstep.rddOf(out).id))
     out
   }
 }

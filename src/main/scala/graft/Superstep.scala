@@ -1,0 +1,98 @@
+package graft
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, count, when}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The engine's one superstep primitive: how an iterative operator pins
+  * its state, learns that it is done, and gives the blocks back.
+  *
+  * A pin is an eager `localCheckpoint`: lineage stops at the pin and its
+  * partitions are computed exactly once. A pinned frame plans as `Scan
+  * ExistingRDD` with unknown partitioning, so a pin never saves the next
+  * superstep's exchange on its key. `Dataset.unpersist` frees nothing for a
+  * pin (the blocks belong to the RDD under its `LogicalRDD`, not to the
+  * cache manager); [[release]] frees them through that RDD. Pins nobody
+  * releases are swept by [[GraftSession.releaseCaches]] after the query.
+  */
+object Superstep {
+
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** [[pin]] that also evaluates the aggregate `metrics` on the pin job
+    * itself (`Dataset.observe`, read from a fresh `Observation`), so a
+    * row count, a convergence count or a max costs no extra action. Values
+    * come back as Longs in argument order; an aggregate over no rows that
+    * yields null (a sum or max, or any metric of an input with no
+    * partitions) reads as 0.
+    */
+  def pin(df: DataFrame, metric: Column, more: Column*): (DataFrame, IndexedSeq[Long]) =
+    pinObserved(df, metric +: more, identity)
+
+  /** Observes `metrics` on `df`, then pins `finish` of it: the metrics may
+    * read columns `finish` drops, which are then never stored.
+    */
+  private def pinObserved(df: DataFrame, metrics: Seq[Column],
+      finish: DataFrame => DataFrame): (DataFrame, IndexedSeq[Long]) = {
+    val obs = Observation()
+    val names = metrics.indices.map(i => s"m$i")
+    val named = metrics.zip(names).map { case (c, n) => c.as(n) }
+    val pinned = pin(finish(df.observe(obs, named.head, named.tail: _*)))
+    val values = obs.get
+    (pinned, names.map(n => values.get(n) match {
+      case Some(v: Number) => v.longValue
+      case _ => 0L
+    }))
+  }
+
+  /** Frees a pin's blocks now. Only release a pin once everything still
+    * read from it, by the caller or by what it returns, was itself pinned
+    * eagerly after it: a lazy frame over a released pin fails when run.
+    */
+  def release(pinned: DataFrame): Unit = rddOf(pinned).unpersist(blocking = false)
+
+  private[graft] def rddOf(pinned: DataFrame): RDD[_] = pinned.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd
+    case p => throw new IllegalArgumentException(s"not a pinned frame: ${p.nodeName}")
+  }
+
+  /** The replace-state loop: `state = step(state, r)` for each round `r`
+    * of `rounds`. Round `r` is pinned when `r % cadence == 0`; rounds in
+    * between stay lazy and fuse into the next pin's job. With `progress`,
+    * the name of a boolean column the step emits to flag each row that
+    * still moved, every pinned round counts the flagged rows on the pin
+    * job, and a pinned round with none ends the loop; the flag column is
+    * dropped from the state, so it is never stored. Each pin the loop
+    * takes is released once the next one lands; `init` stays the
+    * caller's. Returns the final state (pinned iff its round was) and
+    * whether a round without progress ended the loop.
+    */
+  def iterate(init: DataFrame, rounds: Range, cadence: Int = 1, progress: Option[String] = None)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    require(cadence >= 1, s"cadence must be >= 1, got $cadence")
+    var state = init
+    var lastPin: Option[DataFrame] = None
+    var converged = false
+    val it = rounds.iterator
+    while (!converged && it.hasNext) {
+      val r = it.next()
+      val next = step(state, r)
+      state =
+        if (r % cadence != 0) progress.fold(next)(next.drop)
+        else {
+          val pinned = progress match {
+            case Some(flag) =>
+              val (df, Seq(n)) = pinObserved(next, Seq(count(when(col(flag), 1))), _.drop(flag))
+              converged = n == 0
+              df
+            case None => pin(next)
+          }
+          lastPin.foreach(release)
+          lastPin = Some(pinned)
+          pinned
+        }
+    }
+    (state, converged)
+  }
+}

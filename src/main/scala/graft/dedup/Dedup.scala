@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Deduplication family for the training-data pipeline.
   *
@@ -757,7 +757,7 @@ object Dedup {
       val overMass = massOf(k.join(overGroups, Seq("grp"), "left_semi"))
       val splitMass = massOf(over)
       if (splitMass * 2 <= overMass) small.unionByName(over)
-      else { over.unpersist(); k }
+      else { Superstep.release(over); k }
     }
   }
 
@@ -990,7 +990,7 @@ object Dedup {
     require(numHashes % startBands == 0 && numHashes % minBands == 0,
       s"band widths must divide numHashes=$numHashes: startBands=$startBands minBands=$minBands")
     var b = startBands
-    var keyed = keyedAt(b).localCheckpoint(true)
+    var keyed = Superstep.pin(keyedAt(b))
     def probe(k: DataFrame): (Long, Long) = {
       val r = k.groupBy("grp").agg(count(lit(1)).as("gsz"))
         .agg(
@@ -1004,13 +1004,14 @@ object Dedup {
     // probe so later iterations only re-measure the candidate mass.
     val nItems = math.max(rows / math.max(b, 1), 1L)
     while (mass > candFactor * nItems && b > minBands) {
-      keyed.unpersist()
+      // The next width re-slices the stored signatures, not `keyed`.
+      Superstep.release(keyed)
       // Clamp at the recall floor; if the clamped halving doesn't divide
       // numHashes (possible only from a non-power-of-two start), jump
       // straight to minBands, which the entry check proved divides.
       val next = math.max(b / 2, minBands)
       b = if (numHashes % next == 0) next else minBands
-      keyed = keyedAt(b).localCheckpoint(true)
+      keyed = Superstep.pin(keyedAt(b))
       mass = probe(keyed)._1
     }
     keyed

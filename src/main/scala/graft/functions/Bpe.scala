@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Distributed BPE VOCABULARY TRAINING (Sennrich, Haddow & Birch 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
@@ -66,7 +66,7 @@ object Bpe {
     val spark = vocab.sparkSession
     import spark.implicits._
     val byWord = Window.partitionBy("word").orderBy("pos")
-    var seq = charSeq(vocab).localCheckpoint(true)
+    var seq = Superstep.pin(charSeq(vocab))
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var round = 1
     var continue = true
@@ -82,13 +82,13 @@ object Bpe {
       else {
         val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((round, l, r, cnt))
-        val next = mergePass(seq, l, r).localCheckpoint(true)
-        seq.unpersist()
+        val next = Superstep.pin(mergePass(seq, l, r))
+        Superstep.release(seq)
         seq = next
         round += 1
       }
     }
-    seq.unpersist()
+    Superstep.release(seq)
     merges.toSeq.toDF("round", "lhs", "rhs", "pair_cnt")
   }
 
@@ -161,28 +161,13 @@ object Bpe {
       merges: Seq[(String, String)],
       checkpointEvery: Int = 1): DataFrame = {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val init = words.select(col("word"),
+    val init = Superstep.pin(words.select(col("word"),
       explode(sequence(lit(1), length(col("word")))).as("pos"))
       .select(col("word"), col("pos"),
-        col("word").substr(col("pos"), lit(1)).as("sym"))
-      .localCheckpoint(true)
-    // `anchored` owns the storage blocks of the most recent pin; the tail
-    // of the chain past it stays lazy and is evaluated exactly once, by
-    // the consumer's single action (the final pin's blocks are released
-    // by the session's per-query releaseCaches, as before).
-    var anchored = init
-    var seq = init
-    var sincePin = 0
-    merges.foreach { case (l, r) =>
-      seq = mergePass(seq, l, r)
-      sincePin += 1
-      if (sincePin >= checkpointEvery) {
-        val pinned = seq.localCheckpoint(true)
-        anchored.unpersist()
-        anchored = pinned
-        seq = pinned
-        sincePin = 0
-      }
+        col("word").substr(col("pos"), lit(1)).as("sym")))
+    val ms = merges.toIndexedSeq
+    val (seq, _) = Superstep.iterate(init, 1 to ms.size, cadence = checkpointEvery) {
+      (seq, r) => mergePass(seq, ms(r - 1)._1, ms(r - 1)._2)
     }
     // The FINAL state is always pinned: consumers reference the piece
     // table more than once (t33's two-level prefix sum and t34's
@@ -190,12 +175,10 @@ object Bpe {
     // reference would re-evaluate every pass since the last pin —
     // measured at sf0.1 as a consistent t34 regression (5.3 → 7.6 s)
     // when a fully-fused cut (checkpointEvery = 8) landed without it.
-    if (sincePin > 0) {
-      val pinned = seq.localCheckpoint(true)
-      anchored.unpersist()
-      seq = pinned
-    }
-    seq.groupBy("word").agg(count(lit(1)).as("n_pieces"))
+    // The loop's own last pin, if any, then waits for releaseCaches.
+    val pieces = if (ms.size % checkpointEvery == 0) seq else Superstep.pin(seq)
+    if (ms.nonEmpty) Superstep.release(init)
+    pieces.groupBy("word").agg(count(lit(1)).as("n_pieces"))
   }
 
   /** The corpus vocabulary: lowercase alpha tokens of 2..12 chars,

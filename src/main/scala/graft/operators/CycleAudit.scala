@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Cycle audit over a DIRECTED PARENT-POINTER (functional) graph — the
   * referential-integrity sibling of h6's FK audit, and the ingest gate
@@ -60,26 +60,24 @@ object CycleAudit {
       edges: DataFrame,
       peelRounds: Int = 16,
       doublings: Int = 5): DataFrame = {
-    var e = edges.select(col("child"), col("parent"))
-      .dropDuplicates("child", "parent")
-      .localCheckpoint(true)
+    var (e, Seq(cnt)) = Superstep.pin(edges.select(col("child"), col("parent"))
+      .dropDuplicates("child", "parent"), count(lit(1)))
     // +1: the extra round is the FIXPOINT CERTIFICATE — an undersized
     // lever must refuse loudly, not return tree tails as "ring members"
     // (the loud-refusal discipline of g8/g29). A peel round that removes
     // nothing proves every survivor ends arbitrarily long incoming
-    // chains, i.e. the survivor set IS the ring-edge set; the check is
-    // one count over the (small, post-peel) survivor table.
+    // chains, i.e. the survivor set IS the ring-edge set; each round's
+    // survivor count is a metric on its pin job.
     var prevCnt = -1L
-    var cnt = e.count()
     var r = 0
     while (r <= peelRounds && cnt != prevCnt) {
       r += 1
-      val next = e.join(
-        e.select(col("parent").as("child")).distinct(), Seq("child"), "left_semi")
-        .localCheckpoint(true)
+      val (next, Seq(n)) = Superstep.pin(e.join(
+        e.select(col("parent").as("child")).distinct(), Seq("child"), "left_semi"),
+        count(lit(1)))
       prevCnt = cnt
-      cnt = next.count()
-      e.unpersist()
+      cnt = n
+      Superstep.release(e)
       e = next
     }
     require(cnt == prevCnt,
@@ -87,27 +85,25 @@ object CycleAudit {
         s"rounds ($prevCnt→$cnt edges) — an acyclic chain longer than the lever " +
         "would be misreported as ring members; raise peelRounds")
     // Survivors are ring edges: seed the doubling state with 1-step
-    // coverage, then double until 2^doublings.
-    var st = e.select(col("child").as("node"), col("parent").as("anc"),
-      least(col("child"), col("parent")).as("mn"))
-      .localCheckpoint(true)
-    (1 to doublings).foreach { _ =>
-      val st2 = st.select(col("node").as("anc"), col("anc").as("anc2"),
-        col("mn").as("mn2"))
-      val next = st.join(st2, Seq("anc"))
-        .select(col("node"), col("anc2").as("anc"),
-          least(col("mn"), col("mn2")).as("mn"))
-        .localCheckpoint(true)
-      st.unpersist()
-      st = next
-    }
-    // Fixpoint certificate for the label pass: one more doubling must not
-    // lower any node's min — otherwise a ring longer than 2^doublings got
-    // inconsistent non-minimum labels and the lever must be raised. The
-    // state is O(ring nodes); the check is one self-join over it.
-    val st2 = st.select(col("node").as("anc"), col("mn").as("mn2"))
-    val lowered = st.join(st2, Seq("anc")).filter(col("mn2") < col("mn"))
-    require(lowered.isEmpty,
+    // coverage, then double until no min drops, for at most doublings + 1
+    // rounds. A round that lowers no node's min is the fixpoint
+    // certificate for the label pass, and every later round would lower
+    // none either (each node's min is already no greater than its
+    // ancestor's), so stopping there is exact. No such round within the
+    // cap means a ring longer than 2^doublings got inconsistent
+    // non-minimum labels, and the lever must be raised.
+    val st0 = Superstep.pin(e.select(col("child").as("node"), col("parent").as("anc"),
+      least(col("child"), col("parent")).as("mn")))
+    Superstep.release(e)
+    val (st, converged) =
+      Superstep.iterate(st0, 1 to doublings + 1, progress = Some("lowered")) { (st, _) =>
+        st.join(st.select(col("node").as("anc"), col("anc").as("anc2"), col("mn").as("mn2")),
+            Seq("anc"))
+          .select(col("node"), col("anc2").as("anc"),
+            least(col("mn"), col("mn2")).as("mn"), (col("mn2") < col("mn")).as("lowered"))
+      }
+    Superstep.release(st0)
+    require(converged,
       s"cycleMembers: min-labels still improving after doublings=$doublings " +
         s"(coverage 2^$doublings) — a ring longer than the coverage holds " +
         "inconsistent labels; raise doublings")
@@ -150,14 +146,12 @@ object CycleAudit {
       edges: DataFrame,
       iterations: Int = 6,
       maxRounds: Int = 64): DataFrame = {
-    var live = edges.select(col("src"), col("dst"))
-      .dropDuplicates("src", "dst").localCheckpoint(true)
-    var nodes = live.select(col("src").as("node"))
+    var live = Superstep.pin(edges.select(col("src"), col("dst")).dropDuplicates("src", "dst"))
+    var (nodes, Seq(nCnt)) = Superstep.pin(live.select(col("src").as("node"))
       .unionByName(live.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct(), count(lit(1)))
     val settled = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var i = 0
-    var nCnt = nodes.count()
     while (i < iterations && nCnt > 0) {
       // 0. TRIM (the FW-BW-Trim refinement — Orzan's coloring family,
       // r17): a node with no incoming or no outgoing LIVE edge cannot
@@ -173,22 +167,18 @@ object CycleAudit {
       // settles as (node, node) on both paths (root = itself).
       var trimming = true
       while (trimming && nCnt > 0) {
-        val keep = nodes
+        val (keep, Seq(kCnt)) = Superstep.pin(nodes
           .join(live.select(col("src").as("node")), Seq("node"), "left_semi")
-          .join(live.select(col("dst").as("node")), Seq("node"), "left_semi")
-          .localCheckpoint(true)
-        val kCnt = keep.count()
-        if (kCnt == nCnt) { keep.unpersist(); trimming = false }
+          .join(live.select(col("dst").as("node")), Seq("node"), "left_semi"),
+          count(lit(1)))
+        if (kCnt == nCnt) { Superstep.release(keep); trimming = false }
         else {
-          val singles = nodes.join(keep, Seq("node"), "left_anti")
-            .select(col("node"), col("node").as("scc_id"))
-            .localCheckpoint(true)
-          settled += singles
-          val liveNext = live
+          settled += Superstep.pin(nodes.join(keep, Seq("node"), "left_anti")
+            .select(col("node"), col("node").as("scc_id")))
+          val liveNext = Superstep.pin(live
             .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(true)
-          nodes.unpersist(); live.unpersist()
+            .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+          Superstep.release(nodes); Superstep.release(live)
           nodes = keep; live = liveNext; nCnt = kCnt
         }
       }
@@ -201,11 +191,10 @@ object CycleAudit {
       // all-singletons with no error — so truncation refuses loudly with
       // the lever to raise instead of proceeding to settle.
       val colors = try {
-        GraphIter.minRelaxTraverse(
+        Superstep.pin(GraphIter.minRelaxTraverse(
           live, nodes.select(col("node"), col("node").as("state")),
           maxRounds, requireConverged = true)((s, _) => s)
-          .select(col("node"), col("state").as("color"))
-          .localCheckpoint(true)
+          .select(col("node"), col("state").as("color")))
       } catch {
         case ex: IllegalStateException =>
           throw new IllegalStateException(
@@ -232,30 +221,27 @@ object CycleAudit {
             s"stronglyConnected: the settle pass was truncated at maxRounds=$maxRounds " +
               "before its backward reach converged; raise `maxRounds`, not `iterations`", ex)
       }
-      val scc = reached.join(colors, Seq("node"))
-        .select(col("node"), col("color").as("scc_id"))
-        .localCheckpoint(true)
+      val scc = Superstep.pin(reached.join(colors, Seq("node"))
+        .select(col("node"), col("color").as("scc_id")))
       settled += scc
       // 3. Peel: survivors only.
-      val remaining = nodes.join(scc.select("node"), Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      val liveNext = live
+      val (remaining, Seq(rCnt)) = Superstep.pin(
+        nodes.join(scc.select("node"), Seq("node"), "left_anti"), count(lit(1)))
+      val liveNext = Superstep.pin(live
         .join(remaining.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(remaining.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
-      nodes.unpersist(); live.unpersist(); colors.unpersist()
+        .join(remaining.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      Seq(nodes, live, colors).foreach(Superstep.release)
       nodes = remaining
       live = liveNext
-      nCnt = remaining.count()
+      nCnt = rCnt
       i += 1
       }
     }
     require(nCnt == 0,
       s"stronglyConnected: nodes still unsettled after $iterations iterations — " +
         "the SCC condensation is deeper than the lever; raise `iterations`")
-    val out = settled.reduce(_.unionByName(_)).localCheckpoint(true)
-    settled.foreach(s => if (s ne out) s.unpersist())
-    nodes.unpersist(); live.unpersist()
+    val out = Superstep.pin(settled.reduce(_.unionByName(_)))
+    (settled ++ Seq(nodes, live)).foreach(Superstep.release)
     out
   }
 

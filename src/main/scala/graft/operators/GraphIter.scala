@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Iterative graph analytics as DataFrame loops (Pregel-style).
   *
@@ -10,14 +10,23 @@ import graft.Tables
   * there; at 100 TB an OLTP graph store is not an option, so community
   * discovery / influence ranking become synchronous iterations over an edge
   * DataFrame: each superstep is a bounded number of shuffles keyed by the
-  * node id, every frontier/label set is localCheckpoint'ed so lineage stays
-  * O(1) in the iteration count. A convergence-driven loop either observes
-  * convergence on the pin job itself ([[connectedComponents]]) or reads it
-  * with a scalar action after the pin.
-  * A pinned frame plans as `Scan ExistingRDD` with unknown partitioning, so
-  * a pin never saves the next superstep's exchange on its key.
+  * node id, every frontier/label set is pinned ([[graft.Superstep]]) so
+  * lineage stays O(1) in the iteration count. A convergence-driven loop
+  * reads its progress from a metric on the pin job, never from an extra
+  * action, and releases each superseded pin as the next one lands.
   */
 object GraphIter {
+
+  /** The undirected edge list as a pinned, deduplicated symmetric
+    * `(src, dst)` table. Repartition BEFORE deduping: HashPartitioning(src)
+    * satisfies the (src, dst) clustering, so the dedup reuses the probe
+    * layout instead of adding its own exchange.
+    */
+  private def pinnedSym(edges: DataFrame): DataFrame = Superstep.pin(
+    edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("src"))
+      .dropDuplicates("src", "dst"))
 
   /** Hash-min connected components over an undirected edge list.
     *
@@ -36,29 +45,22 @@ object GraphIter {
     // Superstep 1 fused into the init: with identity labels the first
     // min-propagation is exactly least(node, min neighbour). Every node
     // appears as a src (sym is symmetric), so coverage is complete.
-    var state = sym.groupBy(col("src").as("node"))
+    val init = Superstep.pin(sym.groupBy(col("src").as("node"))
       .agg(collect_set(col("dst")).as("nbrs"), min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      val obs = Observation()
-      // Each state row keeps its own label as `prev`; messages leave it null.
-      val next = state.withColumn("prev", col("label"))
-        .unionByName(state.select(explode(col("nbrs")).as("node"), col("label")),
-          allowMissingColumns = true)
-        .groupBy("node")
-        .agg(min(col("label")).as("label"), min(col("prev")).as("prev"),
-          first(col("nbrs"), ignoreNulls = true).as("nbrs"))
-        .observe(obs, count(when(col("label") < col("prev"), 1)).as("changed"))
-        .drop("prev")
-        .localCheckpoint(true)
-      // Labels never rise, so 0 drops is the fixpoint (a null count, from
-      // an empty input, unboxes to 0 too).
-      changed = obs.get("changed").asInstanceOf[Long]
-      state.unpersist()
-      state = next
+      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")))
+    // Labels never rise, so a superstep with no label drop is the fixpoint.
+    val (state, _) = Superstep.iterate(init, 1 to Int.MaxValue, progress = Some("dropped")) {
+      (s, _) =>
+        // Each state row keeps its own label as `prev`; messages leave it null.
+        s.withColumn("prev", col("label"))
+          .unionByName(s.select(explode(col("nbrs")).as("node"), col("label")),
+            allowMissingColumns = true)
+          .groupBy("node")
+          .agg(min(col("label")).as("label"), min(col("prev")).as("prev"),
+            first(col("nbrs"), ignoreNulls = true).as("nbrs"))
+          .select(col("node"), col("label"), col("nbrs"), (col("label") < col("prev")).as("dropped"))
     }
+    Superstep.release(init)
     state.select(col("node"), col("label"))
   }
 
@@ -97,10 +99,8 @@ object GraphIter {
     // New nodes enter the store with their (possibly merged) self-label.
     val withNew = labels.unionByName(
       nodeLab.join(labels, Seq("node"), "left_anti"))
-    val out = withNew.join(mapping, Seq("label"), "left")
+    withNew.join(mapping, Seq("label"), "left")
       .select(col("node"), coalesce(col("merged"), col("label")).as("label"))
-    nodeLab.unpersist()
-    out
   }
 
   /** g15: [[incrementalCC]] driver-keyed — the customer–supplier graph
@@ -153,7 +153,7 @@ object GraphIter {
     * count (deterministic — no convergence-dependent output). Degrees and
     * the symmetric edge set are computed once and checkpointed; each
     * iteration is one join + one aggregate, with lineage truncated every
-    * superstep so the 10-step plan never grows.
+    * 5th superstep so the plan never grows past 5 steps.
     */
   def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
@@ -162,32 +162,21 @@ object GraphIter {
     val withDeg = sym
       .join(sym.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
       .localCheckpoint(true)
-    var ranks = withDeg.select(col("src").as("node")).distinct()
-      .withColumn("rank", lit(1.0))
-      .localCheckpoint(true)
-    var lastCheckpoint = ranks
-    // Checkpoint every 5th superstep, not every one: between checkpoints
-    // the iterations stay lazy and fuse into a single multi-shuffle job,
-    // while the periodic materialization keeps lineage and plan size
-    // bounded for arbitrary iteration counts. Each eager checkpoint is a
-    // full materialization (~fixed cost regardless of graph size on small
-    // inputs), so the cadence is the knob trading plan depth against
-    // per-superstep overhead.
-    for (it <- 1 to iterations) {
-      var next = withDeg
+    val init = Superstep.pin(withDeg.select(col("src").as("node")).distinct()
+      .withColumn("rank", lit(1.0)))
+    // Pin every 5th superstep, not every one: between pins the iterations
+    // stay lazy and fuse into a single multi-shuffle job, while the
+    // periodic materialization keeps lineage and plan size bounded for
+    // arbitrary iteration counts. Each pin is a full materialization
+    // (~fixed cost regardless of graph size on small inputs), so the
+    // cadence trades plan depth against per-superstep overhead.
+    Superstep.iterate(init, 1 to iterations, cadence = 5) { (ranks, _) =>
+      withDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("contrib"))
         .groupBy("node")
         .agg((lit(1.0 - damping) + lit(damping) * sum(col("contrib"))).as("rank"))
-      if (it % 5 == 0 || it == iterations) {
-        next = next.localCheckpoint(true)
-        lastCheckpoint.unpersist()
-        lastCheckpoint = next
-      }
-      ranks = next
-    }
-    withDeg.unpersist()
-    ranks
+    }._1
   }
 
   /** Fixed-point PageRank: ranks in integer micro-units (1e6 = 1.0),
@@ -200,10 +189,7 @@ object GraphIter {
     * what you want at 100 TB where a nondeterministic re-run diff is a
     * debugging nightmare.
     */
-  def pageRankMicro(
-      edges: DataFrame,
-      iterations: Int = 10,
-      checkpointCadence: Int = 10): DataFrame = {
+  def pageRankMicro(edges: DataFrame, iterations: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -221,37 +207,22 @@ object GraphIter {
     // aggregate straight off the checkpointed edges, with no rank table
     // to materialize and no first join. Every node appears as a dst (sym
     // is symmetric), so coverage is identical.
-    var ranks = withDeg
+    val init = withDeg
       .select(col("dst").as("node"), expr("1000000 DIV deg").as("contrib"))
       .groupBy("node")
       .agg(expr("150000 + (85 * sum(contrib)) DIV 100").as("rank"))
-    var lastCheckpoint: DataFrame = null
-    if (iterations <= 1) {
-      ranks = ranks.localCheckpoint(true)
-      lastCheckpoint = ranks
-    }
-    // Cadence trades plan depth against per-superstep materialization:
-    // between checkpoints the supersteps stay lazy and fuse into one
-    // multi-shuffle job; each eager checkpoint is a full materialization
-    // whose fixed cost dominates small-graph runs. Default 10 = a fixed
-    // 10-iteration ranking materializes exactly once, at the end; long or
-    // convergence-driven runs should pass a lower cadence to bound
-    // lineage.
-    for (it <- 2 to iterations) {
-      var next = withDeg
+    // Iteration `it` is pinned when it is a multiple of 10: between pins
+    // the supersteps stay lazy and fuse into one multi-shuffle job; each
+    // pin is a full materialization whose fixed cost dominates
+    // small-graph runs. The fixed 10-iteration ranking materializes
+    // exactly once, at the end.
+    Superstep.iterate(init, 2 to iterations, cadence = 10) { (ranks, _) =>
+      withDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), expr("rank DIV deg").as("contrib"))
         .groupBy("node")
         .agg(expr("150000 + (85 * sum(contrib)) DIV 100").as("rank"))
-      if (it % checkpointCadence == 0 || it == iterations) {
-        next = next.localCheckpoint(true)
-        if (lastCheckpoint != null) lastCheckpoint.unpersist()
-        lastCheckpoint = next
-      }
-      ranks = next
-    }
-    withDeg.unpersist()
-    ranks
+    }._1
   }
 
   /** g6: influence ranking on the customer–supplier bipartite graph
@@ -299,10 +270,7 @@ object GraphIter {
     * no full-outer join, no broadcast constraint.
     */
   def personalizedPageRankMicro(
-      edges: DataFrame,
-      seeds: DataFrame,
-      iterations: Int = 6,
-      checkpointCadence: Int = 3): DataFrame = {
+      edges: DataFrame, seeds: DataFrame, iterations: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -311,27 +279,18 @@ object GraphIter {
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .localCheckpoint(true)
     val seedBase = seeds.select(col("node"), lit(150000L).as("v")).localCheckpoint(true)
-    var ranks = seeds.select(col("node"), lit(1000000L).as("rank"))
-    var lastCheckpoint: DataFrame = null
-    for (it <- 1 to iterations) {
-      val flow = withDeg
+    // Every 3rd superstep is pinned, so the default 6 supersteps end on a pin.
+    Superstep.iterate(seeds.select(col("node"), lit(1000000L).as("rank")),
+        1 to iterations, cadence = 3) { (ranks, _) =>
+      withDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), expr("rank DIV deg").as("contrib"))
         .groupBy("node")
         .agg(expr("(85 * sum(contrib)) DIV 100").as("v"))
-      var next = flow.unionByName(seedBase)
+        .unionByName(seedBase)
         .groupBy("node")
         .agg(sum(col("v")).as("rank"))
-      if (it % checkpointCadence == 0 || it == iterations) {
-        next = next.localCheckpoint(true)
-        if (lastCheckpoint != null) lastCheckpoint.unpersist()
-        lastCheckpoint = next
-      }
-      ranks = next
-    }
-    withDeg.unpersist()
-    seedBase.unpersist()
-    ranks
+    }._1
   }
 
   /** g14: [[personalizedPageRankMicro]] on the customer–supplier bipartite
@@ -366,94 +325,54 @@ object GraphIter {
     * anti-joins the settled set (one more), so total work is O(E·depth)
     * regardless of how many paths exist; the path-counting blowup a naive
     * all-paths formulation (or an UNION ALL recursive CTE) hits on dense
-    * graphs never appears. Edges are checkpointed once, pinned on the
-    * probe key; frontier/settled sets are checkpointed per superstep so
-    * lineage stays O(1) in depth. The depth bound makes the operator's
+    * graphs never appears. Edges are pinned once, on the probe key;
+    * each frontier is pinned per superstep so lineage stays O(1) in
+    * depth, and its pin job also counts it, so an empty frontier ends the
+    * loop without an extra action. The depth bound makes the operator's
     * output a well-defined k-hop semantics (and is what lets the oracle
-    * run as a depth-bounded recursive CTE).
+    * run as a depth-bounded recursive CTE). Runs as
+    * [[labeledShortestPaths]] with one constant label.
     */
-  def shortestPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 6): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      // Repartition BEFORE deduping: HashPartitioning(src) satisfies the
-      // (src, dst) clustering, so the dedup reuses the probe layout.
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
-    // The settled set is kept as a LAZY union of the eager per-depth
-    // frontier checkpoints: each anti-join still reads exactly the
-    // settled rows (from cached blocks), but the growing O(V) set is
-    // never re-materialized per superstep — only each (much smaller)
-    // frontier is. Pinned-block volume is identical (the frontiers ARE
-    // the result's partition of settled); the consumer's releaseCaches
-    // drops them after the action, as with every iterative operator.
-    var frontier = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var settled = frontier
-    var depth = 0L
-    var done = false
-    while (depth < maxDepth && !done) {
-      depth += 1
-      val next = sym
-        .join(frontier.select(col("node").as("src")), Seq("src"))
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      done = next.isEmpty
-      if (done) {
-        // Empty frontier: nothing to add; release its (empty) blocks now.
-        next.unpersist()
-      } else {
-        settled = settled.unionByName(next)
-        frontier = next
-      }
-    }
-    sym.unpersist()
-    settled
-  }
+  def shortestPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 6): DataFrame =
+    labeledShortestPaths(edges, seeds.select(lit(0L).as("lm"), col("node")), maxDepth)
+      .drop("lm")
 
   /** Multi-source LABELED BFS: like [[shortestPaths]] but each seed keeps
     * its own identity, so the result is the per-(landmark, node) hop
     * distance rather than the min over all seeds. Settled/frontier are
     * keyed by (lm, node) — the frontier is at most |landmarks|× the g9
-    * frontier and shares its checkpoint discipline; with a bounded
-    * landmark set this is the standard scalable approximation substrate
-    * for distance-based centralities (exact all-pairs BFS is O(V·E) and
-    * never runs at corpus scale).
+    * frontier; with a bounded landmark set this is the standard scalable
+    * approximation substrate for distance-based centralities (exact
+    * all-pairs BFS is O(V·E) and never runs at corpus scale).
     */
   def labeledShortestPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 6): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
-    var frontier = seeds.select(col("lm"), col("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+    val sym = pinnedSym(edges)
+    // The settled set is kept as a LAZY union of the per-depth frontier
+    // pins: each anti-join still reads exactly the settled rows (from
+    // pinned blocks), but the growing O(V) set is never re-materialized
+    // per superstep — only each (much smaller) frontier is. The result
+    // reads only those pins, so the edge pin is released on the way out.
+    var frontier = Superstep.pin(seeds.select(col("lm"), col("node")).distinct()
+      .withColumn("dist", lit(0L)))
     var settled = frontier
     var depth = 0L
     var done = false
     while (depth < maxDepth && !done) {
       depth += 1
-      val next = sym
+      val (next, Seq(n)) = Superstep.pin(sym
         .join(frontier.select(col("lm"), col("node").as("src")), Seq("src"))
         .select(col("lm"), col("dst").as("node"))
         .distinct()
         .join(settled, Seq("lm", "node"), "left_anti")
-        .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      done = next.isEmpty
-      if (done) {
-        next.unpersist()
-      } else {
+        .withColumn("dist", lit(depth)), count(lit(1)))
+      done = n == 0
+      if (done) Superstep.release(next)
+      else {
         settled = settled.unionByName(next)
         frontier = next
       }
     }
-    sym.unpersist()
+    Superstep.release(sym)
     settled
   }
 
@@ -484,14 +403,13 @@ object GraphIter {
     * round); a caller whose frontiers stay corpus-sized pre-partitions
     * `edges` by src once and the shuffle join reuses that layout. With
     * `earlyExit` the frontier is only the nodes whose state IMPROVED
-    * (one extra join + an isEmpty action per round — Dijkstra-ish work
-    * bounds, the right default for converging relaxations); without it
-    * the frontier is the raw candidate table and rounds run fixed (the
-    * g10/g12 fixed-round discipline — no per-round driver action at
-    * all, right for small known round counts). Results are identical
-    * either way: min-folding makes re-relaxation idempotent. Every
-    * round's tables are eagerly checkpointed; lineage stays O(1) in
-    * depth.
+    * (one extra join per round, and the improved count read off the
+    * round's pin job — Dijkstra-ish work bounds, the right default for
+    * converging relaxations); without it the frontier is the raw
+    * candidate table and rounds run fixed (the g10/g12 fixed-round
+    * discipline, right for small known round counts). Results are
+    * identical either way: min-folding makes re-relaxation idempotent.
+    * Every round's tables are pinned; lineage stays O(1) in depth.
     *
     * SIZING: the round aggregates' reduce width is DERIVED from the
     * measured edge count ([[relaxParts]] — the probe→knob discipline):
@@ -514,8 +432,7 @@ object GraphIter {
       "minRelaxTraverse: requireConverged needs earlyExit=true — fixed-round " +
         "mode never observes the improved frontier, so convergence is unknowable there")
     val spark = edges.sparkSession
-    val e = edges.localCheckpoint(true)
-    val eCnt = e.count()
+    val (e, Seq(eCnt)) = Superstep.pin(edges, count(lit(1)))
     // The derived reduce width is applied through the session
     // shuffle-partition knob (preserves map-side combine on the round
     // aggregates, which a post-join repartition would forfeit). The knob
@@ -570,73 +487,57 @@ object GraphIter {
       earlyExit: Boolean,
       requireConverged: Boolean)(
       relax: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column): DataFrame = {
-    val init2 = init.select(col("node"), col("state"))
-      .groupBy("node").agg(min("state").as("state"))
-      .localCheckpoint(true)
+    val init2 = Superstep.pin(init.select(col("node"), col("state"))
+      .groupBy("node").agg(min("state").as("state")))
     def candOf(frontier: DataFrame, round: Int): DataFrame = e
       .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
       .select(col("dst").as("node"), relax(col("state"), round).as("state"))
       .filter(col("state").isNotNull)
       .groupBy("node").agg(min("state").as("state"))
     if (earlyExit) {
-      // ONE checkpointed table per round carrying both the folded state
-      // and the round's previous state: the next round's inputs and the
-      // improved frontier are zero-job PROJECTIONS of it, so a round is
-      // 2 jobs (the joined checkpoint + the isEmpty probe) where
-      // checkpointing next and improved separately was 3 — at
-      // scheduler-latency-bound job counts (g29's nested fixpoints over
-      // a small fixture) that third was pure waste. `least` skips NULLs,
-      // so the full join's three row classes fold correctly: carried-only
-      // (cand NULL → prev), newly-reached (prev NULL → cand, improved),
-      // both (min, improved iff strictly below prev).
-      var joined = init2.select(col("node"), col("state"),
+      // ONE pinned table per round carrying both the folded state and the
+      // round's previous state: the next round's inputs and the improved
+      // frontier are zero-job PROJECTIONS of it, and the improved count is
+      // a metric on its pin job, so a round is that pin alone. `least`
+      // skips NULLs, so the full join's three row classes fold correctly:
+      // carried-only (cand NULL → prev), newly-reached (prev NULL → cand,
+      // improved), both (min, improved iff strictly below prev).
+      val improved = col("prev").isNull || col("state") < col("prev")
+      val start = init2.select(col("node"), col("state"),
         lit(null).cast(init2.schema("state").dataType).as("prev"))
-      var round = 0
-      var done = false
-      while (round < maxRounds && !done) {
-        round += 1
-        // Improved-only frontier (round 1: everything — prev is NULL):
-        // the only sources that can still produce a better walk.
-        val frontier = joined
-          .filter(col("prev").isNull || col("state") < col("prev"))
-          .select("node", "state")
-        val prevSide = joined.select(col("node"), col("state").as("prev"))
-        val old = joined
-        joined = prevSide
-          .join(candOf(frontier, round), Seq("node"), "full")
-          .select(col("node"),
-            least(col("prev"), col("state")).as("state"), col("prev"))
-          .localCheckpoint(true)
-        done = joined
-          .filter(col("prev").isNull || col("state") < col("prev")).isEmpty
-        old.unpersist()
-      }
-      if (requireConverged && !done)
+      val (joined, converged) =
+        Superstep.iterate(start, 1 to maxRounds, progress = Some("improved")) { (j, round) =>
+          // Improved-only frontier (round 1: everything — prev is NULL):
+          // the only sources that can still produce a better walk.
+          j.select(col("node"), col("state").as("prev"))
+            .join(candOf(j.filter(improved).select("node", "state"), round), Seq("node"), "full")
+            .select(col("node"), least(col("prev"), col("state")).as("state"), col("prev"))
+            .withColumn("improved", improved)
+        }
+      if (requireConverged && !converged)
         throw new IllegalStateException(
           s"minRelaxTraverse: relaxation still improving after maxRounds=$maxRounds — " +
             "the result is a TRUNCATED (≤maxRounds-edge-walk) relaxation, not the " +
             "fixpoint; raise maxRounds")
-      val out = joined.select(col("node"), col("state"))
-      e.unpersist()
-      out
+      if (maxRounds > 0) Superstep.release(init2)
+      Superstep.release(e)
+      joined.select(col("node"), col("state"))
     } else {
-      // Fixed rounds: no per-round driver action AND no per-round fold —
-      // each round only needs the previous round's candidates, so the
-      // running min folds ONCE at the end over init ∪ every round's
-      // candidate table (min-idempotence makes the two shapes identical;
-      // per-round folding would pay an extra O(V) aggregate per round).
+      // Fixed rounds: no per-round fold — each round only needs the
+      // previous round's candidates, so the running min folds ONCE at the
+      // end over init ∪ every round's candidate table (min-idempotence
+      // makes the two shapes identical; per-round folding would pay an
+      // extra O(V) aggregate per round).
       val cands = scala.collection.mutable.ListBuffer[DataFrame](init2)
       var frontier = init2
       (1 to maxRounds).foreach { r =>
-        val cand = candOf(frontier, r).localCheckpoint(true)
+        val cand = Superstep.pin(candOf(frontier, r))
         cands += cand
         frontier = cand
       }
-      val out = cands.reduce(_.unionByName(_))
-        .groupBy("node").agg(min("state").as("state"))
-        .localCheckpoint(true)
-      cands.foreach(_.unpersist())
-      e.unpersist()
+      val out = Superstep.pin(cands.reduce(_.unionByName(_))
+        .groupBy("node").agg(min("state").as("state")))
+      (cands :+ e).foreach(Superstep.release)
       out
     }
   }
@@ -742,13 +643,8 @@ object GraphIter {
 
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
-    var cur = seeds.select(col("walker"), col("node")).distinct()
-      .localCheckpoint(true)
+    val sym = pinnedSym(edges)
+    var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct())
     requireOneSeedPerWalker(cur, "randomWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.withColumn("step", lit(0L)))
@@ -762,7 +658,7 @@ object GraphIter {
       // tier). One frontier row per walker, so the walker partition IS
       // its current node's full neighbor list: rank within it == the
       // global dst-ordered adjacency index (what the oracle computes).
-      val nxt = broadcast(cur).join(sym, cur("node") === sym("src"))
+      val nxt = Superstep.pin(broadcast(cur).join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("src"), col("dst"))
         .withColumn("idx",
           row_number().over(byWalker.orderBy("dst")).cast("long") - 1)
@@ -770,15 +666,14 @@ object GraphIter {
         .filter(col("idx") ===
           (col("walker") % 1048573L * 31 + lit(t.toLong) * 7 +
             col("src") % 1048573L * 13) % col("deg"))
-        .select(col("walker"), col("dst").as("node"))
-        .localCheckpoint(true)
+        .select(col("walker"), col("dst").as("node")))
       out += nxt.withColumn("step", lit(t.toLong))
       cur = nxt
     }
-    val res = out.reduce(_.unionByName(_))
+    // The corpus reads only the step pins, never the edges.
+    Superstep.release(sym)
+    out.reduce(_.unionByName(_))
       .select(col("walker"), col("step"), col("node"))
-    sym.unpersist()
-    res
   }
 
   /** SECOND-ORDER (node2vec-BIASED) walks — the p/q sibling of
@@ -806,14 +701,9 @@ object GraphIter {
       edges: DataFrame, seeds: DataFrame, steps: Int,
       wReturn: Long = 1L, wCommon: Long = 4L, wFar: Long = 2L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
-    var cur = seeds.select(col("walker"), col("node")).distinct()
-      .withColumn("prev", col("node"))
-      .localCheckpoint(true)
+    val sym = pinnedSym(edges)
+    var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct()
+      .withColumn("prev", col("node")))
     requireOneSeedPerWalker(cur, "biasedWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.select(col("walker"), lit(0L).as("step"), col("node")))
@@ -840,21 +730,19 @@ object GraphIter {
           when(col("dst") === col("prev"), lit(wReturn))
             .when(col("is_nbr").isNotNull, lit(wCommon))
             .otherwise(lit(wFar)))
-      val nxt = flagged
+      val nxt = Superstep.pin(flagged
         .withColumn("cum", sum("wgt").over(byWalker.orderBy("dst")))
         .withColumn("tot", sum("wgt").over(byWalker))
         .withColumn("r",
           (col("walker") % 1048573L * 31 + lit(t.toLong) * 7 +
             col("src") % 1048573L * 13) % col("tot"))
         .filter(col("cum") - col("wgt") <= col("r") && col("r") < col("cum"))
-        .select(col("walker"), col("src").as("prev"), col("dst").as("node"))
-        .localCheckpoint(true)
+        .select(col("walker"), col("src").as("prev"), col("dst").as("node")))
       out += nxt.select(col("walker"), lit(t.toLong).as("step"), col("node"))
       cur = nxt
     }
-    val res = out.reduce(_.unionByName(_))
-    sym.unpersist()
-    res
+    Superstep.release(sym)
+    out.reduce(_.unionByName(_))
   }
 
   /** g26: node2vec-biased walks on the packed bipartite graph — 3 hops
@@ -944,13 +832,12 @@ object GraphIter {
   def walkCooccurrence(walks: DataFrame, window: Int): DataFrame = {
     val a = walks.select(col("walker"), col("step").as("i"), col("node").as("na"))
     val b = walks.select(col("walker"), col("step").as("j"), col("node").as("nb"))
-    val agg = a.join(b, Seq("walker"))
+    val pairs = a.join(b, Seq("walker"))
       .filter(col("j") - col("i") >= 1 && col("j") - col("i") <= window)
       .select(least(col("na"), col("nb")).as("node1"),
         greatest(col("na"), col("nb")).as("node2"))
       .groupBy("node1", "node2").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    val n = agg.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
+    val (agg, Seq(n)) = Superstep.pin(pairs, sum(col("cnt")))
     val occ = agg.select(col("node1").as("node"), col("cnt"))
       .unionByName(agg.select(col("node2").as("node"), col("cnt")))
       .groupBy("node").agg(sum("cnt").as("c"))
@@ -1005,11 +892,7 @@ object GraphIter {
   def betweennessCore(
       edges: DataFrame, pivots: DataFrame, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 2, "betweenness needs a horizon of at least 2 hops")
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
+    val sym = pinnedSym(edges)
     // Forward: exact-depth layers per pivot (first-reached-at-d, the g9
     // anti-join) WITH the path count σ carried in the frontier (r17):
     // layer membership and σ(w at d) = Σ σ(v at d−1) over DAG edges ride
@@ -1020,17 +903,15 @@ object GraphIter {
     // (same exclusion either way — it keys on (lm, node) only), so the
     // sum folds exactly the layer-d candidate edges the σ pass folded.
     val sig = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = pivots.select(col("lm"), col("lm").as("node")).distinct()
-      .withColumn("sig", lit(1L))
-      .localCheckpoint(true)
+    var frontier = Superstep.pin(pivots.select(col("lm"), col("lm").as("node")).distinct()
+      .withColumn("sig", lit(1L)))
     sig += frontier
     var settled = frontier.select("lm", "node")
     (1 to maxDepth).foreach { _ =>
-      val next = sym.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+      val next = Superstep.pin(sym.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("lm"), col("dst").as("node"), col("sig"))
         .join(settled, Seq("lm", "node"), "left_anti")
-        .groupBy("lm", "node").agg(sum("sig").as("sig"))
-        .localCheckpoint(true)
+        .groupBy("lm", "node").agg(sum("sig").as("sig")))
       sig += next
       settled = settled.unionByName(next.select("lm", "node"))
       frontier = next
@@ -1048,23 +929,20 @@ object GraphIter {
           .join(deltaDeeper.withColumnRenamed("delta", "delw0"), Seq("lm", "node"), "left")
           .select(col("lm"), col("node").as("dst"), col("sig").as("sigw"),
             coalesce(col("delw0"), lit(0L)).as("delw"))
-      val contrib = sym
+      val contrib = Superstep.pin(sym
         .join(wSide, Seq("dst"))
         .select(col("lm"), col("src").as("node"), col("sigw"), col("delw"))
         .join(sig(d).withColumnRenamed("sig", "sigv"), Seq("lm", "node"))
         .select(col("lm"), col("node"),
           expr("sigv * (1000000 + delw) DIV sigw").as("term"))
-        .groupBy("lm", "node").agg(sum("term").as("delta"))
-        .localCheckpoint(true)
+        .groupBy("lm", "node").agg(sum("term").as("delta")))
       deltas += contrib
       deltaDeeper = contrib
     }
-    val out = deltas.reduce(_.unionByName(_))
+    val out = Superstep.pin(deltas.reduce(_.unionByName(_))
       .groupBy("node").agg(sum("delta").as("bc_micro"))
-      .filter(col("bc_micro") > 0)
-      .localCheckpoint(true)
-    (sig ++ deltas).foreach(_.unpersist())
-    sym.unpersist()
+      .filter(col("bc_micro") > 0))
+    (sig ++ deltas :+ sym).foreach(Superstep.release)
     out
   }
 
@@ -1156,35 +1034,27 @@ object GraphIter {
     *
     * Per superstep: one join of the label table against the src-pinned
     * edge list, one (node, label) count aggregate, one per-node argmax —
-    * all shuffles on 8-byte packed keys. The label table checkpoints
-    * every `cadence` supersteps (the final one stays lazy for the
-    * consumer's action). With superstep 1 fused into the init the default
-    * 4-iteration run is only a 3-join recurrence, and measured at sf0.1
-    * the fully lazy plan (cadence ≥ iters) now wins: 5.5 s vs 6.2 s with
-    * a mid-loop checkpoint vs 8.1 s pre-fusion — the materialization's
-    * fixed cost outweighs plan-depth savings at this depth. Deeper runs
-    * (higher `iters`) should pass a low cadence to bound lineage exactly
-    * as before. Blocks are released between queries by releaseCaches.
+    * all shuffles on 8-byte packed keys. With superstep 1 fused into the
+    * init the default 4-iteration run is only a 3-join recurrence, and
+    * measured at sf0.1 the fully lazy plan wins: 5.5 s vs 6.2 s with a
+    * mid-loop checkpoint vs 8.1 s pre-fusion — the materialization's
+    * fixed cost outweighs plan-depth savings at this depth. So only every
+    * 4th superstep after the fused first is pinned, which bounds lineage
+    * for deeper runs and leaves the default run one lazy plan for the
+    * consumer's action. The result reads the edge pin lazily, so its
+    * blocks wait for releaseCaches.
     */
-  def labelPropagation(edges: DataFrame, iters: Int = 4, cadence: Int = 2): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      // Repartition BEFORE deduping: HashPartitioning(src) satisfies the
-      // (src, dst) clustering, so the dedup aggregate reuses the join
-      // layout instead of adding its own exchange.
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
+  def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
+    val sym = pinnedSym(edges)
     // Superstep 1 fused into the init: with identity labels every
     // neighbor vote counts exactly once (sym is deduped), so the
     // (count desc, label asc) argmax degenerates to min(neighbor) — one
     // aggregate replaces the init-distinct + join + two aggregates of a
     // materialized step-0 label table. Every node appears as a dst
     // (sym is symmetric), so coverage is identical.
-    var labels = sym.groupBy(col("dst").as("node")).agg(min(col("src")).as("label"))
-    var lastCp: DataFrame = null
-    (2 to iters).foreach { i =>
-      val next = sym
+    val init = sym.groupBy(col("dst").as("node")).agg(min(col("src")).as("label"))
+    Superstep.iterate(init, 1 until iters, cadence = 4) { (labels, _) =>
+      sym
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
@@ -1194,17 +1064,7 @@ object GraphIter {
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-      labels = if (i % cadence == 0 && i < iters) {
-        // Eager checkpoint: the previous one is fully consumed by the
-        // materialization, so its blocks release immediately — a deep run
-        // pins one checkpoint, not iters/cadence of them (g6's pattern).
-        val cp = next.localCheckpoint(true)
-        if (lastCp != null) lastCp.unpersist()
-        lastCp = cp
-        cp
-      } else next
-    }
-    labels
+    }._1
   }
 
   /** g10: communities on the customer–supplier purchase graph via 4
@@ -1226,7 +1086,7 @@ object GraphIter {
     def decode(c: org.apache.spark.sql.Column) =
       when(pmod(c, lit(2)) === 0, concat(lit("c_"), shiftright(c, 1).cast("string")))
         .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
-    labelPropagation(edges, cadence = 4)
+    labelPropagation(edges)
       .select(decode(col("node")).as("node"), decode(col("label")).as("label"))
   }
 
@@ -1269,30 +1129,22 @@ object GraphIter {
     * list (reuses the probe layout — no extra exchange) and two
     * semi-joins (src side rides the same layout; dst side is the one
     * new shuffle). Work is O(E) per round with no pair explosion; the
-    * live edge set only shrinks. Eager checkpoint per round, previous
-    * round's blocks released immediately — lineage and pinned volume
-    * stay O(1) in depth.
+    * live edge set only shrinks. Every round is pinned and the round
+    * before it released, so lineage and pinned volume stay O(1) in
+    * depth.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var live = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true)
-    var prev = live
-    (1 to rounds).foreach { _ =>
+    val sym = pinnedSym(edges)
+    val (live, _) = Superstep.iterate(sym, 1 to rounds) { (live, _) =>
       val keep = live.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src"))
-      val next = live
+      live
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
         .repartition(col("src"))
-        .localCheckpoint(true)
-      prev.unpersist()
-      prev = next
-      live = next
     }
+    if (rounds > 0) Superstep.release(sym)
     // Residual degree of the survivors; sym edges mean one row per
     // (node, neighbor), so the count IS the degree.
     live.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
@@ -1342,7 +1194,8 @@ object GraphIter {
     val t = Tables(spark, dir)
     val edges = coPurchaseEdges(t)
     val perNode = triangleCounts(edges)
-    edges.unpersist()
+    // perNode reads only the triangle pin.
+    Superstep.release(edges)
     t.supplier.select(col("s_suppkey").as("suppkey"))
       .join(perNode, Seq("suppkey"), "left")
       .select(col("suppkey"), coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
@@ -1399,9 +1252,7 @@ object GraphIter {
     val deg = edges.select(explode(array(col("a"), col("b"))).as("suppkey"))
       .groupBy("suppkey")
       .agg(count(lit(1)).as("deg"))
-    // No unpersist here: the lazy `deg` aggregate still reads `edges`, and
-    // a localCheckpoint's blocks are owned by the ContextCleaner anyway
-    // (Dataset.unpersist is a no-op for checkpoint-backed plans) — the
+    // No release here: the lazy `deg` aggregate still reads `edges`; the
     // session-level releaseCaches sweep reclaims them after the query.
     t.supplier.select(col("s_suppkey").as("suppkey"))
       .join(deg, Seq("suppkey"), "left")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Graph edge derivation — the Neo4j side of the reference re-expressed as
   * relational plans.
@@ -408,13 +408,12 @@ object GraphOps {
   def expandHierarchy(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
     // edges: (child: string, parent: string)
     //
-    // Each level is eagerly localCheckpoint'ed: lineage is truncated every
-    // iteration (no O(depth) plan growth) and each level's partitions are
-    // materialized exactly once. The union of levels is checkpointed ONCE
-    // at the end and every per-level block is then released — the result
-    // holds one block set, not one per tree level (levels can't be
-    // unpersisted lazily: a localCheckpoint has no lineage to recompute
-    // from). The empty terminal frontier is dropped.
+    // Each level is pinned: lineage is truncated every iteration (no
+    // O(depth) plan growth) and each level's partitions are materialized
+    // exactly once; the pin job also counts the level, so the empty
+    // terminal frontier costs no extra action and is dropped. The union of
+    // levels is pinned ONCE at the end and every per-level pin is then
+    // released — the result holds one block set, not one per tree level.
     //
     // CYCLE GUARD: on cyclic input (scraped parent pointers DO cycle —
     // mysql2neo4j.py:204-227 auto-creates parents on first sight) the
@@ -424,22 +423,21 @@ object GraphOps {
     // deeper-than-expected tree — either way the expansion REFUSES
     // loudly; run [[CycleAudit.cycleMembers]] to locate the offenders.
     val parentOf = edges.select(col("child").as("ancestor"), col("parent").as("next_parent"))
-    var frontier = edges
+    val (level1, Seq(level1Cnt)) = Superstep.pin(edges
       .select(col("child").as("node"), col("parent").as("ancestor"), lit(1).as("depth"),
-        concat_ws("/", col("parent"), col("child")).as("path"))
-      .localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var continue = !frontier.isEmpty
+        concat_ws("/", col("parent"), col("child")).as("path")), count(lit(1)))
+    val levels = scala.collection.mutable.ArrayBuffer(level1)
+    val counts = scala.collection.mutable.ArrayBuffer(level1Cnt)
+    var continue = level1Cnt > 0
     var depth = 1
     while (continue) {
       if (depth >= maxDepth) {
-        // Distinguish the two refusal causes cheaply (we're on the cold
-        // failure path): a frontier that stopped SHRINKING is a cycle
-        // (ring members respawn forever); a still-shrinking frontier is a
-        // legitimately deeper-than-maxDepth tree — raise the lever.
-        val cur = frontier.count()
-        val prev =
-          if (levels.size >= 2) levels(levels.size - 2).count() else Long.MaxValue
+        // Distinguish the two refusal causes from the level counts: a
+        // frontier that stopped SHRINKING is a cycle (ring members respawn
+        // forever); a still-shrinking frontier is a legitimately
+        // deeper-than-maxDepth tree — raise the lever.
+        val cur = counts.last
+        val prev = if (counts.size >= 2) counts(counts.size - 2) else Long.MaxValue
         val hint =
           if (cur >= prev) s"frontier stopped shrinking ($prev→$cur rows) — almost " +
             "certainly cyclic parent pointers; audit with CycleAudit.cycleMembers"
@@ -448,23 +446,22 @@ object GraphOps {
         throw new IllegalStateException(
           s"expandHierarchy: frontier still alive at depth $maxDepth — $hint")
       }
-      val next = frontier
+      val (next, Seq(n)) = Superstep.pin(levels.last
         .join(parentOf, Seq("ancestor"))
         .select(col("node"), col("next_parent").as("ancestor"),
           (col("depth") + 1).as("depth"),
-          concat_ws("/", col("next_parent"), col("path")).as("path"))
-        .localCheckpoint(true)
+          concat_ws("/", col("next_parent"), col("path")).as("path")), count(lit(1)))
       depth += 1
-      if (next.isEmpty) {
+      if (n == 0) {
         continue = false
-        next.unpersist()
+        Superstep.release(next)
       } else {
         levels += next
-        frontier = next
+        counts += n
       }
     }
-    val out = levels.reduce(_.unionByName(_)).localCheckpoint(true)
-    levels.foreach(_.unpersist())
+    val out = Superstep.pin(levels.reduce(_.unionByName(_)))
+    levels.foreach(Superstep.release)
     out
   }
 
@@ -563,12 +560,12 @@ object GraphOps {
     wedgeCache.computeIfAbsent(
       (appId, dir, hubCutoff),
       _ => {
-        val edges = purchaseEdges(spark, dir).localCheckpoint(true)
+        val edges = Superstep.pin(purchaseEdges(spark, dir))
         val pairs = graft.GraftSession.retainCheckpoint(
           linkPredictionPairs(edges, hubCutoff))
         val sdeg = graft.GraftSession.retainCheckpoint(
           edges.groupBy("s").agg(count(lit(1)).as("d")))
-        edges.unpersist()
+        Superstep.release(edges)
         (pairs, sdeg)
       })
   }

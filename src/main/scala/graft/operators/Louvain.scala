@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Deterministic fixed-round LOUVAIN community detection (Blondel,
   * Guillaume, Lambiotte & Lefebvre 2008, "Fast unfolding of communities
@@ -103,7 +103,7 @@ object Louvain {
     * the thresholds forced both ways on a crafted mega-community graph.
     *
     * THRESHOLD CALIBRATION (measured, quiet windows): the armed-path A/B
-    * ([[graft.bench.LouvainSkewAB]] — synthetic giant community forcing
+    * (PLANS.md, "Louvain armed-path A/B" — synthetic giant community forcing
     * the salted route, labeling checksum-identical both arms) read
     * salted 46.3 s vs plain 39.5 s at a 1M-member hot community and
     * 226.6 vs 189.3 s at 8M on local[32]: in a single shared-memory JVM
@@ -176,20 +176,21 @@ object Louvain {
     // src set of `sym` at both call sites, exactly k's key set, so the
     // entry inner join is a column attach, and the rounds' updates never
     // touch k.
-    var labels = labels0.join(k, Seq("node")).localCheckpoint(true)
-    (0 until rounds).foreach { i =>
+    val init = Superstep.pin(labels0.join(k, Seq("node")))
+    // Round i's comdeg is read only by round i's labels, which iterate
+    // pins before it calls the step again: released one round late.
+    var comdegPin: Option[DataFrame] = None
+    val (labels, _) = Superstep.iterate(init, 0 until rounds) { (labels, i) =>
+      comdegPin.foreach(Superstep.release)
       val parity = (parity0 + i) % 2
       // Community degree mass AND member count in one pass: `cd` feeds
-      // the scores, `cn` feeds the skew probe below (free — same
-      // aggregate).
-      val comdeg = labels.groupBy("com")
-        .agg(sum("k").as("cd"), count(lit(1)).as("cn"))
-        .localCheckpoint(true)
-      // The per-round skew probe: one tiny aggregate over the
-      // checkpointed O(#communities) relation decides the comdeg join
-      // route for BOTH join sites this round (q16's measure-then-route).
-      val probe = comdeg.agg(count(lit(1)), max("cn")).head()
-      val (nComs, maxCn) = (probe.getLong(0), probe.getLong(1))
+      // the scores, `cn` feeds the skew probe. The probe itself — the
+      // community count and the biggest community's size, which decide
+      // the comdeg join route for BOTH join sites this round (q16's
+      // measure-then-route) — is a metric on the same pin job.
+      val (comdeg, Seq(nComs, maxCn)) = Superstep.pin(labels.groupBy("com")
+        .agg(sum("k").as("cd"), count(lit(1)).as("cn")), count(lit(1)), max("cn"))
+      comdegPin = Some(comdeg)
       // k_{i,c}: weight from i to community c over its NEIGHBORS (self
       // loops excluded — a node's own mass is not a vote for a
       // community; it stays internal wherever the node goes). This is
@@ -219,7 +220,7 @@ object Louvain {
           max(when(col("c") === col("com"), col("score"))).as("kicStay"))
       // Staying score when NO neighbor is left in the current community:
       // k_{i,cur} = 0 — a V-sized expression over labels⋈comdeg, no edge data.
-      val next = joinComdegRouted(
+      joinComdegRouted(
         labels, comdeg, "com", "node",
         nComs, maxCn, broadcastComs, blockThreshold)
         .join(agg, Seq("node"), "left")
@@ -230,11 +231,9 @@ object Louvain {
             -col("m.nc"))
             .otherwise(col("com")).as("com"),
           col("k"))
-        .localCheckpoint(true)
-      labels.unpersist()
-      comdeg.unpersist()
-      labels = next
     }
+    comdegPin.foreach(Superstep.release)
+    if (rounds > 0) Superstep.release(init)
     labels.select("node", "com")
   }
 
@@ -242,7 +241,7 @@ object Louvain {
     * the original edge list: `folded` = node → final (pre-canonical)
     * community, `e2` = the CONTRACTED symmetric edge list (one row per
     * level-1 community pair, intra-level-1 mass as self-loops — still
-    * checkpointed; the caller unpersists), `l2` = level-2 labels over
+    * pinned), `l2` = level-2 labels over
     * the contracted nodes, `twoM` = total symmetric weight.
     */
   private[operators] final case class LouvainLevels(
@@ -261,8 +260,7 @@ object Louvain {
       broadcastComs: Long,
       blockThreshold0: Int): LouvainLevels = {
     val blockThreshold = resolveBlockThreshold(sym.sparkSession, blockThreshold0)
-    val e1 = sym.localCheckpoint(true)
-    val twoM = e1.agg(coalesce(sum("w"), lit(0L))).head().getLong(0)
+    val (e1, Seq(twoM)) = Superstep.pin(sym, sum("w"))
     val init = e1.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
     val l1 = localMoveRounds(e1, init, level1Rounds, twoM, parity0 = 1,
@@ -271,12 +269,11 @@ object Louvain {
     // community weights sum (symmetry is preserved — both directions of
     // an edge map consistently); intra-community mass lands on the
     // (c, c) self-loop, direction-doubled exactly like every other row.
-    val e2 = e1
+    val e2 = Superstep.pin(e1
       .join(l1.select(col("node").as("src"), col("com").as("cs")), Seq("src"))
       .join(l1.select(col("node").as("dst"), col("com").as("cd2")), Seq("dst"))
       .groupBy(col("cs").as("src"), col("cd2").as("dst"))
-      .agg(sum("w").as("w"))
-      .localCheckpoint(true)
+      .agg(sum("w").as("w")))
     val init2 = e2.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
     val l2 = localMoveRounds(
@@ -288,7 +285,8 @@ object Louvain {
     val folded = l1.select(col("node"), col("com").as("c1"))
       .join(l2.select(col("node").as("c1"), col("com")), Seq("c1"), "left")
       .select(col("node"), coalesce(col("com"), col("c1")).as("com"))
-    e1.unpersist()
+    // Everything returned reads pins taken after e1 (labels, e2).
+    Superstep.release(e1)
     LouvainLevels(folded, e2, l2, twoM)
   }
 
@@ -306,7 +304,7 @@ object Louvain {
       broadcastComs: Long = 1L << 20,
       blockThreshold: Int = -1): DataFrame = {
     val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
-    lv.e2.unpersist()
+    Superstep.release(lv.e2)
     canonicalize(lv.folded)
   }
 
@@ -377,12 +375,10 @@ object Louvain {
       blockThreshold: Int = -1): DataFrame = {
     val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
     val canon = lv.folded.groupBy("com").agg(min("node").as("community"))
-    val out = communityStatsFolded(lv)
+    communityStatsFolded(lv)
       .join(canon, Seq("com"))
       .select(col("community"), col("n_nodes"), col("vol"), col("in_sym"),
         col("cut"), col("conductance_micro"))
-    lv.e2.unpersist()
-    out
   }
 
   /** MODULARITY of a labeling over a symmetric weighted edge list, in

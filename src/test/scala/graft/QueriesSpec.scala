@@ -1800,6 +1800,76 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs <= 2 * 40 + 4, s"$jobs jobs for 40 supersteps")
   }
 
+  test("connectedComponents leaves a constant number of pins, not one per superstep") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    assert(operators.GraphIter.connectedComponents(stringChain()).count() === 44)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    // 40 supersteps; only the final state pin outlives the loop.
+    assert(left.size <= 2, s"${left.size} pins left after 40 supersteps")
+  }
+
+  /** Spark jobs started while `body` runs, counted between two marker jobs. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        marks.add(Option(e.properties).flatMap(p => Option(p.getProperty("jobs.mark"))).getOrElse(""))
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty("jobs.mark", m)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty("jobs.mark", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("start")
+      body
+      mark("end")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!marks.contains("end") && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    val seen = marks.toArray.toSeq.map(_.toString)
+    assert(seen.contains("end"), "end mark never reached the listener")
+    seen.indexOf("end") - seen.indexOf("start") - 1
+  }
+
+  test("shortestPaths reads each frontier's emptiness from its pin job") {
+    val ss = spark; import ss.implicits._
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+    var got = Map.empty[Long, Long]
+    val jobs = jobsDuring {
+      got = operators.GraphIter.shortestPaths(chain, Seq(0L).toDF("node"), maxDepth = 40)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got === (0L to 30L).map(i => i -> i).toMap)
+    // 31 frontier pins (30 that reach a node, one empty), each up to 5
+    // jobs (AQE runs the pin's shuffle stages as jobs), plus the seed and
+    // edge pins and the collect: 156 on local[4]. A separate emptiness
+    // probe after each pin adds 31 more.
+    assert(jobs <= 5 * 31 + 10, s"$jobs jobs for 31 BFS supersteps")
+  }
+
+  test("cycleMembers reads its peel counts and label certificate from pin jobs") {
+    val ss = spark; import ss.implicits._
+    // A 12-ring with an 11-edge tail: 11 peel rounds, then doublings.
+    val ring = (0L until 12L).map(i => (i, (i + 1L) % 12L))
+    val tail = (100L until 110L).map(i => (i, i + 1L)) :+ ((110L, 0L))
+    val edges = (ring ++ tail).toDF("child", "parent")
+    var got = Map.empty[Long, Long]
+    val jobs = jobsDuring {
+      got = operators.CycleAudit.cycleMembers(edges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got === (0L until 12L).map(i => i -> 0L).toMap)
+    // 12 peel pins (11 that shrink, one that certifies) and 4 doubling
+    // pins: 56 jobs on local[4]. A separate count per peel round and a
+    // certificate join after a fixed 5 doublings take it to 86.
+    assert(jobs <= 66, s"$jobs jobs")
+  }
+
   test("g15 incremental CC is bit-identical to a full recompute") {
     val ss = spark; import ss.implicits._
     // Base: two components {1,2,3} and {10,11}; batch bridges 3-10 and
