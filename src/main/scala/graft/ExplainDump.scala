@@ -13,15 +13,14 @@ object ExplainDump {
     // Edge builder and cutoff are the PRODUCTION ones (GraphOps.
     // purchaseEdges / defaultHubCutoff — r16 advice #1): if g13/g20
     // change their edge construction or default, these dumps follow.
-    // `_g13g20_wedge` is the shared substrate both keys now consume
-    // (r17); `_g13_pairs` stays addressable as the spec-pinned g13-only
-    // formulation it documents.
+    // `_g13g20_wedge` is the pair stage of the substrate both keys
+    // consume (r17), here over the unpinned edge build; `_g13_pairs`
+    // stays addressable as the spec-pinned g13-only formulation.
     val cutoff = operators.GraphOps.defaultHubCutoff
     def edges(d: String) = operators.GraphOps.purchaseEdges(spark, d)
     val internal: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
       "_g13g20_wedge" -> ((ss, d) => operators.GraphOps.linkPredictionPairs(edges(d), cutoff)),
-      "_g20_pairs" -> ((ss, d) => operators.GraphOps.linkPredictionPairs(edges(d), cutoff)),
       "_g13_pairs" -> ((ss, d) => operators.GraphOps.nodeSimilarityPairs(edges(d), cutoff)))
     names.foreach { n =>
       println(s"===== $n =====")

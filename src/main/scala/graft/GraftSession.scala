@@ -119,8 +119,25 @@ object GraftSession {
     System.gc()
   }
 
-  private val retainedIds =
+  private[graft] val retainedIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(String, Any), Any]()
+
+  /** The session memo for products several operators reuse (built from
+    * [[retainCheckpoint]]s): `build` runs once per (application, `key`);
+    * lead the key with the product's name. A stopped application's
+    * entries are unusable, so each call evicts other applications'
+    * entries and drops their ids from the retained set.
+    */
+  def memo[V](spark: SparkSession, key: Product)(build: => V): V =
+    memo(spark.sparkContext.applicationId, key)(build)
+
+  private[graft] def memo[V](appId: String, key: Product)(build: => V): V = {
+    memos.keySet.removeIf(_._1 != appId)
+    retainedIds.removeIf(_._1 != appId)
+    memos.computeIfAbsent((appId, key), _ => build).asInstanceOf[V]
+  }
 
   /** Materialize `df` as an eager localCheckpoint whose storage blocks
     * SURVIVE [[releaseCaches]] — for small cross-query artifacts a later

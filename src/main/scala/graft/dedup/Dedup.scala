@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Superstep, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Deduplication family for the training-data pipeline.
   *
@@ -122,16 +122,14 @@ object Dedup {
 
   /** Memoized verified near-dup pairs — the shared detection product of
     * d3 (which orders and returns it) and d6 (which clusters it). One
-    * session-scoped entry per (dir, threshold, hashes, bands), retained
-    * across [[graft.GraftSession.releaseCaches]] as a tiny eager
-    * checkpoint (pairs are orders of magnitude smaller than the corpus),
-    * so a session that runs detection AND resolution pays the signature /
+    * session memo entry ([[graft.GraftSession.memo]]) per (dir,
+    * threshold, hashes, bands, ...), retained across
+    * [[graft.GraftSession.releaseCaches]] as a tiny eager checkpoint
+    * (pairs are orders of magnitude smaller than the corpus), so a
+    * session that runs detection AND resolution pays the signature /
     * banding / verify pipeline once — the round-3 d6 bench cost was
     * d3-run-twice, not clustering.
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Double, Int, Int, Int, Int, Boolean, Long), DataFrame]()
-
   private def verifiedPairs(
       spark: SparkSession,
       dir: String,
@@ -141,30 +139,11 @@ object Dedup {
       blockThreshold: Int = 100000,
       nBlocks: Int = 0,
       autoBand: Boolean = true,
-      candFactor: Long = 20L): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    // Entries of stopped applications are unusable; purge them so the
-    // cache holds at most the live session's handful of DataFrames.
-    pairsCache.keySet.removeIf(_._1 != appId)
-    pairsCache.computeIfAbsent(
-      (appId, dir, threshold, numHashes, bands, blockThreshold, nBlocks, autoBand, candFactor),
-      _ => graft.GraftSession.retainCheckpoint(
-        computeVerifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, nBlocks,
-          autoBand, candFactor)))
-  }
-
-  private def computeVerifiedPairs(
-      spark: SparkSession,
-      dir: String,
-      threshold: Double,
-      numHashes: Int,
-      bands: Int,
-      blockThreshold: Int,
-      nBlocks: Int,
-      autoBand: Boolean = true,
       candFactor: Long = 20L): DataFrame =
-    verifiedPairsOf(Tables(spark, dir).documents, threshold, numHashes, bands,
-      blockThreshold, nBlocks, autoBand, candFactor)
+    graft.GraftSession.memo(spark, ("verifiedPairs", dir, threshold, numHashes, bands,
+        blockThreshold, nBlocks, autoBand, candFactor))(graft.GraftSession.retainCheckpoint(
+      verifiedPairsOf(Tables(spark, dir).documents, threshold, numHashes, bands,
+        blockThreshold, nBlocks, autoBand, candFactor)))
 
   /** The d3 detection pipeline parametrized by its corpus: banded-LSH
     * verified near-dup pairs over an ARBITRARY (doc_id, text, ...) frame,
@@ -281,29 +260,36 @@ object Dedup {
   }
 
   /** d6: dedup RESOLUTION — the step after pair detection that decides
-    * which document survives. Near-dup pairs (the MinHash-LSH path, d3)
-    * form an undirected graph; hash-min connected components
-    * ([[graft.operators.GraphIter.connectedComponents]]) cluster
-    * transitively-linked documents, and each cluster keeps its minimum
-    * doc_id as canonical. Documents in no pair are their own canonical.
+    * which document survives: the verified near-dup pairs of the
+    * MinHash-LSH path (d3) through the shared [[resolveKeepMin]] tail.
     * This is the full production shape: detect (LSH) → cluster (CC) →
     * resolve (keep-min), all as one composable DataFrame plan.
     */
-  def d6DedupResolve(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
+  def d6DedupResolve(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     // Consumes the memoized verified-pairs checkpoint, NOT a fresh d3
     // run: in a detect-then-resolve session the LSH pipeline executes
     // once and d6 is clustering-cost only.
-    val pairs = verifiedPairs(spark, dir, threshold, 128, 32)
-      .select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
-    val comps = graft.operators.GraphIter.connectedComponents(pairs)
-      .select(col("node").as("doc_id"), col("label").as("canonical"))
-    Tables(spark, dir).documents
-      .select(col("doc_id"))
-      .join(broadcast(comps), Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("canonical"), col("doc_id")).as("canonical_id"),
-        (col("doc_id") === coalesce(col("canonical"), col("doc_id"))).cast("int").as("is_kept"))
+    resolveKeepMin(Tables(spark, dir).documents, verifiedPairs(spark, dir, threshold, 128, 32))
+
+  /** The resolve tail d6, m7 and m8 share: near-dup pairs `(doc_id1,
+    * doc_id2)` form an undirected graph, hash-min connected components
+    * ([[graft.operators.GraphIter.connectedComponents]]) cluster
+    * transitively-linked documents, and each cluster keeps its minimum
+    * doc_id. Every row of `docs` gets `(doc_id, canonical_id, is_kept)`;
+    * a document in no pair is its own canonical. The label table holds
+    * one row per paired document, so nothing bounds it: it is broadcast
+    * only when [[graft.Route]] fits its node count, read on the CC init
+    * pin's job, in the session's `autoBroadcastJoinThreshold`.
+    */
+  private[graft] def resolveKeepMin(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val (labels, nodes) = graft.operators.GraphIter.countedComponents(
+      pairs.select(col("doc_id1").as("src"), col("doc_id2").as("dst")))
+    val comps = labels.select(col("node").as("doc_id"), col("label").as("canonical"))
+    val canonical = coalesce(col("canonical"), col("doc_id"))
+    docs.select(col("doc_id"))
+      .join(Route.small(comps, nodes), Seq("doc_id"), "left")
+      .select(col("doc_id"), canonical.as("canonical_id"),
+        (col("doc_id") === canonical).cast("int").as("is_kept"))
   }
 
   /** d7: INCREMENTAL dedup — deduplicate a new batch against an existing

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Superstep, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Distributed BPE VOCABULARY TRAINING (Sennrich, Haddow & Birch 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
@@ -224,17 +224,17 @@ object Bpe {
     * tail), so the piece-count join is PROBE-ROUTED, not blind-
     * broadcast (the q23 measure-then-route discipline): the distinct
     * word table — materialized anyway as the encoder's input — is
-    * counted once (a bounded probe scalar), broadcast only under
-    * `broadcastWords`, else a plain equijoin on `word` (both sides
-    * already shuffle-keyed by word; no driver-side table at any size).
-    * Routing never changes values — spec-forced both ways.
+    * counted once (a bounded probe scalar), broadcast only when it fits
+    * the session's `autoBroadcastJoinThreshold` ([[graft.Route]]), else a
+    * plain equijoin on `word` (both sides already shuffle-keyed by word;
+    * no driver-side table at any size). Routing never changes values —
+    * spec-forced both ways.
     */
   def t32BpeEncode(
       spark: SparkSession, dir: String,
-      rounds: Int = 6, topV: Int = 500,
-      broadcastWords: Long = 1L << 21): DataFrame = {
+      rounds: Int = 6, topV: Int = 500): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val perDoc = encodedDocWords(spark, dir, rounds, topV, broadcastWords)
+    val perDoc = encodedDocWords(spark, dir, rounds, topV)
       .groupBy("doc_id")
       .agg(sum(col("occ")).as("n_words"),
         sum(col("occ") * col("n_pieces")).as("n_bpe_tokens"))
@@ -250,14 +250,14 @@ object Bpe {
     * `(doc_id, word, occ, n_pieces)`. Train (vocab-sized rounds) →
     * collect the O(rounds) merge table (bounded probe-scalar class) →
     * encode the DISTINCT word table → probe-routed join back onto the
-    * per-document word counts (broadcast under `broadcastWords`, else a
-    * plain equijoin on `word` — the q23 measure-then-route discipline;
-    * the probe count rides the distinct-word table the encoder
-    * materializes anyway).
+    * per-document word counts (broadcast when [[graft.Route]] fits the
+    * measured word count in the session's `autoBroadcastJoinThreshold`,
+    * else a plain equijoin on `word` — the q23 measure-then-route
+    * discipline; the probe count rides the distinct-word table the
+    * encoder materializes anyway).
     */
   private def encodedDocWords(
-      spark: SparkSession, dir: String,
-      rounds: Int, topV: Int, broadcastWords: Long): DataFrame = {
+      spark: SparkSession, dir: String, rounds: Int, topV: Int): DataFrame = {
     val docs = Tables(spark, dir).documents
     // ONE corpus regex pass (r16): the trainer's vocabulary, the
     // encoder's distinct-word input AND the final per-doc join all fold
@@ -281,8 +281,7 @@ object Bpe {
     val wordTab = docWords.select("word").distinct().localCheckpoint(true)
     val nWords = wordTab.count()
     val pieces = encodeWords(wordTab, merges)
-    docWords.join(
-      if (nWords <= broadcastWords) broadcast(pieces) else pieces, Seq("word"))
+    docWords.join(Route.small(pieces, nWords), Seq("word"))
   }
 
   /** t35: TOKENIZER EVALUATION per (lang, source) slice — fertility
@@ -303,10 +302,9 @@ object Bpe {
     */
   def t35TokenizerFertility(
       spark: SparkSession, dir: String,
-      rounds: Int = 6, topV: Int = 500,
-      broadcastWords: Long = 1L << 21): DataFrame = {
+      rounds: Int = 6, topV: Int = 500): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val perDoc = encodedDocWords(spark, dir, rounds, topV, broadcastWords)
+    val perDoc = encodedDocWords(spark, dir, rounds, topV)
       .groupBy("doc_id")
       .agg(sum(col("occ")).as("dw"),
         sum(col("occ") * length(col("word"))).as("dc"),

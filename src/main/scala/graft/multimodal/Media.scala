@@ -203,29 +203,15 @@ object Media {
   }
 
   /** m7: media dedup RESOLUTION — d6's detect→cluster→resolve applied to
-    * the perceptual tier: m6's verified near-dup pairs form the edge
-    * set, hash-min connected components cluster transitively-linked
-    * media (re-encoding chains A~B~C where A and C share no band), and
-    * each cluster keeps its minimum doc_id as canonical. The output is
-    * the same per-item verdict table d6 emits for text — the filter list
-    * a multimodal corpus build consumes. Composable DataFrame plan end
-    * to end; the CC loop is the shared
-    * [[graft.operators.GraphIter.connectedComponents]].
+    * the perceptual tier: m6's verified near-dup pairs go through d6's
+    * resolve tail ([[graft.dedup.Dedup.resolveKeepMin]]), so re-encoding
+    * chains A~B~C where A and C share no band still cluster, and each
+    * cluster keeps its minimum doc_id as canonical. The output is the
+    * same per-item verdict table d6 emits for text — the filter list a
+    * multimodal corpus build consumes.
     */
-  def m7MediaResolve(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = m6PhashPairs(spark, dir)
-      .select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
-    val comps = graft.operators.GraphIter.connectedComponents(pairs)
-      .select(col("node").as("doc_id"), col("label").as("canonical"))
-    Tables(spark, dir).documents
-      .select(col("doc_id"))
-      .join(broadcast(comps), Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("canonical"), col("doc_id")).as("canonical_id"),
-        (col("doc_id") === coalesce(col("canonical"), col("doc_id")))
-          .cast("int").as("is_kept"))
-  }
+  def m7MediaResolve(spark: SparkSession, dir: String): DataFrame =
+    graft.dedup.Dedup.resolveKeepMin(Tables(spark, dir).documents, m6PhashPairs(spark, dir))
 
   /** m8: CROSS-MODAL (media, caption) dedup resolution — the joint-key
     * operator a multimodal corpus build needs: an (image, caption) record
@@ -240,10 +226,10 @@ object Media {
     * — each already a band equijoin with the salted skew escape (m6's
     * perceptual bands ∪ d9's SimHash bands), never all-pairs — then one
     * equijoin back to the two fingerprint tables (8 bytes per doc per
-    * tier) verifies BOTH hamming predicates. Verified pairs feed the
-    * shared hash-min CC; each cluster keeps its minimum doc_id. Output is
-    * the same per-record verdict table as d6/m7 — the filter list the
-    * corpus build consumes.
+    * tier) verifies BOTH hamming predicates. Verified pairs go through
+    * d6's resolve tail ([[graft.dedup.Dedup.resolveKeepMin]]); each
+    * cluster keeps its minimum doc_id. Output is the same per-record
+    * verdict table as d6/m7 — the filter list the corpus build consumes.
     *
     * Band recall follows the tier bounds (exhaustive at hamming ≤ 3 per
     * modality; 4–15 surfaces on band collision): a pair is GUARANTEED
@@ -279,17 +265,7 @@ object Media {
       .join(mediaFp.select(col("doc_id").as("doc_id2"), col("mfp").as("mfp2")), Seq("doc_id2"))
       .filter(bit_count(col("mfp1").bitwiseXOR(col("mfp2"))) <= maxMediaHamming)
       .select("doc_id1", "doc_id2")
-    val verified = mediaPairs.union(textPairs).distinct()
-      .select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
-    val comps = graft.operators.GraphIter.connectedComponents(verified)
-      .select(col("node").as("doc_id"), col("label").as("canonical"))
-    docs.select(col("doc_id"))
-      .join(broadcast(comps), Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("canonical"), col("doc_id")).as("canonical_id"),
-        (col("doc_id") === coalesce(col("canonical"), col("doc_id")))
-          .cast("int").as("is_kept"))
+    graft.dedup.Dedup.resolveKeepMin(docs, mediaPairs.union(textPairs).distinct())
   }
 
   /** m9: INCREMENTAL media dedup — a new media batch classified against

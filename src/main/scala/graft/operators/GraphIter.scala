@@ -39,15 +39,20 @@ object GraphIter {
     * label dropped (a `Dataset.observe` metric), so convergence costs no
     * extra action. Works on any (src, dst) edge set, numeric or string ids.
     */
-  def connectedComponents(edges: DataFrame): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = countedComponents(edges)._1
+
+  /** [[connectedComponents]] and its node count, a metric on the init pin's job. */
+  private[graft] def countedComponents(edges: DataFrame): (DataFrame, Long) = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
     // Superstep 1 fused into the init: with identity labels the first
     // min-propagation is exactly least(node, min neighbour). Every node
-    // appears as a src (sym is symmetric), so coverage is complete.
-    val init = Superstep.pin(sym.groupBy(col("src").as("node"))
+    // appears as a src (sym is symmetric), so coverage is complete, and
+    // the loop below never adds or drops a node.
+    val (init, Seq(nodes)) = Superstep.pin(sym.groupBy(col("src").as("node"))
       .agg(collect_set(col("dst")).as("nbrs"), min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")))
+      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")),
+      count(lit(1)))
     // Labels never rise, so a superstep with no label drop is the fixpoint.
     val (state, _) = Superstep.iterate(init, 1 to Int.MaxValue, progress = Some("dropped")) {
       (s, _) =>
@@ -61,7 +66,7 @@ object GraphIter {
           .select(col("node"), col("label"), col("nbrs"), (col("label") < col("prev")).as("dropped"))
     }
     Superstep.release(init)
-    state.select(col("node"), col("label"))
+    (state.select(col("node"), col("label")), nodes)
   }
 
   /** INCREMENTAL connected components: fold a batch of NEW edges into an

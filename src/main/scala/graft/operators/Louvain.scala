@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Superstep, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Deterministic fixed-round LOUVAIN community detection (Blondel,
   * Guillaume, Lambiotte & Lefebvre 2008, "Fast unfolding of communities
@@ -59,19 +59,21 @@ object Louvain {
     * measured no-win region. On a real cluster a mega-key is a
     * straggler × task-count, so a NON-local master keeps the defensive
     * 100k default instead of inheriting a single-JVM calibration.
-    * Either default yields to the surfaced lever
-    * (`spark.graft.louvain.blockThreshold` session conf, or the
-    * `SPARK_GRAFT_LOUVAIN_BLOCK` env var) — the same per-deployment
-    * sizing discipline as the shuffle-partitions knob. An explicit
+    * Either default yields to the session setting
+    * `spark.graft.louvain.blockThreshold` — the same per-deployment
+    * sizing discipline as the shuffle-partitions knob — which must be a
+    * non-negative integer and is refused by name otherwise. An explicit
     * `blockThreshold >= 0` argument always wins (the forced-routing
-    * specs pin all three routes with it).
+    * specs pin the skew arm with it).
     */
-  private def resolveBlockThreshold(spark: SparkSession, explicit: Int): Int =
+  private def resolveBlockThreshold(spark: SparkSession, explicit: Int): Int = {
+    val key = "spark.graft.louvain.blockThreshold"
     if (explicit >= 0) explicit
-    else spark.conf.getOption("spark.graft.louvain.blockThreshold").map(_.toInt)
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_BLOCK").map(_.toInt))
-      .getOrElse(
-        if (spark.sparkContext.master.startsWith("local")) 1 << 23 else 100000)
+    else spark.conf.getOption(key).map(v =>
+      v.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative integer, got '$v'")))
+      .getOrElse(if (spark.sparkContext.master.startsWith("local")) 1 << 23 else 100000)
+  }
 
   /** Probe-routed join of a per-row relation against the O(#communities)
     * `comdeg` dimension on community id — the round's skew seam. On any
@@ -87,7 +89,8 @@ object Louvain {
     *     balanced rounds; measured at sf10: unconditionally broadcasting
     *     the ~10⁶-row round-2 comdeg cost ~25% wall on the skew-free
     *     corpus — the defense must only arm when the probe sees skew);
-    *   - else if `nComs <= broadcastComs`: BROADCAST comdeg — zero
+    *   - else if [[graft.Route]] fits `nComs` comdeg rows in the
+    *     session's `autoBroadcastJoinThreshold`: BROADCAST comdeg — zero
     *     shuffle on the skewed key, affordable exactly when
     *     consolidation has shrunk the dimension;
     *   - else: SALTED shuffle join — the bounded hot set
@@ -122,11 +125,10 @@ object Louvain {
       nodeCol: String,
       nComs: Long,
       maxCn: Long,
-      broadcastComs: Long,
       blockThreshold: Int): DataFrame = {
     val cd = comdeg.withColumnRenamed("com", key)
     if (maxCn < blockThreshold) probe.join(cd, Seq(key))
-    else if (nComs <= broadcastComs) probe.join(broadcast(cd), Seq(key))
+    else if (Route.broadcasts(cd, nComs)) probe.join(broadcast(cd), Seq(key))
     else {
       val s = GraphOps.derivedBlocks(maxCn, blockThreshold)
       val hotTag = cd.filter(col("cn") >= lit(blockThreshold.toLong))
@@ -151,17 +153,15 @@ object Louvain {
     * direction-doubled), starting from `labels0 (node, com)`.
     * `twoM` = total symmetric weight Σ w (= 2m). `parity0` offsets the
     * gate so a second level can continue the alternation.
-    * `broadcastComs`/`blockThreshold` are the skew-route thresholds
-    * ([[joinComdegRouted]]).
+    * `blockThreshold` arms the skew routes ([[joinComdegRouted]]).
     */
   private def localMoveRounds(
       sym: DataFrame,
       labels0: DataFrame,
       rounds: Int,
       twoM: Long,
-      parity0: Int = 1,
-      broadcastComs: Long = 1L << 20,
-      blockThreshold: Int = 1 << 23): DataFrame = {
+      parity0: Int,
+      blockThreshold: Int): DataFrame = {
     // Weighted degree INCLUDING self-loops (a contracted community's
     // internal mass travels with it; it cancels in score differences but
     // must be consistent on both sides of every comparison).
@@ -207,8 +207,7 @@ object Louvain {
       // extracts both the argmax (score desc, min community — the
       // negation trick) and the stay score, in a single kic pass.
       val scored = joinComdegRouted(
-        kic.join(labels, Seq("node")), comdeg, "c", "node",
-        nComs, maxCn, broadcastComs, blockThreshold)
+        kic.join(labels, Seq("node")), comdeg, "c", "node", nComs, maxCn, blockThreshold)
         .select(col("node"), col("c"), col("com"),
           (lit(twoM) * col("kic") -
             col("k") * (col("cd") -
@@ -220,9 +219,7 @@ object Louvain {
           max(when(col("c") === col("com"), col("score"))).as("kicStay"))
       // Staying score when NO neighbor is left in the current community:
       // k_{i,cur} = 0 — a V-sized expression over labels⋈comdeg, no edge data.
-      joinComdegRouted(
-        labels, comdeg, "com", "node",
-        nComs, maxCn, broadcastComs, blockThreshold)
+      joinComdegRouted(labels, comdeg, "com", "node", nComs, maxCn, blockThreshold)
         .join(agg, Seq("node"), "left")
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(parity) &&
@@ -257,14 +254,12 @@ object Louvain {
       sym: DataFrame,
       level1Rounds: Int,
       level2Rounds: Int,
-      broadcastComs: Long,
       blockThreshold0: Int): LouvainLevels = {
     val blockThreshold = resolveBlockThreshold(sym.sparkSession, blockThreshold0)
     val (e1, Seq(twoM)) = Superstep.pin(sym, sum("w"))
     val init = e1.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
-    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, parity0 = 1,
-      broadcastComs = broadcastComs, blockThreshold = blockThreshold)
+    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, 1, blockThreshold)
     // EXPLICIT CONTRACTION: communities become super-nodes; inter-
     // community weights sum (symmetry is preserved — both directions of
     // an edge map consistently); intra-community mass lands on the
@@ -276,9 +271,7 @@ object Louvain {
       .agg(sum("w").as("w")))
     val init2 = e2.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
-    val l2 = localMoveRounds(
-      e2, init2, level2Rounds, twoM, parity0 = (1 + level1Rounds) % 2,
-      broadcastComs = broadcastComs, blockThreshold = blockThreshold)
+    val l2 = localMoveRounds(e2, init2, level2Rounds, twoM, (1 + level1Rounds) % 2, blockThreshold)
     // Fold levels: node → level-1 community → level-2 community. Every
     // level-1 community appears as an e2 src (its members have edges, a
     // self-loop at minimum), so l2 covers it; the coalesce is belt.
@@ -301,9 +294,8 @@ object Louvain {
       sym: DataFrame,
       level1Rounds: Int = 4,
       level2Rounds: Int = 2,
-      broadcastComs: Long = 1L << 20,
       blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds, blockThreshold)
     Superstep.release(lv.e2)
     canonicalize(lv.folded)
   }
@@ -371,9 +363,8 @@ object Louvain {
       sym: DataFrame,
       level1Rounds: Int = 4,
       level2Rounds: Int = 2,
-      broadcastComs: Long = 1L << 20,
       blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds, blockThreshold)
     val canon = lv.folded.groupBy("com").agg(min("node").as("community"))
     communityStatsFolded(lv)
       .join(canon, Seq("com"))

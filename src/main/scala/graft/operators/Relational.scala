@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** Relational core — the MySQL-side analytics of the reference re-expressed
   * as declarative DataFrame plans so Catalyst handles pushdown, pruning and
@@ -482,22 +482,21 @@ object Relational {
     * Probe = a count of the filtered dimension: predicate and column
     * pruning reach the parquet scan, so its cost is proportional to the
     * dimension and the window — independent of the fact table, the same
-    * fixed-cost-probe contract as q20/s9. Route: rows × estRowBytes ≤
-    * broadcastLimit ⇒ an explicit `broadcast` hint (the fact table never
-    * shuffles — one scan, map-side join, map-side partial agg); else an
-    * explicit `merge` hint (both sides shuffle on the join key — the
-    * honest plan when the dimension genuinely doesn't fit an executor).
-    * Either way the strategy is a stated DECISION with a measured input,
-    * not a stats guess; the forced-escalation spec pins route identity
-    * (both plans, same rows) and the plan shape of each route.
+    * fixed-cost-probe contract as q20/s9. Route ([[graft.Route]]): rows ×
+    * the dimension's row size ≤ the session's `autoBroadcastJoinThreshold`
+    * ⇒ an explicit `broadcast` hint (the fact table never shuffles — one
+    * scan, map-side join, map-side partial agg); else an explicit `merge`
+    * hint (both sides shuffle on the join key — the honest plan when the
+    * dimension genuinely doesn't fit an executor). Either way the strategy
+    * is a stated DECISION with a measured input, not a stats guess; the
+    * forced-escalation spec pins route identity (both plans, same rows)
+    * and the plan shape of each route.
     */
   def q23RoutedJoin(
       spark: SparkSession,
       dir: String,
       dateLo: String = "1995-01-01",
-      dateHi: String = "1995-07-01",
-      broadcastLimit: Long = 64L * 1024 * 1024,
-      estRowBytes: Long = 32L): DataFrame = {
+      dateHi: String = "1995-07-01"): DataFrame = {
     val t = Tables(spark, dir)
     val ordersF = t.orders
       .filter(col("o_orderdate") >= lit(dateLo).cast("timestamp") &&
@@ -505,7 +504,7 @@ object Relational {
       .select(col("o_orderkey"), col("o_orderpriority"))
     val probeRows = ordersF.count()
     val dim =
-      if (probeRows * estRowBytes <= broadcastLimit) broadcast(ordersF)
+      if (Route.broadcasts(ordersF, probeRows)) broadcast(ordersF)
       else ordersF.hint("merge")
     t.lineitem
       .select(col("l_orderkey"),

@@ -20,4 +20,24 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$v'"), e.getMessage)
     }
   }
+
+  test("memo: builds once per application; a new application evicts the old one's entries") {
+    var builds = 0
+    def build(): Int = { builds += 1; builds }
+    assert(GraftSession.memo("memo-spec-old", ("k", 1))(build()) === 1)
+    assert(GraftSession.memo("memo-spec-old", ("k", 1))(build()) === 1)
+    assert(GraftSession.memo("memo-spec-old", ("k", 2))(build()) === 2)
+    GraftSession.retainedIds.add(("memo-spec-old", 7))
+    GraftSession.retainedIds.add(("memo-spec-old", 8))
+    assert(GraftSession.memo("memo-spec-new", ("k", 1))(build()) === 3)
+    assert(!GraftSession.retainedIds.contains(("memo-spec-old", 7)))
+    assert(!GraftSession.retainedIds.contains(("memo-spec-old", 8)))
+    // The new application's own retained ids and entries stay.
+    GraftSession.retainedIds.add(("memo-spec-new", 9))
+    assert(GraftSession.memo("memo-spec-new", ("k", 1))(build()) === 3)
+    assert(GraftSession.retainedIds.contains(("memo-spec-new", 9)))
+    // The old application's entry is gone: asking for it again rebuilds.
+    assert(GraftSession.memo("memo-spec-old", ("k", 1))(build()) === 4)
+    assert(!GraftSession.retainedIds.contains(("memo-spec-new", 9)))
+  }
 }

@@ -335,6 +335,35 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(report.map(_.getAs[Long]("n_clusters")).sum === kept)
   }
 
+  test("d6/m7 label tail: broadcast on doc_id under the default threshold, none at -1, same rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def docIdBroadcasts(df: DataFrame) = (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collectWithSubqueries {
+      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "doc_id")) => j
+    }
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val ops = Seq[(String, (SparkSession, String) => DataFrame)](
+      "d6" -> ((s, d) => dedup.Dedup.d6DedupResolve(s, d)),
+      "m7" -> ((s, d) => multimodal.Media.m7MediaResolve(s, d)))
+    ops.foreach { case (name, op) =>
+      val routed = op(spark, dir)
+      assert(docIdBroadcasts(routed).nonEmpty, s"$name should broadcast its labels by default")
+      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (shuffled, joins) =
+        try { val q = op(spark, dir); (q, docIdBroadcasts(q)) }
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      assert(joins.isEmpty, s"$name must not broadcast its labels at threshold -1")
+      assert(rows(shuffled) === rows(routed), s"$name: routing changed the rows")
+      assert(rows(routed).exists(_._3 == 0), s"$name: no document was resolved away")
+    }
+  }
+
   test("d4 simhash bands decompose the fingerprint") {
     dedup.Dedup.d4SimHash(spark, dir).collect().foreach { r =>
       val fp = r.getAs[Long]("simhash")
@@ -1346,16 +1375,20 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((200L, 201L, 1L), (201L, 202L, 1L), (200L, 202L, 1L))
     val sym = (e0 ++ e0.map { case (a, b, w) => (b, a, w) })
       .toDF("src", "dst", "w")
-    def run(bc: Long, bt: Int): Map[Long, Long] =
-      operators.Louvain.louvain(sym, broadcastComs = bc, blockThreshold = bt)
+    def run(bc: Long, bt: Int): Map[Long, Long] = {
+      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc.toString)
+      try operators.Louvain.louvain(sym, blockThreshold = bt)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
     // Force each route: PLAIN (threshold never reached — the defense
     // stays dark), SALTED (every community of >= 2 members is "hot" and
     // broadcast is disabled — fires from round 2 on), and BROADCAST
-    // (hot + no community-count cap). Identical labels prove routing
-    // never changes the algebra.
-    val plain = run(0L, Int.MaxValue)
-    val salted = run(0L, 2)
+    // (hot + a broadcast budget no comdeg exceeds). Identical labels
+    // prove routing never changes the algebra.
+    val plain = run(-1L, Int.MaxValue)
+    val salted = run(-1L, 2)
     val bcast = run(Long.MaxValue, 2)
     assert(salted === plain, "salted route must be label-identical to plain")
     assert(bcast === plain, "broadcast route must be label-identical to plain")
@@ -1365,6 +1398,19 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"star must consolidate into a mega community: $plain")
     assert(plain(200L) === plain(201L) && plain(201L) === plain(202L) &&
       plain(200L) != plain(1L), "triangle stays its own community")
+  }
+
+  test("louvain refuses a malformed blockThreshold setting by name") {
+    val ss = spark
+    import ss.implicits._
+    val sym = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    val key = "spark.graft.louvain.blockThreshold"
+    try Seq("12k", "-5", "", "2147483648").foreach { v =>
+      spark.conf.set(key, v)
+      val e = intercept[IllegalArgumentException](operators.Louvain.louvain(sym))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    } finally spark.conf.unset(key)
+    assert(operators.Louvain.louvain(sym).count() === 2)
   }
 
   test("minRelaxTraverse: per-hop edge predicates express a Cypher MATCH no fixed shape covers") {
@@ -2772,13 +2818,16 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("t32 piece-table routing: forced plain equijoin emits exactly the broadcast-route rows") {
-    // broadcastWords = 0 forces the plain shuffle equijoin on `word`;
-    // the default at spec scale broadcasts. The probe-then-route knob
-    // is a plan change, never a result change.
+    // A -1 broadcast threshold forces the plain shuffle equijoin on
+    // `word`; the default at spec scale broadcasts. The probe-then-route
+    // decision is a plan change, never a result change.
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
     val bcast = functions.Bpe.t32BpeEncode(spark, dir).collect().map(key).toSet
-    val plain = functions.Bpe.t32BpeEncode(spark, dir, broadcastWords = 0L)
-      .collect().map(key).toSet
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plain =
+      try functions.Bpe.t32BpeEncode(spark, dir).collect().map(key).toSet
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     assert(plain === bcast)
     assert(bcast.nonEmpty)
   }
@@ -2856,14 +2905,18 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // slice has words (fertility ≥ 1.0 in micro — a piece never splits
     // below one per word).
     assert(got.values.exists(_._5 >= 1000000L))
-    // Forced routing: broadcastWords = 0 forces the plain word-keyed
-    // equijoin through the shared substrate — a plan change, never a
-    // value change (the same contract t32 pins).
-    val plain = functions.Bpe.t35TokenizerFertility(spark, dir, broadcastWords = 0L)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))))
-      .toMap
+    // Forced routing: a -1 broadcast threshold forces the plain
+    // word-keyed equijoin through the shared substrate — a plan change,
+    // never a value change (the same contract t32 pins).
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plain =
+      try functions.Bpe.t35TokenizerFertility(spark, dir)
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))))
+        .toMap
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     assert(plain === got)
   }
 

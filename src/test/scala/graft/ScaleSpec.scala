@@ -691,7 +691,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q23 probe routes the join strategy; both routes are row-identical") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    // Default limit: the probe sees a few hundred filtered orders and must
+    // Default threshold: the probe sees a few hundred filtered orders and must
     // pick the broadcast route — the fact side never shuffles.
     val fast = operators.Relational.q23RoutedJoin(spark, dir)
     val fastJoins = physical(fast).collectWithSubqueries {
@@ -699,14 +699,18 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(fastJoins.nonEmpty,
       s"probe under the limit should broadcast:\n${physical(fast)}")
-    // Forced escalation (limit 0): the probe must route to the explicit
-    // sort-merge plan — and the answer must not move by a single row.
-    val slow = operators.Relational.q23RoutedJoin(spark, dir, broadcastLimit = 0L)
-    val slowPlan = physical(slow)
+    // Forced escalation (broadcast threshold -1): the probe must route to
+    // the explicit sort-merge plan — and the answer must not move by a
+    // single row.
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (slow, slowPlan) =
+      try { val q = operators.Relational.q23RoutedJoin(spark, dir); (q, physical(q)) }
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     assert(slowPlan.collectWithSubqueries { case j: SortMergeJoinExec => j }.nonEmpty,
-      s"limit 0 should force the merge route:\n$slowPlan")
+      s"threshold -1 should force the merge route:\n$slowPlan")
     assert(slowPlan.collectWithSubqueries { case j: BroadcastHashJoinExec => j }.isEmpty,
-      s"limit 0 must not broadcast:\n$slowPlan")
+      s"threshold -1 must not broadcast:\n$slowPlan")
     assert(fast.collect().map(_.toSeq).toSeq === slow.collect().map(_.toSeq).toSeq)
     assert(fast.collect().nonEmpty)
   }
