@@ -148,9 +148,11 @@ object GraftSession {
     * retain — keep it to aggregates orders of magnitude smaller than the
     * corpus.
     */
-  def retainCheckpoint(df: DataFrame): DataFrame = {
-    val out = Superstep.pin(df)
-    retainedIds.add((df.sparkSession.sparkContext.applicationId, Superstep.rddOf(out).id))
-    out
+  def retainCheckpoint(df: DataFrame): DataFrame = retain(Superstep.pin(df))
+
+  /** Keeps an existing pin's blocks across [[releaseCaches]]. */
+  private[graft] def retain(pinned: DataFrame): DataFrame = {
+    retainedIds.add((pinned.sparkSession.sparkContext.applicationId, Superstep.rddOf(pinned).id))
+    pinned
   }
 }

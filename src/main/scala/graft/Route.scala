@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** The engine's one broadcast-or-shuffle decision. A router measures its
-  * small side's row count (a probe it already runs, or a pin metric); the
-  * side is broadcast iff rows × its schema's default row size fits the
-  * session's `spark.sql.autoBroadcastJoinThreshold`, read as Spark reads it
-  * (a byte string such as `64MB`; a negative value never broadcasts). No
-  * operator has its own knob: that one setting moves every route.
+/** The engine's one broadcast-or-shuffle decision, and the only place that
+  * hints a broadcast. A router passes its small side's row count (a probe
+  * it already runs, a pin metric, or a bound that follows from how the
+  * side is built); the side is broadcast iff rows × its schema's default
+  * row size fits the session's `spark.sql.autoBroadcastJoinThreshold`,
+  * read as Spark reads it (a byte string such as `64MB`; a negative value
+  * never broadcasts). Sides Spark's planner can size itself (scans,
+  * one-row aggregates, limits, driver-built frames) need no route. No
+  * operator has its own knob: that one setting moves every broadcast.
   */
 object Route {
 

@@ -106,11 +106,8 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 32,
       blockThreshold: Int = 100000,
-      nBlocks: Int = 0,
-      autoBand: Boolean = true,
       candFactor: Long = 20L): DataFrame =
-    verifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, nBlocks,
-        autoBand, candFactor)
+    verifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, candFactor)._1
 
   /** Public face of the memoized pair set for downstream consumers that
     * want the default detection product without d3's terminal verify
@@ -118,6 +115,10 @@ object Dedup {
     * pairs immediately).
     */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    nearDupPairsCounted(spark, dir)._1
+
+  /** [[nearDupPairs]] with its row count, read on the memo's pin job. */
+  def nearDupPairsCounted(spark: SparkSession, dir: String): (DataFrame, Long) =
     verifiedPairs(spark, dir, 0.8, 128, 32)
 
   /** Memoized verified near-dup pairs — the shared detection product of
@@ -128,7 +129,8 @@ object Dedup {
     * (pairs are orders of magnitude smaller than the corpus), so a
     * session that runs detection AND resolution pays the signature /
     * banding / verify pipeline once — the round-3 d6 bench cost was
-    * d3-run-twice, not clustering.
+    * d3-run-twice, not clustering. The entry carries the pair count,
+    * counted on the pin job, so consumers can size a join by it.
     */
   private def verifiedPairs(
       spark: SparkSession,
@@ -137,13 +139,13 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       blockThreshold: Int = 100000,
-      nBlocks: Int = 0,
-      autoBand: Boolean = true,
-      candFactor: Long = 20L): DataFrame =
+      candFactor: Long = 20L): (DataFrame, Long) =
     graft.GraftSession.memo(spark, ("verifiedPairs", dir, threshold, numHashes, bands,
-        blockThreshold, nBlocks, autoBand, candFactor))(graft.GraftSession.retainCheckpoint(
-      verifiedPairsOf(Tables(spark, dir).documents, threshold, numHashes, bands,
-        blockThreshold, nBlocks, autoBand, candFactor)))
+        blockThreshold, candFactor)) {
+      val (pairs, Seq(rows)) = Superstep.pin(verifiedPairsOf(Tables(spark, dir).documents,
+        threshold, numHashes, bands, blockThreshold, candFactor), count(lit(1)))
+      (graft.GraftSession.retain(pairs), rows)
+    }
 
   /** The d3 detection pipeline parametrized by its corpus: banded-LSH
     * verified near-dup pairs over an ARBITRARY (doc_id, text, ...) frame,
@@ -158,8 +160,6 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 32,
       blockThreshold: Int = 100000,
-      nBlocks: Int = 0,
-      autoBand: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
     val spark = source.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -185,16 +185,16 @@ object Dedup {
     // which at 100 TB is the difference between the dedup pass being
     // scan-bound and shuffle-bound. Duplicate grams don't matter (min is
     // idempotent); only the verification join needs distinct shingle sets.
-    val sigs0 = base
+    // The signatures are checkpointed so a re-band by the candidate-volume
+    // router is a projection over stored integers — never a second run of
+    // the MinHash kernel over the corpus text (the d15 discipline applied
+    // to the doc tier).
+    val sigs = base
       .select(
         col("doc_id"),
         org.apache.spark.sql.graft.VectorExpressions
           .minhashSignature(col("text"), 5, numHashes).as("sig"))
-    // When the candidate-volume router is armed, the signatures are
-    // checkpointed so a re-band is a projection over stored integers —
-    // never a second run of the MinHash kernel over the corpus text
-    // (the d15 discipline applied to the doc tier).
-    val sigs = if (autoBand) sigs0.localCheckpoint(true) else sigs0
+      .localCheckpoint(true)
     def bandedAt(b: Int): DataFrame = {
       val rowsPerBand = numHashes / b
       sigs
@@ -229,11 +229,9 @@ object Dedup {
     // [[autoWidenBands]] router): on this corpus the default 32×4 passes
     // the probe; an adversarial low-vocabulary corpus auto-widens toward
     // 16×8 before the candidate join can go quadratic.
-    val keyed =
-      if (autoBand) autoWidenBands(keyedAt, bands, candFactor, numHashes)
-      else keyedAt(bands).localCheckpoint(true)
+    val keyed = autoWidenBands(keyedAt, bands, candFactor, numHashes)
     val candidates = graft.operators.GraphOps
-      .sameGroupPairsSkewSafe(keyed, blockThreshold, nBlocks)
+      .sameGroupPairsSkewSafe(keyed, blockThreshold)
       .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"))
       .distinct()
       .repartition(nPart, col("doc_id1"), col("doc_id2"))
@@ -269,7 +267,7 @@ object Dedup {
     // Consumes the memoized verified-pairs checkpoint, NOT a fresh d3
     // run: in a detect-then-resolve session the LSH pipeline executes
     // once and d6 is clustering-cost only.
-    resolveKeepMin(Tables(spark, dir).documents, verifiedPairs(spark, dir, threshold, 128, 32))
+    resolveKeepMin(Tables(spark, dir).documents, verifiedPairs(spark, dir, threshold, 128, 32)._1)
 
   /** The resolve tail d6, m7 and m8 share: near-dup pairs `(doc_id1,
     * doc_id2)` form an undirected graph, hash-min connected components
@@ -500,15 +498,14 @@ object Dedup {
       spark: SparkSession,
       dir: String,
       maxHamming: Int = 15,
-      blockThreshold: Int = 100000,
-      nBlocks: Int = 0): DataFrame = {
+      blockThreshold: Int = 100000): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fp = Tables(spark, dir).documents
       .filter(length(col("text")) >= 5)
       .repartition(nPart)
       .select(col("doc_id"),
         org.apache.spark.sql.graft.VectorExpressions.simhash60(col("text")).as("simhash"))
-    bandedHammingPairs(fp, "simhash", maxHamming, blockThreshold, nBlocks)
+    bandedHammingPairs(fp, "simhash", maxHamming, blockThreshold)
   }
 
   /** The 4×15-bit band array of a 60-bit fingerprint — the single
@@ -582,7 +579,7 @@ object Dedup {
     *  2. SKEW salting — bands whose population reaches `blockThreshold`
     *     route through the salted blocked formulation
     *     ([[graft.operators.GraphOps.sameGroupPairsSkewSafe]]), so one
-    *     pathological bucket spreads over nBlocks·(nBlocks+1)/2 tasks
+    *     pathological bucket spreads over s·(s+1)/2 tasks
     *     instead of one reducer. Salting bounds TASK size, the router
     *     bounds candidate VOLUME; an adopted split feeds its (smaller)
     *     sub-buckets through the same salted stage.
@@ -595,7 +592,6 @@ object Dedup {
       fpCol: String,
       maxHamming: Int,
       blockThreshold: Int,
-      nBlocks: Int,
       subSplit: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
     // Materialize the fingerprints once (16 bytes/row): the skew routing
@@ -614,7 +610,7 @@ object Dedup {
       val keyed =
         if (!subSplit || !subSplitViable(maxHamming)) keyed0
         else subSplitKeys(keyed0, maxHamming, candFactor)
-      graft.operators.GraphOps.sameGroupPairsSkewSafe(keyed, blockThreshold, nBlocks)
+      graft.operators.GraphOps.sameGroupPairsSkewSafe(keyed, blockThreshold)
     }
     // Measure-then-route on the duplicate ratio: the exact-dup COLLAPSE
     // below pays two extra aggregates and two expansion joins, which a
@@ -666,7 +662,7 @@ object Dedup {
       val intra = graft.operators.GraphOps
         .sameGroupPairsSkewSafe(
           fpCp.select(col("fp").as("grp"), col("doc_id").as("id")),
-          blockThreshold, nBlocks)
+          blockThreshold)
         .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"),
           lit(0L).as("hamming"))
       // Cross-cluster expansion: each verified DISTINCT-fp pair fans out
@@ -718,9 +714,10 @@ object Dedup {
     if (mass <= candFactor * nItems || maxSz < gszCut) k
     else {
       val (s, w, maxW) = subBandShape(maxHamming)
-      val overGroups = broadcast(
+      // Every over-group holds at least gszCut of the `rows` keyed rows.
+      val overGroups = Route.small(
         k.groupBy("grp").agg(count(lit(1)).as("gsz"))
-          .filter(col("gsz") >= gszCut).select("grp"))
+          .filter(col("gsz") >= gszCut).select("grp"), rows / gszCut)
       val small = k.join(overGroups, Seq("grp"), "left_anti")
       // The 45 bits outside this bucket's band, packed low-to-high in
       // rotation order (band_id = grp DIV 32768 picks which 15 bits the
@@ -1011,8 +1008,6 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 32,
       blockThreshold: Int = 100000,
-      nBlocks: Int = 0,
-      autoBand: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val chunks = Tables(spark, dir).documents
@@ -1048,11 +1043,9 @@ object Dedup {
             .plus(col("band_hash").cast("long").bitwiseAND(lit(0xFFFFFFFFL)))).as("grp"),
           col("cid").as("id"))
     }
-    val keyed =
-      if (autoBand) autoWidenBands(keyedAt, bands, candFactor, numHashes)
-      else keyedAt(bands).localCheckpoint(true)
+    val keyed = autoWidenBands(keyedAt, bands, candFactor, numHashes)
     val candidates = graft.operators.GraphOps
-      .sameGroupPairsSkewSafe(keyed, blockThreshold, nBlocks)
+      .sameGroupPairsSkewSafe(keyed, blockThreshold)
       .select(col("id1").as("cid1"), col("id2").as("cid2"))
       .distinct()
       // cross-document only; packed ids keep doc order: cid1 < cid2 with

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** Exact heavy hitters without shuffling the distinct domain — the
   * two-pass Misra-Gries + recount construction (Misra & Gries 1982;
@@ -101,8 +101,12 @@ object Frequent {
     }.toDF("token", "mg_cnt")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val total = summaries.filter(col("token").isNull)
-        .agg(coalesce(sum("mg_cnt"), lit(0L))).head().getLong(0)
+      // The same aggregate counts the summary entries: an upper bound on
+      // the merged candidate rows that sizes the semi-join below.
+      val tally = summaries
+        .agg(coalesce(sum(when(col("token").isNull, col("mg_cnt"))), lit(0L)), count(col("token")))
+        .head()
+      val (total, summaryRows) = (tally.getLong(0), tally.getLong(1))
       // The candidate set stays a DATAFRAME: merged it is bounded by m×P
       // rows, which at production partition counts is 10⁵-10⁶ — far too
       // many to splat into an `isin` literal list (analyzer/codegen blowup)
@@ -110,11 +114,10 @@ object Frequent {
       val candidates = summaries.filter(col("token").isNotNull)
         .groupBy("token").agg(sum("mg_cnt").as("mg_cnt"))
       // Pass 2: exact recount of the bounded candidate set only. The
-      // membership filter is a map-side BROADCAST semi-join, so the
-      // exchange carries at most |candidates| keys and no literal list
-      // ever reaches the plan.
+      // membership filter is a semi-join, broadcast when the candidates
+      // fit ([[graft.Route]]), so no literal list ever reaches the plan.
       val exactCand = toks.toDF("token")
-        .join(broadcast(candidates.select("token")), Seq("token"), "left_semi")
+        .join(Route.small(candidates.select("token"), summaryRows), Seq("token"), "left_semi")
         .groupBy("token").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("token").asc)
         .limit(k)

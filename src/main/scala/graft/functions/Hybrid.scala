@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Route, Tables}
 import graft.similarity.Ann
 
 /** Hybrid retrieval — lexical BM25 and semantic ANN fused by Reciprocal
@@ -63,7 +63,7 @@ object Hybrid {
     // (and by construction the top) semantic hit, exactly as a near-
     // verbatim quote would be in production.
     val sem = corpus
-      .crossJoin(broadcast(queries))
+      .crossJoin(Route.small(queries, nQueries))
       .withColumn("sim", Ann.cosine(col("q_emb"), col("n_emb")))
       .withColumn("r", row_number().over(wSem).cast("long"))
       .filter(col("r") <= kLeg)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** The curation pipeline END TO END — the composition a user of the
   * reference actually runs (validate → skip-already-fetched → dedup →
@@ -62,22 +62,23 @@ object CurationPipeline {
     *
     * Scale shape: the split is t21's shuffle-free projection; the pair
     * set is d3's memoized banded-LSH product (result-sized — orders of
-    * magnitude smaller than the corpus); each labeling join BROADCASTS
-    * the pair set against the corpus projection, so the corpus never
-    * shuffles and each join's output is pair-sized. The final rollup
+    * magnitude smaller than the corpus); each labeling join broadcasts
+    * the pair set against the corpus projection when the memo's pair
+    * count fits ([[graft.Route]]), so the corpus never shuffles and each
+    * join's output is pair-sized. The final rollup
     * aggregates ≤ |pairs| rows into ≤ 3 rows.
     */
-  def t29SplitLeakage(spark: SparkSession, dir: String): DataFrame =
-    splitLeakageReport(
-      Tables(spark, dir).documents,
-      graft.dedup.Dedup.nearDupPairs(spark, dir))
+  def t29SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
+    val (pairs, pairRows) = graft.dedup.Dedup.nearDupPairsCounted(spark, dir)
+    splitLeakageReport(Tables(spark, dir).documents, pairs, pairRows)
+  }
 
   /** The report over an arbitrary (doc_id, text) corpus and an arbitrary
-    * (doc_id1, doc_id2) pair frame — factored so the spec can pin the
-    * canonicalization and aggregation against a hand-computed recount on
-    * a crafted pair set.
+    * (doc_id1, doc_id2) pair frame of `pairRows` rows — factored so the
+    * spec can pin the canonicalization and aggregation against a
+    * hand-computed recount on a crafted pair set.
     */
-  def splitLeakageReport(docs: DataFrame, pairFrame: DataFrame): DataFrame = {
+  def splitLeakageReport(docs: DataFrame, pairFrame: DataFrame, pairRows: Long): DataFrame = {
     // Pipeline rank makes (early, late) deterministic and meaningful:
     // leakage flows from the earlier (larger, trained-on) split into the
     // later (evaluated) one.
@@ -87,10 +88,12 @@ object CurationPipeline {
           .when(col("split") === "val", 1)
           .otherwise(2).as("rk"))
     val pairs = pairFrame.select("doc_id1", "doc_id2")
-    val p1 = splits.join(broadcast(pairs), splits("doc_id") === pairs("doc_id1"))
+    // Each labeling join matches a pair to at most one doc, so both pair
+    // sides hold at most `pairRows` rows.
+    val p1 = splits.join(Route.small(pairs, pairRows), splits("doc_id") === pairs("doc_id1"))
       .select(col("doc_id1"), col("doc_id2"),
         col("split").as("split1"), col("rk").as("rk1"))
-    val p2 = splits.join(broadcast(p1), splits("doc_id") === p1("doc_id2"))
+    val p2 = splits.join(Route.small(p1, pairRows), splits("doc_id") === p1("doc_id2"))
       .select(col("doc_id1"), col("doc_id2"), col("split1"), col("rk1"),
         col("split").as("split2"), col("rk").as("rk2"))
     p2.filter(col("split1") =!= col("split2"))

@@ -76,7 +76,7 @@ object Retrieval {
       col("token"), col("df"))
 
     val scored = tf
-      .join(broadcast(qt), Seq("token"))
+      .join(qt, Seq("token"))
       .join(dl, Seq("doc_id"))
       .withColumn("idf_milli",
         expr(s"(2 * (${nDocs}L - df) + 1) * 1000 DIV (2 * df + 1)"))

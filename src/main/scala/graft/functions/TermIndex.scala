@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Route
 
 /** Persisted INVERTED INDEX — the pay-at-ingest half of lexical
   * retrieval, completing the persisted-index family
@@ -162,12 +163,13 @@ object TermIndex {
       k: Int = 5): DataFrame = {
     val (_, nDocs, totalTokens) = readMeta(spark, path)
     val avgdlMilli = totalTokens * 1000L / math.max(nDocs, 1L)
-    val terms = queryTerms.select("token").distinct().collect().map(_.getString(0))
+    val queryTokens = queryTerms.select("token").collect().map(_.getString(0))
+    val terms = queryTokens.distinct
     val posts = postingsTable(spark, path).filter(col("token").isin(terms.toSeq: _*))
     val dfs = posts.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val dl = spark.read.parquet(doclensPath(path))
     posts
-      .join(broadcast(queryTerms.join(dfs, Seq("token"))), Seq("token"))
+      .join(Route.small(queryTerms.join(dfs, Seq("token")), queryTokens.length), Seq("token"))
       .join(dl, Seq("doc_id"))
       .withColumn("idf_milli",
         expr(s"(2 * (${nDocs}L - df) + 1) * 1000 DIV (2 * df + 1)"))

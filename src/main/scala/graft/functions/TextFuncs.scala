@@ -527,7 +527,7 @@ object TextFuncs {
     val wInRange = Window.partitionBy(col("range_id"))
       .orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    toks.join(broadcast(rangeOffsets), Seq("range_id"))
+    toks.join(rangeOffsets, Seq("range_id"))
       .withColumn("start",
         col("range_start") + coalesce(sum(col("n_tokens")).over(wInRange), lit(0L)))
       .select(
@@ -723,7 +723,8 @@ object TextFuncs {
           .agg(count(lit(1)).as("n_bigrams"), sum(col("p_micro")).as("sum_p"))
       } else {
         // Capped form: keep the K most frequent grams (deterministic
-        // tie-break on the gram itself), BROADCAST them, and treat
+        // tie-break on the gram itself), broadcast them (the planner
+        // sizes a limit by its row count), and treat
         // everything past the cutoff as count 0 — the same add-one
         // smoothing path a genuinely unseen gram takes, so capping only
         // coarsens tail scores, never changes the formula. The exploded
@@ -734,8 +735,8 @@ object TextFuncs {
         val bigTop = bigFull
           .orderBy(col("c2").desc, col("w1").asc, col("w2").asc).limit(topKGrams)
         docBigrams
-          .join(broadcast(bigTop), Seq("w1", "w2"), "left")
-          .join(broadcast(uniTop), col("w1") === col("w"), "left")
+          .join(bigTop, Seq("w1", "w2"), "left")
+          .join(uniTop, col("w1") === col("w"), "left")
           .select(col("doc_id"),
             expr(s"((coalesce(c2, 0) + 1) * 1000000)" +
               s" DIV (coalesce(c1, 0) + $vocab)").as("p_micro"))
@@ -782,7 +783,7 @@ object TextFuncs {
         min(when(col("cum") >= expr("(33 * n + 99) DIV 100"), col("lm_micro"))).as("v33"),
         min(when(col("cum") >= expr("(67 * n + 99) DIV 100"), col("lm_micro"))).as("v67"))
     scored
-      .join(broadcast(bounds), Seq("lang"))
+      .join(bounds, Seq("lang"))
       .select(col("doc_id"), col("lang"), col("lm_micro"),
         when(col("lm_micro") > col("v67"), lit("head"))
           .when(col("lm_micro") > col("v33"), lit("middle"))
@@ -817,7 +818,7 @@ object TextFuncs {
       .localCheckpoint(true)
     val totals = joined.agg(sum("cnt_a").as("tot_a"), sum("cnt_b").as("tot_b"))
     joined
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .withColumn("drift", col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))
       .orderBy(abs(col("drift")).desc, col("term").asc)
       .limit(k)
@@ -860,7 +861,7 @@ object TextFuncs {
     val totals = counts.agg(
       sum("cnt_a").as("tot_a"), sum("cnt_b").as("tot_b"))
     counts
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .withColumn("drift", col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))
       .orderBy(abs(col("drift")).desc, col("term").asc)
       .limit(k)
@@ -923,14 +924,14 @@ object TextFuncs {
       .withColumn("ap", sum(col("a")).over(wOrd))
       .withColumn("wp", sum(col("w")).over(wOrd))
       .withColumn("rk", row_number().over(wOrd))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
     val kk = s.filter(col("a") * (col("tw") - col("wp") + col("w")) <=
         (col("b") - col("ap") + col("a")) * col("w"))
       .agg(coalesce(max(col("rk")), lit(0)).as("k"))
-    val fin = s.crossJoin(broadcast(kk)).filter(col("rk") === col("k"))
+    val fin = s.crossJoin(kk).filter(col("rk") === col("k"))
       .agg(coalesce(max(col("ap")), lit(0L)).as("ak"),
         coalesce(max(col("wp")), lit(0L)).as("wk"))
-    s.crossJoin(broadcast(kk)).crossJoin(broadcast(fin))
+    s.crossJoin(kk).crossJoin(fin)
       .select(
         col("source"),
         col("a").as("avail_tokens"),

@@ -188,8 +188,7 @@ object Media {
       spark: SparkSession,
       dir: String,
       maxHamming: Int = 15,
-      blockThreshold: Int = 100000,
-      nBlocks: Int = 0): DataFrame = {
+      blockThreshold: Int = 100000): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fp = Tables(spark, dir).documents
       .repartition(nPart)
@@ -199,7 +198,7 @@ object Media {
     // Shared pairing stage with d9 — incl. the size-triggered salted
     // routing for oversized perceptual bands (the skew knob the previous
     // revision only documented).
-    graft.dedup.Dedup.bandedHammingPairs(fp, "phash", maxHamming, blockThreshold, nBlocks)
+    graft.dedup.Dedup.bandedHammingPairs(fp, "phash", maxHamming, blockThreshold)
   }
 
   /** m7: media dedup RESOLUTION — d6's detect→cluster→resolve applied to
@@ -365,7 +364,7 @@ object Media {
         sum(when(col("slice") === 1, col("cnt")).otherwise(0L)).as("cnt_b"))
       .filter(col("cnt_a") + col("cnt_b") > 0)
     val tot = hist.agg(sum("cnt_a").as("ta"), sum("cnt_b").as("tb"))
-    hist.crossJoin(broadcast(tot))
+    hist.crossJoin(tot)
       .select(col("byte").cast("long").as("byte"), col("cnt_a"), col("cnt_b"),
         (col("cnt_a") * col("tb") - col("cnt_b") * col("ta")).as("drift"))
       .orderBy(abs(col("drift")).desc, col("byte").asc)
@@ -600,13 +599,12 @@ object Media {
       frameBytes: Int = 64,
       strideBytes: Int = 256,
       maxHamming: Int = 6,
-      blockThreshold: Int = 100000,
-      nBlocks: Int = 0): DataFrame = {
+      blockThreshold: Int = 100000): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val media = Tables(spark, dir).documents
       .repartition(nPart)
       .select(col("doc_id"), payload(col("doc_id"), col("text")).as("payload"))
-    frameNearDupOf(media, frameBytes, strideBytes, maxHamming, blockThreshold, nBlocks)
+    frameNearDupOf(media, frameBytes, strideBytes, maxHamming, blockThreshold)
   }
 
   /** The frame pipeline over an arbitrary (doc_id, payload) frame —
@@ -619,7 +617,6 @@ object Media {
       strideBytes: Int = 256,
       maxHamming: Int = 6,
       blockThreshold: Int = 100000,
-      nBlocks: Int = 0,
       subSplit: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
     val frames = media
@@ -635,7 +632,7 @@ object Media {
         org.apache.spark.sql.graft.VectorExpressions
           .blockAvgHash60(expr(s"substring(payload, col + 1, $frameBytes)"))
           .as("phash"))
-    graft.dedup.Dedup.bandedHammingPairs(frames, "phash", maxHamming, blockThreshold, nBlocks,
+    graft.dedup.Dedup.bandedHammingPairs(frames, "phash", maxHamming, blockThreshold,
         subSplit, candFactor)
       .select(
         expr("doc_id1 DIV 1048576").as("media_id1"),

@@ -263,10 +263,10 @@ object CycleAudit {
     import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val custEdges = t.customer
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
       .select(concat(lit("c_"), col("c_custkey")).as("child"), col("n_name").as("parent"))
     val nationEdges = t.nation
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+      .join(t.region, col("n_regionkey") === col("r_regionkey"))
       .select(col("n_name").as("child"), col("r_name").as("parent"))
     val g = Window.partitionBy(expr("(s_suppkey - 1) DIV 10"))
     val ringEdges = t.supplier

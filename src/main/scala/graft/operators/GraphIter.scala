@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Superstep, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Iterative graph analytics as DataFrame loops (Pregel-style).
   *
@@ -145,10 +145,10 @@ object GraphIter {
   def g5ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     val custEdges = t.customer
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
       .select(concat(lit("c_"), col("c_custkey")).as("src"), col("n_name").as("dst"))
     val nationEdges = t.nation
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+      .join(t.region, col("n_regionkey") === col("r_regionkey"))
       .select(col("n_name").as("src"), col("r_name").as("dst"))
     connectedComponents(custEdges.unionByName(nationEdges))
       .select(col("node"), col("label").as("component"))
@@ -636,34 +636,35 @@ object GraphIter {
     * would get both adjacency lists merged into one window and pick
     * silently wrong idx/deg (and biased cum/tot). Enforced loudly with
     * one O(walkers) aggregate over the (already deduped, checkpointed)
-    * seed frame before the first step.
+    * seed frame before the first step. Returns the walker count, which
+    * bounds every frontier: a step keeps at most one row per walker.
     */
-  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Unit = {
+  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Long = {
     val r = cur.agg(count(lit(1)), countDistinct(col("walker"))).head()
     require(r.getLong(0) == r.getLong(1),
       s"$who: each walker id must seed exactly one node " +
         s"(${r.getLong(0)} seed rows over ${r.getLong(1)} walkers) — " +
         "use distinct walker ids per (walker, node) seed")
+    r.getLong(1)
   }
 
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = pinnedSym(edges)
     var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct())
-    requireOneSeedPerWalker(cur, "randomWalks")
+    val walkers = requireOneSeedPerWalker(cur, "randomWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.withColumn("step", lit(0L)))
     val byWalker = Window.partitionBy("walker")
     (1 to steps).foreach { t =>
-      // The frontier is O(walkers) rows — BROADCAST it so the edge side
-      // STREAMS under a BroadcastHashJoin (the g9/minRelaxTraverse
-      // bounded-frontier discipline; checkpointed frames carry no size
-      // stats, so without the hint Catalyst sort-merge-joins and pays a
-      // full O(E) sort per step — measured spilling at the 234M-edge
-      // tier). One frontier row per walker, so the walker partition IS
-      // its current node's full neighbor list: rank within it == the
-      // global dst-ordered adjacency index (what the oracle computes).
-      val nxt = Superstep.pin(broadcast(cur).join(sym, cur("node") === sym("src"))
+      // The frontier is at most one row per walker: sized by that count,
+      // it is broadcast when it fits so the edge side STREAMS under a
+      // BroadcastHashJoin instead of paying a full O(E) sort per step
+      // (measured spilling at the 234M-edge tier). One frontier row per
+      // walker, so the walker partition IS its current node's full
+      // neighbor list: rank within it == the global dst-ordered
+      // adjacency index (what the oracle computes).
+      val nxt = Superstep.pin(Route.small(cur, walkers).join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("src"), col("dst"))
         .withColumn("idx",
           row_number().over(byWalker.orderBy("dst")).cast("long") - 1)
@@ -709,27 +710,29 @@ object GraphIter {
     val sym = pinnedSym(edges)
     var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct()
       .withColumn("prev", col("node")))
-    requireOneSeedPerWalker(cur, "biasedWalks")
+    val walkers = requireOneSeedPerWalker(cur, "biasedWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.select(col("walker"), lit(0L).as("step"), col("node")))
     val byWalker = Window.partitionBy("walker")
     (1 to steps).foreach { t =>
-      // Broadcast the O(walkers) frontier: the edge side streams under
-      // BHJ in BOTH jobs that touch it this step (candidate fan-out and
-      // the prev-set's own edges) — zero edge movement, no O(E) sort.
-      val cand = broadcast(cur).join(sym, cur("node") === sym("src"))
+      // The frontier and its prev set hold at most one row per walker:
+      // sized by that count, they are broadcast when they fit, and the
+      // edge side streams in BOTH joins that touch it this step
+      // (candidate fan-out and the prev-set's own edges).
+      val cand = Route.small(cur, walkers).join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("prev"), col("src"), col("dst"))
       // The (prev, x) membership test only ever probes edges whose src
-      // is a FRONTIER prev — O(walkers) distinct values — so pre-filter
-      // the edge relation down to those (one streamed scan, output
-      // O(Σ deg(prev)): the same per-walker fan-out the candidate set
-      // already materializes) and broadcast the result, instead of
-      // joining the candidates against all of E.
+      // is a FRONTIER prev, so semi-join the edge relation down to those
+      // (one streamed scan, output O(Σ deg(prev)): the same per-walker
+      // fan-out the candidate set already materializes) instead of
+      // joining the candidates against all of E. A semi-join is sized
+      // by its edge side, so the planner broadcasts the result whenever
+      // the edge list itself would fit; it needs no distinct prev set.
       val prevEdges = sym
-        .join(broadcast(cur.select(col("prev").as("p_src")).distinct()),
-          sym("src") === col("p_src"))
-        .select(col("p_src"), col("dst").as("p_dst"), lit(1L).as("is_nbr"))
-      val flagged = cand.join(broadcast(prevEdges),
+        .join(Route.small(cur.select(col("prev").as("p_src")), walkers),
+          sym("src") === col("p_src"), "left_semi")
+        .select(col("src").as("p_src"), col("dst").as("p_dst"), lit(1L).as("is_nbr"))
+      val flagged = cand.join(prevEdges,
           col("prev") === col("p_src") && col("dst") === col("p_dst"), "left")
         .withColumn("wgt",
           when(col("dst") === col("prev"), lit(wReturn))
@@ -1214,7 +1217,7 @@ object GraphIter {
     val orderSupp = t.lineitem
       .select(col("l_orderkey").as("okey"), col("l_suppkey").as("s"))
       .distinct()
-      .join(broadcast(suppNation), col("s") === col("s_suppkey"))
+      .join(suppNation, col("s") === col("s_suppkey"))
       .select(col("okey"), col("s"), col("s_nationkey").as("nat"))
     orderSupp.as("x")
       .join(orderSupp.as("y"),

@@ -26,8 +26,7 @@ object GraphOps {
   def g1SameGroupPairs(
       spark: SparkSession,
       dir: String,
-      blockThreshold: Int = 100000,
-      nBlocks: Int = 0): DataFrame = {
+      blockThreshold: Int = 100000): DataFrame = {
     val t = Tables(spark, dir)
     // Self-join on the compact int key; the group's display name is
     // broadcast-joined onto the (much larger) pair set afterwards, so the
@@ -43,8 +42,8 @@ object GraphOps {
     // total sort of ~450 M rows appended to an output-bound operator).
     // Deterministic ordering for verification is applied by Verify at
     // write time; production consumers get the unsorted pair stream.
-    sameGroupPairsSkewSafe(c, blockThreshold, nBlocks)
-      .join(broadcast(t.nation.select(col("n_nationkey").as("grp"), col("n_name"))), Seq("grp"))
+    sameGroupPairsSkewSafe(c, blockThreshold)
+      .join(t.nation.select(col("n_nationkey").as("grp"), col("n_name")), Seq("grp"))
       .select(col("n_name").as("nation_name"),
         col("id1").as("custkey1"), col("id2").as("custkey2"))
   }
@@ -53,14 +52,13 @@ object GraphOps {
     * an exact max-group-size probe picks the plan — below `blockThreshold`
     * everywhere, the plain direct self-equijoin (zero overhead); any group
     * at or above it, the split formulation where big groups take
-    * [[blockedSameGroupPairs]] and spread over nBlocks·(nBlocks+1)/2
-    * tasks instead of one reducer. Output is exactly the (grp, id1 < id2)
-    * pair set of the direct formulation (spec-checked with the threshold
-    * forced to 1).
+    * [[blockedSameGroupPairs]] and spread over s·(s+1)/2 tasks instead
+    * of one reducer. Output is exactly the (grp, id1 < id2) pair set of
+    * the direct formulation (spec-checked with the threshold forced to 1).
     *
-    * `nBlocks = 0` (the default at every call site) means DERIVED FROM
-    * THE PROBE: the same aggregate that decides whether to route also
-    * measures how big the biggest group is, and the salt width is sized
+    * The salt width s is DERIVED FROM THE PROBE: the same aggregate that
+    * decides whether to route also measures how big the biggest group
+    * is, and the salt width is sized
     * so one block holds ~`blockThreshold` rows — each block-pair task
     * then does at most ~blockThreshold² comparisons, the exact work
     * bound that defined "too big" in the first place. A fixed width
@@ -74,7 +72,7 @@ object GraphOps {
     * checkpointed by the caller so the probe action and the join branches
     * share one materialization.
     */
-  def sameGroupPairsSkewSafe(df: DataFrame, blockThreshold: Int, nBlocks: Int = 0): DataFrame = {
+  def sameGroupPairsSkewSafe(df: DataFrame, blockThreshold: Int): DataFrame = {
     // Exact size probe first (one tiny aggregate action — the g4
     // measure-then-route pattern): when NO group reaches the threshold,
     // which is the overwhelmingly common case, emit the plain direct
@@ -88,7 +86,7 @@ object GraphOps {
         .join(df.select(col("grp"), col("id").as("id2")), Seq("grp"))
         .filter(col("id1") < col("id2"))
     } else {
-      val blocks = if (nBlocks > 0) nBlocks else derivedBlocks(maxSz, blockThreshold)
+      val blocks = derivedBlocks(maxSz, blockThreshold)
       val sizes = df.groupBy("grp").agg(count(lit(1)).as("gsz"))
       val tagged = df.join(sizes, Seq("grp"))
       val small = tagged.filter(col("gsz") < blockThreshold).select("grp", "id")
@@ -125,10 +123,10 @@ object GraphOps {
     val current = t.lineitem
       .groupBy(col("l_suppkey"))
       .agg(max(col("l_shipdate")).as("end_d"))
-      .crossJoin(broadcast(horizon))
+      .crossJoin(horizon)
       .filter(col("end_d") >= date_sub(col("horizon"), 90))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
+      .join(t.supplier, col("l_suppkey") === col("s_suppkey"))
+      .join(t.nation, col("s_nationkey") === col("n_nationkey"))
       // Position analog of the reference's w.position property — a
       // deterministic seniority band derived from the key.
       .select(col("s_suppkey"), col("n_name"),
@@ -164,7 +162,7 @@ object GraphOps {
     val left = withBlock.select(col("grp"), col("id").as("id1"), col("blk").as("blkA"))
     val right = withBlock.select(col("grp"), col("id").as("id2"), col("blk").as("blkB"))
     left
-      .join(broadcast(bp), Seq("blkA"))
+      .join(bp, Seq("blkA"))
       .join(right, Seq("grp", "blkB"))
       .filter(
         (col("blkA") < col("blkB") && col("id1") =!= col("id2")) ||
@@ -187,8 +185,8 @@ object GraphOps {
     val stints = t.lineitem
       .groupBy(col("l_suppkey"))
       .agg(min(col("l_shipdate")).as("start_d"), max(col("l_shipdate")).as("end_d"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
+      .join(t.supplier, col("l_suppkey") === col("s_suppkey"))
+      .join(t.nation, col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"), col("start_d"), col("end_d"))
     val a = stints.select(col("n_name").as("grp"), col("s_suppkey").as("suppkey1"),
       col("start_d").as("s1"), col("end_d").as("e1"))
@@ -231,8 +229,8 @@ object GraphOps {
     val stints = t.lineitem
       .groupBy(col("l_suppkey"))
       .agg(min(col("l_shipdate")).as("start_d"), max(col("l_shipdate")).as("end_d"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
+      .join(t.supplier, col("l_suppkey") === col("s_suppkey"))
+      .join(t.nation, col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"),
         nullUnless(13, year(col("start_d"))).as("sy"),
         nullUnless(5, month(col("start_d"))).as("sm"),
@@ -467,10 +465,10 @@ object GraphOps {
   def g8HierarchyPaths(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     val custEdges = t.customer
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
       .select(concat(lit("c_"), col("c_custkey")).as("child"), col("n_name").as("parent"))
     val nationEdges = t.nation
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+      .join(t.region, col("n_regionkey") === col("r_regionkey"))
       .select(col("n_name").as("child"), col("r_name").as("parent"))
     expandHierarchy(custEdges.unionByName(nationEdges))
       .select("node", "ancestor", "depth", "path")
@@ -775,7 +773,7 @@ object GraphOps {
     * (grp = center, id = supplier), so the same probe-then-route
     * machinery applies verbatim — below `blockThreshold` everywhere the
     * plain c-keyed self-equijoin runs with zero overhead; any hot center
-    * spreads over nBlocks·(nBlocks+1)/2 salted tasks. Counts are
+    * spreads over s·(s+1)/2 salted tasks. Counts are
     * bit-identical either way (the forced-routing spec pins it). The
     * wedge MASS is semantic — for a lossy cap there is `centerCap`
     * (the g13 `hubCutoff` lever / GDS degreeCutoff analog): when set,
@@ -790,14 +788,13 @@ object GraphOps {
       spark: SparkSession,
       dir: String,
       blockThreshold: Int = 10000,
-      nBlocks: Int = 0,
       centerCap: Option[Int] = None): DataFrame = {
     val t = Tables(spark, dir)
     val edges = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .distinct()
-    butterflyCount(edges, blockThreshold, nBlocks, centerCap)
+    butterflyCount(edges, blockThreshold, centerCap)
       .join(t.supplier.select(col("s_suppkey").as("suppkey")), Seq("suppkey"), "right")
       .select(col("suppkey"), coalesce(col("n_butterflies"), lit(0L)).as("n_butterflies"))
   }
@@ -810,7 +807,6 @@ object GraphOps {
   def butterflyCount(
       edges: DataFrame,
       blockThreshold: Int,
-      nBlocks: Int,
       centerCap: Option[Int] = None): DataFrame = {
     val kept = centerCap.fold(edges) { cap =>
       val hot = edges.groupBy("c").agg(count(lit(1)).as("cd"))
@@ -825,7 +821,7 @@ object GraphOps {
     // carry thousands of pairs vs g11's short per-item mention lists.)
     val ec = kept.select(col("c").as("grp"), col("s").as("id"))
       .repartition(col("grp")).localCheckpoint(true)
-    val wedges = sameGroupPairsSkewSafe(ec, blockThreshold, nBlocks)
+    val wedges = sameGroupPairsSkewSafe(ec, blockThreshold)
       .groupBy(col("id1").as("s1"), col("id2").as("s2"))
       .agg(count(lit(1)).as("w"))
     val perPair = wedges

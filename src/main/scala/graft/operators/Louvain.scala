@@ -128,16 +128,16 @@ object Louvain {
       blockThreshold: Int): DataFrame = {
     val cd = comdeg.withColumnRenamed("com", key)
     if (maxCn < blockThreshold) probe.join(cd, Seq(key))
-    else if (Route.broadcasts(cd, nComs)) probe.join(broadcast(cd), Seq(key))
+    else if (Route.broadcasts(cd, nComs)) probe.join(Route.small(cd, nComs), Seq(key))
     else {
       val s = GraphOps.derivedBlocks(maxCn, blockThreshold)
       val hotTag = cd.filter(col("cn") >= lit(blockThreshold.toLong))
         .select(col(key), lit(true).as("isHot"))
-      val build = cd.join(broadcast(hotTag), Seq(key), "left")
+      val build = cd.join(Route.small(hotTag, nComs), Seq(key), "left")
         .select(col(key), col("cd"), col("cn"),
           explode(when(col("isHot"),
             sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))).as("salt"))
-      probe.join(broadcast(hotTag), Seq(key), "left")
+      probe.join(Route.small(hotTag, nComs), Seq(key), "left")
         .withColumn("salt",
           when(col("isHot"), pmod(col(nodeCol), lit(s.toLong)).cast("int"))
             .otherwise(lit(0)))

@@ -97,7 +97,7 @@ object Relational {
     perOrder
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(
         sum(col("ord_rev")).cast("double").as("revenue"),
@@ -144,7 +144,7 @@ object Relational {
     perOrder
       .join(spark.table(orT), col("l_orderkey") === col("o_orderkey"))
       .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(
         sum(col("ord_rev")).cast("double").as("revenue"),
@@ -209,8 +209,8 @@ object Relational {
   def q7HierarchyRollup(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     t.customer
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+      .join(t.nation, col("c_nationkey") === col("n_nationkey"))
+      .join(t.region, col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(
         count(lit(1)).as("n_customers"),
@@ -244,7 +244,7 @@ object Relational {
     val t = Tables(spark, dir)
     t.lineitem
       .join(t.part, col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
+      .join(t.supplier, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("p_brand"))
       .agg(
         sum(dec("l_extendedprice")).cast("double").as("revenue"),
@@ -451,9 +451,9 @@ object Relational {
     val t = Tables(spark, dir)
     t.lineitem
       .select(col("l_suppkey"), col("l_returnflag"), dec("l_quantity").as("qty"))
-      .join(broadcast(t.supplier.select(col("s_suppkey"), col("s_nationkey"))),
+      .join(t.supplier.select(col("s_suppkey"), col("s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation.select(col("n_nationkey"), col("n_name"))),
+      .join(t.nation.select(col("n_nationkey"), col("n_name")),
         col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .pivot("l_returnflag", Seq("A", "N", "R"))
@@ -504,7 +504,7 @@ object Relational {
       .select(col("o_orderkey"), col("o_orderpriority"))
     val probeRows = ordersF.count()
     val dim =
-      if (Route.broadcasts(ordersF, probeRows)) broadcast(ordersF)
+      if (Route.broadcasts(ordersF, probeRows)) Route.small(ordersF, probeRows)
       else ordersF.hint("merge")
     t.lineitem
       .select(col("l_orderkey"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Pre-aggregated distinct-count rollups via HLL sketches — the pattern
   * that makes "distinct users over an arbitrary date range" an O(days)
@@ -167,14 +167,12 @@ object ExactRollup {
     * oracle computes the same number the honest way (count DISTINCT over
     * raw rows), so the driver hash-checks the whole
     * store-blobs-then-union path end to end — the lossless-union
-    * contract as a verified query, not just a spec. The day-bound probe
-    * is two scalars off a tiny aggregate (bounded driver action, the
-    * k-means/vocab pattern).
+    * contract as a verified query, not just a spec. The day bounds are
+    * metrics on the cell pin's own job (an empty corpus reads 0, 0).
     */
   def q13RollupDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val cells = buildDaily(spark, dir).localCheckpoint(true)
-    val r = cells.agg(min(col("day")), max(col("day"))).collect()(0)
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (cells, Seq(lo, hi)) =
+      Superstep.pin(buildDaily(spark, dir), min(col("day")), max(col("day")))
     distinctUsersOverRange(cells, lo + (hi - lo) / 4, hi - (hi - lo) / 4)
   }
 
@@ -190,12 +188,11 @@ object ExactRollup {
     * exactly, from O(days) small binaries — the roaring analog of what
     * no HLL sketch can do at all (sketch intersection has no error
     * bound worth shipping). Periods: first vs second half of the
-    * observed day range (bounded two-scalar probe, the q13 pattern).
+    * observed day range (pin-job day bounds, the q13 pattern).
     */
   def q18CohortSetops(spark: SparkSession, dir: String): DataFrame = {
-    val cells = buildDaily(spark, dir).localCheckpoint(true)
-    val r = cells.agg(min(col("day")), max(col("day"))).collect()(0)
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (cells, Seq(lo, hi)) =
+      Superstep.pin(buildDaily(spark, dir), min(col("day")), max(col("day")))
     val mid = lo + (hi - lo) / 2 // A = [lo, mid), B = [mid, hi]
     cells
       .groupBy(col("event_type"))
@@ -286,12 +283,7 @@ object AdaptiveRollup {
     */
   def q20AdaptiveDistinct(spark: SparkSession, dir: String): DataFrame = {
     val (raw, exact) = buildDaily(spark, dir)
-    val cells = raw.localCheckpoint(eager = true)
-    val r = cells.agg(min(col("day")), max(col("day"))).collect()(0)
-    // Empty corpus: min/max are null — answer with the (empty) result of
-    // a degenerate range rather than NPE-ing on getLong.
-    if (r.isNullAt(0)) return distinctUsersOverRange(cells, exact, 0L, 0L)
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (cells, Seq(lo, hi)) = Superstep.pin(raw, min(col("day")), max(col("day")))
     distinctUsersOverRange(cells, exact, lo + (hi - lo) / 4, hi - (hi - lo) / 4)
   }
 }

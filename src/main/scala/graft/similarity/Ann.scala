@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -49,7 +49,7 @@ object Ann {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     corpus
-      .crossJoin(broadcast(queries))
+      .crossJoin(Route.small(queries, 10))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))
@@ -78,7 +78,7 @@ object Ann {
     val corpus = t.embeddings.repartition(nPart)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
     corpus
-      .crossJoin(broadcast(queries))
+      .crossJoin(Route.small(queries, 10))
       .filter(col("query_id") =!= col("neighbor_id"))
       .filter(cosine(col("q_emb"), col("n_emb")) >= threshold)
       .select("query_id", "neighbor_id")
@@ -115,7 +115,7 @@ object Ann {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     corpus
-      .crossJoin(broadcast(queries))
+      .crossJoin(Route.small(queries, 10))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))
@@ -152,7 +152,7 @@ object Ann {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cent_id").asc)
     val ranked = t.embeddings
-      .crossJoin(broadcast(centroids))
+      .crossJoin(Route.small(centroids, nCells))
       .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
     val allowed = t.documents.filter(col("lang") === lang)
@@ -227,7 +227,7 @@ object Ann {
     // the most expensive stage. Blocks are released between queries by
     // GraftSession.releaseCaches.
     val assigned = t.embeddings.repartition(nPart)
-      .crossJoin(broadcast(centroids))
+      .crossJoin(Route.small(centroids, nCells))
       .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
@@ -290,7 +290,7 @@ object Ann {
     val planes = t.embeddings.filter(col("vec_id") < planesN)
       .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"))
     val bucketed = t.embeddings.repartition(nPart)
-      .crossJoin(broadcast(planes))
+      .crossJoin(Route.small(planes, planesN))
       .groupBy(col("vec_id"))
       .agg(
         first(col("embedding")).as("emb"),
@@ -321,7 +321,7 @@ object Ann {
     val planes = t.embeddings.filter(col("vec_id") < nPlanes)
       .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"))
     val bucketed = t.embeddings
-      .crossJoin(broadcast(planes))
+      .crossJoin(Route.small(planes, nPlanes))
       .groupBy(col("vec_id"))
       .agg(
         first(col("embedding")).as("emb"),
@@ -397,7 +397,7 @@ object Ann {
       .map(tb => trainedHyperplanes(spark, dim, nPlanes, seed + tb).withColumn("tbl", lit(tb)))
       .reduce(_.unionByName(_))
     val bucketed = emb
-      .crossJoin(broadcast(allPlanes))
+      .crossJoin(allPlanes)
       .groupBy(col("vec_id"), col("tbl"))
       .agg(
         sum(when(cosine(col("embedding"), col("h_emb")) >= 0,
@@ -419,7 +419,7 @@ object Ann {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     candidates
-      .join(broadcast(queries), Seq("query_id"))
+      .join(Route.small(queries, 10), Seq("query_id"))
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")),
         Seq("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
@@ -477,7 +477,7 @@ object Ann {
       val wAssign = Window.partitionBy(col("vec_id"))
         .orderBy(col("c_sim").desc, col("cent_id").asc)
       val assigned = trainSet
-        .crossJoin(broadcast(cdf))
+        .crossJoin(Route.small(cdf, cents.size))
         .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
         .withColumn("arn", row_number().over(wAssign))
         .filter(col("arn") === 1)
@@ -517,7 +517,7 @@ object Ann {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cent_id").asc)
     val ranked = t.embeddings
-      .crossJoin(broadcast(centroids))
+      .crossJoin(centroids)
       .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
     val assigned = ranked.filter(col("arn") === 1)
@@ -552,7 +552,7 @@ object Ann {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cent_id").asc)
     val assigned = t.embeddings
-      .crossJoin(broadcast(centroids))
+      .crossJoin(Route.small(centroids, nCells))
       .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** IVF + PQ — the two scale levers of the similarity family COMPOSED,
   * which is the shape billion-scale vector search actually ships
@@ -60,7 +60,7 @@ object IvfPq {
       lit(0L), (acc, v) => acc + v)
       .cast("double") / (col("n") * col("n")).cast("double")
     val w = Window.partitionBy(col("query_id")).orderBy(col("distd").asc, col("cell").asc)
-    queries.crossJoin(broadcast(centRows))
+    queries.crossJoin(Route.small(centRows, cents.size))
       .withColumn("distd", distd)
       .withColumn("prn", row_number().over(w))
       .filter(col("prn") <= nProbe)
@@ -122,9 +122,9 @@ object IvfPq {
       .collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     val luts = queryRows.map { case (id, qv) => id -> Pq.adcLut(qv, books) }.toMap
-    val probeLut = broadcast(
+    val probeLut =
       spark.createDataFrame(probes.toSeq.map { case (qid, cell) => (qid, cell, luts(qid)) })
-        .toDF("query_id", "cell", "lut"))
+        .toDF("query_id", "cell", "lut")
 
     // ADC shortlist INSIDE probed cells: the join key is the cell — the
     // corpus-side scan of unprobed cells is pruned by the equijoin, and
@@ -145,7 +145,7 @@ object IvfPq {
       .select("query_id", "neighbor_id")
 
     // Exact integer refine over the bounded shortlist (s7's stage 2).
-    val queryVecs = broadcast(queries.select(col("query_id"), col("qv").as("qqv")))
+    val queryVecs = queries.select(col("query_id"), col("qv").as("qqv"))
     val exactDist = aggregate(
       zip_with(col("qqv"), col("nqv"), (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, v) => acc + v)

@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Route
 
 /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein SIGIR'98)
   * diversified re-ranking — the serving-side step between retrieval and
@@ -96,7 +97,7 @@ object Mmr {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("neighbor_id").asc)
     val cands = corpus
-      .crossJoin(broadcast(queries))
+      .crossJoin(Route.small(queries, 10))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rel", Ann.cosine(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))

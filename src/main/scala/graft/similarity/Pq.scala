@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Route, Tables}
 
 /** Product quantization (PQ) — the COMPRESSED vector tier that makes
   * billion-scale similarity search feasible: each `dim`-dimensional
@@ -181,8 +181,7 @@ object Pq {
       codes: DataFrame, books: Seq[Codebook], queryLuts: Seq[(Long, Seq[Long])]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = codes.sparkSession
-    val queries = broadcast(
-      spark.createDataFrame(queryLuts).toDF("query_id", "lut"))
+    val queries = spark.createDataFrame(queryLuts).toDF("query_id", "lut")
     val dist = (0 until M)
       .map { sub =>
         element_at(col("lut"),
@@ -227,18 +226,18 @@ object Pq {
       .toSeq
     val shortlist = adcShortlist(
       codes, books, queryRows.map { case (id, qv) => (id, adcLut(qv, books)) })
-    val queryVecs = broadcast(
-      spark.createDataFrame(queryRows).toDF("query_id", "qqv"))
+    val queryVecs = spark.createDataFrame(queryRows).toDF("query_id", "qqv")
     val exactDist = aggregate(
       zip_with(col("qqv"), col("nqv"), (x, y) => (x - y) * (x - y)),
       lit(0L),
       (acc, v) => acc + v)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("dist").asc, col("neighbor_id").asc)
-    // The nq×Shortlist shortlist is the broadcast side; the quantized
+    // The shortlist holds at most nq×Shortlist rows: sized by that bound,
+    // it is the broadcast side when it fits; the quantized
     // corpus is scanned once and only candidate rows survive the join.
     q.select(col("vec_id").as("neighbor_id"), col("qv").as("nqv"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
+      .join(Route.small(shortlist, queryRows.size.toLong * Shortlist), Seq("neighbor_id"))
       .join(queryVecs, Seq("query_id"))
       .withColumn("dist", exactDist)
       .withColumn("rank", row_number().over(w))

@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Route, Tables}
 
 /** Scalar quantization (SQ8) ANN — the serving tier between brute force
   * (s1) and product quantization (s7): each dimension quantizes
@@ -85,7 +85,7 @@ object Sq {
       .orderBy(col("dist2").asc, col("neighbor_id").asc)
     val shortlist = codes
       .select(col("vec_id").as("neighbor_id"), col("codes").as("n_codes"))
-      .crossJoin(broadcast(qCodes))
+      .crossJoin(Route.small(qCodes, 10))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dist2",
         org.apache.spark.sql.graft.VectorExpressions
@@ -101,7 +101,7 @@ object Sq {
     shortlist
       .join(t.embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")),
         Seq("neighbor_id"))
-      .join(broadcast(qEmb), Seq("query_id"))
+      .join(Route.small(qEmb, 10), Seq("query_id"))
       .withColumn("sim", Ann.cosine(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(wFinal))
       .filter(col("rank") <= k)

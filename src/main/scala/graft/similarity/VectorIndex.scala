@@ -53,7 +53,7 @@ object VectorIndex {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cent_id").asc)
     embeddings
-      .crossJoin(broadcast(cdf))
+      .crossJoin(cdf)
       .withColumn("c_sim", Ann.cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
@@ -248,7 +248,7 @@ object VectorIndex {
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("c_sim").desc, col("cent_id").asc)
     val probes = queries
-      .crossJoin(broadcast(cdf))
+      .crossJoin(cdf)
       .withColumn("c_sim", Ann.cosine(col("q_emb"), col("c_emb")))
       .withColumn("prn", row_number().over(wProbe))
       .filter(col("prn") <= nProbe)

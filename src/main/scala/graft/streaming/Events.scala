@@ -322,7 +322,7 @@ object Events {
     events
       .select(col("event_id"), col("event_type"),
         expr("CAST(floor(value * 1000) AS BIGINT)").as("value_milli"))
-      .join(broadcast(thresholds), Seq("event_type"))
+      .join(thresholds, Seq("event_type"))
       .filter(col("value_milli") > col("p99_milli"))
       .select(col("event_id"), col("event_type"), col("value_milli"), col("p99_milli"))
 
@@ -363,7 +363,7 @@ object Events {
     // corpus/batchSize rows (the two-level contract), not corpus rows.
     val wPrev = Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)
     val hwm = batchMax.withColumn("prev", max(col("mt")).over(wPrev)).select("b", "prev")
-    e.join(broadcast(hwm), Seq("b"))
+    e.join(hwm, Seq("b"))
       .withColumn("late",
         when(col("prev").isNotNull && col("prev") > col("ts"), col("prev") - col("ts"))
           .otherwise(lit(0L)))

@@ -50,7 +50,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("g1 with blocking forced on emits exactly the plain pair set") {
     val plain = operators.GraphOps.g1SameGroupPairs(spark, dir).collect().toSet
     // blockThreshold=1 routes EVERY group through the salted blocked path.
-    val blocked = operators.GraphOps.g1SameGroupPairs(spark, dir, blockThreshold = 1, nBlocks = 4)
+    val blocked = operators.GraphOps.g1SameGroupPairs(spark, dir, blockThreshold = 1)
       .collect().toSet
     assert(blocked === plain)
   }
@@ -977,7 +977,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       (va(0), te(1)),  // val→test
       (tr(0), tr(1))   // same-split: must not appear in the report
     ).toDF("doc_id1", "doc_id2")
-    val got = functions.CurationPipeline.splitLeakageReport(docs, pairs).collect()
+    val got = functions.CurationPipeline.splitLeakageReport(docs, pairs, pairs.count()).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
     assert(got === Map(
       ("train", "val") -> (2L, 2L),

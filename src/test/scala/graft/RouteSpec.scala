@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class RouteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RouteSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   private var spark: SparkSession = _
+  private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
     spark = GraftSession.create("graft-route-test", master = "local[2]")
@@ -57,5 +60,49 @@ class RouteSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(hinted(Route.small(longs, 10)))
       assert(Route.small(longs, 11) eq longs)
     }
+  }
+
+  test("g1, s1 and t24 broadcast at the default threshold, never at -1, with the same rows") {
+    // One key per former hint family: a scanned dimension (g1's nation),
+    // a bounded query set (s1) and a one-row total (t24). Each side is
+    // sized by the planner or by Route, so the one setting moves them all.
+    // Read after the rows are collected: the final adaptive plan,
+    // query stages included.
+    def broadcastJoins(df: DataFrame) = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => j
+      case j: BroadcastNestedLoopJoinExec => j
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val ops = Seq[(String, (SparkSession, String) => DataFrame)](
+      "g1" -> ((s, d) => operators.GraphOps.g1SameGroupPairs(s, d)),
+      "s1" -> ((s, d) => similarity.Ann.s1CosineTopK(s, d)),
+      "t24" -> ((s, d) => functions.TextFuncs.t24DriftTerms(s, d)))
+    ops.foreach { case (name, op) =>
+      val routed = op(spark, dir)
+      val expected = rows(routed)
+      assert(expected.nonEmpty, s"$name returned no rows")
+      assert(broadcastJoins(routed).nonEmpty, s"$name should broadcast under the default threshold")
+      withThreshold("-1") {
+        val shuffled = op(spark, dir)
+        assert(rows(shuffled) === expected, s"$name changed its rows at -1")
+        val left = broadcastJoins(shuffled)
+        assert(left.isEmpty, s"$name still broadcasts at -1:\n${left.mkString("\n")}")
+      }
+    }
+  }
+
+  test("no broadcast( hint in src/main/scala outside Route.scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // A bare hint forces a broadcast whatever the threshold says; Route
+    // sizes a derived side from a count, the planner sizes the rest.
+    val hint = """\bbroadcast\(|hint\("broadcast""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50)
+    val offenders = files.filterNot(_.getFileName.toString == "Route.scala").flatMap { f =>
+      Files.readAllLines(f).asScala.filter(hint.findFirstIn(_).nonEmpty).map(l => s"$f: ${l.trim}")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

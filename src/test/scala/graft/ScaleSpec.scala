@@ -211,7 +211,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     def pairsOf(fps: Seq[(Long, Long)], subSplit: Boolean, candFactor: Long = 20L) =
       dedup.Dedup.bandedHammingPairs(
         fps.toDF("doc_id", "fp"), "fp", maxHamming = 6,
-        blockThreshold = 100000, nBlocks = 0, subSplit = subSplit, candFactor = candFactor)
+        blockThreshold = 100000, subSplit = subSplit, candFactor = candFactor)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     // ADOPT branch — a coincidental perceptual bucket: 200 fingerprints
@@ -578,7 +578,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
     val direct = operators.GraphOps.g19ButterflyCount(spark, dir).collect().map(key).toSet
     val routed = operators.GraphOps
-      .g19ButterflyCount(spark, dir, blockThreshold = 1, nBlocks = 4)
+      .g19ButterflyCount(spark, dir, blockThreshold = 1)
       .collect().map(key).toSet
     assert(routed === direct)
     assert(direct.exists(_._2 > 0))
@@ -592,14 +592,14 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, 10L), (4L, 20L), (4L, 30L)).toDF("c", "s")
     val expected = Map(10L -> 6L, 20L -> 6L)
     for (bt <- Seq(1, 1000)) {
-      val got = operators.GraphOps.butterflyCount(edges, blockThreshold = bt, nBlocks = 4)
+      val got = operators.GraphOps.butterflyCount(edges, blockThreshold = bt)
         .collect().map(key).toMap
       assert(got === expected, s"blockThreshold=$bt")
     }
     // centerCap is the LOSSY lever (off on the keyed path): cap 2 drops
     // hub center 4 from wedge generation, so w(10,20)=3 -> 3 butterflies.
     val capped = operators.GraphOps
-      .butterflyCount(edges, blockThreshold = 1000, nBlocks = 4, centerCap = Some(2))
+      .butterflyCount(edges, blockThreshold = 1000, centerCap = Some(2))
       .collect().map(key).toMap
     assert(capped === Map(10L -> 3L, 20L -> 3L))
   }

@@ -139,6 +139,9 @@ class SketchRollupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = graft.operators.AdaptiveRollup.q20AdaptiveDistinct(spark, tmp)
     assert(got.columns.toSeq === Seq("event_type", "n_users"))
     assert(got.collect().isEmpty)
+    // q13 and q18 read the same pin-job day bounds (0, 0 when empty).
+    assert(graft.operators.ExactRollup.q13RollupDistinct(spark, tmp).collect().isEmpty)
+    assert(graft.operators.ExactRollup.q18CohortSetops(spark, tmp).collect().isEmpty)
   }
 
   test("appending one day's sketches == full rebuild for the extended range") {
