@@ -4,31 +4,42 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{col, count, when}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftInternals
 
-/** The engine's one superstep primitive: how an iterative operator pins
-  * its state, learns that it is done, and gives the blocks back.
+/** The engine's one superstep primitive, and its only materialization: how
+  * an operator pins a frame, learns that an iteration is done, and gives
+  * the blocks back.
   *
-  * A pin is an eager `localCheckpoint`: lineage stops at the pin and its
-  * partitions are computed exactly once. A pinned frame plans as `Scan
-  * ExistingRDD` with unknown partitioning, so a pin never saves the next
-  * superstep's exchange on its key. `Dataset.unpersist` frees nothing for a
-  * pin (the blocks belong to the RDD under its `LogicalRDD`, not to the
-  * cache manager); [[release]] frees them through that RDD. Pins nobody
+  * A pin is an eager local checkpoint: lineage stops at the pin and its
+  * partitions are computed exactly once. The pin job also measures what it
+  * stores (rows, string and binary bytes, array and map elements), and the
+  * pinned frame plans with those numbers (`rowCount`, and `sizeInBytes`
+  * from Spark's own per-row size with each measured column at its observed
+  * length) instead of the estimate of the plan it replaced. So Spark's
+  * planner sizes a pinned join side itself: a pinned side needs no
+  * [[Route]], and [[rows]] reads the count back. A pinned frame plans as
+  * `Scan ExistingRDD` with unknown partitioning, so a pin never saves the
+  * next superstep's exchange on its key. `Dataset.unpersist` frees nothing
+  * for a pin (the blocks belong to the RDD under its `LogicalRDD`, not to
+  * the cache manager); [[release]] frees them through that RDD. Pins nobody
   * releases are swept by [[GraftSession.releaseCaches]] after the query.
   */
 object Superstep {
 
-  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  def pin(df: DataFrame): DataFrame = GraftInternals.measuredCheckpoint(df)
 
   /** [[pin]] that also evaluates the aggregate `metrics` on the pin job
     * itself (`Dataset.observe`, read from a fresh `Observation`), so a
-    * row count, a convergence count or a max costs no extra action. Values
-    * come back as Longs in argument order; an aggregate over no rows that
+    * convergence count, a sum or a max costs no extra action. Values come
+    * back as Longs in argument order; an aggregate over no rows that
     * yields null (a sum or max, or any metric of an input with no
     * partitions) reads as 0.
     */
   def pin(df: DataFrame, metric: Column, more: Column*): (DataFrame, IndexedSeq[Long]) =
     pinObserved(df, metric +: more, identity)
+
+  /** The row count a pin measured on its job. */
+  def rows(pinned: DataFrame): Long = logicalRdd(pinned).stats.rowCount.get.toLong
 
   /** Observes `metrics` on `df`, then pins `finish` of it: the metrics may
     * read columns `finish` drops, which are then never stored.
@@ -52,8 +63,10 @@ object Superstep {
     */
   def release(pinned: DataFrame): Unit = rddOf(pinned).unpersist(blocking = false)
 
-  private[graft] def rddOf(pinned: DataFrame): RDD[_] = pinned.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd
+  private[graft] def rddOf(pinned: DataFrame): RDD[_] = logicalRdd(pinned).rdd
+
+  private def logicalRdd(pinned: DataFrame): LogicalRDD = pinned.queryExecution.logical match {
+    case r: LogicalRDD => r
     case p => throw new IllegalArgumentException(s"not a pinned frame: ${p.nodeName}")
   }
 

@@ -107,7 +107,7 @@ object Dedup {
       bands: Int = 32,
       blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame =
-    verifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, candFactor)._1
+    verifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, candFactor)
 
   /** Public face of the memoized pair set for downstream consumers that
     * want the default detection product without d3's terminal verify
@@ -115,10 +115,6 @@ object Dedup {
     * pairs immediately).
     */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    nearDupPairsCounted(spark, dir)._1
-
-  /** [[nearDupPairs]] with its row count, read on the memo's pin job. */
-  def nearDupPairsCounted(spark: SparkSession, dir: String): (DataFrame, Long) =
     verifiedPairs(spark, dir, 0.8, 128, 32)
 
   /** Memoized verified near-dup pairs — the shared detection product of
@@ -129,8 +125,8 @@ object Dedup {
     * (pairs are orders of magnitude smaller than the corpus), so a
     * session that runs detection AND resolution pays the signature /
     * banding / verify pipeline once — the round-3 d6 bench cost was
-    * d3-run-twice, not clustering. The entry carries the pair count,
-    * counted on the pin job, so consumers can size a join by it.
+    * d3-run-twice, not clustering. The pin carries its measured pair
+    * count, so the planner sizes every join against it.
     */
   private def verifiedPairs(
       spark: SparkSession,
@@ -139,12 +135,11 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       blockThreshold: Int = 100000,
-      candFactor: Long = 20L): (DataFrame, Long) =
+      candFactor: Long = 20L): DataFrame =
     graft.GraftSession.memo(spark, ("verifiedPairs", dir, threshold, numHashes, bands,
         blockThreshold, candFactor)) {
-      val (pairs, Seq(rows)) = Superstep.pin(verifiedPairsOf(Tables(spark, dir).documents,
-        threshold, numHashes, bands, blockThreshold, candFactor), count(lit(1)))
-      (graft.GraftSession.retain(pairs), rows)
+      graft.GraftSession.retainCheckpoint(verifiedPairsOf(Tables(spark, dir).documents,
+        threshold, numHashes, bands, blockThreshold, candFactor))
     }
 
   /** The d3 detection pipeline parametrized by its corpus: banded-LSH
@@ -189,12 +184,11 @@ object Dedup {
     // router is a projection over stored integers — never a second run of
     // the MinHash kernel over the corpus text (the d15 discipline applied
     // to the doc tier).
-    val sigs = base
+    val sigs = Superstep.pin(base
       .select(
         col("doc_id"),
         org.apache.spark.sql.graft.VectorExpressions
-          .minhashSignature(col("text"), 5, numHashes).as("sig"))
-      .localCheckpoint(true)
+          .minhashSignature(col("text"), 5, numHashes).as("sig")))
     def bandedAt(b: Int): DataFrame = {
       val rowsPerBand = numHashes / b
       sigs
@@ -267,7 +261,7 @@ object Dedup {
     // Consumes the memoized verified-pairs checkpoint, NOT a fresh d3
     // run: in a detect-then-resolve session the LSH pipeline executes
     // once and d6 is clustering-cost only.
-    resolveKeepMin(Tables(spark, dir).documents, verifiedPairs(spark, dir, threshold, 128, 32)._1)
+    resolveKeepMin(Tables(spark, dir).documents, verifiedPairs(spark, dir, threshold, 128, 32))
 
   /** The resolve tail d6, m7 and m8 share: near-dup pairs `(doc_id1,
     * doc_id2)` form an undirected graph, hash-min connected components
@@ -275,17 +269,17 @@ object Dedup {
     * transitively-linked documents, and each cluster keeps its minimum
     * doc_id. Every row of `docs` gets `(doc_id, canonical_id, is_kept)`;
     * a document in no pair is its own canonical. The label table holds
-    * one row per paired document, so nothing bounds it: it is broadcast
-    * only when [[graft.Route]] fits its node count, read on the CC init
-    * pin's job, in the session's `autoBroadcastJoinThreshold`.
+    * one row per paired document, so nothing bounds it: the planner
+    * sizes it from the components' final pin and broadcasts it only when
+    * it fits the session's `autoBroadcastJoinThreshold`.
     */
   private[graft] def resolveKeepMin(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val (labels, nodes) = graft.operators.GraphIter.countedComponents(
+    val labels = graft.operators.GraphIter.connectedComponents(
       pairs.select(col("doc_id1").as("src"), col("doc_id2").as("dst")))
     val comps = labels.select(col("node").as("doc_id"), col("label").as("canonical"))
     val canonical = coalesce(col("canonical"), col("doc_id"))
     docs.select(col("doc_id"))
-      .join(Route.small(comps, nodes), Seq("doc_id"), "left")
+      .join(comps, Seq("doc_id"), "left")
       .select(col("doc_id"), canonical.as("canonical_id"),
         (col("doc_id") === canonical).cast("int").as("is_kept"))
   }
@@ -597,7 +591,7 @@ object Dedup {
     // Materialize the fingerprints once (16 bytes/row): the skew routing
     // consumes its input in several plan branches, and each would
     // otherwise re-run the fingerprint kernel over the corpus.
-    val fpCp = fp.select(col("doc_id"), col(fpCol).as("fp")).localCheckpoint(true)
+    val fpCp = Superstep.pin(fp.select(col("doc_id"), col(fpCol).as("fp")))
     // The band/verify stage over any (doc_id, fp) set — shared by the
     // direct and collapsed routes; the sub-band router runs inside it.
     def bandStage(rows: DataFrame): DataFrame = {
@@ -692,7 +686,7 @@ object Dedup {
     * the 17-bit direct band keys, so the union feeds one salted stage.
     */
   private[graft] def subSplitKeys(keyed0: DataFrame, maxHamming: Int, candFactor: Long): DataFrame = {
-    val k = keyed0.localCheckpoint(true)
+    val k = Superstep.pin(keyed0)
     def massOf(df: DataFrame): Long =
       df.groupBy("grp").agg(count(lit(1)).as("gsz"))
         .agg(coalesce(sum(expr("gsz * (gsz - 1) DIV 2")), lit(0L)))
@@ -700,10 +694,9 @@ object Dedup {
     val pr = k.groupBy("grp").agg(count(lit(1)).as("gsz"))
       .agg(
         coalesce(sum(expr("gsz * (gsz - 1) DIV 2")), lit(0L)),
-        coalesce(sum(col("gsz")), lit(0L)),
         coalesce(max(col("gsz")), lit(0L)))
       .head()
-    val (mass, rows, maxSz) = (pr.getLong(0), pr.getLong(1), pr.getLong(2))
+    val (mass, rows, maxSz) = (pr.getLong(0), Superstep.rows(k), pr.getLong(1))
     val nItems = math.max(rows / 4, 1L) // 4 bands per fingerprint
     // A bucket routes when ITS OWN mass C(gsz,2) exceeds the whole
     // corpus' candidate budget: gsz ≥ √(2·candFactor·n).
@@ -729,14 +722,13 @@ object Dedup {
         val width = if (j == s - 1) maxW else w
         expr(s"shiftright(rem, ${j * w}) & ${(1L << width) - 1}")
       }: _*)
-      val over = k.join(overGroups, Seq("grp"), "left_semi")
+      val over = Superstep.pin(k.join(overGroups, Seq("grp"), "left_semi")
         .withColumn("rem", rem)
         .select(col("grp"), col("id"), posexplode(subVals))
         .toDF("grp", "id", "j", "subv")
         .select(
           (lit(1L << 17) + (col("grp") * s + col("j")) * lit(1L << maxW) + col("subv")).as("grp"),
-          col("id"))
-        .localCheckpoint(true)
+          col("id")))
       val overMass = massOf(k.join(overGroups, Seq("grp"), "left_semi"))
       val splitMass = massOf(over)
       if (splitMass * 2 <= overMass) small.unionByName(over)
@@ -784,7 +776,7 @@ object Dedup {
       .filter(col("df") > dfCutoff).select("g")
     // One checkpointed pass of the filtered index feeds both join sides
     // and the denominator count.
-    val pruned = inv.join(stop, Seq("g"), "left_anti").localCheckpoint(true)
+    val pruned = Superstep.pin(inv.join(stop, Seq("g"), "left_anti"))
     val na = pruned.groupBy("doc_id").agg(count(lit(1)).as("n_grams_a"))
     pruned.select(col("doc_id").as("id_a"), col("g"))
       .join(pruned.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
@@ -873,19 +865,18 @@ object Dedup {
     */
   def d14SubstringSpans(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grams = Tables(spark, dir).documents
+    // Consumed by BOTH the dup-gram aggregate and the coverage join:
+    // materialize once (20 bytes/row) instead of re-running the gram
+    // explode + xxhash64 over the corpus per branch — the same shared-
+    // frame discipline as bandedHammingPairs / d15's chunks.
+    val grams = Superstep.pin(Tables(spark, dir).documents
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= k)
       .select(col("doc_id"),
         posexplode(expr(
           s"""transform(sequence(1, size(w) - ${k - 1}),
              |  p -> xxhash64(array_join(slice(w, p, $k), ' ')))""".stripMargin)))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("s"), col("col").as("gh"))
-      // Consumed by BOTH the dup-gram aggregate and the coverage join:
-      // materialize once (20 bytes/row) instead of re-running the gram
-      // explode + xxhash64 over the corpus per branch — the same shared-
-      // frame discipline as bandedHammingPairs / d15's chunks.
-      .localCheckpoint(true)
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("s"), col("col").as("gh")))
     val dupGrams = grams.groupBy("gh")
       .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))
       .filter(col("mn") < col("mx"))
@@ -1010,7 +1001,7 @@ object Dedup {
       blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val chunks = Tables(spark, dir).documents
+    val chunks = Superstep.pin(Tables(spark, dir).documents
       .filter(length(col("text")) >= 5)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .repartition(nPart)
@@ -1020,17 +1011,15 @@ object Dedup {
              |  c -> array_join(slice(w, c * $chunkWords + 1, $chunkWords), ' '))""".stripMargin)))
       .toDF("doc_id", "cn", "ct")
       .filter(length(col("ct")) >= 5)
-      .select((col("doc_id") * expr("CAST(1048576 AS BIGINT)") + col("cn")).as("cid"), col("ct"))
-      .localCheckpoint(true)
+      .select((col("doc_id") * expr("CAST(1048576 AS BIGINT)") + col("cn")).as("cid"), col("ct")))
     // Signatures are computed ONCE and checkpointed: the band shape below
     // may be re-derived at a different width, and re-slicing a stored
     // signature is a projection while re-hashing the text is the whole
     // MinHash kernel again.
-    val sigs = chunks
+    val sigs = Superstep.pin(chunks
       .select(col("cid"),
         org.apache.spark.sql.graft.VectorExpressions
-          .minhashSignature(col("ct"), 5, numHashes).as("sig"))
-      .localCheckpoint(true)
+          .minhashSignature(col("ct"), 5, numHashes).as("sig")))
     def keyedAt(b: Int): DataFrame = {
       val rowsPerBand = numHashes / b
       sigs
@@ -1112,13 +1101,12 @@ object Dedup {
       .repartition(nPart)
     val existing = docs.repartition(nPart)
     // ONE corpus text scan for the filter build: the 8-byte digest column
-    // is checkpointed, then both the filter-sizing count and the Bloom
-    // aggregate read the digest blocks — the corpus text is never scanned
+    // is pinned, the filter is sized by the pin's row count and the Bloom
+    // aggregate reads the digest blocks — the corpus text is never scanned
     // twice for one filter (it was: count + stat.bloomFilter were two full
-    // passes). The production form skips the count entirely, sizing from
-    // table statistics or the previous epoch's corpus count.
-    val dg = existing.select(xxhash64(col("text")).as("dg")).localCheckpoint(true)
-    val exCount = math.max(dg.count(), 1L)
+    // passes).
+    val dg = Superstep.pin(existing.select(xxhash64(col("text")).as("dg")))
+    val exCount = math.max(Superstep.rows(dg), 1L)
     val bloom = dg.stat.bloomFilter(col("dg"), exCount, fpp)
     val maybe = incoming.filter(
       org.apache.spark.sql.graft.VectorExpressions
@@ -1237,7 +1225,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(org.apache.spark.sql.graft.VectorExpressions
           .winnowCodes(col("text"), k, w)).as("h"))
-    val fpsC = fps.localCheckpoint(true)
+    val fpsC = Superstep.pin(fps)
     val keep = fpsC.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCutoff)
       .select("h")

@@ -1,5 +1,7 @@
 package graft.dedup
 
+import graft.Superstep
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -124,7 +126,7 @@ object SignatureIndex {
     */
   def append(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
-    val rows = buildRows(docs).localCheckpoint(true)
+    val rows = Superstep.pin(buildRows(docs))
     rows.write.mode("append").parquet(rowsPath(path))
     bandTable(spark, path) // ensure registered before bucketed append
     writeBands(spark, rows, path, "append")
@@ -151,9 +153,9 @@ object SignatureIndex {
       threshold: Double = 0.8): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val index = spark.read.parquet(rowsPath(path))
-    val inRows = buildRows(incoming.select(col("doc_id"), col("text")))
-      .repartition(nPart)
-      .localCheckpoint(true) // probed three times: exact, bands, verify
+    // Probed three times: exact, bands, verify.
+    val inRows = Superstep.pin(buildRows(incoming.select(col("doc_id"), col("text")))
+      .repartition(nPart))
     val exact = inRows.select(col("doc_id"), col("text_hash"))
       .join(index.select(col("text_hash"), col("doc_id").as("ex_id")), Seq("text_hash"))
       .groupBy("doc_id")

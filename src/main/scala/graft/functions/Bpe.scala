@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Route, Superstep, Tables}
+import graft.{Superstep, Tables}
 
 /** Distributed BPE VOCABULARY TRAINING (Sennrich, Haddow & Birch 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
@@ -135,48 +135,31 @@ object Bpe {
     * after later ones — one greedy pass per rank IS the per-word
     * fixpoint (same greedy-L2R semantics the trainer counted with).
     *
-    * Unlike training, the merge list is KNOWN UP FRONT here — no
-    * per-pass driver decision — so passes CAN fuse into one plan
-    * (`checkpointEvery` = K pins an eager localCheckpoint every K
-    * passes; every mergePass window clusters on `word`, so a fused
-    * chain is one exchange plus local sorts). The r16 A/B MEASURED the
-    * fusion as a small net loss on the 6-merge gate at sf0.1 (t32
-    * 4.53 → 4.48–5.76 s across windows at checkpointEvery = 8: the
-    * per-pass materializations are 32-way-parallel micro-jobs over a
+    * Every pass is pinned. The r16 A/B measured fusing passes between
+    * pins (one plan over several passes) as a small net loss on the
+    * 6-merge gate at sf0.1 (t32 4.53 → 4.48–5.76 s with a pin every 8
+    * passes: the per-pass pins are parallel micro-jobs over a
     * words-sized relation, while the fused plan pays Catalyst
-    * optimization + codegen of an 18-window stack per consuming action)
-    * — so the DEFAULT stays per-pass (= 1, the pre-r16 shape) and the
-    * knob remains for merge tables long enough that job-count dominates.
-    * Fused and per-pass plans are value-identical (spec-forced at 1, 2
-    * and fully-fused on a crafted chain).
+    * optimization and codegen of an 18-window stack per consuming action).
     *
     * Scale shape: the input is the DISTINCT word table (language-sized,
-    * not corpus-sized); the fused chain shuffles O(words · len) rows
-    * once on `word`. Corpus-sized work never enters the loop — the
-    * caller joins the per-word piece counts back onto per-document word
-    * counts.
+    * not corpus-sized); each pass shuffles O(words · len) rows on
+    * `word`. Corpus-sized work never enters the loop — the caller joins
+    * the per-word piece counts back onto per-document word counts, and
+    * the planner sizes that join from the last pass's pin.
     */
-  def encodeWords(
-      words: DataFrame,
-      merges: Seq[(String, String)],
-      checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+  def encodeWords(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val init = Superstep.pin(words.select(col("word"),
       explode(sequence(lit(1), length(col("word")))).as("pos"))
       .select(col("word"), col("pos"),
         col("word").substr(col("pos"), lit(1)).as("sym")))
     val ms = merges.toIndexedSeq
-    val (seq, _) = Superstep.iterate(init, 1 to ms.size, cadence = checkpointEvery) {
+    // The final state is the last pass's pin, so consumers that read the
+    // piece table more than once (t33's two-level prefix sum, t34's
+    // water-fill) never re-run a pass.
+    val (pieces, _) = Superstep.iterate(init, 1 to ms.size) {
       (seq, r) => mergePass(seq, ms(r - 1)._1, ms(r - 1)._2)
     }
-    // The FINAL state is always pinned: consumers reference the piece
-    // table more than once (t33's two-level prefix sum and t34's
-    // water-fill both reuse their input), and without this pin each
-    // reference would re-evaluate every pass since the last pin —
-    // measured at sf0.1 as a consistent t34 regression (5.3 → 7.6 s)
-    // when a fully-fused cut (checkpointEvery = 8) landed without it.
-    // The loop's own last pin, if any, then waits for releaseCaches.
-    val pieces = if (ms.size % checkpointEvery == 0) seq else Superstep.pin(seq)
     if (ms.nonEmpty) Superstep.release(init)
     pieces.groupBy("word").agg(count(lit(1)).as("n_pieces"))
   }
@@ -221,14 +204,12 @@ object Bpe {
     *
     * "Language-sized" is an assumption a web corpus violates (typo'd
     * alpha runs make the distinct-word table corpus-shaped in the
-    * tail), so the piece-count join is PROBE-ROUTED, not blind-
-    * broadcast (the q23 measure-then-route discipline): the distinct
-    * word table — materialized anyway as the encoder's input — is
-    * counted once (a bounded probe scalar), broadcast only when it fits
-    * the session's `autoBroadcastJoinThreshold` ([[graft.Route]]), else a
-    * plain equijoin on `word` (both sides already shuffle-keyed by word;
-    * no driver-side table at any size). Routing never changes values —
-    * spec-forced both ways.
+    * tail), so the piece-count join is not blind-broadcast: the
+    * planner sizes the piece counts from the encoder's last pin (its
+    * measured row count, [[graft.Superstep]]) and broadcasts them only
+    * when they fit the session's `autoBroadcastJoinThreshold`, else a
+    * plain equijoin on `word` (no driver-side table at any size). The
+    * route never changes values — spec-forced both ways.
     */
   def t32BpeEncode(
       spark: SparkSession, dir: String,
@@ -249,12 +230,10 @@ object Bpe {
     * the trained tokenizer's piece count attached —
     * `(doc_id, word, occ, n_pieces)`. Train (vocab-sized rounds) →
     * collect the O(rounds) merge table (bounded probe-scalar class) →
-    * encode the DISTINCT word table → probe-routed join back onto the
-    * per-document word counts (broadcast when [[graft.Route]] fits the
-    * measured word count in the session's `autoBroadcastJoinThreshold`,
-    * else a plain equijoin on `word` — the q23 measure-then-route
-    * discipline; the probe count rides the distinct-word table the
-    * encoder materializes anyway).
+    * encode the DISTINCT word table → join back onto the per-document
+    * word counts, sized by the planner from the encoder's last pin
+    * (broadcast when it fits the session's `autoBroadcastJoinThreshold`,
+    * else a plain equijoin on `word`).
     */
   private def encodedDocWords(
       spark: SparkSession, dir: String, rounds: Int, topV: Int): DataFrame = {
@@ -267,21 +246,17 @@ object Bpe {
     // O(Σ distinct words per doc) narrow rows (ids + a short word),
     // orders of magnitude under the text it replaces re-scanning; it is
     // released with the query (releaseCaches), never cross-run state.
-    val docWords = docs.select(col("doc_id"),
+    val docWords = Superstep.pin(docs.select(col("doc_id"),
       explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
       .filter(length(col("word")).between(2, 12))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("occ"))
-      .localCheckpoint(true)
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("occ")))
     // == vocabulary(docs, topV): total occurrences = Σ per-doc counts.
     val vocab = docWords.groupBy("word").agg(sum("occ").as("freq"))
       .orderBy(col("freq").desc, col("word").asc).limit(topV)
     val merges = trainMerges(vocab, rounds)
       .collect().sortBy(_.getInt(0))
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val wordTab = docWords.select("word").distinct().localCheckpoint(true)
-    val nWords = wordTab.count()
-    val pieces = encodeWords(wordTab, merges)
-    docWords.join(Route.small(pieces, nWords), Seq("word"))
+    docWords.join(encodeWords(Superstep.pin(docWords.select("word").distinct()), merges), Seq("word"))
   }
 
   /** t35: TOKENIZER EVALUATION per (lang, source) slice — fertility

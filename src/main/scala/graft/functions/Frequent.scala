@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Tables}
+import graft.{Superstep, Tables}
 
 /** Exact heavy hitters without shuffling the distinct domain — the
   * two-pass Misra-Gries + recount construction (Misra & Gries 1982;
@@ -90,47 +90,40 @@ object Frequent {
     val toks = tokens.select(col("token")).as[String]
     // Pass 1: bounded per-partition summaries (m×P rows) PLUS each
     // partition's row count carried as a null-token sentinel — the corpus
-    // total the certificate needs falls out of the same scan instead of
-    // costing a third full pass. Persisted because two tiny aggregates
-    // consume it; without the pin the second would rescan the corpus.
-    val summaries = toks.mapPartitions { it =>
+    // total the certificate needs is a metric on the pin job instead of a
+    // third full pass. Pinned because the candidate aggregate reads it
+    // after the total is known; without the pin it would rescan the corpus.
+    val (summaries, Seq(total)) = Superstep.pin(toks.mapPartitions { it =>
       var n = 0L
       val mg = misraGries(it.map { t => n += 1; t }, m)
       // misraGries drains the iterator before returning, so n is final.
       mg.map { case (t, c) => (t, c) } ++ Iterator((null: String, n))
-    }.toDF("token", "mg_cnt")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The same aggregate counts the summary entries: an upper bound on
-      // the merged candidate rows that sizes the semi-join below.
-      val tally = summaries
-        .agg(coalesce(sum(when(col("token").isNull, col("mg_cnt"))), lit(0L)), count(col("token")))
-        .head()
-      val (total, summaryRows) = (tally.getLong(0), tally.getLong(1))
-      // The candidate set stays a DATAFRAME: merged it is bounded by m×P
-      // rows, which at production partition counts is 10⁵-10⁶ — far too
-      // many to splat into an `isin` literal list (analyzer/codegen blowup)
-      // or collect to the driver at all.
-      val candidates = summaries.filter(col("token").isNotNull)
-        .groupBy("token").agg(sum("mg_cnt").as("mg_cnt"))
-      // Pass 2: exact recount of the bounded candidate set only. The
-      // membership filter is a semi-join, broadcast when the candidates
-      // fit ([[graft.Route]]), so no literal list ever reaches the plan.
-      val exactCand = toks.toDF("token")
-        .join(Route.small(candidates.select("token"), summaryRows), Seq("token"), "left_semi")
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token").asc)
-        .limit(k)
-      val top = exactCand.collect()
-      // Certificate: the k-th exact candidate count must beat the maximum
-      // possible count of any NON-candidate (N/(m+1)). Holds whenever the
-      // distribution has real heavy hitters.
-      val certified = top.length >= k && top.last.getLong(1) > total / (m + 1)
-      if (certified)
-        Some(spark.createDataFrame(spark.sparkContext.parallelize(top.toIndexedSeq, 1),
-          exactCand.schema))
-      else None
-    } finally summaries.unpersist()
+    }.toDF("token", "mg_cnt"), sum(when(col("token").isNull, col("mg_cnt"))))
+    // The candidate set stays a DATAFRAME: merged it is bounded by m×P
+    // rows, which at production partition counts is 10⁵-10⁶ — far too
+    // many to splat into an `isin` literal list (analyzer/codegen blowup)
+    // or collect to the driver at all.
+    val candidates = summaries.filter(col("token").isNotNull)
+      .groupBy("token").agg(sum("mg_cnt").as("mg_cnt"))
+    // Pass 2: exact recount of the bounded candidate set only. The
+    // membership filter is a semi-join the planner sizes from the
+    // summaries pin (broadcast when the candidates fit), so no literal
+    // list ever reaches the plan.
+    val exactCand = toks.toDF("token")
+      .join(candidates.select("token"), Seq("token"), "left_semi")
+      .groupBy("token").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("token").asc)
+      .limit(k)
+    val top = exactCand.collect()
+    Superstep.release(summaries)
+    // Certificate: the k-th exact candidate count must beat the maximum
+    // possible count of any NON-candidate (N/(m+1)). Holds whenever the
+    // distribution has real heavy hitters.
+    val certified = top.length >= k && top.last.getLong(1) > total / (m + 1)
+    if (certified)
+      Some(spark.createDataFrame(spark.sparkContext.parallelize(top.toIndexedSeq, 1),
+        exactCand.schema))
+    else None
   }
 
   /** t30: exact top-10 frequent ≥5-char tokens over the document corpus

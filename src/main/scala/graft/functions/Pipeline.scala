@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** The curation pipeline END TO END — the composition a user of the
   * reference actually runs (validate → skip-already-fetched → dedup →
@@ -63,22 +63,21 @@ object CurationPipeline {
     * Scale shape: the split is t21's shuffle-free projection; the pair
     * set is d3's memoized banded-LSH product (result-sized — orders of
     * magnitude smaller than the corpus); each labeling join broadcasts
-    * the pair set against the corpus projection when the memo's pair
-    * count fits ([[graft.Route]]), so the corpus never shuffles and each
-    * join's output is pair-sized. The final rollup
-    * aggregates ≤ |pairs| rows into ≤ 3 rows.
+    * the pair set against the corpus projection when the memo pin's
+    * pair count fits the session's `autoBroadcastJoinThreshold`, so the
+    * corpus never shuffles and each join's output is pair-sized. The
+    * final rollup aggregates ≤ |pairs| rows into ≤ 3 rows.
     */
   def t29SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, pairRows) = graft.dedup.Dedup.nearDupPairsCounted(spark, dir)
-    splitLeakageReport(Tables(spark, dir).documents, pairs, pairRows)
+    splitLeakageReport(Tables(spark, dir).documents, graft.dedup.Dedup.nearDupPairs(spark, dir))
   }
 
   /** The report over an arbitrary (doc_id, text) corpus and an arbitrary
-    * (doc_id1, doc_id2) pair frame of `pairRows` rows — factored so the
-    * spec can pin the canonicalization and aggregation against a
-    * hand-computed recount on a crafted pair set.
+    * (doc_id1, doc_id2) pair frame — factored so the spec can pin the
+    * canonicalization and aggregation against a hand-computed recount on a
+    * crafted pair set.
     */
-  def splitLeakageReport(docs: DataFrame, pairFrame: DataFrame, pairRows: Long): DataFrame = {
+  def splitLeakageReport(docs: DataFrame, pairFrame: DataFrame): DataFrame = {
     // Pipeline rank makes (early, late) deterministic and meaningful:
     // leakage flows from the earlier (larger, trained-on) split into the
     // later (evaluated) one.
@@ -88,12 +87,16 @@ object CurationPipeline {
           .when(col("split") === "val", 1)
           .otherwise(2).as("rk"))
     val pairs = pairFrame.select("doc_id1", "doc_id2")
-    // Each labeling join matches a pair to at most one doc, so both pair
-    // sides hold at most `pairRows` rows.
-    val p1 = splits.join(Route.small(pairs, pairRows), splits("doc_id") === pairs("doc_id1"))
+    // The planner sizes the first labeling join from the pair frame. It
+    // matches a pair to at most one doc, so its output holds at most the
+    // pair frame's row count: when the plan knows that count (a pin's
+    // does), it is the bound the second join is routed by.
+    val p1 = splits.join(pairs, splits("doc_id") === pairs("doc_id1"))
       .select(col("doc_id1"), col("doc_id2"),
         col("split").as("split1"), col("rk").as("rk1"))
-    val p2 = splits.join(Route.small(p1, pairRows), splits("doc_id") === p1("doc_id2"))
+    val pairRows = pairFrame.queryExecution.optimizedPlan.stats.rowCount
+    val p2 = splits
+      .join(pairRows.fold(p1)(n => Route.small(p1, n.toLong)), splits("doc_id") === p1("doc_id2"))
       .select(col("doc_id1"), col("doc_id2"), col("split1"), col("rk1"),
         col("split").as("split2"), col("rk").as("rk2"))
     p2.filter(col("split1") =!= col("split2"))
@@ -128,30 +131,25 @@ object CurationPipeline {
     // projection itself (r17): the previous verdict→re-join-the-corpus
     // shape scanned documents twice and shuffled the corpus on doc_id
     // just to re-attach the text column the projection already had.
-    val base = TextFuncs.withCurationVerdict(corpus, carry = Seq("text"))
-      .select(col("doc_id"), col("keep"), col("text"))
-      .localCheckpoint(true)
+    val base = Superstep.pin(TextFuncs.withCurationVerdict(corpus, carry = Seq("text"))
+      .select(col("doc_id"), col("keep"), col("text")))
     val q = base.filter(col("keep") === 1)
 
     // Stage 2: exact dedup, keep-min over the digest among survivors.
     // Checkpointed because BOTH the survivor set and the exact_dup label
     // row consume it — without this the digest window runs twice.
-    val s2src = q.select(col("doc_id"), col("text"), md5(col("text")).as("h"))
-      .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy(col("h"))))
-      .localCheckpoint(true)
-    val s2 = s2src.filter(col("doc_id") === col("min_id"))
-      .select("doc_id", "text")
-      .localCheckpoint(true)
+    val s2src = Superstep.pin(q.select(col("doc_id"), col("text"), md5(col("text")).as("h"))
+      .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy(col("h")))))
+    val s2 = Superstep.pin(s2src.filter(col("doc_id") === col("min_id"))
+      .select("doc_id", "text"))
 
     // Stage 3: near-dup screen over the survivor set — the full banded
     // machinery, pairs consumed as "drop the larger id". The dropped-id
     // frame is tiny and consumed twice (survivor anti-join + label row):
     // checkpoint it so the band/verify pipeline runs ONCE.
-    val dropped3 = graft.dedup.Dedup.verifiedPairsOf(s2)
-      .select(col("doc_id2").as("doc_id")).distinct()
-      .localCheckpoint(true)
-    val s3 = s2.join(dropped3, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val dropped3 = Superstep.pin(graft.dedup.Dedup.verifiedPairsOf(s2)
+      .select(col("doc_id2").as("doc_id")).distinct())
+    val s3 = Superstep.pin(s2.join(dropped3, Seq("doc_id"), "left_anti"))
 
     // Stage 4: contamination screen vs the benchmark slice's 7-grams.
     val evalGrams = all
@@ -164,11 +162,10 @@ object CurationPipeline {
       .join(evalGrams, Seq("g"))
       .groupBy("doc_id").agg(count(lit(1)).as("shared"))
     // Same two-consumer shape as dropped3 (kept anti-join + label row).
-    val dropped4 = tg.select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"))
+    val dropped4 = Superstep.pin(tg.select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"))
       .join(shared, Seq("doc_id"))
       .filter(expr("shared * 1000000 DIV n_grams") >= 500000L)
-      .select("doc_id")
-      .localCheckpoint(true)
+      .select("doc_id"))
 
     // Terminal label per doc → exact attrition counts. The five id sets
     // are disjoint and cover the corpus by construction.

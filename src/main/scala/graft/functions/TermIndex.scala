@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Route
+import graft.{Route, Superstep}
 
 /** Persisted INVERTED INDEX — the pay-at-ingest half of lexical
   * retrieval, completing the persisted-index family
@@ -91,8 +91,7 @@ object TermIndex {
       .bucketBy(buckets, "token").sortBy("token")
       .option("path", postingsPath(path))
       .saveAsTable(postingsTableName(path))
-    val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+    val dl = Superstep.pin(tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
     dl.write.mode("overwrite").parquet(doclensPath(path))
     val totalTokens = dl.agg(coalesce(sum(col("dl")), lit(0L))).head().getLong(0)
     writeMeta(spark, path, buckets, docs.count(), totalTokens)
@@ -125,8 +124,7 @@ object TermIndex {
       .bucketBy(buckets, "token").sortBy("token")
       .option("path", postingsPath(path))
       .saveAsTable(postingsTableName(path))
-    val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+    val dl = Superstep.pin(tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
     dl.write.mode("append").parquet(doclensPath(path))
     val batchTokens = dl.agg(coalesce(sum(col("dl")), lit(0L))).head().getLong(0)
     writeMeta(spark, path, buckets, nDocs + docs.count(), totalTokens + batchTokens)

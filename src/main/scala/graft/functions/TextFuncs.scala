@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Text analysis over the documents corpus — all pure built-in column
   * expressions (whole-stage codegen, no UDFs), so a 100 TB scan stays a
@@ -511,10 +511,9 @@ object TextFuncs {
     // the BPE billing chain) — pin so the upstream chain runs once, not
     // once per reference. O(docs) narrow rows (two ids + a count),
     // released with the query.
-    val toks = tokens
+    val toks = Superstep.pin(tokens
       .select(col("doc_id"), col("n_tokens"),
-        expr(s"doc_id DIV $rangeSize").as("range_id"))
-      .localCheckpoint(true)
+        expr(s"doc_id DIV $rangeSize").as("range_id")))
     val rangeOffsets = toks.groupBy("range_id")
       .agg(sum(col("n_tokens")).as("range_total"))
       .withColumn("range_start",
@@ -697,10 +696,9 @@ object TextFuncs {
       spark: SparkSession,
       dir: String,
       topKGrams: Int = 0): DataFrame = {
-    val docs = Tables(spark, dir).documents
+    val docs = Superstep.pin(Tables(spark, dir).documents
       .select(col("doc_id"),
-        expr("filter(split(text, ' '), x -> x != '')").as("toks"))
-      .localCheckpoint(true)
+        expr("filter(split(text, ' '), x -> x != '')").as("toks")))
     // Corpus LM: unigram counts (+ vocabulary size for the smoothing
     // denominator) and bigram counts.
     val uniFull = docs.select(explode(col("toks")).as("w"))
@@ -767,9 +765,8 @@ object TextFuncs {
     // The t19 pipeline (gram aggregates + exploded-corpus equijoin) feeds
     // BOTH the histogram branch and the final projection — checkpoint it
     // once (the d14 shared-frame discipline) so it doesn't execute twice.
-    val scored = Tables(spark, dir).documents.select(col("doc_id"), col("lang"))
-      .join(t19GramLmScore(spark, dir).select(col("doc_id"), col("lm_micro")), Seq("doc_id"))
-      .localCheckpoint(true)
+    val scored = Superstep.pin(Tables(spark, dir).documents.select(col("doc_id"), col("lang"))
+      .join(t19GramLmScore(spark, dir).select(col("doc_id"), col("lm_micro")), Seq("doc_id")))
     val hist = scored.filter(col("lm_micro").isNotNull)
       .groupBy("lang", "lm_micro").agg(count(lit(1)).as("cnt"))
     val wCum = Window.partitionBy("lang").orderBy("lm_micro")
@@ -810,12 +807,11 @@ object TextFuncs {
   def driftFromCounts(ref: DataFrame, live: DataFrame, k: Int = 20): DataFrame = {
     // Checkpoint the joined counts: the totals row and the report both
     // read them, and without pinning the full-outer join runs twice.
-    val joined = ref.select(col("term"), col("cnt").as("cnt_a"))
+    val joined = Superstep.pin(ref.select(col("term"), col("cnt").as("cnt_a"))
       .join(live.select(col("term"), col("cnt").as("cnt_b")), Seq("term"), "full_outer")
       .select(col("term"),
         coalesce(col("cnt_a"), lit(0L)).as("cnt_a"),
-        coalesce(col("cnt_b"), lit(0L)).as("cnt_b"))
-      .localCheckpoint(true)
+        coalesce(col("cnt_b"), lit(0L)).as("cnt_b")))
     val totals = joined.agg(sum("cnt_a").as("tot_a"), sum("cnt_b").as("tot_b"))
     joined
       .crossJoin(totals)
@@ -915,7 +911,7 @@ object TextFuncs {
     // solo 1.84 s → 1.09 s from this one line). The pinned relation is
     // |sources| rows — the d14/t25 shared-frame discipline, released
     // with the query.
-    val avail = avail0.localCheckpoint(true)
+    val avail = Superstep.pin(avail0)
     val tot = avail.agg(
       sum(col("a")).as("ta"), sum(col("w")).as("tw"),
       expr("sum(a) * 9 DIV 10").as("b"))

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Typed per-payload feature row produced by the decode seam. */
 final case class MediaFeature(doc_id: Long, n_bytes: Long, mean_byte: Double, std_byte: Double)
@@ -298,10 +298,10 @@ object Media {
     // kernel rides on top of the checkpointed payloads.
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), payload(col("doc_id"), col("text")).as("pl"))
-    val incoming = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      .repartition(nPart).localCheckpoint(true)
-    val existing = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      .repartition(nPart).localCheckpoint(true)
+    val incoming = Superstep.pin(docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+      .repartition(nPart))
+    val existing = Superstep.pin(docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+      .repartition(nPart))
     val exact = incoming
       .join(existing.select(col("pl"), col("doc_id").as("ex_id")), Seq("pl"))
       .groupBy("doc_id")

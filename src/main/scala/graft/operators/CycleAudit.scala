@@ -60,8 +60,9 @@ object CycleAudit {
       edges: DataFrame,
       peelRounds: Int = 16,
       doublings: Int = 5): DataFrame = {
-    var (e, Seq(cnt)) = Superstep.pin(edges.select(col("child"), col("parent"))
-      .dropDuplicates("child", "parent"), count(lit(1)))
+    var e = Superstep.pin(edges.select(col("child"), col("parent"))
+      .dropDuplicates("child", "parent"))
+    var cnt = Superstep.rows(e)
     // +1: the extra round is the FIXPOINT CERTIFICATE — an undersized
     // lever must refuse loudly, not return tree tails as "ring members"
     // (the loud-refusal discipline of g8/g29). A peel round that removes
@@ -72,11 +73,10 @@ object CycleAudit {
     var r = 0
     while (r <= peelRounds && cnt != prevCnt) {
       r += 1
-      val (next, Seq(n)) = Superstep.pin(e.join(
-        e.select(col("parent").as("child")).distinct(), Seq("child"), "left_semi"),
-        count(lit(1)))
+      val next = Superstep.pin(e.join(
+        e.select(col("parent").as("child")).distinct(), Seq("child"), "left_semi"))
       prevCnt = cnt
-      cnt = n
+      cnt = Superstep.rows(next)
       Superstep.release(e)
       e = next
     }
@@ -147,9 +147,10 @@ object CycleAudit {
       iterations: Int = 6,
       maxRounds: Int = 64): DataFrame = {
     var live = Superstep.pin(edges.select(col("src"), col("dst")).dropDuplicates("src", "dst"))
-    var (nodes, Seq(nCnt)) = Superstep.pin(live.select(col("src").as("node"))
+    var nodes = Superstep.pin(live.select(col("src").as("node"))
       .unionByName(live.select(col("dst").as("node")))
-      .distinct(), count(lit(1)))
+      .distinct())
+    var nCnt = Superstep.rows(nodes)
     val settled = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var i = 0
     while (i < iterations && nCnt > 0) {
@@ -167,10 +168,10 @@ object CycleAudit {
       // settles as (node, node) on both paths (root = itself).
       var trimming = true
       while (trimming && nCnt > 0) {
-        val (keep, Seq(kCnt)) = Superstep.pin(nodes
+        val keep = Superstep.pin(nodes
           .join(live.select(col("src").as("node")), Seq("node"), "left_semi")
-          .join(live.select(col("dst").as("node")), Seq("node"), "left_semi"),
-          count(lit(1)))
+          .join(live.select(col("dst").as("node")), Seq("node"), "left_semi"))
+        val kCnt = Superstep.rows(keep)
         if (kCnt == nCnt) { Superstep.release(keep); trimming = false }
         else {
           settled += Superstep.pin(nodes.join(keep, Seq("node"), "left_anti")
@@ -225,15 +226,14 @@ object CycleAudit {
         .select(col("node"), col("color").as("scc_id")))
       settled += scc
       // 3. Peel: survivors only.
-      val (remaining, Seq(rCnt)) = Superstep.pin(
-        nodes.join(scc.select("node"), Seq("node"), "left_anti"), count(lit(1)))
+      val remaining = Superstep.pin(nodes.join(scc.select("node"), Seq("node"), "left_anti"))
       val liveNext = Superstep.pin(live
         .join(remaining.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(remaining.select(col("node").as("dst")), Seq("dst"), "left_semi"))
       Seq(nodes, live, colors).foreach(Superstep.release)
       nodes = remaining
       live = liveNext
-      nCnt = rCnt
+      nCnt = Superstep.rows(remaining)
       i += 1
       }
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Superstep, Tables}
+import graft.{Superstep, Tables}
 
 /** Iterative graph analytics as DataFrame loops (Pregel-style).
   *
@@ -39,20 +39,16 @@ object GraphIter {
     * label dropped (a `Dataset.observe` metric), so convergence costs no
     * extra action. Works on any (src, dst) edge set, numeric or string ids.
     */
-  def connectedComponents(edges: DataFrame): DataFrame = countedComponents(edges)._1
-
-  /** [[connectedComponents]] and its node count, a metric on the init pin's job. */
-  private[graft] def countedComponents(edges: DataFrame): (DataFrame, Long) = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
     // Superstep 1 fused into the init: with identity labels the first
     // min-propagation is exactly least(node, min neighbour). Every node
     // appears as a src (sym is symmetric), so coverage is complete, and
     // the loop below never adds or drops a node.
-    val (init, Seq(nodes)) = Superstep.pin(sym.groupBy(col("src").as("node"))
+    val init = Superstep.pin(sym.groupBy(col("src").as("node"))
       .agg(collect_set(col("dst")).as("nbrs"), min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")),
-      count(lit(1)))
+      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")))
     // Labels never rise, so a superstep with no label drop is the fixpoint.
     val (state, _) = Superstep.iterate(init, 1 to Int.MaxValue, progress = Some("dropped")) {
       (s, _) =>
@@ -66,7 +62,7 @@ object GraphIter {
           .select(col("node"), col("label"), col("nbrs"), (col("label") < col("prev")).as("dropped"))
     }
     Superstep.release(init)
-    (state.select(col("node"), col("label")), nodes)
+    state.select(col("node"), col("label"))
   }
 
   /** INCREMENTAL connected components: fold a batch of NEW edges into an
@@ -91,9 +87,8 @@ object GraphIter {
     val touched = sym.select(col("src").as("node")).distinct()
     // Current label per touched node; a node the store has never seen is
     // its own label (the hash-min identity init).
-    val nodeLab = touched.join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-      .localCheckpoint(true)
+    val nodeLab = Superstep.pin(touched.join(labels, Seq("node"), "left")
+      .select(col("node"), coalesce(col("label"), col("node")).as("label")))
     val mergeEdges = sym
       .join(nodeLab.select(col("node").as("src"), col("label").as("l_src")), Seq("src"))
       .join(nodeLab.select(col("node").as("dst"), col("label").as("l_dst")), Seq("dst"))
@@ -164,9 +159,8 @@ object GraphIter {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    val withDeg = sym
-      .join(sym.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
-      .localCheckpoint(true)
+    val withDeg = Superstep.pin(sym
+      .join(sym.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src")))
     val init = Superstep.pin(withDeg.select(col("src").as("node")).distinct()
       .withColumn("rank", lit(1.0)))
     // Pin every 5th superstep, not every one: between pins the iterations
@@ -203,9 +197,8 @@ object GraphIter {
     // computes deg (the groupBy + self-join it replaces cost two more).
     // The pinned frame plans with unknown partitioning, so every
     // superstep's join re-shuffles withDeg alongside the rank table.
-    val withDeg = sym
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .localCheckpoint(true)
+    val withDeg = Superstep.pin(sym
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
     // Superstep 1 fused into the init: with uniform ranks (1e6 micro)
     // every edge's contribution is 1e6 DIV deg(src), already present on
     // the degree-annotated edge row — so the first iteration is one
@@ -280,10 +273,9 @@ object GraphIter {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    val withDeg = sym
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .localCheckpoint(true)
-    val seedBase = seeds.select(col("node"), lit(150000L).as("v")).localCheckpoint(true)
+    val withDeg = Superstep.pin(sym
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
+    val seedBase = Superstep.pin(seeds.select(col("node"), lit(150000L).as("v")))
     // Every 3rd superstep is pinned, so the default 6 supersteps end on a pin.
     Superstep.iterate(seeds.select(col("node"), lit(1000000L).as("rank")),
         1 to iterations, cadence = 3) { (ranks, _) =>
@@ -437,7 +429,8 @@ object GraphIter {
       "minRelaxTraverse: requireConverged needs earlyExit=true — fixed-round " +
         "mode never observes the improved frontier, so convergence is unknowable there")
     val spark = edges.sparkSession
-    val (e, Seq(eCnt)) = Superstep.pin(edges, count(lit(1)))
+    val e = Superstep.pin(edges)
+    val eCnt = Superstep.rows(e)
     // The derived reduce width is applied through the session
     // shuffle-partition knob (preserves map-side combine on the round
     // aggregates, which a post-join repartition would forfeit). The knob
@@ -636,35 +629,33 @@ object GraphIter {
     * would get both adjacency lists merged into one window and pick
     * silently wrong idx/deg (and biased cum/tot). Enforced loudly with
     * one O(walkers) aggregate over the (already deduped, checkpointed)
-    * seed frame before the first step. Returns the walker count, which
-    * bounds every frontier: a step keeps at most one row per walker.
+    * seed frame before the first step.
     */
-  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Long = {
+  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Unit = {
     val r = cur.agg(count(lit(1)), countDistinct(col("walker"))).head()
     require(r.getLong(0) == r.getLong(1),
       s"$who: each walker id must seed exactly one node " +
         s"(${r.getLong(0)} seed rows over ${r.getLong(1)} walkers) — " +
         "use distinct walker ids per (walker, node) seed")
-    r.getLong(1)
   }
 
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = pinnedSym(edges)
     var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct())
-    val walkers = requireOneSeedPerWalker(cur, "randomWalks")
+    requireOneSeedPerWalker(cur, "randomWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.withColumn("step", lit(0L)))
     val byWalker = Window.partitionBy("walker")
     (1 to steps).foreach { t =>
-      // The frontier is at most one row per walker: sized by that count,
-      // it is broadcast when it fits so the edge side STREAMS under a
-      // BroadcastHashJoin instead of paying a full O(E) sort per step
-      // (measured spilling at the 234M-edge tier). One frontier row per
-      // walker, so the walker partition IS its current node's full
-      // neighbor list: rank within it == the global dst-ordered
-      // adjacency index (what the oracle computes).
-      val nxt = Superstep.pin(Route.small(cur, walkers).join(sym, cur("node") === sym("src"))
+      // The frontier is at most one row per walker: its pin carries that
+      // count, so the planner broadcasts it when it fits and the edge
+      // side STREAMS under a BroadcastHashJoin instead of paying a full
+      // O(E) sort per step (measured spilling at the 234M-edge tier).
+      // One frontier row per walker, so the walker partition IS its
+      // current node's full neighbor list: rank within it == the global
+      // dst-ordered adjacency index (what the oracle computes).
+      val nxt = Superstep.pin(cur.join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("src"), col("dst"))
         .withColumn("idx",
           row_number().over(byWalker.orderBy("dst")).cast("long") - 1)
@@ -710,16 +701,16 @@ object GraphIter {
     val sym = pinnedSym(edges)
     var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct()
       .withColumn("prev", col("node")))
-    val walkers = requireOneSeedPerWalker(cur, "biasedWalks")
+    requireOneSeedPerWalker(cur, "biasedWalks")
     val out = scala.collection.mutable.ListBuffer[DataFrame](
       cur.select(col("walker"), lit(0L).as("step"), col("node")))
     val byWalker = Window.partitionBy("walker")
     (1 to steps).foreach { t =>
       // The frontier and its prev set hold at most one row per walker:
-      // sized by that count, they are broadcast when they fit, and the
-      // edge side streams in BOTH joins that touch it this step
-      // (candidate fan-out and the prev-set's own edges).
-      val cand = Route.small(cur, walkers).join(sym, cur("node") === sym("src"))
+      // the pin carries that count, so the planner broadcasts them when
+      // they fit, and the edge side streams in BOTH joins that touch it
+      // this step (candidate fan-out and the prev-set's own edges).
+      val cand = cur.join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("prev"), col("src"), col("dst"))
       // The (prev, x) membership test only ever probes edges whose src
       // is a FRONTIER prev, so semi-join the edge relation down to those
@@ -729,8 +720,7 @@ object GraphIter {
       // by its edge side, so the planner broadcasts the result whenever
       // the edge list itself would fit; it needs no distinct prev set.
       val prevEdges = sym
-        .join(Route.small(cur.select(col("prev").as("p_src")), walkers),
-          sym("src") === col("p_src"), "left_semi")
+        .join(cur.select(col("prev").as("p_src")), sym("src") === col("p_src"), "left_semi")
         .select(col("src").as("p_src"), col("dst").as("p_dst"), lit(1L).as("is_nbr"))
       val flagged = cand.join(prevEdges,
           col("prev") === col("p_src") && col("dst") === col("p_dst"), "left")
@@ -1219,12 +1209,11 @@ object GraphIter {
       .distinct()
       .join(suppNation, col("s") === col("s_suppkey"))
       .select(col("okey"), col("s"), col("s_nationkey").as("nat"))
-    orderSupp.as("x")
+    Superstep.pin(orderSupp.as("x")
       .join(orderSupp.as("y"),
         col("x.okey") === col("y.okey") && col("x.nat") === col("y.nat") && col("x.s") < col("y.s"))
       .select(col("x.s").as("a"), col("y.s").as("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
   }
 
   /** Per-node triangle counts over an ordered edge list: wedge join on the
@@ -1235,9 +1224,8 @@ object GraphIter {
     val wedges = edges.as("e1")
       .join(edges.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("a"), col("e1.b").as("b"), col("e2.b").as("c"))
-    val triangles = wedges
-      .join(edges.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
-      .localCheckpoint(true)
+    val triangles = Superstep.pin(wedges
+      .join(edges.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi"))
     triangles.select(explode(array(col("a"), col("b"), col("c"))).as("suppkey"))
       .groupBy("suppkey")
       .agg(count(lit(1)).as("n_triangles"))
@@ -1301,14 +1289,13 @@ object GraphIter {
     */
   def g21TemporalReach(spark: SparkSession, dir: String, seedMod: Int = 500): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
+    val edges = Superstep.pin(t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(
         col("o_custkey").as("c"),
         col("l_suppkey").as("s"),
         expr("unix_seconds(CAST(l_shipdate AS TIMESTAMP)) DIV 86400").as("d"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // Seeds carry arrival 0 (every ship day is far later): "tainted from
     // the start of history".
     val seeds = t.customer.filter(pmod(col("c_custkey"), lit(seedMod)) === 0)

@@ -297,11 +297,10 @@ object GraphOps {
     // Materialized once: the two bitmap builds and the size-estimate
     // probe all read the same checkpointed edge set instead of
     // re-running the fact join three times.
-    val edges = t.lineitem
+    val edges = Superstep.pin(t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("custkey"), col("l_suppkey").as("suppkey"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // Bitmap semiring: vertex ids are dense small ints, so each
     // supplier's customer set is ONE uncompressed bitmap (~2 KB at
     // sf0.1), built with Θ(Σ deg) bit-sets, and the per-customer union
@@ -314,10 +313,9 @@ object GraphOps {
     // range-unbounded exact fallback). Every customer appears in its own
     // suppliers' bitmaps, so the union always contains self: two-hop
     // neighbors = count − 1.
-    val supp2bm = edges.groupBy("suppkey")
+    val supp2bm = Superstep.pin(edges.groupBy("suppkey")
       .agg(org.apache.spark.sql.graft.BitmapAggregates
-        .bitmapOfLongs(col("custkey")).as("bm"))
-      .localCheckpoint(true)
+        .bitmapOfLongs(col("custkey")).as("bm")))
     // Size-based routing with an EXACT probe: the supplier→customers
     // side is |middle vertices| × |keyspace|/8 bytes, which outgrows the
     // driver long before 100 TB. Sum the actual serialized bitmap bytes
@@ -417,9 +415,10 @@ object GraphOps {
     // deeper-than-expected tree — either way the expansion REFUSES
     // loudly; run [[CycleAudit.cycleMembers]] to locate the offenders.
     val parentOf = edges.select(col("child").as("ancestor"), col("parent").as("next_parent"))
-    val (level1, Seq(level1Cnt)) = Superstep.pin(edges
+    val level1 = Superstep.pin(edges
       .select(col("child").as("node"), col("parent").as("ancestor"), lit(1).as("depth"),
-        concat_ws("/", col("parent"), col("child")).as("path")), count(lit(1)))
+        concat_ws("/", col("parent"), col("child")).as("path")))
+    val level1Cnt = Superstep.rows(level1)
     val levels = scala.collection.mutable.ArrayBuffer(level1)
     val counts = scala.collection.mutable.ArrayBuffer(level1Cnt)
     var continue = level1Cnt > 0
@@ -440,11 +439,12 @@ object GraphOps {
         throw new IllegalStateException(
           s"expandHierarchy: frontier still alive at depth $maxDepth — $hint")
       }
-      val (next, Seq(n)) = Superstep.pin(levels.last
+      val next = Superstep.pin(levels.last
         .join(parentOf, Seq("ancestor"))
         .select(col("node"), col("next_parent").as("ancestor"),
           (col("depth") + 1).as("depth"),
-          concat_ws("/", col("next_parent"), col("path")).as("path")), count(lit(1)))
+          concat_ws("/", col("next_parent"), col("path")).as("path")))
+      val n = Superstep.rows(next)
       depth += 1
       if (n == 0) {
         continue = false
@@ -566,7 +566,7 @@ object GraphOps {
     // two mirrored subtrees). The pair table is result-sized (bounded by
     // Σ C(cd,2) over non-hub neighbors), far smaller than re-running its
     // parent.
-    val pairs = nodeSimilarityPairs(edges, hubCutoff).localCheckpoint(true)
+    val pairs = Superstep.pin(nodeSimilarityPairs(edges, hubCutoff))
     nodeSimilarityTail(pairs, edges.groupBy("s").agg(count(lit(1)).as("d")), k)
   }
 
@@ -677,7 +677,7 @@ object GraphOps {
     // Materialized before symmetrization for the same reason as g13's
     // pair table: the union's two branches would otherwise each re-run
     // the shared-neighbor stage + aggregate (plan-audited).
-    linkPredictionTail(linkPredictionPairs(edges, hubCutoff).localCheckpoint(true), k)
+    linkPredictionTail(Superstep.pin(linkPredictionPairs(edges, hubCutoff)), k)
   }
 
   /** Post-pair-stage tail of [[linkPrediction]]: symmetrize, RA-rank,
@@ -819,8 +819,8 @@ object GraphOps {
     // (Pair generation via the c-keyed self-equijoin, not the g11 in-row
     // HOF combination — measured 2.4× faster at sf0.1, where hot centers
     // carry thousands of pairs vs g11's short per-item mention lists.)
-    val ec = kept.select(col("c").as("grp"), col("s").as("id"))
-      .repartition(col("grp")).localCheckpoint(true)
+    val ec = Superstep.pin(kept.select(col("c").as("grp"), col("s").as("id"))
+      .repartition(col("grp")))
     val wedges = sameGroupPairsSkewSafe(ec, blockThreshold)
       .groupBy(col("id1").as("s1"), col("id2").as("s2"))
       .agg(count(lit(1)).as("w"))

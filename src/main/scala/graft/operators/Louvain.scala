@@ -81,25 +81,29 @@ object Louvain {
     * becomes the hot key of BOTH per-round comdeg joins (the E-sized
     * scored relation and the V-sized label update). The route is picked
     * from the SAME probe aggregate every round (the q16 measure-then-
-    * route discipline; `nComs` = communities, `maxCn` = biggest
+    * route discipline; `nComs` = communities, the comdeg pin's measured
+    * row count ([[graft.Superstep.rows]]), `maxCn` = biggest
     * community's member count):
     *
-    *   - `maxCn < blockThreshold`: the PLAIN shuffle join — no hot key
-    *     measured, no defense, zero overhead (the common case on
-    *     balanced rounds; measured at sf10: unconditionally broadcasting
-    *     the ~10⁶-row round-2 comdeg cost ~25% wall on the skew-free
-    *     corpus — the defense must only arm when the probe sees skew);
+    *   - `maxCn < blockThreshold`: the PLAIN shuffle join (a `merge`
+    *     hint, since the pin's measured size would otherwise let the
+    *     planner broadcast it) — no hot key measured, no defense, zero
+    *     overhead (the common case on balanced rounds; measured at sf10:
+    *     unconditionally broadcasting the ~10⁶-row round-2 comdeg cost
+    *     ~25% wall on the skew-free corpus — the defense must only arm
+    *     when the probe sees skew);
     *   - else if [[graft.Route]] fits `nComs` comdeg rows in the
-    *     session's `autoBroadcastJoinThreshold`: BROADCAST comdeg — zero
-    *     shuffle on the skewed key, affordable exactly when
-    *     consolidation has shrunk the dimension;
+    *     session's `autoBroadcastJoinThreshold`: the planner BROADCASTS
+    *     comdeg, sized by the same measured count — zero shuffle on the
+    *     skewed key, affordable exactly when consolidation has shrunk the
+    *     dimension;
     *   - else: SALTED shuffle join — the bounded hot set
-    *     (≤ V/blockThreshold communities can exceed the threshold)
-    *     broadcasts as a tag; hot probe rows salt by `pmod(node, s)`
-    *     with `s` DERIVED from the measured max size (the g1/d9
-    *     probe→knob derivation), and the build side replicates ONLY hot
-    *     rows s ways — the mega-community's probe rows spread over s
-    *     reducers instead of one.
+    *     (≤ V/blockThreshold communities can exceed the threshold) is a
+    *     tag the planner sizes from the pin, broadcast when it fits; hot
+    *     probe rows salt by `pmod(node, s)` with `s` DERIVED from the
+    *     measured max size (the g1/d9 probe→knob derivation), and the
+    *     build side replicates ONLY hot rows s ways — the mega-community's
+    *     probe rows spread over s reducers instead of one.
     *
     * Routing never changes the algebra (same rows, same values), so
     * labels are hash-identical whichever path fires — spec-pinned with
@@ -123,21 +127,21 @@ object Louvain {
       comdeg: DataFrame,
       key: String,
       nodeCol: String,
-      nComs: Long,
       maxCn: Long,
       blockThreshold: Int): DataFrame = {
     val cd = comdeg.withColumnRenamed("com", key)
-    if (maxCn < blockThreshold) probe.join(cd, Seq(key))
-    else if (Route.broadcasts(cd, nComs)) probe.join(Route.small(cd, nComs), Seq(key))
+    val nComs = Superstep.rows(comdeg)
+    if (maxCn < blockThreshold) probe.join(cd.hint("merge"), Seq(key))
+    else if (Route.broadcasts(cd, nComs)) probe.join(cd, Seq(key))
     else {
       val s = GraphOps.derivedBlocks(maxCn, blockThreshold)
       val hotTag = cd.filter(col("cn") >= lit(blockThreshold.toLong))
         .select(col(key), lit(true).as("isHot"))
-      val build = cd.join(Route.small(hotTag, nComs), Seq(key), "left")
+      val build = cd.join(hotTag, Seq(key), "left")
         .select(col(key), col("cd"), col("cn"),
           explode(when(col("isHot"),
             sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))).as("salt"))
-      probe.join(Route.small(hotTag, nComs), Seq(key), "left")
+      probe.join(hotTag, Seq(key), "left")
         .withColumn("salt",
           when(col("isHot"), pmod(col(nodeCol), lit(s.toLong)).cast("int"))
             .otherwise(lit(0)))
@@ -188,8 +192,8 @@ object Louvain {
       // community count and the biggest community's size, which decide
       // the comdeg join route for BOTH join sites this round (q16's
       // measure-then-route) — is a metric on the same pin job.
-      val (comdeg, Seq(nComs, maxCn)) = Superstep.pin(labels.groupBy("com")
-        .agg(sum("k").as("cd"), count(lit(1)).as("cn")), count(lit(1)), max("cn"))
+      val (comdeg, Seq(maxCn)) = Superstep.pin(labels.groupBy("com")
+        .agg(sum("k").as("cd"), count(lit(1)).as("cn")), max("cn"))
       comdegPin = Some(comdeg)
       // k_{i,c}: weight from i to community c over its NEIGHBORS (self
       // loops excluded — a node's own mass is not a vote for a
@@ -207,7 +211,7 @@ object Louvain {
       // extracts both the argmax (score desc, min community — the
       // negation trick) and the stay score, in a single kic pass.
       val scored = joinComdegRouted(
-        kic.join(labels, Seq("node")), comdeg, "c", "node", nComs, maxCn, blockThreshold)
+        kic.join(labels, Seq("node")), comdeg, "c", "node", maxCn, blockThreshold)
         .select(col("node"), col("c"), col("com"),
           (lit(twoM) * col("kic") -
             col("k") * (col("cd") -
@@ -219,7 +223,7 @@ object Louvain {
           max(when(col("c") === col("com"), col("score"))).as("kicStay"))
       // Staying score when NO neighbor is left in the current community:
       // k_{i,cur} = 0 — a V-sized expression over labels⋈comdeg, no edge data.
-      joinComdegRouted(labels, comdeg, "com", "node", nComs, maxCn, blockThreshold)
+      joinComdegRouted(labels, comdeg, "com", "node", maxCn, blockThreshold)
         .join(agg, Seq("node"), "left")
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(parity) &&

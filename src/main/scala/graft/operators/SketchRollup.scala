@@ -132,16 +132,15 @@ object ExactRollup {
     val existing = spark.read.parquet(store)
       .withColumn("day", col("day").cast("long"))
       .filter(col("day").isin(days.toIndexedSeq: _*))
-    val merged = existing.unionByName(dc)
+    // The merge reads the partitions the write replaces: materialize
+    // the merged cells (result-sized — O(delta days × types)) so the
+    // overwrite never scans its own target.
+    val merged = Superstep.pin(existing.unionByName(dc)
       .groupBy(col("day"), col("event_type"))
       .agg(
         RoaringAggregates.roaringBlobUnionBlob(col("user_set")).as("user_set"),
         sum(col("n_events")).as("n_events"),
-        sum(col("sum_value_milli")).as("sum_value_milli"))
-      // The merge reads the partitions the write replaces: materialize
-      // the merged cells (result-sized — O(delta days × types)) so the
-      // overwrite never scans its own target.
-      .localCheckpoint(true)
+        sum(col("sum_value_milli")).as("sum_value_milli")))
     val saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try merged.write.mode("overwrite").partitionBy("day").parquet(store)

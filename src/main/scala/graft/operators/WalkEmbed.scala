@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Superstep
 import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -67,12 +68,11 @@ object WalkEmbed {
     // sort + zipWithIndex (no single-task row_number window; ALS needs
     // ints, and hash-derived ids could collide).
     val nodes = sym.select("node1").distinct()
-    val idx = spark.createDataFrame(
+    val idx = Superstep.pin(spark.createDataFrame(
       nodes.rdd.sortBy(_.get(0).toString).zipWithIndex()
         .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toInt) },
       nodes.schema.add("id", IntegerType))
-      .withColumnRenamed("node1", "node")
-      .localCheckpoint(true)
+      .withColumnRenamed("node1", "node"))
     val ratings = sym
       .join(idx.select(col("node").as("node1"), col("id").as("u")), Seq("node1"))
       .join(idx.select(col("node").as("node2"), col("id").as("v")), Seq("node2"))

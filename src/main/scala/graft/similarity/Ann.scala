@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -226,13 +226,12 @@ object Ann {
     // twice unless exchange reuse happens to fire — at scale that doubles
     // the most expensive stage. Blocks are released between queries by
     // GraftSession.releaseCaches.
-    val assigned = t.embeddings.repartition(nPart)
+    val assigned = Superstep.pin(t.embeddings.repartition(nPart)
       .crossJoin(Route.small(centroids, nCells))
       .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell")))
     val dups = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
@@ -289,14 +288,13 @@ object Ann {
       }
     val planes = t.embeddings.filter(col("vec_id") < planesN)
       .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"))
-    val bucketed = t.embeddings.repartition(nPart)
+    val bucketed = Superstep.pin(t.embeddings.repartition(nPart)
       .crossJoin(Route.small(planes, planesN))
       .groupBy(col("vec_id"))
       .agg(
         first(col("embedding")).as("emb"),
         sum(when(cosine(col("embedding"), col("h_emb")) >= 0,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(h_id AS INT))")).otherwise(0L)).as("bucket"))
-      .localCheckpoint(true)
+          expr("shiftleft(CAST(1 AS BIGINT), CAST(h_id AS INT))")).otherwise(0L)).as("bucket")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     bucketed.as("a")
@@ -463,10 +461,9 @@ object Ann {
     // trainExact/trainCodebooks discipline): one TakeOrdered pass selects
     // it, each round then scans O(sample). Init stays the first nCells
     // CORPUS vectors, so the seed is cap-independent.
-    val trainSet = emb
+    val trainSet = Superstep.pin(emb
       .orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))), col("vec_id"))
-      .limit(sampleCap)
-      .localCheckpoint(true)
+      .limit(sampleCap))
     var cents: Seq[(Long, Seq[Float])] = emb.filter(col("vec_id") < nCells)
       .orderBy("vec_id")
       .collect()

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Deterministic, engine-reproducible k-means over the embedding corpus —
   * the clustering half of the corpus-curation loop (cluster → inspect →
@@ -114,9 +114,8 @@ object Cluster {
     * corpus.
     */
   def trainingSample(q: DataFrame, cap: Int = TrainCap): DataFrame =
-    q.orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))), col("vec_id"))
-      .limit(cap)
-      .localCheckpoint(true)
+    Superstep.pin(q.orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))), col("vec_id"))
+      .limit(cap))
 
   /** Centroid state after `iters` exact Lloyd refinements over a
     * DETERMINISTIC BOUNDED SAMPLE (md5-of-id order, `sampleCap` rows).

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** IVF + PQ — the two scale levers of the similarity family COMPOSED,
   * which is the shape billion-scale vector search actually ships
@@ -87,7 +87,7 @@ object IvfPq {
     // BOTH trained on one shared deterministic bounded sample — the
     // checkpointed quantized corpus is scanned once to select it, and
     // all (1 + M)·iters Lloyd refinements then touch O(sample) rows.
-    val q = Cluster.quantized(emb).localCheckpoint(true)
+    val q = Superstep.pin(Cluster.quantized(emb))
     val sample = Cluster.trainingSample(q)
     val cents = Cluster.trainExactOn(q, sample, kCells, cellIters)
     val books = Pq.trainCodebooksOn(q, sample)

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Tables}
+import graft.{Route, Superstep, Tables}
 
 /** Product quantization (PQ) — the COMPRESSED vector tier that makes
   * billion-scale similarity search feasible: each `dim`-dimensional
@@ -215,7 +215,7 @@ object Pq {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // One checkpointed quantized scan feeds the sample selection, the
     // K-row init reads, the encode projection, and the refine join.
-    val q = quantized(emb).localCheckpoint(true)
+    val q = Superstep.pin(quantized(emb))
     val books = trainCodebooksOn(q, Cluster.trainingSample(q))
     val codes = encodeQuantized(q, books).repartition(nPart)
       .select(col("vec_id").as("neighbor_id"), col("codes"))

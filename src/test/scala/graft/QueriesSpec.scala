@@ -977,12 +977,16 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       (va(0), te(1)),  // val→test
       (tr(0), tr(1))   // same-split: must not appear in the report
     ).toDF("doc_id1", "doc_id2")
-    val got = functions.CurationPipeline.splitLeakageReport(docs, pairs, pairs.count()).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(got === Map(
-      ("train", "val") -> (2L, 2L),
-      ("train", "test") -> (2L, 1L),  // both pairs hit te(0): one leaked doc
-      ("val", "test") -> (1L, 1L)))
+    // A pinned pair frame (its row count bounds the second labeling join)
+    // and a projected one (no known count: the planner routes it) agree.
+    for (pairFrame <- Seq(Superstep.pin(pairs), pairs.select("doc_id1", "doc_id2"))) {
+      val got = functions.CurationPipeline.splitLeakageReport(docs, pairFrame).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      assert(got === Map(
+        ("train", "val") -> (2L, 2L),
+        ("train", "test") -> (2L, 1L),  // both pairs hit te(0): one leaked doc
+        ("val", "test") -> (1L, 1L)))
+    }
   }
 
   test("d18 winnowing: the w+k-1 guarantee holds, shorter overlaps stay sparse") {
@@ -2786,35 +2790,29 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.exists(_.getLong(2) > 0L))
   }
 
-  test("encodeWords fused-pass chain ≡ per-pass checkpointing (forced both ways)") {
+  test("encodeWords pins every pass: hand-checked piece counts") {
     val ss = spark
     import ss.implicits._
-    // A merge list short enough that a cadence of 8 (longer than the
-    // 5-merge list, so fully fused; the production default is 1 =
-    // per-pass) leaves the whole chain fused AND a forced cadence of 2
-    // pins mid-chain —
-    // the equivalence must hold across the pin boundary, where the lazy
-    // tail is cut and restarted from a LogicalRDD. Includes the l == r
-    // overlap case ("aaaa" under (a,a)) so the islands idiom crosses the
-    // pin too.
+    // Every pass is pinned, so the chain is cut and restarted from a
+    // LogicalRDD after each merge. Includes the l == r overlap case
+    // ("aaaa" under (a,a)) so the islands idiom crosses a pin too.
     val merges = Seq(("a", "a"), ("aa", "b"), ("c", "d"), ("aab", "cd"), ("e", "f"))
     val words = Seq("aaaabcdef", "aabcd", "aaaa", "xyz", "ef", "aabcdaabcd").toDF("word")
-    def enc(every: Int) =
-      functions.Bpe.encodeWords(words, merges, checkpointEvery = every)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val fused = enc(8)   // 5 merges, no intermediate pin: one fused plan
-    val perPass = enc(1) // the pre-r16 shape: eager checkpoint per pass
-    val mid = enc(2)     // pins after merges 2 and 4 — boundary mid-chain
-    assert(fused === perPass, s"fused $fused != per-pass $perPass")
-    assert(fused === mid)
+    val got = functions.Bpe.encodeWords(words, merges)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // Hand-check one word end to end: aaaabcdef → (a,a) greedy L2R →
     // [aa,aa,b,c,d,e,f] → (aa,b): [aa,aab,c,d,e,f] → (c,d):
     // [aa,aab,cd,e,f] → (aab,cd): [aa,aabcd,e,f] → (e,f): [aa,aabcd,ef] = 3.
-    assert(fused("aaaabcdef") === 3L)
+    assert(got("aaaabcdef") === 3L)
     // aaaa → (a,a) greedy L2R chooses positions 1 and 3 → [aa,aa]; no
     // (aa,aa) merge exists, so it stays 2 pieces.
-    assert(fused("aaaa") === 2L)
-    assert(fused("xyz") === 3L)
+    assert(got("aaaa") === 2L)
+    assert(got("xyz") === 3L)
+    // aabcd → (a,a): [aa,b,c,d] → (aa,b): [aab,c,d] → (c,d): [aab,cd]
+    // → (aab,cd): [aabcd] = 1; twice over = 2; ef → (e,f) = 1.
+    assert(got("aabcd") === 1L)
+    assert(got("aabcdaabcd") === 2L)
+    assert(got("ef") === 1L)
   }
 
   test("t32 piece-table routing: forced plain equijoin emits exactly the broadcast-route rows") {

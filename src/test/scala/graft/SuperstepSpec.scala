@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   private var spark: SparkSession = _
 
@@ -16,6 +19,13 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def withThreshold[T](value: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, saved)
+  }
 
   test("pin metrics equal a separate count and max; an empty frame reads 0") {
     val df = spark.range(0, 1000).select((col("id") % 37).as("k"))
@@ -61,29 +71,81 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kept.agg(sum("v")).head().getLong(0) === (0 until 50).sum)
   }
 
-  test("no Dataset.unpersist outside Frequent, GraftSession.releaseCaches and Superstep.release") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
+  test("no .unpersist( outside releaseCaches and Superstep.release") {
     // `.unpersist()` on a localCheckpoint'ed frame frees nothing; a pin's
-    // blocks go through Superstep.release. The other allowed sites
-    // unpersist a real `persist` (Frequent) and the session's RDDs.
-    val allowed = Set("Frequent.scala" -> "*", "GraftSession.scala" -> "releaseCaches",
-      "Superstep.scala" -> "release")
-    val memberDef = """^  (?:private\S* )?def (\w+)""".r
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 50)
-    val offenders = files.flatMap { f =>
-      val name = f.getFileName.toString
-      var member = ""
-      Files.readAllLines(f).asScala.flatMap { l =>
-        memberDef.findPrefixMatchOf(l).foreach(m => member = m.group(1))
-        if (l.contains(".unpersist(") && !allowed(name -> "*") && !allowed(name -> member))
-          Some(s"$f ($member): ${l.trim}")
-        else None
-      }
-    }
+    // blocks go through Superstep.release, the session's RDDs through
+    // releaseCaches.
+    val allowed = Set("GraftSession.scala" -> "releaseCaches", "Superstep.scala" -> "release")
+    val offenders = MainSources.lines.filter(l =>
+      l.text.contains(".unpersist(") && !allowed(l.fileName -> l.member))
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no localCheckpoint, persist or cache in src/main/scala outside Superstep.pin") {
+    // Superstep.pin is the one materialization: it measures what it
+    // stores, so the planner sizes every pinned side. Its checkpoint lives
+    // in GraftInternals.measuredCheckpoint, next to Spark's internals.
+    val materialize = """\.localCheckpoint\(|\.persist\(|\.cache\(\)""".r
+    val offenders = MainSources.lines.filter(l => l.isCode &&
+      l.fileName != "Superstep.scala" &&
+      (l.fileName -> l.member) != ("GraftInternals.scala" -> "measuredCheckpoint") &&
+      materialize.findFirstIn(l.text).nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a pin plans with measured statistics: its small side is broadcast, and never at -1") {
+    def buildSides(df: DataFrame) = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => j.buildSide
+      case j: BroadcastNestedLoopJoinExec => j.buildSide
+    }
+    // 10 rows of a filtered 30M-row range: the plan it replaced estimates
+    // hundreds of MB, the pin holds 10 × (8 + 8) bytes.
+    val small = Superstep.pin(spark.range(0, 30000000L)
+      .filter(col("id") % 3000000L === 0).select(col("id").as("k")))
+    // 3M rows holding every key of `small`: 3M × (8 + 8 + 8) bytes, over
+    // the 64 MB default threshold.
+    val big = Superstep.pin(spark.range(0, 30000000L, 10)
+      .select(col("id").as("k"), (col("id") * 2).as("v")))
+    try {
+      assert(Superstep.rows(small) === 10L)
+      assert(small.queryExecution.optimizedPlan.stats.sizeInBytes === BigInt(160))
+      assert(big.queryExecution.optimizedPlan.stats.sizeInBytes === BigInt(3000000L * 24))
+      val joined = small.join(big, "k")
+      val expected = joined.collect().map(_.toString).sorted.toSeq
+      assert(expected.size === 10)
+      assert(buildSides(joined) === Seq(BuildLeft))
+      withThreshold("-1") {
+        val shuffled = small.join(big, "k")
+        assert(shuffled.collect().map(_.toString).sorted.toSeq === expected)
+        assert(buildSides(shuffled).isEmpty)
+      }
+    } finally Seq(small, big).foreach(Superstep.release)
+  }
+
+  test("a pin counts array elements at their observed length, and rows reads its count") {
+    val arrays = Superstep.pin(spark.range(0, 1000)
+      .select(col("id"), sequence(lit(1L), lit(1000L)).as("xs")))
+    try {
+      assert(arrays.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(8000000))
+      assert(Superstep.rows(arrays) === arrays.count())
+      assert(Superstep.rows(arrays) === 1000L)
+      intercept[IllegalArgumentException](Superstep.rows(arrays.select("id")))
+    } finally Superstep.release(arrays)
+  }
+
+  test("a pin counts string and binary bytes at their observed length") {
+    // 200 rows of 10 kB strings and 5 kB blobs: Spark's default sizes
+    // (20 B a string, 100 B a blob) would size the pin at a few tens of kB.
+    val blobs = Superstep.pin(spark.range(0, 200).select(col("id"),
+      repeat(lit("x"), 10000).as("text"), repeat(lit("y"), 5000).cast("binary").as("blob")))
+    try {
+      assert(Superstep.rows(blobs) === 200L)
+      assert(blobs.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(200L * 15000))
+      val nulls = Superstep.pin(spark.range(0, 10)
+        .select(col("id"), lit(null).cast("string").as("text")))
+      assert(Superstep.rows(nulls) === 10L)
+      Superstep.release(nulls)
+    } finally Superstep.release(blobs)
   }
 
   test("iterate pins on the cadence, stops on zero progress and releases what it pinned") {
