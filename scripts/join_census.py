@@ -12,7 +12,14 @@ ShuffledHashJoin nodes in it.
 Usage:
   scripts/join_census.py LOG                      # one census table
   scripts/join_census.py PARENT_LOG CHANGE_LOG    # only the keys that differ
-  ... [--bench PARENT_JSON [CHANGE_JSON]]         # add wall times from bench_<sf>.json
+  scripts/join_census.py --parent LOG... --change LOG...
+                                                  # the same, several runs per side
+  ... [--bench JSON...]                           # add wall times from bench_<sf>.json,
+                                                  # one per log, in log order
+
+With several runs per side each side shows its min-max per column. Job
+counts of one tree can differ by a job between runs, so a key differs only
+when its join counts differ or its job ranges do not overlap.
 
 LOG is an event-log file or a rolling event-log directory (its events_*
 files are read in order). The logs must be uncompressed; record them with
@@ -92,43 +99,71 @@ def walls(path):
     return {**bench.get("setup", {}), **bench.get("queries", {})}
 
 
-def row(values):
-    return " ".join(f"{values[c]:>5}" for c in COLUMNS)
+def spans(tables, key):
+    """{column: (min, max)} of `key` over one side's census tables."""
+    zero = dict.fromkeys(COLUMNS, 0)
+    values = [t.get(key, zero) for t in tables]
+    return {c: (min(v[c] for v in values), max(v[c] for v in values)) for c in COLUMNS}
 
 
-def seconds(wall, key):
-    w = wall.get(key)
-    return f"{'-' if w is None else f'{w:.2f}':>8}"
+def differs(parent, change):
+    lo_p, hi_p = parent["jobs"]
+    lo_c, hi_c = change["jobs"]
+    return hi_p < lo_c or hi_c < lo_p or any(parent[c] != change[c] for c in SHORT.values())
+
+
+def span_row(span):
+    return " ".join(f"{str(lo) if lo == hi else f'{lo}-{hi}':>7}" for lo, hi in span.values())
+
+
+def seconds(walls, key):
+    ws = [w.get(key) for w in walls]
+    text = "/".join("-" if w is None else f"{w:.2f}" for w in ws) if ws else "-"
+    return f"{text:>8}"
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("logs", nargs="+", help="one log for a census, two to compare")
-    ap.add_argument("--bench", nargs="+", default=[], help="bench_<sf>.json per log, for wall times")
+    ap.add_argument("logs", nargs="*", help="one log for a census, two to compare")
+    ap.add_argument("--parent", nargs="+", default=[], help="the parent's logs")
+    ap.add_argument("--change", nargs="+", default=[], help="the change's logs")
+    ap.add_argument("--bench", nargs="+", default=[], help="bench_<sf>.json per log, in log order")
     args = ap.parse_args()
-    if len(args.logs) > 2 or len(args.bench) > len(args.logs):
-        ap.error("give one or two logs, and at most one bench file per log")
-    tables = [census(p) for p in args.logs]
-    times = [walls(p) for p in args.bench] + [{}] * (len(args.logs) - len(args.bench))
-    header = " ".join(f"{c:>5}" for c in COLUMNS)
-    if len(tables) == 1:
+    if args.parent or args.change:
+        if args.logs or not (args.parent and args.change):
+            ap.error("give --parent and --change logs, and no positional log")
+        sides = [args.parent, args.change]
+    elif len(args.logs) == 1:
+        sides = [args.logs]
+    elif len(args.logs) == 2:
+        sides = [args.logs[:1], args.logs[1:]]
+    else:
+        ap.error("give one or two logs, or --parent and --change")
+    logs = [p for side in sides for p in side]
+    if len(args.bench) > len(logs):
+        ap.error("give at most one bench file per log")
+    walls_by_log = [walls(p) for p in args.bench] + [None] * (len(logs) - len(args.bench))
+    tables, times, i = [], [], 0
+    for side in sides:
+        tables.append([census(p) for p in side])
+        times.append([w for w in walls_by_log[i:i + len(side)] if w is not None])
+        i += len(side)
+    header = " ".join(f"{c:>7}" for c in COLUMNS)
+    if len(sides) == 1:
         (table,), (wall,) = tables, times
         print(f"{'key':<34} {header} {'wall_s':>8}")
-        for key in sorted(table):
-            print(f"{key:<34} {row(table[key])} {seconds(wall, key)}")
-        totals = {c: sum(v[c] for v in table.values()) for c in COLUMNS}
-        print(f"{'TOTAL (' + str(len(table)) + ' keys)':<34} {row(totals)}")
+        for key in sorted(table[0]):
+            print(f"{key:<34} {span_row(spans(table, key))} {seconds(wall, key)}")
+        totals = {c: (sum(v[c] for v in table[0].values()),) * 2 for c in COLUMNS}
+        print(f"{'TOTAL (' + str(len(table[0])) + ' keys)':<34} {span_row(totals)}")
         return 0
-    parent, change = tables
-    zero = dict.fromkeys(COLUMNS, 0)
-    differ = [k for k in sorted(set(parent) | set(change))
-              if parent.get(k, zero) != change.get(k, zero)]
+    keys = sorted(set().union(*(t.keys() for side in tables for t in side)))
+    differ = [k for k in keys if differs(spans(tables[0], k), spans(tables[1], k))]
     print(f"{'key':<34} side   {header} {'wall_s':>8}")
     for key in differ:
-        for side, table, wall in (("parent", parent, times[0]), ("change", change, times[1])):
-            print(f"{key:<34} {side} {row(table.get(key, zero))} {seconds(wall, key)}")
-    same = len(set(parent) | set(change)) - len(differ)
-    print(f"{len(differ)} keys differ, {same} unchanged")
+        for side, table, wall in zip(("parent", "change"), tables, times):
+            print(f"{key:<34} {side} {span_row(spans(table, key))} {seconds(wall, key)}")
+    print(f"{len(differ)} keys differ, {len(keys) - len(differ)} unchanged")
     return 0
 
 

@@ -27,11 +27,24 @@ object GraftSession {
     * artifact name: unset means [[DefaultCpus]], anything but a positive
     * integer fails fast instead of surfacing as a malformed `local[...]`.
     */
-  def cpus(env: Option[String]): Int = env match {
-    case None => DefaultCpus
-    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$v'"))
-  }
+  def cpus(env: Option[String]): Int = positive("SPARK_GRAFT_CPUS", "core count", env, DefaultCpus)
+
+  /** Shuffle-partition ceiling when `SPARK_GRAFT_SHUFFLE_PARTITIONS` is unset. */
+  val DefaultShufflePartitions = 32
+
+  /** `SPARK_GRAFT_SHUFFLE_PARTITIONS` checked before it reaches the
+    * session conf: unset means [[DefaultShufflePartitions]], anything but
+    * a positive integer fails fast by name.
+    */
+  def shufflePartitions(env: Option[String]): Int = positive(
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS", "partition count", env, DefaultShufflePartitions)
+
+  private def positive(name: String, what: String, env: Option[String], default: Int): Int =
+    env match {
+      case None => default
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer $what, got '$v'"))
+    }
 
   def create(appName: String = "graft", master: String = null): SparkSession = {
     val master0 = Option(master).getOrElse(defaultMaster)
@@ -46,7 +59,7 @@ object GraftSession {
       // cluster this is the one number sized per deployment; here the
       // env knob is that sizing.
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+        shufflePartitions(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")).toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

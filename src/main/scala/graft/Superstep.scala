@@ -35,27 +35,19 @@ object Superstep {
     * yields null (a sum or max, or any metric of an input with no
     * partitions) reads as 0.
     */
-  def pin(df: DataFrame, metric: Column, more: Column*): (DataFrame, IndexedSeq[Long]) =
-    pinObserved(df, metric +: more, identity)
-
-  /** The row count a pin measured on its job. */
-  def rows(pinned: DataFrame): Long = logicalRdd(pinned).stats.rowCount.get.toLong
-
-  /** Observes `metrics` on `df`, then pins `finish` of it: the metrics may
-    * read columns `finish` drops, which are then never stored.
-    */
-  private def pinObserved(df: DataFrame, metrics: Seq[Column],
-      finish: DataFrame => DataFrame): (DataFrame, IndexedSeq[Long]) = {
+  def pin(df: DataFrame, metric: Column, more: Column*): (DataFrame, IndexedSeq[Long]) = {
     val obs = Observation()
-    val names = metrics.indices.map(i => s"m$i")
-    val named = metrics.zip(names).map { case (c, n) => c.as(n) }
-    val pinned = pin(finish(df.observe(obs, named.head, named.tail: _*)))
+    val named = (metric +: more).zipWithIndex.map { case (c, i) => c.as(s"m$i") }
+    val pinned = pin(df.observe(obs, named.head, named.tail: _*))
     val values = obs.get
-    (pinned, names.map(n => values.get(n) match {
+    (pinned, named.indices.map(i => values.get(s"m$i") match {
       case Some(v: Number) => v.longValue
       case _ => 0L
     }))
   }
+
+  /** The row count a pin measured on its job. */
+  def rows(pinned: DataFrame): Long = logicalRdd(pinned).stats.rowCount.get.toLong
 
   /** Frees a pin's blocks now. Only release a pin once everything still
     * read from it, by the caller or by what it returns, was itself pinned
@@ -75,9 +67,10 @@ object Superstep {
     * between stay lazy and fuse into the next pin's job. With `progress`,
     * the name of a boolean column the step emits to flag each row that
     * still moved, every pinned round counts the flagged rows on the pin
-    * job, and a pinned round with none ends the loop; the flag column is
-    * dropped from the state, so it is never stored. Each pin the loop
-    * takes is released once the next one lands; `init` stays the
+    * job, and a pinned round with none ends the loop. The flag column
+    * stays in the state, so the next step can read which rows moved (a
+    * frontier); the caller projects it away from the result. Each pin the
+    * loop takes is released once the next one lands; `init` stays the
     * caller's. Returns the final state (pinned iff its round was) and
     * whether a round without progress ended the loop.
     */
@@ -92,11 +85,11 @@ object Superstep {
       val r = it.next()
       val next = step(state, r)
       state =
-        if (r % cadence != 0) progress.fold(next)(next.drop)
+        if (r % cadence != 0) next
         else {
           val pinned = progress match {
             case Some(flag) =>
-              val (df, Seq(n)) = pinObserved(next, Seq(count(when(col(flag), 1))), _.drop(flag))
+              val (df, Seq(n)) = pin(next, count(when(col(flag), 1)))
               converged = n == 0
               df
             case None => pin(next)

@@ -139,8 +139,10 @@ object CycleAudit {
     *
     * Scale shape: everything is min-fold propagation and semi-joins —
     * two bounded traversals per iteration over the LIVE subgraph
-    * (which only shrinks), no pair/path enumeration, and the
-    * traversal engine's own sizing probe handles the reduce widths.
+    * (which only shrinks), each round of them one exchange plus its pin
+    * with messages only from the nodes whose color improved; no
+    * pair/path enumeration, and the traversal engine's own sizing probe
+    * handles the reduce widths.
     */
   def stronglyConnected(
       edges: DataFrame,

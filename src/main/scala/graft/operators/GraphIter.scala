@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.{Superstep, Tables}
 
 /** Iterative graph analytics as DataFrame loops (Pregel-style).
@@ -14,6 +15,10 @@ import graft.{Superstep, Tables}
   * lineage stays O(1) in the iteration count. A convergence-driven loop
   * reads its progress from a metric on the pin job, never from an extra
   * action, and releases each superseded pin as the next one lands.
+  * Min-propagation ([[connectedComponents]], [[minRelaxTraverse]] and
+  * what runs on it) shares one vertex-state loop, [[minPropagate]]: each
+  * node's pinned row carries its adjacency, so a superstep is one
+  * exchange plus its pin and never joins the edge list again.
   */
 object GraphIter {
 
@@ -30,40 +35,65 @@ object GraphIter {
 
   /** Hash-min connected components over an undirected edge list.
     *
-    * Label = min node-id reachable; converges in O(diameter) supersteps.
-    * Pregel-style, the state is one pinned row per node that carries its
-    * distinct neighbours next to its label, so the static edges never move
-    * again: a superstep explodes the lists into (neighbour, label) messages,
-    * unions them with the state rows and runs one min-aggregate by node —
-    * one exchange, then the pin. The pin job also counts the nodes whose
-    * label dropped (a `Dataset.observe` metric), so convergence costs no
-    * extra action. Works on any (src, dst) edge set, numeric or string ids.
+    * Label = min node-id reachable; converges in O(diameter) supersteps on
+    * [[minPropagate]] with an identity relax: the state is one pinned row
+    * per node that carries its distinct neighbours next to its label, so
+    * the static edges never move again, and a superstep is one
+    * min-aggregate by node — one exchange, then the pin, whose job counts
+    * the nodes whose label dropped. Works on any (src, dst) edge set,
+    * numeric or string ids.
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
     // Superstep 1 fused into the init: with identity labels the first
-    // min-propagation is exactly least(node, min neighbour). Every node
-    // appears as a src (sym is symmetric), so coverage is complete, and
-    // the loop below never adds or drops a node.
+    // min-propagation is exactly least(node, min neighbour), which every
+    // node still has to send. Every node appears as a src (sym is
+    // symmetric), so coverage is complete, and the loop never adds a node.
     val init = Superstep.pin(sym.groupBy(col("src").as("node"))
-      .agg(collect_set(col("dst")).as("nbrs"), min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("label"), col("nbrs")))
+      .agg(collect_set(struct(col("dst"))).as("adj"), min(col("dst")).as("mn"))
+      .select(col("node"), least(col("node"), col("mn")).as("state"), col("adj"),
+        lit(true).as("active")))
     // Labels never rise, so a superstep with no label drop is the fixpoint.
-    val (state, _) = Superstep.iterate(init, 1 to Int.MaxValue, progress = Some("dropped")) {
-      (s, _) =>
-        // Each state row keeps its own label as `prev`; messages leave it null.
-        s.withColumn("prev", col("label"))
-          .unionByName(s.select(explode(col("nbrs")).as("node"), col("label")),
-            allowMissingColumns = true)
-          .groupBy("node")
-          .agg(min(col("label")).as("label"), min(col("prev")).as("prev"),
-            first(col("nbrs"), ignoreNulls = true).as("nbrs"))
-          .select(col("node"), col("label"), col("nbrs"), (col("label") < col("prev")).as("dropped"))
-    }
+    val (state, _) = minPropagate(init, Int.MaxValue)((s, _) => s)
     Superstep.release(init)
-    state.select(col("node"), col("label"))
+    state.select(col("node"), col("state").as("label"))
   }
+
+  /** The min-propagation superstep under [[connectedComponents]] and
+    * [[minRelaxTraverse]], on Pregel's vertex-state model (Malewicz et al.
+    * 2010). `init` holds one row per node, `(node, state, adj, active)`:
+    * `adj` is its out-adjacency as `array<struct<dst, edge property
+    * columns>>` and `active` flags a state the node has not sent yet. A
+    * round explodes messages from the active rows only, maps each through
+    * `relax(state, round)` over the exploded edge fields (NULL refuses the
+    * edge), unions them with the state rows and folds by min in one
+    * `groupBy(node)`: one exchange, then the pin. A row whose state
+    * dropped (or was first set) is active next round, and the pin job
+    * counts those rows; a round with none is the fixpoint. A state is
+    * sent once, in the round after it was reached, so a per-hop
+    * (round-dependent) relax only ever sees states of the previous hop,
+    * and a round-independent relax gives what re-relaxing every edge
+    * every round gives. Runs at most `maxRounds` rounds; `init` stays the
+    * caller's. Returns the last state and whether the fixpoint ended the
+    * loop.
+    */
+  private def minPropagate(init: DataFrame, maxRounds: Int)(
+      relax: (Column, Int) => Column): (DataFrame, Boolean) =
+    Superstep.iterate(init, 1 to maxRounds, progress = Some("active")) { (s, round) =>
+      val messages = s.filter(col("active"))
+        .select(col("state"), explode(col("adj")).as("e"))
+        .select(col("state"), col("e.*"))
+        .select(col("dst").as("node"), relax(col("state"), round).as("state"))
+        .filter(col("state").isNotNull)
+      s.select(col("node"), col("state"), col("adj"), col("state").as("prev"))
+        .unionByName(messages, allowMissingColumns = true)
+        .groupBy("node")
+        .agg(min(col("state")).as("state"), min(col("prev")).as("prev"),
+          first(col("adj"), ignoreNulls = true).as("adj"))
+        .select(col("node"), col("state"), col("adj"),
+          coalesce(col("state") < col("prev"), col("state").isNotNull).as("active"))
+    }
 
   /** INCREMENTAL connected components: fold a batch of NEW edges into an
     * existing node→label assignment without re-running CC over the full
@@ -374,86 +404,83 @@ object GraphIter {
   }
 
   /** Generalized bounded-round MIN-RELAXATION traversal — the reusable
-    * superstep under g9's BFS, g21's temporal reach, and g22's weighted
-    * shortest paths, exposed as an API so a NEW pattern (the Cypher
-    * `MATCH (a)-[r1]->(x)-[r2]->(b) WHERE <per-edge predicates>` shape
-    * the reference runs in Neo4j, mysql2neo4j.py:262/:381) is one
+    * superstep under g21's temporal reach, g22's weighted shortest paths
+    * and both g29 SCC passes, exposed as an API so a NEW pattern (the
+    * Cypher `MATCH (a)-[r1]->(x)-[r2]->(b) WHERE <per-edge predicates>`
+    * shape the reference runs in Neo4j, mysql2neo4j.py:262/:381) is one
     * `relax` lambda instead of a new operator.
     *
     * Contract: `edges` is a directed edge table `(src, dst, <property
     * columns>)` (symmetrize first for undirected semantics); `init` is
-    * `(node, state: long)`; `relax(state, round)` is a Column over the
-    * edge's property columns and the source node's current `state`,
-    * producing the candidate state the edge offers its `dst` — or NULL
-    * to refuse the edge (the per-edge/per-hop predicate). States fold by
-    * MIN, so after R rounds `state(n)` = min over all ≤R-edge walks from
-    * an init node to `n` of the folded relax chain — exact for any
-    * monotone relax (candidate ≥ source state): hop count (`s + 1`),
-    * non-negative edge weights (`s + w`), foremost arrival times
-    * (`IF(d ≥ s, d, NULL)`).
+    * `(node, state)`; `relax(state, round)` is a Column over the edge's
+    * property columns and the source node's current `state`, producing
+    * the candidate state the edge offers its `dst` — or NULL to refuse
+    * the edge (the per-edge/per-hop predicate). States fold by MIN, so
+    * after R rounds `state(n)` = min over all ≤R-edge walks from an init
+    * node to `n` of the folded relax chain — exact for any monotone relax
+    * (candidate ≥ source state): hop count (`s + 1`), non-negative edge
+    * weights (`s + w`), foremost arrival times (`IF(d ≥ s, d, NULL)`).
+    * The traversal stops early at the first round where no state
+    * improves; that is the fixpoint, and with `requireConverged` a run
+    * that has not reached it by `maxRounds` refuses instead of returning
+    * the ≤maxRounds-walk answer. Nodes no walk reaches are absent.
     *
-    * Scale shape: per round ONE equijoin of the frontier against the
-    * once-checkpointed edge list, a map-side-combined min per dst, and
-    * a min fold — O(frontier-degree sum) work, never path enumeration.
-    * The edge side is NOT force-repartitioned: a bounded frontier
-    * broadcasts (the common traversal regime — zero edge movement per
-    * round); a caller whose frontiers stay corpus-sized pre-partitions
-    * `edges` by src once and the shuffle join reuses that layout. With
-    * `earlyExit` the frontier is only the nodes whose state IMPROVED
-    * (one extra join per round, and the improved count read off the
-    * round's pin job — Dijkstra-ish work bounds, the right default for
-    * converging relaxations); without it the frontier is the raw
-    * candidate table and rounds run fixed (the g10/g12 fixed-round
-    * discipline, right for small known round counts). Results are
-    * identical either way: min-folding makes re-relaxation idempotent.
-    * Every round's tables are pinned; lineage stays O(1) in depth.
+    * Scale shape: [[minPropagate]]'s vertex-state loop. One
+    * `groupBy(src)` over the pinned edges ∪ `init` builds the pinned state
+    * row per node (least init state, out-adjacency); the edge pin is then
+    * released, and each round is one exchange plus its pin, with messages
+    * only from the nodes whose state improved the round before.
     *
-    * SIZING: the round aggregates' reduce width is DERIVED from the
-    * measured edge count ([[relaxParts]] — the probe→knob discipline):
-    * a dense round's candidate table is bounded by |E|, and folding
-    * 10⁸ candidates into a 32-partition default is exactly the
-    * measured sf10 OOM (UNABLE_TO_ACQUIRE_MEMORY at p32/16g; p128
-    * clean). The width is applied via the session shuffle-partition
-    * knob for the duration of the traversal (restored after — the
-    * engine's loops are single-owner per session), so map-side combine
-    * is preserved; partition count never changes results.
+    * SIZING: the aggregates' reduce width is DERIVED from the measured
+    * edge count ([[relaxParts]]): a dense round's message table is
+    * bounded by |E|, and folding 10⁸ candidates into a 32-partition
+    * default is exactly the measured sf10 OOM (UNABLE_TO_ACQUIRE_MEMORY
+    * at p32/16g; p128 clean). The width is applied through the session
+    * shuffle-partition setting for the duration of the traversal
+    * (restored after), so map-side combine is preserved; partition count
+    * never changes results.
     */
   def minRelaxTraverse(
       edges: DataFrame,
       init: DataFrame,
       maxRounds: Int,
-      earlyExit: Boolean = true,
       requireConverged: Boolean = false)(
-      relax: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column): DataFrame = {
-    require(!requireConverged || earlyExit,
-      "minRelaxTraverse: requireConverged needs earlyExit=true — fixed-round " +
-        "mode never observes the improved frontier, so convergence is unknowable there")
+      relax: (Column, Int) => Column): DataFrame = {
     val spark = edges.sparkSession
     val e = Superstep.pin(edges)
-    val eCnt = Superstep.rows(e)
-    // The derived reduce width is applied through the session
-    // shuffle-partition knob (preserves map-side combine on the round
-    // aggregates, which a post-join repartition would forfeit). The knob
-    // is SESSION-GLOBAL state, so the set→run→restore window is guarded
-    // by a per-session monitor: two concurrent traversals on one session
-    // can no longer interleave set/restore and adopt each other's width
-    // as the "default". Concurrent NON-traversal queries on the same
-    // session still observe the altered width for the traversal's
-    // duration — callers running mixed concurrent workloads should give
-    // the traversal its own session (`spark.newSession()` shares the
-    // ctx but isolates the conf).
+    // The shuffle-partition setting is SESSION-GLOBAL state, so the
+    // set→run→restore window is guarded by a per-session monitor: two
+    // concurrent traversals on one session cannot interleave set/restore
+    // and adopt each other's width as the "default". Concurrent
+    // NON-traversal queries on the same session still observe the altered
+    // width for the traversal's duration — callers running mixed
+    // concurrent workloads should give the traversal its own session
+    // (`spark.newSession()` shares the context but isolates the conf).
     knobLockOf(spark).synchronized {
-      // Defensive parse: under some AQE setups the conf can hold a
-      // non-integer spec; fall back to the engine default rather than
-      // throwing from inside a traversal.
-      val raw = spark.conf.get("spark.sql.shuffle.partitions", "32")
-      val defaultParts = scala.util.Try(raw.trim.toInt).getOrElse(32)
-      val parts = relaxParts(eCnt, defaultParts)
-      if (parts != defaultParts)
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try minRelaxTraverseSized(e, init, maxRounds, earlyExit, requireConverged)(relax)
-      finally if (parts != defaultParts)
-        spark.conf.set("spark.sql.shuffle.partitions", raw)
+      val key = SQLConf.SHUFFLE_PARTITIONS.key
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key,
+        relaxParts(Superstep.rows(e), spark.sessionState.conf.defaultNumShufflePartitions))
+      try {
+        // One state row per edge source or init node: its least init state
+        // (NULL until reached) and its out-edges as (dst, properties).
+        val edge = struct(e.columns.toSeq.filter(_ != "src").map(col): _*)
+        val start = Superstep.pin(e
+          .unionByName(init.select(col("node").as("src"), col("state")), allowMissingColumns = true)
+          .groupBy(col("src").as("node"))
+          .agg(min(col("state")).as("state"),
+            collect_list(when(col("dst").isNotNull, edge)).as("adj"))
+          .withColumn("active", col("state").isNotNull))
+        Superstep.release(e)
+        val (out, converged) = minPropagate(start, maxRounds)(relax)
+        if (maxRounds > 0) Superstep.release(start)
+        if (requireConverged && !converged)
+          throw new IllegalStateException(
+            s"minRelaxTraverse: relaxation still improving after maxRounds=$maxRounds — " +
+              "the result is a TRUNCATED (≤maxRounds-edge-walk) relaxation, not the " +
+              "fixpoint; raise maxRounds")
+        out.filter(col("state").isNotNull).select(col("node"), col("state"))
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 
@@ -478,77 +505,15 @@ object GraphIter {
     math.min(4096L, math.max(defaultParts.toLong,
       (eCnt + (1L << 20) - 1) >> 20)).toInt
 
-  private def minRelaxTraverseSized(
-      e: DataFrame,
-      init: DataFrame,
-      maxRounds: Int,
-      earlyExit: Boolean,
-      requireConverged: Boolean)(
-      relax: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column): DataFrame = {
-    val init2 = Superstep.pin(init.select(col("node"), col("state"))
-      .groupBy("node").agg(min("state").as("state")))
-    def candOf(frontier: DataFrame, round: Int): DataFrame = e
-      .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-      .select(col("dst").as("node"), relax(col("state"), round).as("state"))
-      .filter(col("state").isNotNull)
-      .groupBy("node").agg(min("state").as("state"))
-    if (earlyExit) {
-      // ONE pinned table per round carrying both the folded state and the
-      // round's previous state: the next round's inputs and the improved
-      // frontier are zero-job PROJECTIONS of it, and the improved count is
-      // a metric on its pin job, so a round is that pin alone. `least`
-      // skips NULLs, so the full join's three row classes fold correctly:
-      // carried-only (cand NULL → prev), newly-reached (prev NULL → cand,
-      // improved), both (min, improved iff strictly below prev).
-      val improved = col("prev").isNull || col("state") < col("prev")
-      val start = init2.select(col("node"), col("state"),
-        lit(null).cast(init2.schema("state").dataType).as("prev"))
-      val (joined, converged) =
-        Superstep.iterate(start, 1 to maxRounds, progress = Some("improved")) { (j, round) =>
-          // Improved-only frontier (round 1: everything — prev is NULL):
-          // the only sources that can still produce a better walk.
-          j.select(col("node"), col("state").as("prev"))
-            .join(candOf(j.filter(improved).select("node", "state"), round), Seq("node"), "full")
-            .select(col("node"), least(col("prev"), col("state")).as("state"), col("prev"))
-            .withColumn("improved", improved)
-        }
-      if (requireConverged && !converged)
-        throw new IllegalStateException(
-          s"minRelaxTraverse: relaxation still improving after maxRounds=$maxRounds — " +
-            "the result is a TRUNCATED (≤maxRounds-edge-walk) relaxation, not the " +
-            "fixpoint; raise maxRounds")
-      if (maxRounds > 0) Superstep.release(init2)
-      Superstep.release(e)
-      joined.select(col("node"), col("state"))
-    } else {
-      // Fixed rounds: no per-round fold — each round only needs the
-      // previous round's candidates, so the running min folds ONCE at the
-      // end over init ∪ every round's candidate table (min-idempotence
-      // makes the two shapes identical; per-round folding would pay an
-      // extra O(V) aggregate per round).
-      val cands = scala.collection.mutable.ListBuffer[DataFrame](init2)
-      var frontier = init2
-      (1 to maxRounds).foreach { r =>
-        val cand = Superstep.pin(candOf(frontier, r))
-        cands += cand
-        frontier = cand
-      }
-      val out = Superstep.pin(cands.reduce(_.unionByName(_))
-        .groupBy("node").agg(min("state").as("state")))
-      (cands :+ e).foreach(Superstep.release)
-      out
-    }
-  }
-
   /** Weighted single-source(-set) shortest paths — the GDS
     * `shortestPath`/Dijkstra capability over NON-NEGATIVE integer edge
     * weights, as bounded-round synchronous Bellman–Ford on
     * [[minRelaxTraverse]]: after `rounds` rounds each node holds the
     * exact min-cost over all walks of ≤ `rounds` edges from the seed
-    * set (the fixed-round semantics both this and the unrolled oracle
+    * set (the bounded-round semantics both this and the unrolled oracle
     * compute — deterministic whether or not the relaxation has
-    * converged; with `earlyExit` it stops as soon as no state improves,
-    * at which point the answer IS the unbounded shortest path).
+    * converged; it stops as soon as no state improves, at which point
+    * the answer IS the unbounded shortest path).
     * Undirected: edges symmetrize here; parallel edges keep the
     * cheapest weight.
     */
@@ -1277,15 +1242,13 @@ object GraphIter {
     * engine-reproducible and the DuckDB oracle unrolls the same three
     * relaxations.
     *
-    * Three fixed supersteps (seed customers → suppliers → customers →
-    * suppliers; the g10/g12 fixed-round discipline keeps the
-    * not-yet-converged output deterministic and oracle-exact). Scale
-    * shape: one (custkey, suppkey, day) distinct edge projection,
-    * checkpointed once and reused by all rounds; each superstep is ONE
-    * equijoin of the (tiny) frontier against the edge list with the date
-    * predicate inline, folded by a map-side-combined min — O(E) per
-    * round, the g9 BFS shape plus a time filter; no path enumeration
-    * anywhere.
+    * At most three supersteps (seed customers → suppliers → customers →
+    * suppliers; the bounded round count keeps the not-yet-converged
+    * output deterministic and oracle-exact). Scale shape: one (custkey,
+    * suppkey, day) distinct edge projection, pinned once and folded into
+    * the traversal's per-node adjacency; each superstep sends only from
+    * the nodes whose arrival improved, with the date predicate inline,
+    * folded by one min per node — no path enumeration anywhere.
     */
   def g21TemporalReach(spark: SparkSession, dir: String, seedMod: Int = 500): DataFrame = {
     val t = Tables(spark, dir)
@@ -1312,11 +1275,13 @@ object GraphIter {
     * Expressed through [[minRelaxTraverse]] (hand-rolled supersteps
     * until r13): foremost arrival IS the min-relaxation with
     * `relax(s) = IF(d ≥ s, d, NULL)` — the time predicate is the
-    * per-edge refusal, the foremost fold is the min. Three fixed rounds
-    * (customer→supplier→customer→supplier), no early-exit action, same
-    * packed-long bipartite encoding as g6/g9; output contract (side,
-    * node_id, foremost_day) and values are bit-identical to the
-    * unrolled form (driver gate + crafted spec pin it).
+    * per-edge refusal, the foremost fold is the min. At most three
+    * rounds (customer→supplier→customer→supplier), same packed-long
+    * bipartite encoding as g6/g9. The relax ignores the round, so
+    * sending only from improved nodes gives exactly what re-relaxing
+    * every edge each round gives; output contract (side, node_id,
+    * foremost_day) and values are bit-identical to the unrolled form
+    * (driver gate + crafted spec pin it).
     */
   def temporalReachCore(edges: DataFrame, seeds: DataFrame): DataFrame = {
     val sym = edges
@@ -1325,7 +1290,7 @@ object GraphIter {
       .unionByName(edges.select((col("s").cast("long") * 2 + 1).as("src"),
         (col("c").cast("long") * 2).as("dst"), col("d")))
     val init = seeds.select((col("c").cast("long") * 2).as("node"), col("arr").as("state"))
-    minRelaxTraverse(sym, init, maxRounds = 3, earlyExit = false)(
+    minRelaxTraverse(sym, init, maxRounds = 3)(
       (s, _) => when(col("d") >= s, col("d")))
       .select(
         when(pmod(col("node"), lit(2)) === 0, lit("customer"))

@@ -21,6 +21,16 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_SHUFFLE_PARTITIONS: unset is the default, a positive integer is taken, anything else is refused by name") {
+    assert(GraftSession.shufflePartitions(None) === GraftSession.DefaultShufflePartitions)
+    assert(GraftSession.shufflePartitions(Some("128")) === 128)
+    Seq("", "0", "-8", "many", "64 ", "2.5").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.shufflePartitions(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("memo: builds once per application; a new application evicts the old one's entries") {
     var builds = 0
     def build(): Int = { builds += 1; builds }

@@ -1819,35 +1819,27 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connectedComponents runs at most 2 jobs per superstep") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        marks.add(Option(e.properties).flatMap(p => Option(p.getProperty("cc.mark"))).getOrElse(""))
-    }
-    def mark(m: String): Unit = {
-      sc.setLocalProperty("cc.mark", m)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setLocalProperty("cc.mark", null)
-    }
     val edges = stringChain()
-    sc.addSparkListener(listener)
-    try {
-      mark("start")
-      operators.GraphIter.connectedComponents(edges)
-      mark("end")
-      // Listener delivery is asynchronous but ordered: once the end mark
-      // has arrived, every job between the marks has too.
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!marks.contains("end") && System.nanoTime() < deadline) Thread.sleep(50)
-    } finally sc.removeSparkListener(listener)
-    val seen = marks.toArray.toSeq.map(_.toString)
-    assert(seen.contains("end"), "end mark never reached the listener")
-    val jobs = seen.indexOf("end") - seen.indexOf("start") - 1
+    val jobs = jobsDuring(operators.GraphIter.connectedComponents(edges))
     // 40 supersteps: the fused init plus 39 rounds (38 that move the
     // label one hop, one that sees no change).
     assert(jobs <= 2 * 40 + 4, s"$jobs jobs for 40 supersteps")
+  }
+
+  test("minRelaxTraverse runs at most 2 jobs per round") {
+    val ss = spark; import ss.implicits._
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+    var got = Map.empty[Long, Long]
+    val jobs = jobsDuring {
+      got = operators.GraphIter.minRelaxTraverse(chain, Seq((0L, 0L)).toDF("node", "state"),
+          maxRounds = 64, requireConverged = true)((s, _) => s + 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got === (0L to 30L).map(i => i -> i).toMap)
+    // 31 rounds (30 that reach a node, one that sees no change), each one
+    // exchange and its pin, plus the edge pin, the init pin (an exchange
+    // and the pin) and the collect.
+    assert(jobs <= 2 * 31 + 5, s"$jobs jobs for 31 rounds")
   }
 
   test("connectedComponents leaves a constant number of pins, not one per superstep") {
@@ -2660,11 +2652,6 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       path, init, maxRounds = 16, requireConverged = true)((s, _) => s + 1)
     assert(ok.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       (1L to 6L).map(i => i -> (i - 1)).toMap)
-    // Fixed-round mode cannot certify convergence: the combination refuses.
-    intercept[IllegalArgumentException] {
-      operators.GraphIter.minRelaxTraverse(
-        path, init, maxRounds = 3, earlyExit = false, requireConverged = true)((s, _) => s + 1)
-    }
   }
 
   test("g29 SCC refuses a coloring truncated at maxRounds (ring wider than the budget)") {

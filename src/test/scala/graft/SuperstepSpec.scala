@@ -153,12 +153,14 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     val before = persistentIds
     // Halve every value each round: the progress flag marks values that
     // still move, so the loop ends on the first pinned round with none.
+    // The flag stays in the state, where the next step could read it.
     val (out, converged) = Superstep.iterate(init, 1 to 100, cadence = 2,
         progress = Some("moved")) { (s, _) =>
       s.select((col("v") / 2).cast("long").as("v"), (col("v") > 0).as("moved"))
     }
     assert(converged)
-    assert(out.columns.toSeq === Seq("v"))
+    assert(out.columns.toSeq === Seq("v", "moved"))
+    assert(out.filter(col("moved")).isEmpty)
     assert(out.agg(max("v")).head().getLong(0) === 0L)
     // Only the final pin outlives the loop.
     assert((persistentIds -- before).size === 1)
