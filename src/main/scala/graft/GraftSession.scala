@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftInternals
 
 /** Session factory with the engine's tuned defaults.
   *
@@ -113,7 +114,7 @@ object GraftSession {
     spark.catalog.clearCache()
     val appId = spark.sparkContext.applicationId
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!retainedIds.contains((appId, id))) rdd.unpersist(blocking = false)
+      if (!retainedIds.contains((appId, id))) GraftInternals.release(rdd)
     }
     // Broadcast blocks accumulate across queries until a driver GC lets
     // the ContextCleaner at them — which can land mid-query and was the

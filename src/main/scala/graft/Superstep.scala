@@ -21,10 +21,13 @@ import org.apache.spark.sql.graft.GraftInternals
   * `Scan ExistingRDD` with unknown partitioning, so a pin never saves the
   * next superstep's exchange on its key. `Dataset.unpersist` frees nothing
   * for a pin (the blocks belong to the RDD under its `LogicalRDD`, not to
-  * the cache manager); [[release]] frees them through that RDD. Pins nobody
-  * releases are swept by [[GraftSession.releaseCaches]] after the query.
+  * the cache manager); [[release]] frees them through that RDD
+  * ([[GraftInternals.release]]). Pins nobody releases are swept by
+  * [[GraftSession.releaseCaches]] after the query.
   */
 object Superstep {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
   def pin(df: DataFrame): DataFrame = GraftInternals.measuredCheckpoint(df)
 
@@ -53,7 +56,7 @@ object Superstep {
     * read from it, by the caller or by what it returns, was itself pinned
     * eagerly after it: a lazy frame over a released pin fails when run.
     */
-  def release(pinned: DataFrame): Unit = rddOf(pinned).unpersist(blocking = false)
+  def release(pinned: DataFrame): Unit = GraftInternals.release(rddOf(pinned))
 
   private[graft] def rddOf(pinned: DataFrame): RDD[_] = logicalRdd(pinned).rdd
 
@@ -72,7 +75,9 @@ object Superstep {
     * frontier); the caller projects it away from the result. Each pin the
     * loop takes is released once the next one lands; `init` stays the
     * caller's. Returns the final state (pinned iff its round was) and
-    * whether a round without progress ended the loop.
+    * whether a round without progress ended the loop. Logs one INFO line
+    * per loop: rounds run, rounds pinned, the progress count of each pinned
+    * round and whether the loop converged.
     */
   def iterate(init: DataFrame, rounds: Range, cadence: Int = 1, progress: Option[String] = None)(
       step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
@@ -80,16 +85,22 @@ object Superstep {
     var state = init
     var lastPin: Option[DataFrame] = None
     var converged = false
+    var run = 0
+    var pins = 0
+    val counts = Seq.newBuilder[Long]
     val it = rounds.iterator
     while (!converged && it.hasNext) {
       val r = it.next()
       val next = step(state, r)
+      run += 1
       state =
         if (r % cadence != 0) next
         else {
+          pins += 1
           val pinned = progress match {
             case Some(flag) =>
               val (df, Seq(n)) = pin(next, count(when(col(flag), 1)))
+              counts += n
               converged = n == 0
               df
             case None => pin(next)
@@ -99,6 +110,9 @@ object Superstep {
           pinned
         }
     }
+    log.info(s"superstep loop: $run rounds run, $pins pinned" +
+      progress.fold("")(f => s", $f per pinned round [${counts.result().mkString(", ")}]") +
+      (if (converged) ", converged" else ", not converged"))
     (state, converged)
   }
 }

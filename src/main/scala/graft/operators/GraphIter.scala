@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.graft.LocalComponents
 import graft.{Superstep, Tables}
 
 /** Iterative graph analytics as DataFrame loops (Pregel-style).
@@ -18,9 +19,13 @@ import graft.{Superstep, Tables}
   * Min-propagation ([[connectedComponents]], [[minRelaxTraverse]] and
   * what runs on it) shares one vertex-state loop, [[minPropagate]]: each
   * node's pinned row carries its adjacency, so a superstep is one
-  * exchange plus its pin and never joins the edge list again.
+  * exchange plus its pin and never joins the edge list again. Connected
+  * components also settle each partition's components locally after
+  * every fold, so only labels that cross partitions take supersteps.
   */
 object GraphIter {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
   /** The undirected edge list as a pinned, deduplicated symmetric
     * `(src, dst)` table. Repartition BEFORE deduping: HashPartitioning(src)
@@ -33,15 +38,22 @@ object GraphIter {
       .repartition(col("src"))
       .dropDuplicates("src", "dst"))
 
-  /** Hash-min connected components over an undirected edge list.
+  /** Hash-min connected components over an undirected edge list, with
+    * each partition's components settled locally.
     *
-    * Label = min node-id reachable; converges in O(diameter) supersteps on
-    * [[minPropagate]] with an identity relax: the state is one pinned row
-    * per node that carries its distinct neighbours next to its label, so
-    * the static edges never move again, and a superstep is one
-    * min-aggregate by node — one exchange, then the pin, whose job counts
-    * the nodes whose label dropped. Works on any (src, dst) edge set,
-    * numeric or string ids.
+    * Label = min node-id reachable, on [[minPropagate]] with an identity
+    * relax: the state is one pinned row per node that carries its distinct
+    * neighbours next to its label, so the static edges never move again,
+    * and a superstep is one min-aggregate by node — one exchange, then the
+    * pin. After the init aggregate and after every fold,
+    * [[LocalComponents.settle]] runs union-find over the neighbours held in
+    * the same partition and gives each local component its least label
+    * (Giraph++'s graph-centric model inside Pregel's vertex loop), so only
+    * a node whose label dropped and that has a neighbour in another
+    * partition sends again. A state that fits one partition converges at
+    * the init pin and runs no superstep; a spread one needs at most as
+    * many supersteps as plain hash-min (O(diameter)), usually far fewer.
+    * Works on any (src, dst) edge set, numeric or string ids.
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
@@ -50,13 +62,21 @@ object GraphIter {
     // min-propagation is exactly least(node, min neighbour), which every
     // node still has to send. Every node appears as a src (sym is
     // symmetric), so coverage is complete, and the loop never adds a node.
-    val init = Superstep.pin(sym.groupBy(col("src").as("node"))
-      .agg(collect_set(struct(col("dst"))).as("adj"), min(col("dst")).as("mn"))
-      .select(col("node"), least(col("node"), col("mn")).as("state"), col("adj"),
-        lit(true).as("active")))
+    val (init, Seq(active)) = Superstep.pin(LocalComponents.settle(
+      sym.groupBy(col("src").as("node"))
+        .agg(collect_set(struct(col("dst"))).as("adj"), min(col("dst")).as("mn"))
+        .select(col("node"), least(col("node"), col("mn")).as("state"), col("adj"),
+          col("node").as("prev"))),
+      count(when(col("active"), 1)))
+    log.info(s"connectedComponents: $active of ${Superstep.rows(init)} nodes active after the init pin")
     // Labels never rise, so a superstep with no label drop is the fixpoint.
-    val (state, _) = minPropagate(init, Int.MaxValue)((s, _) => s)
-    Superstep.release(init)
+    val state =
+      if (active == 0) init
+      else {
+        val (s, _) = minPropagate(init, Int.MaxValue, LocalComponents.settle)((s, _) => s)
+        Superstep.release(init)
+        s
+      }
     state.select(col("node"), col("state").as("label"))
   }
 
@@ -68,17 +88,19 @@ object GraphIter {
     * round explodes messages from the active rows only, maps each through
     * `relax(state, round)` over the exploded edge fields (NULL refuses the
     * edge), unions them with the state rows and folds by min in one
-    * `groupBy(node)`: one exchange, then the pin. A row whose state
-    * dropped (or was first set) is active next round, and the pin job
-    * counts those rows; a round with none is the fixpoint. A state is
-    * sent once, in the round after it was reached, so a per-hop
+    * `groupBy(node)`: one exchange, then the pin. `settle` turns the fold's
+    * `(node, state, adj, prev)` rows, `prev` being the state before the
+    * fold, into the next state with its `active` flags; the pin job counts
+    * the active rows, and a round with none is the fixpoint. With
+    * [[sendDrops]] a row whose state dropped (or was first set) is active,
+    * so a state is sent once, in the round after it was reached: a per-hop
     * (round-dependent) relax only ever sees states of the previous hop,
-    * and a round-independent relax gives what re-relaxing every edge
-    * every round gives. Runs at most `maxRounds` rounds; `init` stays the
-    * caller's. Returns the last state and whether the fixpoint ended the
-    * loop.
+    * and a round-independent relax gives what re-relaxing every edge every
+    * round gives. Plain hash-min needs O(diameter) rounds. Runs at most
+    * `maxRounds` rounds; `init` stays the caller's. Returns the last state
+    * and whether the fixpoint ended the loop.
     */
-  private def minPropagate(init: DataFrame, maxRounds: Int)(
+  private def minPropagate(init: DataFrame, maxRounds: Int, settle: DataFrame => DataFrame = sendDrops)(
       relax: (Column, Int) => Column): (DataFrame, Boolean) =
     Superstep.iterate(init, 1 to maxRounds, progress = Some("active")) { (s, round) =>
       val messages = s.filter(col("active"))
@@ -86,14 +108,19 @@ object GraphIter {
         .select(col("state"), col("e.*"))
         .select(col("dst").as("node"), relax(col("state"), round).as("state"))
         .filter(col("state").isNotNull)
-      s.select(col("node"), col("state"), col("adj"), col("state").as("prev"))
+      settle(s.select(col("node"), col("state"), col("adj"), col("state").as("prev"))
         .unionByName(messages, allowMissingColumns = true)
         .groupBy("node")
         .agg(min(col("state")).as("state"), min(col("prev")).as("prev"),
-          first(col("adj"), ignoreNulls = true).as("adj"))
-        .select(col("node"), col("state"), col("adj"),
-          coalesce(col("state") < col("prev"), col("state").isNotNull).as("active"))
+          first(col("adj"), ignoreNulls = true).as("adj")))
     }
+
+  /** [[minPropagate]]'s default settle: a row is active when its state
+    * dropped below `prev` or was first set.
+    */
+  private def sendDrops(folded: DataFrame): DataFrame =
+    folded.select(col("node"), col("state"), col("adj"),
+      coalesce(col("state") < col("prev"), col("state").isNotNull).as("active"))
 
   /** INCREMENTAL connected components: fold a batch of NEW edges into an
     * existing node→label assignment without re-running CC over the full

@@ -252,5 +252,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // cell store (see the rule's scaladoc for the registration contract
     // and the exactness guards).
     ext.injectOptimizerRule(_ => RewriteRangeDistinctToRollup)
+    // Plans the per-partition settle pass of connected components.
+    ext.injectPlannerStrategy(_ => LocalComponentsStrategy)
   }
 }

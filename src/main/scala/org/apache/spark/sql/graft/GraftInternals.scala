@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{classic, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.AttributeMap
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Statistics}
@@ -9,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, Str
 import org.apache.spark.util.SerializableConfiguration
 
 /** Small bridges to `private[spark]` runtime plumbing: executor-side file
-  * maintenance, and the measured checkpoint behind every pin. Lives under
-  * `org.apache.spark.sql` so the
+  * maintenance, and the measured checkpoint behind every pin and its
+  * release. Lives under `org.apache.spark.sql` so the
   * standard third-party-extension access rules apply (the
   * VectorExpressions / RoaringAggregates packaging rationale): nothing
   * here touches internals beyond what a custom data source would.
@@ -67,6 +68,18 @@ object GraftInternals {
       rowCount = Some(BigInt(n)))
     classic.Dataset.ofRows(session, new LogicalRDD(r.output, r.rdd, r.outputPartitioning,
       r.outputOrdering, r.isStreaming, r.stream)(session, Some(stats), Some(r.constraints)))
+  }
+
+  /** Frees `rdd`'s stored blocks now. A locally checkpointed RDD (a pin)
+    * goes straight to `SparkContext.unpersistRDD`: `RDD.unpersist` would do
+    * the same but warn, for every pin, that its truncated lineage cannot
+    * be recomputed, which is what a release means. Any other RDD is
+    * unpersisted, so a later read recomputes it instead of caching it
+    * again behind the session's back.
+    */
+  def release(rdd: RDD[_]): Unit = rdd.checkpointData match {
+    case Some(_: LocalRDDCheckpointData[_]) => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    case _ => rdd.unpersist(blocking = false)
   }
 
   /** Bytes per measured unit of a column whose length the pin measures

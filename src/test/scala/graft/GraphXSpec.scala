@@ -104,6 +104,57 @@ class GraphXSpec extends AnyFunSuite with BeforeAndAfterAll {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("GraphX connectedComponents and the hash-min loop agree with the state spread out") {
+    val ss = spark
+    import ss.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L),
+      (10L, 11L), (11L, 12L), (20L, 21L)).toDF("src", "dst")
+    val df = TestConf.spreadState(spark) {
+      operators.GraphIter.connectedComponents(edges)
+        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+    }
+    val gx = operators.GraphXInterop.connectedComponentsGraphX(edges)
+      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("component")).toMap
+    assert(df === gx)
+    assert(df === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+  }
+
+  test("connectedComponents equals a driver-side union-find on random graphs at 1, 3 and 8 partitions") {
+    val ss = spark
+    import ss.implicits._
+    val rnd = new scala.util.Random(20131)
+    // Sparse random graphs (ids drawn from a range wider than the node
+    // count, so chains, stars, cycles and singletons all occur), numeric
+    // and string ids.
+    val graphs = (0 until 6).map { g =>
+      val n = 5 + rnd.nextInt(60)
+      val ids = (0 until n).map(_ => rnd.nextInt(500).toLong).distinct
+      (g, Seq.fill(n + rnd.nextInt(n))((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))))
+    }
+    def reference[K](edges: Seq[(K, K)])(implicit ord: Ordering[K]): Map[K, K] = {
+      val parent = scala.collection.mutable.Map[K, K]()
+      def find(x: K): K = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    for ((g, edges) <- graphs; parts <- Seq(1, 3, 8)) {
+      val (got, gotStr) = TestConf.spreadState(spark, parts) {
+        (operators.GraphIter.connectedComponents(edges.toDF("src", "dst"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+         operators.GraphIter.connectedComponents(
+            edges.map { case (a, b) => (f"v$a%03d", f"v$b%03d") }.toDF("src", "dst"))
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+      }
+      assert(got === reference(edges), s"graph $g at $parts partitions")
+      assert(gotStr === reference(edges.map { case (a, b) => (f"v$a%03d", f"v$b%03d") }),
+        s"string graph $g at $parts partitions")
+    }
+  }
+
   test("GraphX TriangleCount and the DataFrame wedge pipeline agree exactly") {
     val ss = spark
     import ss.implicits._

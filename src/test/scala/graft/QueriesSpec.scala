@@ -1851,6 +1851,49 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(left.size <= 2, s"${left.size} pins left after 40 supersteps")
   }
 
+  test("connectedComponents settles a one-partition state at its init pin: at most 4 jobs") {
+    var got = Map.empty[String, String]
+    val jobs = jobsDuring {
+      got = operators.GraphIter.connectedComponents(stringChain())
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }
+    assert(got("n39") === "n00" && got("x3") === "x1" && got("s") === "s")
+    // The init aggregate's stage, the init pin and the collect: the
+    // 40-hop chain needs no superstep once its partition settles it.
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
+  test("connectedComponents labels a string-id graph exactly with its state spread out") {
+    TestConf.spreadState(spark) {
+      val got = operators.GraphIter.connectedComponents(stringChain())
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val want = (0 until 40).map(i => f"n$i%02d" -> "n00").toMap ++
+        Seq("x1", "x2", "x3").map(_ -> "x1") + ("s" -> "s")
+      assert(got === want)
+    }
+  }
+
+  test("connectedComponents runs at most 2 jobs per superstep with its state spread out") {
+    TestConf.spreadState(spark) {
+      val jobs = jobsDuring(operators.GraphIter.connectedComponents(stringChain()).collect())
+      // At most the 40 supersteps of plain hash-min (the fused init plus
+      // 39 rounds), each one exchange and its pin, plus the collect; more
+      // than the init-only path's 4, so the supersteps ran.
+      assert(jobs > 4, s"$jobs jobs: no superstep ran")
+      assert(jobs <= 2 * 40 + 4, s"$jobs jobs for at most 40 supersteps")
+    }
+  }
+
+  test("connectedComponents leaves a constant number of pins with its state spread out") {
+    TestConf.spreadState(spark) {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet.toSet
+      assert(operators.GraphIter.connectedComponents(stringChain()).count() === 44)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.size <= 2, s"${left.size} pins left after the supersteps")
+    }
+  }
+
   /** Spark jobs started while `body` runs, counted between two marker jobs. */
   private def jobsDuring(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}

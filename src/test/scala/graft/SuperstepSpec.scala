@@ -71,11 +71,53 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(kept.agg(sum("v")).head().getLong(0) === (0 until 50).sum)
   }
 
-  test("no .unpersist( outside releaseCaches and Superstep.release") {
-    // `.unpersist()` on a localCheckpoint'ed frame frees nothing; a pin's
-    // blocks go through Superstep.release, the session's RDDs through
-    // releaseCaches.
-    val allowed = Set("GraftSession.scala" -> "releaseCaches", "Superstep.scala" -> "release")
+  test("release frees a pin's blocks without Spark's unpersist warning; reading it again fails") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // Spark's RDD classes log under their own class names.
+    val appender = new AbstractAppender("release-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN && e.getLoggerName.startsWith("org.apache.spark.rdd."))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val rddLog = LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").asInstanceOf[Logger]
+    rddLog.addAppender(appender)
+    def blocks(id: Int) = org.apache.spark.SparkEnv.get.blockManager.master
+      .getMatchingBlockIds(_.asRDDId.exists(_.rddId == id), askStorageEndpoints = true)
+    try {
+      // The control: RDD.unpersist on a pin warns.
+      val control = Superstep.pin(spark.range(0, 100).toDF("v"))
+      Superstep.rddOf(control).unpersist(blocking = true)
+      assert(warnings.size === 1, warnings)
+      warnings.clear()
+
+      val pinned = Superstep.pin(spark.range(0, 100).toDF("v"))
+      val id = Superstep.rddOf(pinned).id
+      assert(blocks(id).nonEmpty)
+      Superstep.release(pinned)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (blocks(id).nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(blocks(id).isEmpty)
+      assert(!persistentIds.contains(id))
+      assert(warnings.isEmpty, warnings)
+      val e = intercept[org.apache.spark.SparkException](pinned.count())
+      assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
+    } finally {
+      rddLog.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
+  test("no .unpersist( outside GraftInternals.release") {
+    // `.unpersist()` on a localCheckpoint'ed frame frees nothing, and
+    // `RDD.unpersist` warns for every pin: a pin's blocks
+    // (Superstep.release) and the session's RDDs (releaseCaches) are freed
+    // through GraftInternals.release.
+    val allowed = Set("GraftInternals.scala" -> "release")
     val offenders = MainSources.lines.filter(l =>
       l.text.contains(".unpersist(") && !allowed(l.fileName -> l.member))
     assert(offenders.isEmpty, offenders.mkString("\n"))
