@@ -7,7 +7,9 @@ Spark copies that description onto the key's SQL executions. This script
 attributes executions and jobs to keys through it, takes each execution's
 last plan (the final adaptive plan, query stages included) and counts the
 BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin and
-ShuffledHashJoin nodes in it.
+ShuffledHashJoin nodes in it. A join that AQE split for skew
+(`SortMergeJoin(skew=true)`, `ShuffledHashJoin(skew=true)`) counts under its
+join type and again in the `skew` column.
 
 Usage:
   scripts/join_census.py LOG                      # one census table
@@ -36,7 +38,8 @@ from collections import defaultdict
 
 SHORT = {"BroadcastHashJoin": "bhj", "BroadcastNestedLoopJoin": "bnlj",
          "SortMergeJoin": "smj", "ShuffledHashJoin": "shj"}
-COLUMNS = ("jobs",) + tuple(SHORT.values())
+SKEW = "(skew=true)"
+COLUMNS = ("jobs",) + tuple(SHORT.values()) + ("skew",)
 SQL = "org.apache.spark.sql.execution.ui."
 
 
@@ -56,8 +59,10 @@ def key_of(description):
 
 def count_joins(plan, counts):
     name = plan.get("nodeName", "")
-    if name in SHORT:
-        counts[SHORT[name]] += 1
+    join = name.removesuffix(SKEW)
+    if join in SHORT:
+        counts[SHORT[join]] += 1
+        counts["skew"] += join != name
     for child in plan.get("children", []):
         count_joins(child, counts)
 
@@ -109,7 +114,7 @@ def spans(tables, key):
 def differs(parent, change):
     lo_p, hi_p = parent["jobs"]
     lo_c, hi_c = change["jobs"]
-    return hi_p < lo_c or hi_c < lo_p or any(parent[c] != change[c] for c in SHORT.values())
+    return hi_p < lo_c or hi_c < lo_p or any(parent[c] != change[c] for c in COLUMNS[1:])
 
 
 def span_row(span):

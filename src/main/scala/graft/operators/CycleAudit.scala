@@ -247,15 +247,6 @@ object CycleAudit {
     out
   }
 
-  /** g27: cycle audit on a crafted cyclic+acyclic hierarchy derived
-    * deterministically from the corpus — the acyclic tier is g8's own
-    * customer→nation→region parent pointers, the cyclic tier turns the
-    * suppliers into rings of 10 (each supplier's parent = the next key
-    * in its decade, wrapping), and every part hangs off a ring as a
-    * tree tail (`p_<k>` → `s_<k mod 100 + 1>`) so the peel has real
-    * work. Output: exactly the ring members with their ring-min label —
-    * customers, nations, regions and parts must NOT appear.
-    */
   /** The shared g27/g29 fixture: g8's acyclic customer→nation→region
     * parent pointers + supplier decade rings (cycles) + part tree-tails
     * hanging off the rings — deterministic from the corpus, re-derived
@@ -284,6 +275,15 @@ object CycleAudit {
     custEdges.unionByName(nationEdges).unionByName(ringEdges).unionByName(tailEdges)
   }
 
+  /** g27: cycle audit on a crafted cyclic+acyclic hierarchy derived
+    * deterministically from the corpus — the acyclic tier is g8's own
+    * customer→nation→region parent pointers, the cyclic tier turns the
+    * suppliers into rings of 10 (each supplier's parent = the next key
+    * in its decade, wrapping), and every part hangs off a ring as a
+    * tree tail (`p_<k>` → `s_<k mod 100 + 1>`) so the peel has real
+    * work. Output: exactly the ring members with their ring-min label —
+    * customers, nations, regions and parts must NOT appear.
+    */
   def g27CycleAudit(spark: SparkSession, dir: String): DataFrame =
     cycleMembers(hierarchyFixture(spark, dir))
 

@@ -38,6 +38,26 @@ object GraphIter {
       .repartition(col("src"))
       .dropDuplicates("src", "dst"))
 
+  /** The customer–supplier purchase graph with packed node ids: one
+    * `(src, dst)` row per distinct pair of a customer (2·custkey) and a
+    * supplier (2·suppkey + 1) that share an order. The ids travel through
+    * every superstep as 8-byte longs; [[decodePacked]] turns them into
+    * display ids on the final result only.
+    */
+  private[operators] def packedEdges(t: Tables): DataFrame =
+    t.lineitem
+      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+
+  /** The display id of the packed node id in `c`: `c_k` for a customer
+    * (2k), `s_k` for a supplier (2k + 1). `shiftright(c, 1)` is the exact
+    * `c DIV 2` of a non-negative id on both branches.
+    */
+  private[graft] def decodePacked(c: Column): Column =
+    when(pmod(c, lit(2)) === 0, concat(lit("c_"), shiftright(c, 1).cast("string")))
+      .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
+
   /** Hash-min connected components over an undirected edge list, with
     * each partition's components settled locally.
     *
@@ -179,14 +199,8 @@ object GraphIter {
     val batch = all.filter(col("o_orderdate") >= lit("1999-01-01")).select("src", "dst").distinct()
     incrementalCC(connectedComponents(base), batch)
       .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
-        when(pmod(col("label"), lit(2)) === 0,
-          concat(lit("c_"), expr("label DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("label DIV 2").cast("string")))
-          .as("component"))
+        decodePacked(col("node")).as("node"),
+        decodePacked(col("label")).as("component"))
   }
 
   /** g5: components of the customer→nation→region tree — community
@@ -285,26 +299,9 @@ object GraphIter {
     * what lets it carry a full SQL oracle (10 unrolled integer CTE steps
     * in DuckDB) instead of a rows-only check.
     */
-  def g6PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    // Nodes travel through all 10 supersteps as packed longs (customer =
-    // 2k, supplier = 2k+1) — every per-iteration join/aggregate shuffles
-    // 8-byte keys instead of "c_<id>" strings; the display form is decoded
-    // once on the final 1-row-per-node result.
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    pageRankMicro(edges)
-      .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
-        col("rank").as("rank_micro"))
-  }
+  def g6PageRank(spark: SparkSession, dir: String): DataFrame =
+    pageRankMicro(packedEdges(Tables(spark, dir)))
+      .select(decodePacked(col("node")).as("node"), col("rank").as("rank_micro"))
 
   /** Personalized PageRank in the same exact integer micro-units as
     * [[pageRankMicro]], with the restart mass pinned to a SEED set:
@@ -354,21 +351,13 @@ object GraphIter {
     */
   def g14PersonalizedPagerank(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val seeds = t.customer
       .filter(col("c_custkey") % 100 === 0)
       .select((col("c_custkey") * 2).as("node"))
     personalizedPageRankMicro(edges, seeds)
       .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
+        decodePacked(col("node")).as("node"),
         col("rank").as("rank_micro"))
   }
 
@@ -578,11 +567,23 @@ object GraphIter {
       .select((col("s_suppkey") * 2 + 1).as("node"))
     weightedShortestPaths(edges, seeds, rounds)
       .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
+        decodePacked(col("node")).as("node"),
         col("dist"))
+  }
+
+  /** Every per-walker window in the walk engines assumes a walker id
+    * maps to exactly ONE frontier row — a walker seeded on two nodes
+    * would get both adjacency lists merged into one window and pick
+    * silently wrong idx/deg (and biased cum/tot). Enforced loudly with
+    * one O(walkers) aggregate over the (already deduped, checkpointed)
+    * seed frame before the first step.
+    */
+  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Unit = {
+    val r = cur.agg(count(lit(1)), countDistinct(col("walker"))).head()
+    require(r.getLong(0) == r.getLong(1),
+      s"$who: each walker id must seed exactly one node " +
+        s"(${r.getLong(0)} seed rows over ${r.getLong(1)} walkers) — " +
+        "use distinct walker ids per (walker, node) seed")
   }
 
   /** DETERMINISTIC RANDOM WALKS — the GDS `randomWalk` / node2vec
@@ -616,21 +617,6 @@ object GraphIter {
     * pre-index the adjacency once and persist it, the VectorIndex
     * pay-at-ingest posture.
     */
-  /** Every per-walker window in the walk engines assumes a walker id
-    * maps to exactly ONE frontier row — a walker seeded on two nodes
-    * would get both adjacency lists merged into one window and pick
-    * silently wrong idx/deg (and biased cum/tot). Enforced loudly with
-    * one O(walkers) aggregate over the (already deduped, checkpointed)
-    * seed frame before the first step.
-    */
-  private def requireOneSeedPerWalker(cur: DataFrame, who: String): Unit = {
-    val r = cur.agg(count(lit(1)), countDistinct(col("walker"))).head()
-    require(r.getLong(0) == r.getLong(1),
-      s"$who: each walker id must seed exactly one node " +
-        s"(${r.getLong(0)} seed rows over ${r.getLong(1)} walkers) — " +
-        "use distinct walker ids per (walker, node) seed")
-  }
-
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = pinnedSym(edges)
@@ -748,22 +734,13 @@ object GraphIter {
     */
   def g26Node2vecWalks(spark: SparkSession, dir: String, steps: Int = 3): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val seeds = t.supplier.filter(col("s_suppkey") < 8)
       .select((col("s_suppkey") * 2 + 1).as("walker"),
         (col("s_suppkey") * 2 + 1).as("node"))
-    def dec(c: org.apache.spark.sql.Column) =
-      when(pmod(c, lit(2)) === 0,
-        concat(lit("c_"), shiftright(c, 1).cast("string")))
-        .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
     biasedWalks(edges, seeds, steps)
-      .select(dec(col("walker")).as("walker"), col("step"),
-        dec(col("node")).as("node"))
+      .select(decodePacked(col("walker")).as("walker"), col("step"),
+        decodePacked(col("node")).as("node"))
   }
 
   /** g25: deterministic random walks on the packed bipartite
@@ -776,24 +753,13 @@ object GraphIter {
     */
   def g25RandomWalks(spark: SparkSession, dir: String, steps: Int = 4): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val seeds = t.supplier.filter(col("s_suppkey") < 16)
       .select((col("s_suppkey") * 2 + 1).as("walker"),
         (col("s_suppkey") * 2 + 1).as("node"))
-    // Generic packed-id decode (decodePacked is pinned to a column
-    // literally named "node"; here BOTH walker and node decode).
-    def dec(c: org.apache.spark.sql.Column) =
-      when(pmod(c, lit(2)) === 0,
-        concat(lit("c_"), shiftright(c, 1).cast("string")))
-        .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
     randomWalks(edges, seeds, steps)
-      .select(dec(col("walker")).as("walker"), col("step"),
-        dec(col("node")).as("node"))
+      .select(decodePacked(col("walker")).as("walker"), col("step"),
+        decodePacked(col("node")).as("node"))
   }
 
   /** WINDOWED CO-OCCURRENCE over a walk corpus — the consumer that
@@ -943,20 +909,12 @@ object GraphIter {
     */
   def g24Betweenness(spark: SparkSession, dir: String, maxDepth: Int = 3): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val pivots = t.supplier.filter(col("s_suppkey") < 3)
       .select((col("s_suppkey") * 2 + 1).as("lm"))
     betweennessCore(edges, pivots, maxDepth)
       .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
+        decodePacked(col("node")).as("node"),
         col("bc_micro"))
   }
 
@@ -968,20 +926,11 @@ object GraphIter {
   private def landmarkDistances(
       spark: SparkSession, dir: String, maxDepth: Int): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val seeds = t.supplier.filter(col("s_suppkey") < 4)
       .select((col("s_suppkey") * 2 + 1).as("lm"), (col("s_suppkey") * 2 + 1).as("node"))
     labeledShortestPaths(edges, seeds, maxDepth)
   }
-
-  private def decodePacked(c: org.apache.spark.sql.Column) =
-    when(pmod(c, lit(2)) === 0, concat(lit("c_"), expr("node DIV 2").cast("string")))
-      .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
 
   /** g17: landmark HARMONIC centrality — Σ 1/dist over the landmark set,
     * in exact integer micro-units (1e6 DIV dist), so unreachable
@@ -1063,22 +1012,9 @@ object GraphIter {
     * relationship graph) as data-parallel supersteps. Same packed-long
     * node ids as g6/g9; display form decoded once at the end.
     */
-  def g10LabelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    // shiftright(c, 1) = exact integer DIV 2 for the non-negative packed
-    // ids on both the even (2k) and odd (2k+1) branch.
-    def decode(c: org.apache.spark.sql.Column) =
-      when(pmod(c, lit(2)) === 0, concat(lit("c_"), shiftright(c, 1).cast("string")))
-        .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
-    labelPropagation(edges)
-      .select(decode(col("node")).as("node"), decode(col("label")).as("label"))
-  }
+  def g10LabelPropagation(spark: SparkSession, dir: String): DataFrame =
+    labelPropagation(packedEdges(Tables(spark, dir)))
+      .select(decodePacked(col("node")).as("node"), decodePacked(col("label")).as("label"))
 
   /** g9: hop distance from the "hub" suppliers (s_suppkey < 5) to every
     * customer/supplier within 6 hops of one — the reach-of-a-leader
@@ -1089,20 +1025,12 @@ object GraphIter {
     */
   def g9ShortestPaths(spark: SparkSession, dir: String, maxDepth: Int = 6): DataFrame = {
     val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val edges = packedEdges(t)
     val seeds = t.supplier.filter(col("s_suppkey") < 5)
       .select((col("s_suppkey") * 2 + 1).as("node"))
     shortestPaths(edges, seeds, maxDepth)
       .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
+        decodePacked(col("node")).as("node"),
         col("dist"))
   }
 
@@ -1146,22 +1074,9 @@ object GraphIter {
     * bounded peel. Same packed-long bipartite ids as g6/g9/g10; display
     * form decoded on the final result only.
     */
-  def g12KCore(spark: SparkSession, dir: String, k: Int = 20, rounds: Int = 4): DataFrame = {
-    val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    kCorePeel(edges, k, rounds)
-      .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
-        col("deg"))
-  }
+  def g12KCore(spark: SparkSession, dir: String, k: Int = 20, rounds: Int = 4): DataFrame =
+    kCorePeel(packedEdges(Tables(spark, dir)), k, rounds)
+      .select(decodePacked(col("node")).as("node"), col("deg"))
 
   /** g7: per-node triangle counts on the same-nation supplier co-purchase
     * graph — suppliers from the same nation appearing in the same order

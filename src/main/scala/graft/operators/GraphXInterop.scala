@@ -150,21 +150,8 @@ object GraphXInterop {
   /** g6's graph through the GraphX path (same packed-long node ids,
     * decoded to the display form).
     */
-  def g6PageRankGraphX(spark: SparkSession, dir: String): DataFrame = {
-    val t = graft.Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    pageRankGraphX(edges)
-      .select(
-        when(pmod(col("node"), lit(2)) === 0,
-          concat(lit("c_"), expr("node DIV 2").cast("string")))
-          .otherwise(concat(lit("s_"), expr("node DIV 2").cast("string")))
-          .as("node"),
-        col("rank"))
+  def g6PageRankGraphX(spark: SparkSession, dir: String): DataFrame =
+    pageRankGraphX(GraphIter.packedEdges(graft.Tables(spark, dir)))
+      .select(GraphIter.decodePacked(col("node")).as("node"), col("rank"))
       .orderBy("node")
-  }
 }

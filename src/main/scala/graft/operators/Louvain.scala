@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Route, Superstep, Tables}
+import graft.{Superstep, Tables}
 
 /** Deterministic fixed-round LOUVAIN community detection (Blondel,
   * Guillaume, Lambiotte & Lefebvre 2008, "Fast unfolding of communities
@@ -43,113 +43,14 @@ import graft.{Route, Superstep, Tables}
   *
   * SKEW: consolidation is exactly what Louvain converges TOWARD, so by
   * round 2 a real graph has a giant community whose id is the hot key
-  * of both per-round comdeg joins. A per-round probe over the
-  * O(#communities) relation routes each round ([[joinComdegRouted]]):
-  * plain while no community is hot (zero overhead — the skew-free
-  * case), broadcast the whole dimension when one is and communities
-  * are few, salt the hot communities' probe rows by node hash while
-  * they are not — never a raw shuffle join on a measured mega-key.
+  * of both per-round comdeg joins. Both stay plain shuffle joins, and
+  * AQE's skew-join split (on in every [[graft.GraftSession]]) cuts a
+  * partition whose measured shuffle bytes mark it skewed into slices,
+  * each joined against a copy of the matching comdeg partition. The hot
+  * key is found at run time from observed sizes, with no threshold of
+  * Louvain's own.
   */
 object Louvain {
-
-  /** Resolve the skew-defense arming threshold for this session. The
-    * local[32] A/B measured the salted defense as a pure ~1.2× loss up
-    * to 8M-member hot communities (shared-memory hash joins are
-    * bandwidth-cheap), so a LOCAL master defaults to 2²³ — beyond the
-    * measured no-win region. On a real cluster a mega-key is a
-    * straggler × task-count, so a NON-local master keeps the defensive
-    * 100k default instead of inheriting a single-JVM calibration.
-    * Either default yields to the session setting
-    * `spark.graft.louvain.blockThreshold` — the same per-deployment
-    * sizing discipline as the shuffle-partitions knob — which must be a
-    * non-negative integer and is refused by name otherwise. An explicit
-    * `blockThreshold >= 0` argument always wins (the forced-routing
-    * specs pin the skew arm with it).
-    */
-  private def resolveBlockThreshold(spark: SparkSession, explicit: Int): Int = {
-    val key = "spark.graft.louvain.blockThreshold"
-    if (explicit >= 0) explicit
-    else spark.conf.getOption(key).map(v =>
-      v.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$key must be a non-negative integer, got '$v'")))
-      .getOrElse(if (spark.sparkContext.master.startsWith("local")) 1 << 23 else 100000)
-  }
-
-  /** Probe-routed join of a per-row relation against the O(#communities)
-    * `comdeg` dimension on community id — the round's skew seam. On any
-    * real graph rounds ≥ 2 grow a giant community, and that community id
-    * becomes the hot key of BOTH per-round comdeg joins (the E-sized
-    * scored relation and the V-sized label update). The route is picked
-    * from the SAME probe aggregate every round (the q16 measure-then-
-    * route discipline; `nComs` = communities, the comdeg pin's measured
-    * row count ([[graft.Superstep.rows]]), `maxCn` = biggest
-    * community's member count):
-    *
-    *   - `maxCn < blockThreshold`: the PLAIN shuffle join (a `merge`
-    *     hint, since the pin's measured size would otherwise let the
-    *     planner broadcast it) — no hot key measured, no defense, zero
-    *     overhead (the common case on balanced rounds; measured at sf10:
-    *     unconditionally broadcasting the ~10⁶-row round-2 comdeg cost
-    *     ~25% wall on the skew-free corpus — the defense must only arm
-    *     when the probe sees skew);
-    *   - else if [[graft.Route]] fits `nComs` comdeg rows in the
-    *     session's `autoBroadcastJoinThreshold`: the planner BROADCASTS
-    *     comdeg, sized by the same measured count — zero shuffle on the
-    *     skewed key, affordable exactly when consolidation has shrunk the
-    *     dimension;
-    *   - else: SALTED shuffle join — the bounded hot set
-    *     (≤ V/blockThreshold communities can exceed the threshold) is a
-    *     tag the planner sizes from the pin, broadcast when it fits; hot
-    *     probe rows salt by `pmod(node, s)` with `s` DERIVED from the
-    *     measured max size (the g1/d9 probe→knob derivation), and the
-    *     build side replicates ONLY hot rows s ways — the mega-community's
-    *     probe rows spread over s reducers instead of one.
-    *
-    * Routing never changes the algebra (same rows, same values), so
-    * labels are hash-identical whichever path fires — spec-pinned with
-    * the thresholds forced both ways on a crafted mega-community graph.
-    *
-    * THRESHOLD CALIBRATION (measured, quiet windows): the armed-path A/B
-    * (PLANS.md, "Louvain armed-path A/B" — synthetic giant community forcing
-    * the salted route, labeling checksum-identical both arms) read
-    * salted 46.3 s vs plain 39.5 s at a 1M-member hot community and
-    * 226.6 vs 189.3 s at 8M on local[32]: in a single shared-memory JVM
-    * the hot reducer's hash join is memory-bandwidth-cheap, while the
-    * defense pays a constant ~1.2× (hot-tag broadcast + salt column on
-    * every probe row, ×2 join sites ×rounds). Hence the default
-    * blockThreshold sits at 2²³ — beyond the measured no-win region —
-    * and arming is a CLUSTER decision: on real executors a mega-key is
-    * a straggler ×task-count, and operators lower the lever to their
-    * measured crossover.
-    */
-  private def joinComdegRouted(
-      probe: DataFrame,
-      comdeg: DataFrame,
-      key: String,
-      nodeCol: String,
-      maxCn: Long,
-      blockThreshold: Int): DataFrame = {
-    val cd = comdeg.withColumnRenamed("com", key)
-    val nComs = Superstep.rows(comdeg)
-    if (maxCn < blockThreshold) probe.join(cd.hint("merge"), Seq(key))
-    else if (Route.broadcasts(cd, nComs)) probe.join(cd, Seq(key))
-    else {
-      val s = GraphOps.derivedBlocks(maxCn, blockThreshold)
-      val hotTag = cd.filter(col("cn") >= lit(blockThreshold.toLong))
-        .select(col(key), lit(true).as("isHot"))
-      val build = cd.join(hotTag, Seq(key), "left")
-        .select(col(key), col("cd"), col("cn"),
-          explode(when(col("isHot"),
-            sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))).as("salt"))
-      probe.join(hotTag, Seq(key), "left")
-        .withColumn("salt",
-          when(col("isHot"), pmod(col(nodeCol), lit(s.toLong)).cast("int"))
-            .otherwise(lit(0)))
-        .drop("isHot")
-        .join(build, Seq(key, "salt"))
-        .drop("salt")
-    }
-  }
 
   /** `rounds` synchronous parity-gated local-move rounds over a
     * SYMMETRIC weighted edge list `(src, dst, w)` (both directions
@@ -157,15 +58,13 @@ object Louvain {
     * direction-doubled), starting from `labels0 (node, com)`.
     * `twoM` = total symmetric weight Σ w (= 2m). `parity0` offsets the
     * gate so a second level can continue the alternation.
-    * `blockThreshold` arms the skew routes ([[joinComdegRouted]]).
     */
   private def localMoveRounds(
       sym: DataFrame,
       labels0: DataFrame,
       rounds: Int,
       twoM: Long,
-      parity0: Int,
-      blockThreshold: Int): DataFrame = {
+      parity0: Int): DataFrame = {
     // Weighted degree INCLUDING self-loops (a contracted community's
     // internal mass travels with it; it cancels in score differences but
     // must be consistent on both sides of every comparison).
@@ -187,13 +86,11 @@ object Louvain {
     val (labels, _) = Superstep.iterate(init, 0 until rounds) { (labels, i) =>
       comdegPin.foreach(Superstep.release)
       val parity = (parity0 + i) % 2
-      // Community degree mass AND member count in one pass: `cd` feeds
-      // the scores, `cn` feeds the skew probe. The probe itself — the
-      // community count and the biggest community's size, which decide
-      // the comdeg join route for BOTH join sites this round (q16's
-      // measure-then-route) — is a metric on the same pin job.
-      val (comdeg, Seq(maxCn)) = Superstep.pin(labels.groupBy("com")
-        .agg(sum("k").as("cd"), count(lit(1)).as("cn")), max("cn"))
+      // Community degree mass, one row per community. The pin's measured
+      // size would let the planner broadcast it, so both joins below hint
+      // `merge`: broadcasting the ~10⁶-row round-2 comdeg measured ~25%
+      // slower at sf10 than the shuffle join.
+      val comdeg = Superstep.pin(labels.groupBy("com").agg(sum("k").as("cd")))
       comdegPin = Some(comdeg)
       // k_{i,c}: weight from i to community c over its NEIGHBORS (self
       // loops excluded — a node's own mass is not a vote for a
@@ -210,8 +107,8 @@ object Louvain {
       // c == com this expression IS the staying score, so one aggregate
       // extracts both the argmax (score desc, min community — the
       // negation trick) and the stay score, in a single kic pass.
-      val scored = joinComdegRouted(
-        kic.join(labels, Seq("node")), comdeg, "c", "node", maxCn, blockThreshold)
+      val scored = kic.join(labels, Seq("node"))
+        .join(comdeg.withColumnRenamed("com", "c").hint("merge"), Seq("c"))
         .select(col("node"), col("c"), col("com"),
           (lit(twoM) * col("kic") -
             col("k") * (col("cd") -
@@ -223,7 +120,7 @@ object Louvain {
           max(when(col("c") === col("com"), col("score"))).as("kicStay"))
       // Staying score when NO neighbor is left in the current community:
       // k_{i,cur} = 0 — a V-sized expression over labels⋈comdeg, no edge data.
-      joinComdegRouted(labels, comdeg, "com", "node", maxCn, blockThreshold)
+      labels.join(comdeg.hint("merge"), Seq("com"))
         .join(agg, Seq("node"), "left")
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(parity) &&
@@ -257,13 +154,11 @@ object Louvain {
   private def louvainLevels(
       sym: DataFrame,
       level1Rounds: Int,
-      level2Rounds: Int,
-      blockThreshold0: Int): LouvainLevels = {
-    val blockThreshold = resolveBlockThreshold(sym.sparkSession, blockThreshold0)
+      level2Rounds: Int): LouvainLevels = {
     val (e1, Seq(twoM)) = Superstep.pin(sym, sum("w"))
     val init = e1.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
-    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, 1, blockThreshold)
+    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, 1)
     // EXPLICIT CONTRACTION: communities become super-nodes; inter-
     // community weights sum (symmetry is preserved — both directions of
     // an edge map consistently); intra-community mass lands on the
@@ -275,7 +170,7 @@ object Louvain {
       .agg(sum("w").as("w")))
     val init2 = e2.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
-    val l2 = localMoveRounds(e2, init2, level2Rounds, twoM, (1 + level1Rounds) % 2, blockThreshold)
+    val l2 = localMoveRounds(e2, init2, level2Rounds, twoM, (1 + level1Rounds) % 2)
     // Fold levels: node → level-1 community → level-2 community. Every
     // level-1 community appears as an e2 src (its members have edges, a
     // self-loop at minimum), so l2 covers it; the coalesce is belt.
@@ -291,15 +186,12 @@ object Louvain {
     * (no self-loops expected at level 1). Returns `(node, community)`
     * with the community CANONICALIZED to its minimum member node id —
     * stable across engines and levels, like CC labels.
-    * `blockThreshold = -1` (the default) resolves per session
-    * ([[resolveBlockThreshold]]); an explicit value pins the route.
     */
   def louvain(
       sym: DataFrame,
       level1Rounds: Int = 4,
-      level2Rounds: Int = 2,
-      blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, blockThreshold)
+      level2Rounds: Int = 2): DataFrame = {
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds)
     Superstep.release(lv.e2)
     canonicalize(lv.folded)
   }
@@ -366,9 +258,8 @@ object Louvain {
   def louvainStats(
       sym: DataFrame,
       level1Rounds: Int = 4,
-      level2Rounds: Int = 2,
-      blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, blockThreshold)
+      level2Rounds: Int = 2): DataFrame = {
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds)
     val canon = lv.folded.groupBy("com").agg(min("node").as("community"))
     communityStatsFolded(lv)
       .join(canon, Seq("com"))
@@ -376,20 +267,6 @@ object Louvain {
         col("cut"), col("conductance_micro"))
   }
 
-  /** MODULARITY of a labeling over a symmetric weighted edge list, in
-    * integer MICRO-UNITS — the GDS `modularity` stats surface: how good
-    * is this community split, as a number a pipeline can threshold or
-    * compare across runs. Q = Σ_c [ in_c/(2m) − (Σ_c/(2m))² ] with
-    * in_c = intra-community symmetric weight (self-loops included,
-    * direction-doubled like every sym row) and Σ_c the community degree
-    * mass. All integer arithmetic: per-community terms are exact
-    * integers (the squared fraction computed via the two-step
-    * quotient/remainder expansion so nothing overflows at 2m up to
-    * ~10⁹ and truncation stays ≤1µ per community), and integer sums
-    * are order-independent — the same determinism discipline as the
-    * gain scores. One edge-relation pass (the intra filter) + one
-    * V-sized aggregate; returns micro-units in [−10⁶, 10⁶).
-    */
   /** Per-community stats over a symmetric weighted edge list — the GDS
     * community-stats surface next to [[modularityMicro]]: member count,
     * volume (Σ degrees), internal symmetric weight, cut weight, and
@@ -422,6 +299,20 @@ object Louvain {
               s"(cut % least(vol, $twoM - vol)) * 1000000 DIV least(vol, $twoM - vol)")))
   }
 
+  /** MODULARITY of a labeling over a symmetric weighted edge list, in
+    * integer MICRO-UNITS — the GDS `modularity` stats surface: how good
+    * is this community split, as a number a pipeline can threshold or
+    * compare across runs. Q = Σ_c [ in_c/(2m) − (Σ_c/(2m))² ] with
+    * in_c = intra-community symmetric weight (self-loops included,
+    * direction-doubled like every sym row) and Σ_c the community degree
+    * mass. All integer arithmetic: per-community terms are exact
+    * integers (the squared fraction computed via the two-step
+    * quotient/remainder expansion so nothing overflows at 2m up to
+    * ~10⁹ and truncation stays ≤1µ per community), and integer sums
+    * are order-independent — the same determinism discipline as the
+    * gain scores. One edge-relation pass (the intra filter) + one
+    * V-sized aggregate; returns micro-units in [−10⁶, 10⁶).
+    */
   def modularityMicro(sym: DataFrame, labels: DataFrame): Long = {
     val twoM = sym.agg(coalesce(sum("w"), lit(0L))).head().getLong(0)
     if (twoM == 0L) return 0L
@@ -460,15 +351,8 @@ object Louvain {
     val sym = edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     louvain(sym)
-      .select(decodeCS(col("node")).as("node"), decodeCS(col("community")).as("community"))
+      .select(GraphIter.decodePacked(col("node")).as("node"), GraphIter.decodePacked(col("community")).as("community"))
   }
-
-  /** The g23/g30 display decoding of the packed even-customer /
-    * odd-supplier node ids.
-    */
-  private def decodeCS(c: Column): Column =
-    when(pmod(c, lit(2)) === 0, concat(lit("c_"), shiftright(c, 1).cast("string")))
-      .otherwise(concat(lit("s_"), shiftright(c, 1).cast("string")))
 
   /** g30: TIE-STRENGTH weighted Louvain + the community-quality surface
     * in one keyed output — the GDS `relationshipWeightProperty` +
@@ -502,7 +386,7 @@ object Louvain {
     // communityStats(sym, louvain(sym)) (spec-pinned) without the two
     // full-edge-relation label joins that dominated this key at sf10.
     louvainStats(sym)
-      .select(decodeCS(col("community")).as("community"),
+      .select(GraphIter.decodePacked(col("community")).as("community"),
         col("n_nodes"), col("vol"), col("in_sym"), col("cut"),
         col("conductance_micro"))
   }

@@ -1263,6 +1263,14 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ok.count() === 3L)
   }
 
+  test("decodePacked decodes the column it is given, not one named node") {
+    val ss = spark
+    import ss.implicits._
+    val got = Seq((6L, 0L), (7L, 1L)).toDF("walker", "node")
+      .select(operators.GraphIter.decodePacked(col("walker"))).as[String].collect().toSeq
+    assert(got === Seq("c_3", "s_3"))
+  }
+
   test("walks refuse a walker id seeded on two nodes (merged-window hazard)") {
     val ss = spark
     import ss.implicits._
@@ -1367,54 +1375,46 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("g23 louvain skew routing: broadcast / salted / plain comdeg routes are label-identical") {
+  test("g23 louvain skew: AQE splits the hot community on both comdeg joins, labels unchanged") {
     val ss = spark
     import ss.implicits._
-    // The skew shape Louvain converges TOWARD: a star (hub 1, 60
-    // spokes) consolidates into one mega community within two rounds,
-    // making the hub community's id the hot key of the per-round comdeg
-    // joins; the triangle keeps a second community alive so routing has
-    // cold keys too.
-    val e0 = (2L to 61L).map(s => (1L, s, 1L)) ++
-      Seq((200L, 201L, 1L), (201L, 202L, 1L), (200L, 202L, 1L))
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    // The skew shape Louvain converges TOWARD: a star (hub 1, 2000
+    // spokes) consolidates into one mega community, whose id becomes the
+    // hot key of both per-round comdeg joins; the triangle keeps a second
+    // community alive so the joins have cold keys too.
+    val e0 = (2L to 2001L).map(s => (1L, s, 1L)) ++
+      Seq((3000L, 3001L, 1L), (3001L, 3002L, 1L), (3000L, 3002L, 1L))
     val sym = (e0 ++ e0.map { case (a, b, w) => (b, a, w) })
       .toDF("src", "dst", "w")
-    def run(bc: Long, bt: Int): Map[Long, Long] = {
-      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc.toString)
-      try operators.Louvain.louvain(sym, blockThreshold = bt)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    def labels(): Map[Long, Long] =
+      operators.Louvain.louvain(sym).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val plain = labels()
+    // Skew thresholds a few kB of shuffle cross, over 8 partitions that
+    // AQE does not coalesce: the hub community's partition is skewed.
+    var split = Map.empty[Long, Long]
+    val plans = TestConf.spreadState(spark) {
+      TestConf.withConf(spark,
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2") {
+        adaptivePlansDuring { split = labels() }
+      }
     }
-    // Force each route: PLAIN (threshold never reached — the defense
-    // stays dark), SALTED (every community of >= 2 members is "hot" and
-    // broadcast is disabled — fires from round 2 on), and BROADCAST
-    // (hot + a broadcast budget no comdeg exceeds). Identical labels
-    // prove routing never changes the algebra.
-    val plain = run(-1L, Int.MaxValue)
-    val salted = run(-1L, 2)
-    val bcast = run(Long.MaxValue, 2)
-    assert(salted === plain, "salted route must be label-identical to plain")
-    assert(bcast === plain, "broadcast route must be label-identical to plain")
-    // The mega community really formed (the salted run really had a hot
-    // key): the hub's community holds the majority of the star.
-    assert(plain.values.groupBy(identity).values.map(_.size).max >= 31,
-      s"star must consolidate into a mega community: $plain")
-    assert(plain(200L) === plain(201L) && plain(201L) === plain(202L) &&
-      plain(200L) != plain(1L), "triangle stays its own community")
-  }
-
-  test("louvain refuses a malformed blockThreshold setting by name") {
-    val ss = spark
-    import ss.implicits._
-    val sym = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
-    val key = "spark.graft.louvain.blockThreshold"
-    try Seq("12k", "-5", "", "2147483648").foreach { v =>
-      spark.conf.set(key, v)
-      val e = intercept[IllegalArgumentException](operators.Louvain.louvain(sym))
-      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"), e.getMessage)
-    } finally spark.conf.unset(key)
-    assert(operators.Louvain.louvain(sym).count() === 2)
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    // The join key of every skew-split sort-merge join that reads comdeg
+    // (its `cd` column).
+    val splitKeys = plans.flatMap(nodes)
+      .filter(j => j.nodeName == "SortMergeJoin(skew=true)" &&
+        nodes(j).exists(_.simpleString.contains("cd#")))
+      .flatMap(j => "\\[(\\w+)#".r.findFirstMatchIn(j.simpleString).map(_.group(1)))
+      .toSet
+    assert(Set("c", "com").subsetOf(splitKeys),
+      s"skew-split comdeg joins on $splitKeys over ${plans.size} adaptive plans")
+    assert(split === plain, "the skew split must not change the labels")
+    assert((2L to 2001L).forall(plain(_) == plain(1L)), "the hub's community holds the star")
+    assert(plain(3000L) === plain(3001L) && plain(3001L) === plain(3002L) &&
+      plain(3000L) != plain(1L), "triangle stays its own community")
   }
 
   test("minRelaxTraverse: per-hop edge predicates express a Cypher MATCH no fixed shape covers") {
@@ -1894,19 +1894,28 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** Spark jobs started while `body` runs, counted between two marker jobs. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** What `pick` takes from the listener events posted while `body` runs,
+    * read between two marker jobs.
+    */
+  private def eventsDuring[T](pick: PartialFunction[org.apache.spark.scheduler.SparkListenerEvent, T])(
+      body: => Unit): Seq[T] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val marks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, T]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        marks.add(Option(e.properties).flatMap(p => Option(p.getProperty("jobs.mark"))).getOrElse(""))
+        Option(e.properties).flatMap(p => Option(p.getProperty("events.mark"))) match {
+          case Some(m) => seen.add(Left(m))
+          case None => pick.lift(e).foreach(t => seen.add(Right(t)))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        pick.lift(e).foreach(t => seen.add(Right(t)))
     }
     def mark(m: String): Unit = {
-      sc.setLocalProperty("jobs.mark", m)
+      sc.setLocalProperty("events.mark", m)
       sc.parallelize(Seq(1), 1).count()
-      sc.setLocalProperty("jobs.mark", null)
+      sc.setLocalProperty("events.mark", null)
     }
     sc.addSparkListener(listener)
     try {
@@ -1914,12 +1923,22 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       body
       mark("end")
       val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!marks.contains("end") && System.nanoTime() < deadline) Thread.sleep(50)
+      while (!seen.contains(Left("end")) && System.nanoTime() < deadline) Thread.sleep(50)
     } finally sc.removeSparkListener(listener)
-    val seen = marks.toArray.toSeq.map(_.toString)
-    assert(seen.contains("end"), "end mark never reached the listener")
-    seen.indexOf("end") - seen.indexOf("start") - 1
+    val all = seen.asScala.toSeq
+    assert(all.contains(Left("end")), "end mark never reached the listener")
+    all.dropWhile(_ != Left("start")).drop(1).takeWhile(_ != Left("end")).collect { case Right(t) => t }
   }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int =
+    eventsDuring { case e: org.apache.spark.scheduler.SparkListenerJobStart => e }(body).size
+
+  /** The plans of the adaptive re-plans posted while `body` runs. */
+  private def adaptivePlansDuring(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
+    eventsDuring {
+      case u: org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate => u.sparkPlanInfo
+    }(body)
 
   test("shortestPaths reads each frontier's emptiness from its pin job") {
     val ss = spark; import ss.implicits._
