@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Join census of a graft.Bench event log: per bench key, its Spark jobs and
-the join operators of its final adaptive plans.
+"""Join census of a graft.Bench event log: per bench key, its Spark jobs, its
+parquet schema-inference jobs and the join operators of its final adaptive
+plans.
 
 graft.Bench labels every job of a key with the description `bench:<key>`;
 Spark copies that description onto the key's SQL executions. This script
@@ -9,7 +10,11 @@ last plan (the final adaptive plan, query stages included) and counts the
 BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin and
 ShuffledHashJoin nodes in it. A join that AQE split for skew
 (`SortMergeJoin(skew=true)`, `ShuffledHashJoin(skew=true)`) counts under its
-join type and again in the `skew` column.
+join type and again in the `skew` column. The `schema` column counts the
+jobs that `spark.read.parquet` runs to infer a schema: their stage is named
+after the call site (`parquet at Tables.scala:13`), and they run outside any
+SQL execution, unlike a parquet write's jobs. A one-log census also lists
+these jobs by call site, keyed or not.
 
 Usage:
   scripts/join_census.py LOG                      # one census table
@@ -39,7 +44,8 @@ from collections import defaultdict
 SHORT = {"BroadcastHashJoin": "bhj", "BroadcastNestedLoopJoin": "bnlj",
          "SortMergeJoin": "smj", "ShuffledHashJoin": "shj"}
 SKEW = "(skew=true)"
-COLUMNS = ("jobs",) + tuple(SHORT.values()) + ("skew",)
+COLUMNS = ("jobs", "schema") + tuple(SHORT.values()) + ("skew",)
+INFER = "parquet at "
 SQL = "org.apache.spark.sql.execution.ui."
 
 
@@ -67,11 +73,21 @@ def count_joins(plan, counts):
         count_joins(child, counts)
 
 
+def schema_site(job):
+    """The call site of a schema-inference job, or None for any other job."""
+    if "spark.sql.execution.id" in (job.get("Properties") or {}):
+        return None
+    return next((s["Stage Name"] for s in job["Stage Infos"]
+                 if s["Stage Name"].startswith(INFER)), None)
+
+
 def census(path):
-    """{key: {column: count}} for every key with at least one job."""
+    """({key: {column: count}} for every key with at least one job,
+    {call site: schema-inference jobs})."""
     exec_key = {}
     final_plan = {}
     table = defaultdict(lambda: dict.fromkeys(COLUMNS, 0))
+    sites = defaultdict(int)
     for f in event_files(path):
         with open(f, encoding="utf-8") as lines:
             for line in lines:
@@ -81,8 +97,12 @@ def census(path):
                 kind = e["Event"]
                 if kind == "SparkListenerJobStart":
                     key = key_of((e.get("Properties") or {}).get("spark.job.description"))
+                    site = schema_site(e)
+                    if site:
+                        sites[site] += 1
                     if key:
                         table[key]["jobs"] += 1
+                        table[key]["schema"] += site is not None
                 elif kind == SQL + "SparkListenerSQLExecutionStart":
                     key = key_of(e.get("description"))
                     if key:
@@ -93,7 +113,7 @@ def census(path):
                         final_plan[e["executionId"]] = e["sparkPlanInfo"]
     for execution, key in exec_key.items():
         count_joins(final_plan[execution], table[key])
-    return dict(table)
+    return dict(table), dict(sites)
 
 
 def walls(path):
@@ -148,19 +168,24 @@ def main():
     if len(args.bench) > len(logs):
         ap.error("give at most one bench file per log")
     walls_by_log = [walls(p) for p in args.bench] + [None] * (len(logs) - len(args.bench))
-    tables, times, i = [], [], 0
+    tables, sites, times, i = [], [], [], 0
     for side in sides:
-        tables.append([census(p) for p in side])
+        censuses = [census(p) for p in side]
+        tables.append([t for t, _ in censuses])
+        sites.append([s for _, s in censuses])
         times.append([w for w in walls_by_log[i:i + len(side)] if w is not None])
         i += len(side)
     header = " ".join(f"{c:>7}" for c in COLUMNS)
     if len(sides) == 1:
-        (table,), (wall,) = tables, times
+        (table,), (wall,), ((site,),) = tables, times, sites
         print(f"{'key':<34} {header} {'wall_s':>8}")
         for key in sorted(table[0]):
             print(f"{key:<34} {span_row(spans(table, key))} {seconds(wall, key)}")
         totals = {c: (sum(v[c] for v in table[0].values()),) * 2 for c in COLUMNS}
         print(f"{'TOTAL (' + str(len(table[0])) + ' keys)':<34} {span_row(totals)}")
+        print(f"\nschema-inference jobs by call site ({sum(site.values())}, keyed or not):")
+        for call, n in sorted(site.items(), key=lambda kv: (-kv[1], kv[0])):
+            print(f"{n:>7}  {call}")
         return 0
     keys = sorted(set().union(*(t.keys() for side in tables for t in side)))
     differ = [k for k in keys if differs(spans(tables[0], k), spans(tables[1], k))]

@@ -1,16 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graft.GraftInternals
 
 /** Central loaders for the driver-generated star schema.
   *
   * One place for reads means one place for column pruning and (on a real
   * cluster) for switching the scan to a bucketed / partitioned layout
-  * without touching operators.
+  * without touching operators. Every table goes through one read path,
+  * [[GraftInternals.readParquet]]: the schema comes from the table file's
+  * parquet footer, read on the driver under the session's settings, so
+  * resolving a table (or `createViews()`) starts no Spark job. The footer
+  * is read on every access, so a rewritten file is never read with a
+  * stale schema.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def load(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    GraftInternals.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = load("region")
   def nation: DataFrame     = load("nation")
@@ -25,7 +31,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     * generator versions:
     *  - TIMESTAMP(NANOS): Spark 4 refuses to map it to its microsecond
     *    TimestampType, so it is read as a raw nanosecond long via the
-    *    runtime-settable `nanosAsLong` conf — full precision, no cast.
+    *    runtime-settable `nanosAsLong` conf, set before the footer is
+    *    converted — full precision, no cast.
     *  - TIMESTAMP(MICROS/MILLIS): arrives as TimestampType and is widened
     *    to nanos (`unix_micros * 1000`) — a metadata-only projection on
     *    top of the scan, exact for any sub-nano-free source.

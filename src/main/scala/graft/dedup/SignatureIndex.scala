@@ -4,6 +4,7 @@ import graft.Superstep
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftInternals
 
 /** Persisted dedup index — the pay-at-ingest half of incremental
   * deduplication. [[Dedup.d7IncrementalDedup]] proves the asymmetric
@@ -116,7 +117,7 @@ object SignatureIndex {
     // Re-read the stored rows so the band layout is derived from exactly
     // what the verify path will read (and the minhash isn't computed twice
     // from raw text).
-    writeBands(spark, spark.read.parquet(rowsPath(path)), path, "overwrite")
+    writeBands(spark, GraftInternals.readParquet(spark, rowsPath(path)), path, "overwrite")
   }
 
   /** Append newly-accepted documents (call with the batch's `new` docs
@@ -152,7 +153,7 @@ object SignatureIndex {
       path: String,
       threshold: Double = 0.8): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val index = spark.read.parquet(rowsPath(path))
+    val index = GraftInternals.readParquet(spark, rowsPath(path))
     // Probed three times: exact, bands, verify.
     val inRows = Superstep.pin(buildRows(incoming.select(col("doc_id"), col("text")))
       .repartition(nPart))

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftInternals
 import graft.{Route, Superstep}
 
 /** Persisted INVERTED INDEX — the pay-at-ingest half of lexical
@@ -112,7 +113,7 @@ object TermIndex {
     postingsTable(spark, path) // ensure registered before bucketed append
     val (buckets, nDocs, totalTokens) = readMeta(spark, path)
     val dup = docs.select(col("doc_id"))
-      .join(spark.read.parquet(doclensPath(path)), Seq("doc_id"), "left_semi")
+      .join(GraftInternals.readParquet(spark, doclensPath(path)), Seq("doc_id"), "left_semi")
       .limit(1).collect()
     require(dup.isEmpty,
       s"TermIndex.append: doc_id ${dup.head.getLong(0)} is already indexed at " +
@@ -165,7 +166,7 @@ object TermIndex {
     val terms = queryTokens.distinct
     val posts = postingsTable(spark, path).filter(col("token").isin(terms.toSeq: _*))
     val dfs = posts.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val dl = spark.read.parquet(doclensPath(path))
+    val dl = GraftInternals.readParquet(spark, doclensPath(path))
     posts
       .join(Route.small(queryTerms.join(dfs, Seq("token")), queryTokens.length), Seq("token"))
       .join(dl, Seq("doc_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftInternals
 import graft.{Superstep, Tables}
 
 /** Pre-aggregated distinct-count rollups via HLL sketches — the pattern
@@ -129,7 +130,7 @@ object ExactRollup {
     if (days.isEmpty) return 0
     // Partition-column inference reads `day` back as INT when values
     // fit — normalize to the build-side LONG before the merge union.
-    val existing = spark.read.parquet(store)
+    val existing = GraftInternals.readParquet(spark, store)
       .withColumn("day", col("day").cast("long"))
       .filter(col("day").isin(days.toIndexedSeq: _*))
     // The merge reads the partitions the write replaces: materialize

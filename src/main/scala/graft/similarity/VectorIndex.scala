@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.GraftInternals
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index — the pay-at-ingest half of similarity search,
@@ -80,7 +81,7 @@ object VectorIndex {
     fs.delete(new org.apache.hadoop.fs.Path(cellsPath(path)), true)
     // Assign from the STORED centroids so the index is internally
     // consistent with what query() will read back.
-    assignCells(embeddings, spark.read.parquet(centroidsPath(path)))
+    assignCells(embeddings, GraftInternals.readParquet(spark, centroidsPath(path)))
       .write
       .mode("overwrite")
       .format("parquet")
@@ -98,7 +99,7 @@ object VectorIndex {
 
   /** The stored centroid matrix. */
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(centroidsPath(path))
+    GraftInternals.readParquet(spark, centroidsPath(path))
 
   /** Append a new vector batch: assign against the STORED centroids (the
     * quantizer is fixed at build time — the standard IVF ingest contract;

@@ -1,20 +1,27 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
-import org.apache.spark.sql.{classic, DataFrame, Dataset}
+import org.apache.spark.sql.{classic, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeMap
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{HadoopFSUtils, SerializableConfiguration}
 
 /** Small bridges to `private[spark]` runtime plumbing: executor-side file
-  * maintenance, and the measured checkpoint behind every pin and its
-  * release. Lives under `org.apache.spark.sql` so the
-  * standard third-party-extension access rules apply (the
-  * VectorExpressions / RoaringAggregates packaging rationale): nothing
-  * here touches internals beyond what a custom data source would.
+  * maintenance, the parquet read that resolves its schema on the driver,
+  * and the measured checkpoint behind every pin and its release. Lives
+  * under `org.apache.spark.sql` so the standard third-party-extension
+  * access rules apply (the VectorExpressions / RoaringAggregates packaging
+  * rationale): nothing here touches internals beyond what a custom data
+  * source would.
   */
 object GraftInternals {
 
@@ -90,6 +97,44 @@ object GraftInternals {
     case ArrayType(e, _) => e.defaultSize
     case MapType(k, v, _) => k.defaultSize + v.defaultSize
     case _ => 0
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Without
+    * `mergeSchema`, Spark infers a parquet schema from one footer, read in
+    * a one-task job: a `_common_metadata` or `_metadata` summary if the
+    * table has one, else the first data file by sorted path among the
+    * leaves its file index lists. This takes the first of the same leaves
+    * by sorted path (the same file wherever data file names sort after
+    * `_`, as Spark's `part-` files and `k=v` directories do), reads its
+    * footer here, converts it as the job does (Spark's schema from the
+    * key-value metadata if present, else the parquet schema under the
+    * same session settings) and reads with the result, so the plan is the
+    * one inference gives and no job runs. Partition columns of a `k=v`
+    * layout are still discovered from the paths. A missing path or a
+    * directory with no data file fails with Spark's own error. Nothing is
+    * memoized: every call reads the footer of the file as it is now.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    if (!fs.exists(root)) throw QueryCompilationErrors.dataPathNotExistError(fs.makeQualified(root).toString)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(c.getPath.getName)).flatMap(leaves)
+    val file = leaves(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+      .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, hconf), SKIP_ROW_GROUPS)
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter))
+      .parquet(path)
   }
 
   /** Recursively list every file under each directory in `dirs`,

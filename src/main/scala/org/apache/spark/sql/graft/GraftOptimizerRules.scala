@@ -308,7 +308,7 @@ object RewriteRangeDistinctToRollup extends Rule[LogicalPlan] with PredicateHelp
     // left to the remaining optimizer batches like any other subtree).
     val spark = org.apache.spark.sql.SparkSession.active
     import org.apache.spark.sql.functions.{coalesce => fcoalesce, col => fcol, lit => flit, sum => fsum}
-    val cellsAll = spark.read.parquet(store)
+    val cellsAll = GraftInternals.readParquet(spark, store)
     // An older store without the milli-sum partial cannot answer a SUM
     // ask — decline rather than fail analysis below.
     if (asks.exists(_.contains(SumMilli)) &&

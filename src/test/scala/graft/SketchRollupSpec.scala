@@ -319,9 +319,10 @@ class SketchRollupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q28 keyed form: the rewrite answers from the INCREMENTAL store") {
-    // The gate SF: sf0.01's events are TIMESTAMP(NANOS) → a bare LONG ts
-    // attribute the rule can match (sf0.001 is MICROS → ts arrives as a
-    // widening projection and the rule correctly stays native there).
+    // The gate SF. sf0.01's events store ts as TIMESTAMP(MICROS) without a
+    // zone (timestamp_ntz), so the rule matches Tables.events' widening
+    // `unix_micros(cast(ts as timestamp)) * 1000` in the range conjuncts,
+    // not the bare LONG ts that a TIMESTAMP(NANOS) file gives.
     val dir = "/root/testdata/sf0.01"
     val df = graft.operators.RollupRewrite.q28RollupIncremental(spark, dir)
     val scans = df.queryExecution.optimizedPlan.collect {
