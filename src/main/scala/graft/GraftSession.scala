@@ -98,17 +98,27 @@ object GraftSession {
     withMaster.getOrCreate()
   }
 
-  /** Release every storage block the session still holds.
+  /** Release every storage block the session still holds, except the
+    * ones [[retainCheckpoint]] keeps. Call it after the consuming action
+    * of each query, with no query running.
     *
-    * The iterative operators (connected components, PageRank, triangle
-    * count, hierarchy expansion) eagerly `localCheckpoint` their final
-    * result so the consuming action doesn't recompute the whole loop — but
-    * a localCheckpoint's blocks outlive that action, and in a long-lived
-    * session (Verify runs 40+ queries in one JVM; a production session even
-    * more) they accumulate monotonically and degrade later queries via GC
-    * and storage-memory pressure. Call this after the consuming action of
-    * each query; it is what keeps a 100 TB session's storage footprint
-    * per-query, not per-session-lifetime.
+    * It frees three things, each by id, so the session's storage stays
+    * per-query, not per-session-lifetime:
+    *  - `Dataset.cache` entries (`clearCache`);
+    *  - every persistent RDD not retained, which is how the pins an
+    *    operator left (its final `localCheckpoint`) are freed;
+    *  - every broadcast block ([[org.apache.spark.sql.graft.SessionMaintenance.dropBroadcastBlocks]]).
+    *
+    * It forces no garbage collection. The driver garbage a query leaves
+    * (plan trees, generated classes, the ContextCleaner's weak references)
+    * goes in the JVM's own young and full collections, and the cleaner
+    * then frees what those references held. Measured on 4 cores with a
+    * 7g ParallelGC heap, a `System.gc()` here was 0.16 s of each 0.17 s
+    * call in perfbench's `single_pass`, about 16% of a pass; without it
+    * the call's median is 4 ms. The cost moves, in part, into the
+    * queries: over an sf0.1 `graft.Bench` sweep their GC pauses grow by
+    * 1.5–2.3 s and their task CPU time by about 7%, while the session as
+    * a whole finishes about 7% sooner.
     */
   def releaseCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
@@ -116,21 +126,10 @@ object GraftSession {
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!retainedIds.contains((appId, id))) GraftInternals.release(rdd)
     }
-    // Broadcast blocks accumulate across queries until a driver GC lets
-    // the ContextCleaner at them — which can land mid-query and was the
-    // round-3 full-bench outlier suspect (q1/q2 at 11 s in-session vs
-    // 1-2 s isolated). Drop them eagerly; see SessionMaintenance.
+    // Broadcast blocks otherwise wait for a driver GC to let the
+    // ContextCleaner at them, which can land mid-query. Drop them eagerly;
+    // see SessionMaintenance.
     org.apache.spark.sql.graft.SessionMaintenance.dropBroadcastBlocks(spark)
-    // Then collect NOW, while the session is idle: a multi-query session
-    // otherwise accrues driver garbage (plan trees, generated classes and
-    // their classloaders, cleaner-tracked weak refs) until the JVM picks
-    // its own moment — typically mid-query, surfacing as nondeterministic
-    // multi-second outliers on whichever query is running. Pinning the
-    // collection to the between-queries boundary is what Spark's own
-    // spark.cleaner.periodicGC is for; per-query is the right cadence
-    // when queries take seconds. This is driver-side only and sits
-    // outside every timed region (Bench stops the clock first).
-    System.gc()
   }
 
   private[graft] val retainedIds =

@@ -30,17 +30,16 @@ final case class Tables(spark: SparkSession, dir: String) {
     * arithmetic downstream, no timestamp-precision drift between
     * generator versions:
     *  - TIMESTAMP(NANOS): Spark 4 refuses to map it to its microsecond
-    *    TimestampType, so it is read as a raw nanosecond long via the
-    *    runtime-settable `nanosAsLong` conf, set before the footer is
-    *    converted — full precision, no cast.
+    *    TimestampType, so the footer is converted with NANOS read as a raw
+    *    nanosecond long — full precision, no cast, and the session's
+    *    `spark.sql.legacy.parquet.nanosAsLong` left as it is.
     *  - TIMESTAMP(MICROS/MILLIS): arrives as TimestampType and is widened
     *    to nanos (`unix_micros * 1000`) — a metadata-only projection on
     *    top of the scan, exact for any sub-nano-free source.
     */
   def events: DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_micros}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load("events")
+    val df = GraftInternals.readParquet(spark, s"$dir/events.parquet", nanosAsLong = true)
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => df
       // TIMESTAMP_NTZ (parquet isAdjustedToUTC=false) needs a cast before

@@ -142,10 +142,8 @@ object ExactRollup {
         RoaringAggregates.roaringBlobUnionBlob(col("user_set")).as("user_set"),
         sum(col("n_events")).as("n_events"),
         sum(col("sum_value_milli")).as("sum_value_milli")))
-    val saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("day").parquet(store)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(store)
     days.length
   }
 

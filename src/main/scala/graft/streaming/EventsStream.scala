@@ -329,7 +329,8 @@ object EventsStream {
 
   /** Idempotent micro-batch write — the egress half of an exactly-once
     * streaming pipeline: each batch lands in its own `ingest_batch=<id>`
-    * partition under DYNAMIC partition overwrite, so a replayed batch
+    * partition under DYNAMIC partition overwrite (a writer option; the
+    * session's `partitionOverwriteMode` is not touched), so a replayed batch
     * (restart between sink write and offset commit — the failure window
     * of every at-least-once source) overwrites its own partition instead
     * of appending duplicates. Factored out of the stream wiring so the
@@ -337,10 +338,10 @@ object EventsStream {
     * the same id and asserts no duplication).
     */
   def writeBatchIdempotent(batch: DataFrame, batchId: Long, path: String): Unit = {
-    batch.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch
       .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite").partitionBy("ingest_batch").parquet(path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch").parquet(path)
   }
 
   /** Streaming egress: checkpointed foreachBatch over

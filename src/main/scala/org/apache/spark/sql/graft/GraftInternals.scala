@@ -114,7 +114,16 @@ object GraftInternals {
     * directory with no data file fails with Spark's own error. Nothing is
     * memoized: every call reads the footer of the file as it is now.
     */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, path, spark.sessionState.conf.legacyParquetNanosAsLong)
+
+  /** [[readParquet]] with the footer's TIMESTAMP(NANOS) columns read as
+    * raw nanosecond longs when `nanosAsLong`, whatever the session's
+    * `spark.sql.legacy.parquet.nanosAsLong`: the choice goes into the
+    * schema the read is given, and a scan given `long` for such a column
+    * needs no setting, so the session's configuration is not touched.
+    */
+  def readParquet(spark: SparkSession, path: String, nanosAsLong: Boolean): DataFrame = {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(hconf)
@@ -131,7 +140,7 @@ object GraftInternals {
       assumeBinaryIsString = conf.isParquetBinaryAsString,
       assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
       inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-      nanosAsLong = conf.legacyParquetNanosAsLong,
+      nanosAsLong = nanosAsLong,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
     spark.read.schema(ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter))
       .parquet(path)

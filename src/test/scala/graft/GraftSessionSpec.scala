@@ -50,4 +50,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.memo("memo-spec-old", ("k", 1))(build()) === 4)
     assert(!GraftSession.retainedIds.contains(("memo-spec-new", 9)))
   }
+
+  test("no System.gc( in src/main/scala") {
+    // releaseCaches frees storage by id; collection is left to the JVM.
+    val offenders = MainSources.lines.filter(l => l.isCode && l.text.contains("System.gc("))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -323,9 +323,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a no-op the second time — the exactly-once property under source
     // replay.
     val batch = sample.toDF()
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(overwriteMode)
     EventsStream.writeBatchIdempotent(batch, 0L, s"$out/events")
     EventsStream.writeBatchIdempotent(batch, 0L, s"$out/events")
     assert(spark.read.parquet(s"$out/events").count() === sample.size.toLong)
+    // Dynamic overwrite is the write's own option: the session's mode stays.
+    assert(spark.conf.getOption(overwriteMode) === before)
     // And through the stream wiring: a second batch lands alongside.
     val mem = MemoryStream[Ev]
     val q = EventsStream.eventsToParquetSink(mem.toDF(), s"$out/stream", s"$out/ckpt")

@@ -71,6 +71,25 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(kept.agg(sum("v")).head().getLong(0) === (0 until 50).sum)
   }
 
+  test("releaseCaches leaves no broadcast block and no unretained persistent RDD") {
+    val master = org.apache.spark.SparkEnv.get.blockManager.master
+    def broadcastBlocks = master.getMatchingBlockIds(_.isBroadcast, askStorageEndpoints = true)
+    val appId = spark.sparkContext.applicationId
+    def unretained = persistentIds.filterNot(id => GraftSession.retainedIds.contains((appId, id)))
+    val pinned = Superstep.pin(spark.range(0, 1000).select((col("id") % 10).as("k")))
+    val dims = spark.range(0, 10).select(col("id").as("k"), (col("id") * 3).as("w"))
+    assert(pinned.join(broadcast(dims), "k").agg(sum("w")).head().getLong(0) === 100L * 3 * 45)
+    assert(broadcastBlocks.nonEmpty)
+    assert(unretained.contains(Superstep.rddOf(pinned).id))
+    GraftSession.releaseCaches(spark)
+    // Removal is non-blocking: wait for the block managers to drop them.
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while ((broadcastBlocks.nonEmpty || unretained.nonEmpty) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(broadcastBlocks.isEmpty, broadcastBlocks)
+    assert(unretained.isEmpty, unretained)
+  }
+
   test("release frees a pin's blocks without Spark's unpersist warning; reading it again fails") {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}

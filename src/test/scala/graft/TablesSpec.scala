@@ -28,6 +28,8 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   private def frames(t: Tables): Seq[(String, DataFrame)] =
     Seq("region" -> t.region, "nation" -> t.nation, "customer" -> t.customer, "supplier" -> t.supplier,
       "part" -> t.part, "orders" -> t.orders, "lineitem" -> t.lineitem, "events" -> t.events,
@@ -41,11 +43,11 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(df.schema === inferred.schema, s"$dir/$name")
         assert(df.queryExecution.optimizedPlan.sameResult(inferred.queryExecution.optimizedPlan), s"$dir/$name")
       }
-      // Tables.events sets nanosAsLong before it reads, so this infers
-      // under the same setting.
+      // Tables.events reads NANOS as long, so this infers under that setting.
       val events = t.events
-      val inferred = spark.read.parquet(s"$dir/events.parquet")
-      assert(GraftInternals.readParquet(spark, s"$dir/events.parquet").schema === inferred.schema, s"$dir/events")
+      val path = s"$dir/events.parquet"
+      val inferred = TestConf.withConf(spark, nanosAsLong -> "true")(spark.read.parquet(path))
+      assert(GraftInternals.readParquet(spark, path, nanosAsLong = true).schema === inferred.schema, path)
       assert(events.schema("ts").dataType === LongType)
       assert(events.schema.filterNot(_.name == "ts") === inferred.schema.filterNot(_.name == "ts"))
     }
@@ -73,13 +75,17 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val groups = new SimpleGroupFactory(schema)
     try values.foreach(v => writer.write(groups.newGroup().append("ts", v)))
     finally writer.close()
-    TestConf.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
-      val events = Tables(spark, s"$tmp/nanos").events
-      val inferred = spark.read.parquet(file)
-      assert(events.schema === inferred.schema)
-      assert(events.schema("ts").dataType === LongType)
-      assert(events.collect().map(_.getLong(0)).sorted.toSeq === values)
-    }
+    val before = spark.conf.getOption(nanosAsLong)
+    val events = Tables(spark, s"$tmp/nanos").events
+    val inferred = TestConf.withConf(spark, nanosAsLong -> "true")(spark.read.parquet(file))
+    assert(events.schema === inferred.schema)
+    assert(events.schema("ts").dataType === LongType)
+    assert(events.collect().map(_.getLong(0)).sorted.toSeq === values)
+    // Reading events leaves the session's setting as it was, so a plain
+    // read of the same file still gets Spark's own refusal.
+    assert(spark.conf.getOption(nanosAsLong) === before)
+    val e = intercept[Exception](spark.read.parquet(file))
+    assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
   }
 
   test("a Spark-written directory: part files, _SUCCESS, field metadata and k=v partitions") {
