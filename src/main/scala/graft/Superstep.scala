@@ -10,6 +10,13 @@ import org.apache.spark.sql.graft.GraftInternals
   * an operator pins a frame, learns that an iteration is done, and gives
   * the blocks back.
   *
+  * Loops take one of two shapes. [[iterate]] replaces its state and
+  * releases each pin it supersedes: use it when a round reads only the
+  * round before (PageRank, label propagation, min-propagation). [[expand]]
+  * keeps every layer and ends on the first empty one: use it when a round
+  * reads the earlier layers or the result is their union (BFS, walks,
+  * hierarchy levels).
+  *
   * A pin is an eager local checkpoint: lineage stops at the pin and its
   * partitions are computed exactly once. The pin job also measures what it
   * stores (rows, string and binary bytes, array and map elements), and the
@@ -51,6 +58,11 @@ object Superstep {
 
   /** The row count a pin measured on its job. */
   def rows(pinned: DataFrame): Long = logicalRdd(pinned).stats.rowCount.get.toLong
+
+  /** The size a pin plans with: Spark's per-row size, each measured
+    * column at its observed length, times [[rows]].
+    */
+  def bytes(pinned: DataFrame): BigInt = logicalRdd(pinned).stats.sizeInBytes
 
   /** Frees a pin's blocks now. Only release a pin once everything still
     * read from it, by the caller or by what it returns, was itself pinned
@@ -114,5 +126,27 @@ object Superstep {
       progress.fold("")(f => s", $f per pinned round [${counts.result().mkString(", ")}]") +
       (if (converged) ", converged" else ", not converged"))
     (state, converged)
+  }
+
+  /** The keep-all loop: `first`, a pin, is layer 0, and round `r` of
+    * `rounds` pins `step(layers so far, r)` as the next layer. A layer
+    * whose [[rows]] read 0 is released and ends the loop; an empty `first`
+    * runs no round. Returns `first` and the non-empty layers, the caller's
+    * to release. Logs one INFO line per loop: the rows of each layer and
+    * whether an empty layer or the round limit ended it.
+    */
+  def expand(first: DataFrame, rounds: Range)(
+      step: (IndexedSeq[DataFrame], Int) => DataFrame): IndexedSeq[DataFrame] = {
+    var layers = Vector(first)
+    var counts = Vector(rows(first))
+    val it = rounds.iterator
+    while (counts.last > 0 && it.hasNext) {
+      val layer = pin(step(layers, it.next()))
+      counts :+= rows(layer)
+      if (counts.last > 0) layers :+= layer else release(layer)
+    }
+    log.info(s"layered loop: rows per layer [${counts.mkString(", ")}], ended by " +
+      (if (counts.last == 0) "an empty layer" else "the round limit"))
+    layers
   }
 }

@@ -12,10 +12,11 @@ import graft.{Superstep, Tables}
   * there; at 100 TB an OLTP graph store is not an option, so community
   * discovery / influence ranking become synchronous iterations over an edge
   * DataFrame: each superstep is a bounded number of shuffles keyed by the
-  * node id, every frontier/label set is pinned ([[graft.Superstep]]) so
-  * lineage stays O(1) in the iteration count. A convergence-driven loop
-  * reads its progress from a metric on the pin job, never from an extra
-  * action, and releases each superseded pin as the next one lands.
+  * node id, and every frontier/label set is pinned ([[graft.Superstep]]) so
+  * lineage stays O(1) in the iteration count. A loop that replaces its
+  * state runs on [[graft.Superstep.iterate]], one that keeps its layers
+  * (BFS, walks, Brandes' forward phase) on [[graft.Superstep.expand]];
+  * neither spends an extra action on its stop rule.
   * Min-propagation ([[connectedComponents]], [[minRelaxTraverse]] and
   * what runs on it) shares one vertex-state loop, [[minPropagate]]: each
   * node's pinned row carries its adjacency, so a superstep is one
@@ -27,16 +28,20 @@ object GraphIter {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
+  /** Every `(src, dst)` edge in both directions, duplicates kept: each
+    * caller dedups as its plan needs.
+    */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+
   /** The undirected edge list as a pinned, deduplicated symmetric
     * `(src, dst)` table. Repartition BEFORE deduping: HashPartitioning(src)
     * satisfies the (src, dst) clustering, so the dedup reuses the probe
     * layout instead of adding its own exchange.
     */
   private def pinnedSym(edges: DataFrame): DataFrame = Superstep.pin(
-    edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst"))
+    undirected(edges).repartition(col("src")).dropDuplicates("src", "dst"))
 
   /** The customer–supplier purchase graph with packed node ids: one
     * `(src, dst)` row per distinct pair of a customer (2·custkey) and a
@@ -76,8 +81,7 @@ object GraphIter {
     * Works on any (src, dst) edge set, numeric or string ids.
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = undirected(edges)
     // Superstep 1 fused into the init: with identity labels the first
     // min-propagation is exactly least(node, min neighbour), which every
     // node still has to send. Every node appears as a src (sym is
@@ -158,9 +162,7 @@ object GraphIter {
     * (bit-identity spec-checked).
     */
   def incrementalCC(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    val sym = newEdges.select(col("src"), col("dst"))
-      .unionByName(newEdges.select(col("dst").as("src"), col("src").as("dst")))
-      .dropDuplicates("src", "dst")
+    val sym = undirected(newEdges).dropDuplicates("src", "dst")
     val touched = sym.select(col("src").as("node")).distinct()
     // Current label per touched node; a node the store has never seen is
     // its own label (the hash-min identity init).
@@ -227,9 +229,7 @@ object GraphIter {
     * 5th superstep so the plan never grows past 5 steps.
     */
   def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = undirected(edges).distinct()
     val withDeg = Superstep.pin(sym
       .join(sym.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src")))
     val init = Superstep.pin(withDeg.select(col("src").as("node")).distinct()
@@ -261,9 +261,7 @@ object GraphIter {
     */
   def pageRankMicro(edges: DataFrame, iterations: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = undirected(edges).distinct()
     // Degree attached by a window count partitioned on src: ONE exchange
     // computes deg (the groupBy + self-join it replaces cost two more).
     // The pinned frame plans with unknown partitioning, so every
@@ -324,9 +322,7 @@ object GraphIter {
   def personalizedPageRankMicro(
       edges: DataFrame, seeds: DataFrame, iterations: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = undirected(edges).distinct()
     val withDeg = Superstep.pin(sym
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
     val seedBase = Superstep.pin(seeds.select(col("node"), lit(150000L).as("v")))
@@ -368,10 +364,10 @@ object GraphIter {
     * anti-joins the settled set (one more), so total work is O(E·depth)
     * regardless of how many paths exist; the path-counting blowup a naive
     * all-paths formulation (or an UNION ALL recursive CTE) hits on dense
-    * graphs never appears. Edges are pinned once, on the probe key;
-    * each frontier is pinned per superstep so lineage stays O(1) in
-    * depth, and its pin job also counts it, so an empty frontier ends the
-    * loop without an extra action. The depth bound makes the operator's
+    * graphs never appears. Edges are pinned once, on the probe key; the
+    * frontiers are the layers of [[graft.Superstep.expand]], each pinned
+    * so lineage stays O(1) in depth, and the first empty one ends the
+    * loop on its pin's own row count. The depth bound makes the operator's
     * output a well-defined k-hop semantics (and is what lets the oracle
     * run as a depth-bounded recursive CTE). Runs as
     * [[labeledShortestPaths]] with one constant label.
@@ -390,33 +386,21 @@ object GraphIter {
     */
   def labeledShortestPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 6): DataFrame = {
     val sym = pinnedSym(edges)
-    // The settled set is kept as a LAZY union of the per-depth frontier
-    // pins: each anti-join still reads exactly the settled rows (from
-    // pinned blocks), but the growing O(V) set is never re-materialized
-    // per superstep — only each (much smaller) frontier is. The result
-    // reads only those pins, so the edge pin is released on the way out.
-    var frontier = Superstep.pin(seeds.select(col("lm"), col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    var settled = frontier
-    var depth = 0L
-    var done = false
-    while (depth < maxDepth && !done) {
-      depth += 1
-      val (next, Seq(n)) = Superstep.pin(sym
-        .join(frontier.select(col("lm"), col("node").as("src")), Seq("src"))
+    // The settled set is the LAZY union of the layer pins: each anti-join
+    // reads exactly the settled rows (from pinned blocks), but the growing
+    // O(V) set is never re-materialized per superstep — only each (much
+    // smaller) frontier is. The result reads only those pins, so the edge
+    // pin is released on the way out.
+    val layers = Superstep.expand(Superstep.pin(seeds.select(col("lm"), col("node")).distinct()
+        .withColumn("dist", lit(0L))), 1 to maxDepth) { (settled, depth) =>
+      sym.join(settled.last.select(col("lm"), col("node").as("src")), Seq("src"))
         .select(col("lm"), col("dst").as("node"))
         .distinct()
-        .join(settled, Seq("lm", "node"), "left_anti")
-        .withColumn("dist", lit(depth)), count(lit(1)))
-      done = n == 0
-      if (done) Superstep.release(next)
-      else {
-        settled = settled.unionByName(next)
-        frontier = next
-      }
+        .join(settled.reduce(_.unionByName(_)), Seq("lm", "node"), "left_anti")
+        .withColumn("dist", lit(depth.toLong))
     }
     Superstep.release(sym)
-    settled
+    layers.reduce(_.unionByName(_))
   }
 
   /** Generalized bounded-round MIN-RELAXATION traversal — the reusable
@@ -612,7 +596,9 @@ object GraphIter {
     * walk visits; sampled walks visit O(walkers · steps) nodes). The
     * symmetric edge list is checkpointed once, src-pinned, sort-free;
     * per step ONE equijoin (only the O(walkers) frontier moves) + a
-    * window whose partitions are single-node neighbor lists. A
+    * window whose partitions are single-node neighbor lists. The steps
+    * are the layers of [[graft.Superstep.expand]]: layer t is step t, and
+    * a step that no walker survives ends the walks. A
     * full-corpus embedding run (walkers ≈ V) flips the trade — there,
     * pre-index the adjacency once and persist it, the VectorIndex
     * pay-at-ingest posture.
@@ -620,12 +606,11 @@ object GraphIter {
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = pinnedSym(edges)
-    var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct())
-    requireOneSeedPerWalker(cur, "randomWalks")
-    val out = scala.collection.mutable.ListBuffer[DataFrame](
-      cur.withColumn("step", lit(0L)))
+    val start = Superstep.pin(seeds.select(col("walker"), col("node")).distinct())
+    requireOneSeedPerWalker(start, "randomWalks")
     val byWalker = Window.partitionBy("walker")
-    (1 to steps).foreach { t =>
+    val layers = Superstep.expand(start, 1 to steps) { (walked, t) =>
+      val cur = walked.last
       // The frontier is at most one row per walker: its pin carries that
       // count, so the planner broadcasts it when it fits and the edge
       // side STREAMS under a BroadcastHashJoin instead of paying a full
@@ -633,7 +618,7 @@ object GraphIter {
       // One frontier row per walker, so the walker partition IS its
       // current node's full neighbor list: rank within it == the global
       // dst-ordered adjacency index (what the oracle computes).
-      val nxt = Superstep.pin(cur.join(sym, cur("node") === sym("src"))
+      cur.join(sym, cur("node") === sym("src"))
         .select(col("walker"), col("src"), col("dst"))
         .withColumn("idx",
           row_number().over(byWalker.orderBy("dst")).cast("long") - 1)
@@ -641,15 +626,18 @@ object GraphIter {
         .filter(col("idx") ===
           (col("walker") % 1048573L * 31 + lit(t.toLong) * 7 +
             col("src") % 1048573L * 13) % col("deg"))
-        .select(col("walker"), col("dst").as("node")))
-      out += nxt.withColumn("step", lit(t.toLong))
-      cur = nxt
+        .select(col("walker"), col("dst").as("node"))
     }
     // The corpus reads only the step pins, never the edges.
     Superstep.release(sym)
-    out.reduce(_.unionByName(_))
-      .select(col("walker"), col("step"), col("node"))
+    walkCorpus(layers)
   }
+
+  /** The walk corpus of the step layers: layer t is step t. */
+  private def walkCorpus(layers: IndexedSeq[DataFrame]): DataFrame =
+    layers.zipWithIndex
+      .map { case (l, t) => l.select(col("walker"), lit(t.toLong).as("step"), col("node")) }
+      .reduce(_.unionByName(_))
 
   /** SECOND-ORDER (node2vec-BIASED) walks — the p/q sibling of
     * [[randomWalks]] (Grover & Leskovec 2016): hop t out of node v,
@@ -670,6 +658,7 @@ object GraphIter {
     * an equijoin of the candidate set against the src-pinned edge list
     * — then a per-walker window for the cumulative pick (frontier has
     * exactly one row per live walker, so partitions are walker-sized).
+    * Steps are [[graft.Superstep.expand]] layers, as in [[randomWalks]].
     * All integer arithmetic: reproducible across engines, oracle-exact.
     */
   def biasedWalks(
@@ -677,13 +666,12 @@ object GraphIter {
       wReturn: Long = 1L, wCommon: Long = 4L, wFar: Long = 2L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sym = pinnedSym(edges)
-    var cur = Superstep.pin(seeds.select(col("walker"), col("node")).distinct()
+    val start = Superstep.pin(seeds.select(col("walker"), col("node")).distinct()
       .withColumn("prev", col("node")))
-    requireOneSeedPerWalker(cur, "biasedWalks")
-    val out = scala.collection.mutable.ListBuffer[DataFrame](
-      cur.select(col("walker"), lit(0L).as("step"), col("node")))
+    requireOneSeedPerWalker(start, "biasedWalks")
     val byWalker = Window.partitionBy("walker")
-    (1 to steps).foreach { t =>
+    val layers = Superstep.expand(start, 1 to steps) { (walked, t) =>
+      val cur = walked.last
       // The frontier and its prev set hold at most one row per walker:
       // the pin carries that count, so the planner broadcasts them when
       // they fit, and the edge side streams in BOTH joins that touch it
@@ -706,19 +694,17 @@ object GraphIter {
           when(col("dst") === col("prev"), lit(wReturn))
             .when(col("is_nbr").isNotNull, lit(wCommon))
             .otherwise(lit(wFar)))
-      val nxt = Superstep.pin(flagged
+      flagged
         .withColumn("cum", sum("wgt").over(byWalker.orderBy("dst")))
         .withColumn("tot", sum("wgt").over(byWalker))
         .withColumn("r",
           (col("walker") % 1048573L * 31 + lit(t.toLong) * 7 +
             col("src") % 1048573L * 13) % col("tot"))
         .filter(col("cum") - col("wgt") <= col("r") && col("r") < col("cum"))
-        .select(col("walker"), col("src").as("prev"), col("dst").as("node")))
-      out += nxt.select(col("walker"), lit(t.toLong).as("step"), col("node"))
-      cur = nxt
+        .select(col("walker"), col("src").as("prev"), col("dst").as("node"))
     }
     Superstep.release(sym)
-    out.reduce(_.unionByName(_))
+    walkCorpus(layers)
   }
 
   /** g26: node2vec-biased walks on the packed bipartite graph — 3 hops
@@ -828,9 +814,10 @@ object GraphIter {
     *
     * Phase 1 (forward): per-pivot BFS layers (exact-depth frontiers,
     * the g9 anti-join shape) and path counts σ — σ(w) = Σ σ(v) over
-    * DAG predecessors, one equijoin + sum per layer. Phase 2
-    * (backward): dependencies in integer MICRO-UNITS, deepest layer
-    * first — δ(v) = Σ_{w ∈ succ(v)} σ(v)·(1 000 000 + δ(w)) DIV σ(w).
+    * DAG predecessors, one equijoin + sum per [[graft.Superstep.expand]]
+    * layer, ending early on an empty one. Phase 2 (backward): dependencies
+    * in integer MICRO-UNITS over the kept layers, deepest first —
+    * δ(v) = Σ_{w ∈ succ(v)} σ(v)·(1 000 000 + δ(w)) DIV σ(w).
     * The per-term integer division is the determinism trick: terms are
     * exact integers, integer sums are order-independent, so the result
     * is bit-stable across engines and partitionings (a float δ would
@@ -858,44 +845,37 @@ object GraphIter {
     // exchanges. The anti-join against settled runs before the aggregate
     // (same exclusion either way — it keys on (lm, node) only), so the
     // sum folds exactly the layer-d candidate edges the σ pass folded.
-    val sig = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = Superstep.pin(pivots.select(col("lm"), col("lm").as("node")).distinct()
-      .withColumn("sig", lit(1L)))
-    sig += frontier
-    var settled = frontier.select("lm", "node")
-    (1 to maxDepth).foreach { _ =>
-      val next = Superstep.pin(sym.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+    val sig = Superstep.expand(Superstep.pin(pivots.select(col("lm"), col("lm").as("node"))
+        .distinct().withColumn("sig", lit(1L))), 1 to maxDepth) { (settled, _) =>
+      sym.join(settled.last.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("lm"), col("dst").as("node"), col("sig"))
-        .join(settled, Seq("lm", "node"), "left_anti")
-        .groupBy("lm", "node").agg(sum("sig").as("sig")))
-      sig += next
-      settled = settled.unionByName(next.select("lm", "node"))
-      frontier = next
+        .join(settled.map(_.select("lm", "node")).reduce(_.unionByName(_)),
+          Seq("lm", "node"), "left_anti")
+        .groupBy("lm", "node").agg(sum("sig").as("sig"))
     }
-    // Backward: δ at the deepest layer is 0; each shallower layer folds
-    // its successors' (σ, δ) through the integer fixed-point term.
-    var deltaDeeper: DataFrame = null
-    val deltas = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-    ((maxDepth - 1) to 1 by -1).foreach { d =>
-      val wSide =
-        if (deltaDeeper == null)
-          sig(d + 1).select(col("lm"), col("node").as("dst"),
-            col("sig").as("sigw"), lit(0L).as("delw"))
-        else sig(d + 1)
-          .join(deltaDeeper.withColumnRenamed("delta", "delw0"), Seq("lm", "node"), "left")
+    // Backward: δ at the deepest kept layer is 0; each shallower layer
+    // folds its successors' (σ, δ) through the integer fixed-point term.
+    val deltas = ((sig.size - 2) to 1 by -1).foldLeft(Vector.empty[DataFrame]) { (done, d) =>
+      val wSide = done.lastOption.fold(
+        sig(d + 1).select(col("lm"), col("node").as("dst"),
+          col("sig").as("sigw"), lit(0L).as("delw"))) { deeper =>
+        sig(d + 1)
+          .join(deeper.withColumnRenamed("delta", "delw0"), Seq("lm", "node"), "left")
           .select(col("lm"), col("node").as("dst"), col("sig").as("sigw"),
             coalesce(col("delw0"), lit(0L)).as("delw"))
-      val contrib = Superstep.pin(sym
+      }
+      done :+ Superstep.pin(sym
         .join(wSide, Seq("dst"))
         .select(col("lm"), col("src").as("node"), col("sigw"), col("delw"))
         .join(sig(d).withColumnRenamed("sig", "sigv"), Seq("lm", "node"))
         .select(col("lm"), col("node"),
           expr("sigv * (1000000 + delw) DIV sigw").as("term"))
         .groupBy("lm", "node").agg(sum("term").as("delta")))
-      deltas += contrib
-      deltaDeeper = contrib
     }
-    val out = Superstep.pin(deltas.reduce(_.unionByName(_))
+    // With no layer past depth 1 every δ is 0: the pivots' own zero rows
+    // give the aggregate its schema, and the filter drops them.
+    val out = Superstep.pin(deltas.reduceOption(_.unionByName(_))
+      .getOrElse(sig.head.select(col("lm"), col("node"), lit(0L).as("delta")))
       .groupBy("node").agg(sum("delta").as("bc_micro"))
       .filter(col("bc_micro") > 0))
     (sig ++ deltas :+ sym).foreach(Superstep.release)

@@ -294,9 +294,8 @@ object GraphOps {
     */
   def g4TwoHop(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    // Materialized once: the two bitmap builds and the size-estimate
-    // probe all read the same checkpointed edge set instead of
-    // re-running the fact join three times.
+    // Materialized once: the two bitmap builds read the same
+    // checkpointed edge set instead of re-running the fact join twice.
     val edges = Superstep.pin(t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("custkey"), col("l_suppkey").as("suppkey"))
@@ -316,16 +315,12 @@ object GraphOps {
     val supp2bm = Superstep.pin(edges.groupBy("suppkey")
       .agg(org.apache.spark.sql.graft.BitmapAggregates
         .bitmapOfLongs(col("custkey")).as("bm")))
-    // Size-based routing with an EXACT probe: the supplier→customers
-    // side is |middle vertices| × |keyspace|/8 bytes, which outgrows the
-    // driver long before 100 TB. Sum the actual serialized bitmap bytes
-    // (a scalar agg over one row per middle vertex) and pick the plan
-    // under the session's autoBroadcastJoinThreshold.
-    val bmBytes = supp2bm
-      .agg(coalesce(sum(length(col("bm"))), lit(0L))).head().getLong(0)
-    if (bmBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
+    // Size-based routing on the pin's measured size (each bitmap at its
+    // observed length): the supplier→customers side is |middle vertices| ×
+    // |keyspace|/8 bytes, which outgrows the driver long before 100 TB.
+    if (Superstep.bytes(supp2bm) <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
       // Small-middle path: collect the supplier bitmaps (bounded by the
-      // probe, same budget a broadcast would use) into ONE packed blob
+      // pin's size, same budget a broadcast would use) into ONE packed blob
       // riding inside a scalar expression, and aggregate the EDGES down
       // to per-customer supplier-set bitmaps first. The union then runs
       // as a projection over one row per customer. The previous
@@ -390,69 +385,54 @@ object GraphOps {
     * node count), so it scales to wide shallow hierarchies — exactly the
     * org-tree shape.
     *
-    * BOUND: the expansion REFUSES (IllegalStateException) when the
-    * frontier is still alive at `maxDepth` (default 64) — cyclic input
-    * would otherwise loop forever. Callers with legitimately deeper
-    * acyclic hierarchies must raise `maxDepth`; the error message says
-    * which case was measured (shrinking frontier = deep tree, stable
-    * frontier = cycle).
+    * BOUND: the expansion REFUSES (IllegalStateException) when level
+    * `maxDepth + 1` (default 64) is not empty — cyclic input would
+    * otherwise loop forever. Callers with legitimately deeper acyclic
+    * hierarchies must raise `maxDepth`; the error message says which
+    * case was measured (shrinking frontier = deep tree, stable frontier
+    * = cycle).
     */
   def expandHierarchy(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
     // edges: (child: string, parent: string)
     //
-    // Each level is pinned: lineage is truncated every iteration (no
-    // O(depth) plan growth) and each level's partitions are materialized
-    // exactly once; the pin job also counts the level, so the empty
-    // terminal frontier costs no extra action and is dropped. The union of
-    // levels is pinned ONCE at the end and every per-level pin is then
-    // released — the result holds one block set, not one per tree level.
+    // The levels are Superstep.expand's pinned layers: no O(depth) plan
+    // growth, and the first empty level ends the loop on its pin's row
+    // count. Their union is pinned ONCE at the end and the levels then
+    // released — the result holds one block set, not one per level.
     //
     // CYCLE GUARD: on cyclic input (scraped parent pointers DO cycle —
     // mysql2neo4j.py:204-227 auto-creates parents on first sight) the
     // frontier never empties and the closure would loop forever while
-    // double-counting paths. A frontier still alive at `maxDepth` is a
-    // cycle (every cycle member spawns unbounded-depth paths) or a
+    // double-counting paths. A frontier alive at level `maxDepth + 1` is
+    // a cycle (every cycle member spawns unbounded-depth paths) or a
     // deeper-than-expected tree — either way the expansion REFUSES
     // loudly; run [[CycleAudit.cycleMembers]] to locate the offenders.
     val parentOf = edges.select(col("child").as("ancestor"), col("parent").as("next_parent"))
-    val level1 = Superstep.pin(edges
-      .select(col("child").as("node"), col("parent").as("ancestor"), lit(1).as("depth"),
-        concat_ws("/", col("parent"), col("child")).as("path")))
-    val level1Cnt = Superstep.rows(level1)
-    val levels = scala.collection.mutable.ArrayBuffer(level1)
-    val counts = scala.collection.mutable.ArrayBuffer(level1Cnt)
-    var continue = level1Cnt > 0
-    var depth = 1
-    while (continue) {
-      if (depth >= maxDepth) {
-        // Distinguish the two refusal causes from the level counts: a
-        // frontier that stopped SHRINKING is a cycle (ring members respawn
-        // forever); a still-shrinking frontier is a legitimately
-        // deeper-than-maxDepth tree — raise the lever.
-        val cur = counts.last
-        val prev = if (counts.size >= 2) counts(counts.size - 2) else Long.MaxValue
-        val hint =
-          if (cur >= prev) s"frontier stopped shrinking ($prev→$cur rows) — almost " +
-            "certainly cyclic parent pointers; audit with CycleAudit.cycleMembers"
-          else s"frontier still shrinking ($prev→$cur rows) — likely a legitimate " +
-            s"hierarchy deeper than maxDepth=$maxDepth; raise maxDepth"
-        throw new IllegalStateException(
-          s"expandHierarchy: frontier still alive at depth $maxDepth — $hint")
-      }
-      val next = Superstep.pin(levels.last
+    val levels = Superstep.expand(Superstep.pin(edges
+        .select(col("child").as("node"), col("parent").as("ancestor"), lit(1).as("depth"),
+          concat_ws("/", col("parent"), col("child")).as("path"))),
+        2 to maxDepth + 1) { (found, _) =>
+      found.last
         .join(parentOf, Seq("ancestor"))
         .select(col("node"), col("next_parent").as("ancestor"),
           (col("depth") + 1).as("depth"),
-          concat_ws("/", col("next_parent"), col("path")).as("path")))
-      val n = Superstep.rows(next)
-      depth += 1
-      if (n == 0) {
-        continue = false
-        Superstep.release(next)
-      } else {
-        levels += next
-        counts += n
-      }
+          concat_ws("/", col("next_parent"), col("path")).as("path"))
+    }
+    val counts = levels.map(Superstep.rows)
+    if (counts.lift(maxDepth).exists(_ > 0)) {
+      levels.foreach(Superstep.release)
+      // The last two levels' counts tell the causes apart: a frontier that
+      // stopped SHRINKING is a cycle (ring members respawn forever); a
+      // still-shrinking one is a tree deeper than maxDepth.
+      val cur = counts.last
+      val prev = counts.lift(counts.size - 2).getOrElse(Long.MaxValue)
+      val hint =
+        if (cur >= prev) s"frontier stopped shrinking ($prev→$cur rows) — almost " +
+          "certainly cyclic parent pointers; audit with CycleAudit.cycleMembers"
+        else s"frontier still shrinking ($prev→$cur rows) — likely a legitimate " +
+          s"hierarchy deeper than maxDepth=$maxDepth; raise maxDepth"
+      throw new IllegalStateException(
+        s"expandHierarchy: frontier still alive at depth ${maxDepth + 1} — $hint")
     }
     val out = Superstep.pin(levels.reduce(_.unionByName(_)))
     levels.foreach(Superstep.release)

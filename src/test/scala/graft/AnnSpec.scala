@@ -163,9 +163,7 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = similarity.VectorIndex.query(spark, queries, s"$tmp/idx")
         .queryExecution.executedPlan match {
           case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
@@ -187,7 +185,7 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       indexSides.foreach(side =>
         assert(side.collectFirst { case e: ShuffleExchangeLike => e }.isEmpty,
           s"index side of the probe join shuffles:\n$side"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("vector index lifecycle: guarded-disjoint append folds == rebuild, compaction is content-identical") {

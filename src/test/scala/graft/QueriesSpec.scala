@@ -353,11 +353,9 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     ops.foreach { case (name, op) =>
       val routed = op(spark, dir)
       assert(docIdBroadcasts(routed).nonEmpty, s"$name should broadcast its labels by default")
-      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (shuffled, joins) =
-        try { val q = op(spark, dir); (q, docIdBroadcasts(q)) }
-        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      val (shuffled, joins) = TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val q = op(spark, dir); (q, docIdBroadcasts(q))
+      }
       assert(joins.isEmpty, s"$name must not broadcast its labels at threshold -1")
       assert(rows(shuffled) === rows(routed), s"$name: routing changed the rows")
       assert(rows(routed).exists(_._3 == 0), s"$name: no document was resolved away")
@@ -1094,6 +1092,20 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 === Map(2L -> 666666L, 7L -> 666666L, 8L -> 666666L, 9L -> 1000000L),
       s"got $got2")
+    // A frontier that dies before maxDepth: path 1−2−3 from pivot 1 keeps
+    // layers {2} and {3}, and layer 3 is empty at maxDepth 3. δ(2) =
+    // σ2·1e6 DIV σ3 = 1e6; the leaf 3 carries none.
+    val short = operators.GraphIter
+      .betweennessCore(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), Seq(Tuple1(1L)).toDF("lm"), 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(short === Map(2L -> 1000000L), s"got $short")
+    // No layer past depth 1 (a star's centre) or none past the pivot (a
+    // pivot with no neighbours): no dependency anywhere.
+    val star = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
+    assert(operators.GraphIter.betweennessCore(star, Seq(Tuple1(1L)).toDF("lm"), 3).isEmpty)
+    val lone = operators.GraphIter.betweennessCore(edges, Seq(Tuple1(42L)).toDF("lm"), maxDepth = 3)
+    assert(lone.columns.toSeq === Seq("node", "bc_micro"))
+    assert(lone.isEmpty)
   }
 
   test("g25 random walks: hand-computed mixer choices, isolated seeds stop at step 0") {
@@ -2833,11 +2845,9 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // decision is a plan change, never a result change.
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
     val bcast = functions.Bpe.t32BpeEncode(spark, dir).collect().map(key).toSet
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val plain =
-      try functions.Bpe.t32BpeEncode(spark, dir).collect().map(key).toSet
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    val plain = TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      functions.Bpe.t32BpeEncode(spark, dir).collect().map(key).toSet
+    }
     assert(plain === bcast)
     assert(bcast.nonEmpty)
   }
@@ -2918,15 +2928,13 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Forced routing: a -1 broadcast threshold forces the plain
     // word-keyed equijoin through the shared substrate — a plan change,
     // never a value change (the same contract t32 pins).
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val plain =
-      try functions.Bpe.t35TokenizerFertility(spark, dir)
+    val plain = TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      functions.Bpe.t35TokenizerFertility(spark, dir)
         .collect()
         .map(r => (r.getString(0), r.getString(1)) ->
           ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))))
         .toMap
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
     assert(plain === got)
   }
 
@@ -3007,5 +3015,25 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       operators.GraphOps.expandHierarchy(deep, maxDepth = 4).collect()
     }
     assert(e.getMessage.contains("raise maxDepth"), e.getMessage)
+  }
+
+  test("expandHierarchy expands a chain exactly maxDepth deep and refuses one level deeper") {
+    val ss = spark
+    import ss.implicits._
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // A k-edge chain n1 → n2 → ... → n(k+1): node ni has k + 1 − i
+    // ancestors, k(k+1)/2 closure rows in all, and level k + 1 is empty.
+    val k = 5
+    val chain = (1 to k).map(i => (s"n$i", s"n${i + 1}")).toDF("child", "parent")
+    val full = operators.GraphOps.expandHierarchy(chain, maxDepth = k)
+    assert(full.count() === k * (k + 1) / 2L)
+    assert(full.agg(max("depth")).head().getInt(0) === k)
+    Superstep.release(full)
+    val e = intercept[IllegalStateException] {
+      operators.GraphOps.expandHierarchy(chain, maxDepth = k - 1)
+    }
+    assert(e.getMessage.contains("raise maxDepth"), e.getMessage)
+    // The refusal released every level it had pinned.
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 }

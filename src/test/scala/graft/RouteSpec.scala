@@ -19,12 +19,8 @@ class RouteSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPla
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def withThreshold[T](value: String)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, saved)
-  }
+  private def withThreshold[T](value: String)(body: => T): T =
+    TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> value)(body)
 
   test("Route broadcasts iff rows x schema row size fits autoBroadcastJoinThreshold") {
     // The row size is Spark's own per-row estimate, the one a pin's

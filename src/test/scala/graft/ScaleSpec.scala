@@ -317,9 +317,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Force the shuffle-join path (at spec scale the incoming bands would
     // broadcast, which also leaves the index unshuffled but proves
     // nothing about the layout; at batch scale this IS the join shape).
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = dedup.SignatureIndex.classify(
         spark, docs.filter(pmod(col("doc_id"), lit(2)) === 1), s"$tmp/idx")
       val plan = physical(df)
@@ -345,7 +343,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       indexSides.foreach(side =>
         assert(side.collectFirst { case e: ShuffleExchangeLike => e }.isEmpty,
           s"index side of the band join shuffles:\n$side"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("two-hop small-middle plan is joinless: two aggregates and a projection") {
@@ -381,11 +379,9 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // plans must agree on every (custkey, n_two_hop).
     def key(r: org.apache.spark.sql.Row) = r.getLong(0) -> r.getLong(1)
     val blobPath = operators.GraphOps.g4TwoHop(spark, dir).collect().map(key).toSet
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val shufflePath =
-      try operators.GraphOps.g4TwoHop(spark, dir).collect().map(key).toSet
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    val shufflePath = TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      operators.GraphOps.g4TwoHop(spark, dir).collect().map(key).toSet
+    }
     assert(blobPath === shufflePath)
     assert(blobPath.nonEmpty)
   }
@@ -702,11 +698,9 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Forced escalation (broadcast threshold -1): the probe must route to
     // the explicit sort-merge plan — and the answer must not move by a
     // single row.
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (slow, slowPlan) =
-      try { val q = operators.Relational.q23RoutedJoin(spark, dir); (q, physical(q)) }
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    val (slow, slowPlan) = TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val q = operators.Relational.q23RoutedJoin(spark, dir); (q, physical(q))
+    }
     assert(slowPlan.collectWithSubqueries { case j: SortMergeJoinExec => j }.nonEmpty,
       s"threshold -1 should force the merge route:\n$slowPlan")
     assert(slowPlan.collectWithSubqueries { case j: BroadcastHashJoinExec => j }.isEmpty,

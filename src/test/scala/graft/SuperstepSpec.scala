@@ -20,12 +20,8 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  private def withThreshold[T](value: String)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, saved)
-  }
+  private def withThreshold[T](value: String)(body: => T): T =
+    TestConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> value)(body)
 
   test("pin metrics equal a separate count and max; an empty frame reads 0") {
     val df = spark.range(0, 1000).select((col("id") % 37).as("k"))
@@ -233,5 +229,95 @@ class SuperstepSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(!conv2)
     assert(fixed.agg(sum("v")).head().getLong(0) === (0 until 20).map(_ + 3L).sum)
     intercept[IllegalArgumentException](Superstep.rddOf(fixed))
+  }
+
+  /** The INFO lines `body` logs under Superstep's logger. */
+  private def superstepLog(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("superstep-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.Superstep").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.INFO)
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
+  test("expand stops at the first empty layer, releases it, and logs one line") {
+    val first = Superstep.pin(spark.range(0, 8).select(col("id").as("v")))
+    val before = persistentIds
+    // Halve and keep the values above 1: 8 → 4 rows (4..7 → 2, 3) → ...
+    var layers = IndexedSeq.empty[DataFrame]
+    val log = superstepLog {
+      layers = Superstep.expand(first, 1 to 100) { (ls, _) =>
+        ls.last.select((col("v") / 2).cast("long").as("v")).filter(col("v") > 1).distinct()
+      }
+    }
+    // [0..7] → {2, 3} → {} : the empty layer ended the loop.
+    assert(layers.size === 2)
+    assert(layers.head eq first)
+    assert(layers(1).collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 3L))
+    // Only the kept layer outlives the loop; the empty one was released.
+    assert((persistentIds -- before) === Set(Superstep.rddOf(layers(1)).id))
+    assert(log.size === 1, log)
+    assert(log.head.contains("rows per layer [8, 2, 0]") && log.head.contains("empty layer"), log)
+    layers.tail.foreach(Superstep.release)
+  }
+
+  test("expand honours the round limit, and the step sees every earlier layer") {
+    val first = Superstep.pin(spark.range(0, 3).select(col("id").as("v")))
+    val seen = Seq.newBuilder[(Int, Int)]
+    var layers = IndexedSeq.empty[DataFrame]
+    val log = superstepLog {
+      layers = Superstep.expand(first, 1 to 3) { (ls, r) =>
+        seen += r -> ls.size
+        // Each layer is the union of all before it, shifted up by 10.
+        ls.reduce(_.unionByName(_)).select((col("v") + 10).as("v"))
+      }
+    }
+    assert(seen.result() === Seq(1 -> 1, 2 -> 2, 3 -> 3))
+    assert(layers.map(Superstep.rows) === Seq(3L, 3L, 6L, 12L))
+    assert(log.size === 1 && log.head.contains("round limit"), log)
+    layers.tail.foreach(Superstep.release)
+  }
+
+  test("expand over an empty first runs no round") {
+    val first = Superstep.pin(spark.range(0, 10).filter(col("id") < 0).toDF("v"))
+    var rounds = 0
+    val layers = Superstep.expand(first, 1 to 5) { (ls, _) => rounds += 1; ls.last }
+    assert(rounds === 0)
+    assert(layers === IndexedSeq(first))
+    Superstep.release(first)
+  }
+
+  test("no var holding a pin in src/main/scala outside the loops that need one") {
+    // A loop that keeps or replaces pins runs on Superstep.iterate or
+    // Superstep.expand. These four decide their next state on the driver
+    // or carry it in two frames, which neither loop shape expresses.
+    val allowed = Set(
+      // each round's merge pair is picked on the driver by an action, then the sequence re-pinned
+      "Bpe.scala" -> "trainMerges",
+      // the band width is halved on the driver from a probe action over the current pin
+      "Dedup.scala" -> "autoWidenBands",
+      // the peel converges on an unchanged survivor count, then a doubling phase follows
+      "CycleAudit.scala" -> "cycleMembers",
+      // each iteration replaces two pins (live edges and live nodes) together
+      "CycleAudit.scala" -> "stronglyConnected")
+    val pinVar = """\bvar\s+\w+(\s*:[^=]+)?\s*=\s*Superstep\.pin\(""".r
+    val offenders = MainSources.lines.filter(l => l.isCode &&
+      pinVar.findFirstIn(l.text).nonEmpty && !allowed(l.fileName -> l.member))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
