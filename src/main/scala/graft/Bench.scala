@@ -50,9 +50,7 @@ object Bench {
     // A typo'd key would otherwise silently shrink the sweep and still
     // emit a normal-looking JSON line — fail fast instead.
     only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_KEYS has unknown keys: ${unknown.toSeq.sorted.mkString(",")}")
+      SparkEntry.requireKnown(s, "SPARK_GRAFT_BENCH_KEYS")
       require(s.exists(headline.contains),
         "SPARK_GRAFT_BENCH_KEYS selects no headline query (only excluded exact baselines?)")
     }

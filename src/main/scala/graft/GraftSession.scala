@@ -40,7 +40,7 @@ object GraftSession {
   def shufflePartitions(env: Option[String]): Int = positive(
     "SPARK_GRAFT_SHUFFLE_PARTITIONS", "partition count", env, DefaultShufflePartitions)
 
-  private def positive(name: String, what: String, env: Option[String], default: Int): Int =
+  private[graft] def positive(name: String, what: String, env: Option[String], default: Int): Int =
     env match {
       case None => default
       case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(

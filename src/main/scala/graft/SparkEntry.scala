@@ -15,6 +15,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q2JoinAgg(spark, "/root/testdata/sf0.001")
 
+  /** The key check of `Bench`, `Verify` and `RunOne`, run before their
+    * session starts: fails, naming them, on any of `keys` that is not a
+    * query. `source` says where the keys came from.
+    */
+  def requireKnown(keys: Iterable[String], source: String): Unit = {
+    val unknown = keys.toSet -- queries.keySet
+    require(unknown.isEmpty, s"$source has unknown keys: ${unknown.toSeq.sorted.mkString(",")}")
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A. relational core

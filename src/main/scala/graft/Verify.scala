@@ -23,10 +23,7 @@ object Verify {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_verify"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet) else None
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown keys: ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    only.foreach(SparkEntry.requireKnown(_, "the key subset"))
     val selected = SparkEntry.queries.filter { case (k, _) => only.forall(_.contains(k)) }
     val oracles  = SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }
     val spark  = GraftSession.create("graft-verify")

@@ -479,18 +479,14 @@ object GraphOps {
     nodeSimilarityTail(pairs.select("s1", "s2", "common"), deg, k)
   }
 
-  /** The default hub cutoff shared by g13/g20 and their plan-audit
-    * dumps (ExplainDump `_g13g20_wedge`/`_g13_pairs`) — one constant, so
-    * the audit entries cannot silently drift from the production
-    * defaults (r16 advice #1).
+  /** The default hub cutoff shared by g13 and g20 — one constant, so the
+    * two keys cannot drift apart on it.
     */
   private[graft] val defaultHubCutoff = 50
 
   /** The shared (supplier, customer) purchase edge list of the g13/g20
     * pair — lineitem⋈orders, deduplicated. NOT pinned here: the
     * substrate build pins it for the duration of its two derivations.
-    * Factored out so ExplainDump audits the exact production pipeline
-    * (r16 advice #1).
     */
   private[graft] def purchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)

@@ -39,21 +39,10 @@ object Ann {
     * (score desc, then neighbor id).
     */
   def s1CosineTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
-    val queries = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val corpus = t.embeddings.repartition(nPart)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    corpus
-      .crossJoin(Route.small(queries, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    Search.pairs(Search.corpus(t.embeddings), Search.queries(t.embeddings))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
   }
@@ -72,14 +61,7 @@ object Ann {
     */
   def s5RangeSearch(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
     val t = Tables(spark, dir)
-    val queries = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val corpus = t.embeddings.repartition(nPart)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-    corpus
-      .crossJoin(Route.small(queries, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    Search.pairs(Search.corpus(t.embeddings), Search.queries(t.embeddings))
       .filter(cosine(col("q_emb"), col("n_emb")) >= threshold)
       .select("query_id", "neighbor_id")
   }
@@ -102,24 +84,13 @@ object Ann {
     */
   def s14FilteredAnn(
       spark: SparkSession, dir: String, lang: String = "en", k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
-    val queries = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val allowed = t.documents.filter(col("lang") === lang)
       .select(col("doc_id").as("neighbor_id"))
-    val corpus = t.embeddings.repartition(nPart)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .join(allowed, Seq("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    corpus
-      .crossJoin(Route.small(queries, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    Search.pairs(Search.corpus(t.embeddings).join(allowed, Seq("neighbor_id")),
+        Search.queries(t.embeddings))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
   }
@@ -145,37 +116,45 @@ object Ann {
       k: Int = 10,
       nCells: Int = 8,
       nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
-    val centroids = t.embeddings.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
-    val ranked = t.embeddings
-      .crossJoin(Route.small(centroids, nCells))
-      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(wAssign))
+    val ranked = Search.cellRanks(t.embeddings, "vec_id", "embedding",
+      Route.small(seedCentroids(t.embeddings, nCells), nCells))
     val allowed = t.documents.filter(col("lang") === lang)
       .select(col("doc_id").as("vec_id"))
     // Pre-filter UNDER the scoring projection: disallowed vectors leave
     // the plan while the cell scan streams, before any cosine runs.
-    val assigned = ranked.filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell"))
+    val assigned = Search.inCell(ranked)
       .join(allowed, Seq("vec_id"), "left_semi")
-    val queries = ranked.filter(col("vec_id") < 10 && col("arn") <= nProbe)
+    cellTopK(assigned.select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell")),
+      probeSet(ranked, nProbe), k)
+  }
+
+  /** The fixed first-`nCells` corpus vectors as (cent_id, c_emb) — the
+    * oracle-reproducible centroid seed of s3, s15 and d10.
+    */
+  private def seedCentroids(emb: DataFrame, nCells: Int): DataFrame =
+    emb.filter(col("vec_id") < nCells)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
+
+  /** The query set's `nProbe` best cells from a [[Search.cellRanks]] frame,
+    * as (query_id, q_emb, cell).
+    */
+  private def probeSet(ranked: DataFrame, nProbe: Int): DataFrame =
+    ranked.filter(Search.isQuery && col("arn") <= nProbe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cent_id").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned
-      .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell"))
-      .join(queries, Seq("cell"))
+
+  /** Cosine top-k of each query among the cells it probes: `cells` rows
+    * are (neighbor_id, n_emb, cell), `probes` rows (query_id, q_emb, cell).
+    * The IVF search of s3, s15 and [[VectorIndex]].
+    */
+  private[similarity] def cellTopK(cells: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    cells
+      .join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
-  }
 
   /** d5: embedding-cosine near-duplicate pairs above a threshold. Pair
     * generation is the exact baseline; at scale the same predicate runs
@@ -213,25 +192,16 @@ object Ann {
       dir: String,
       threshold: Double = 0.4,
       nCells: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val centroids = t.embeddings.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
     // One parquet file = one input split: spread the assignment scan.
     // Checkpoint eagerly: the self-join below consumes `assigned` twice,
     // and without materialization the O(N·nCells) assignment scan runs
     // twice unless exchange reuse happens to fire — at scale that doubles
     // the most expensive stage. Blocks are released between queries by
     // GraftSession.releaseCaches.
-    val assigned = Superstep.pin(t.embeddings.repartition(nPart)
-      .crossJoin(Route.small(centroids, nCells))
-      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell")))
+    val assigned = Superstep.pin(Search.inCell(Search.cellRanks(t.embeddings.repartition(nPart),
+      "vec_id", "embedding", Route.small(seedCentroids(t.embeddings, nCells), nCells))))
     val dups = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
@@ -268,7 +238,6 @@ object Ann {
       dir: String,
       k: Int = 10,
       nPlanes: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // nPlanes = 0 → derive from a corpus-count probe (parquet metadata,
@@ -288,22 +257,14 @@ object Ann {
       }
     val planes = t.embeddings.filter(col("vec_id") < planesN)
       .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"))
-    val bucketed = Superstep.pin(t.embeddings.repartition(nPart)
-      .crossJoin(Route.small(planes, planesN))
-      .groupBy(col("vec_id"))
-      .agg(
-        first(col("embedding")).as("emb"),
-        sum(when(cosine(col("embedding"), col("h_emb")) >= 0,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(h_id AS INT))")).otherwise(0L)).as("bucket")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    val bucketed = Superstep.pin(Search.signatures(t.embeddings.repartition(nPart),
+      Route.small(planes, planesN), Seq("vec_id"), first(col("embedding")).as("emb")))
     bucketed.as("a")
       .join(bucketed.as("b"), col("a.bucket") === col("b.bucket"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
         cosine(col("a.emb"), col("b.emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
   }
@@ -314,17 +275,11 @@ object Ann {
       k: Int = 10,
       nPlanes: Int = 4,
       multiProbe: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val planes = t.embeddings.filter(col("vec_id") < nPlanes)
       .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"))
-    val bucketed = t.embeddings
-      .crossJoin(Route.small(planes, nPlanes))
-      .groupBy(col("vec_id"))
-      .agg(
-        first(col("embedding")).as("emb"),
-        sum(when(cosine(col("embedding"), col("h_emb")) >= 0,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(h_id AS INT))")).otherwise(0L)).as("bucket"))
+    val bucketed = Search.signatures(t.embeddings, Route.small(planes, nPlanes),
+      Seq("vec_id"), first(col("embedding")).as("emb"))
     // Multi-probe: each query additionally probes every hamming-1
     // neighbor bucket (one signature bit flipped). Near-misses — a
     // neighbor on the far side of exactly one hyperplane — become
@@ -333,21 +288,15 @@ object Ann {
     // vector lives in exactly one bucket, so no candidate dedup is
     // needed. This is the standard recall lever at scale: recall grows
     // with probe count, while the search stays a bucket equijoin.
-    val probes =
-      if (!multiProbe) Seq(col("bucket"))
-      else col("bucket") +: (0 until nPlanes).map(j => col("bucket").bitwiseXOR(lit(1L << j)))
-    val queries = bucketed.filter(col("vec_id") < 10)
+    val queries = bucketed.filter(Search.isQuery)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        explode(array(probes: _*)).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
+        Search.probeBuckets(nPlanes, multiProbe).as("bucket"))
     bucketed
       .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("bucket"))
       .join(queries, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
   }
@@ -387,42 +336,28 @@ object Ann {
       nTables: Int = 4,
       seed: Long = 42L,
       multiProbe: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val emb = t.embeddings
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val allPlanes = (0 until nTables)
       .map(tb => trainedHyperplanes(spark, dim, nPlanes, seed + tb).withColumn("tbl", lit(tb)))
       .reduce(_.unionByName(_))
-    val bucketed = emb
-      .crossJoin(allPlanes)
-      .groupBy(col("vec_id"), col("tbl"))
-      .agg(
-        sum(when(cosine(col("embedding"), col("h_emb")) >= 0,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(h_id AS INT))")).otherwise(0L)).as("bucket"))
-    val probes =
-      if (!multiProbe) Seq(col("bucket"))
-      else col("bucket") +: (0 until nPlanes).map(j => col("bucket").bitwiseXOR(lit(1L << j)))
-    val queryBuckets = bucketed.filter(col("vec_id") < 10)
+    val bucketed = Search.signatures(emb, allPlanes, Seq("vec_id", "tbl"))
+    val queryBuckets = bucketed.filter(Search.isQuery)
       .select(col("vec_id").as("query_id"), col("tbl"),
-        explode(array(probes: _*)).as("bucket"))
+        Search.probeBuckets(nPlanes, multiProbe).as("bucket"))
     val candidates = bucketed
       .select(col("vec_id").as("neighbor_id"), col("tbl"), col("bucket"))
       .join(queryBuckets, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .distinct()
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
     candidates
-      .join(Route.small(queries, 10), Seq("query_id"))
+      .join(Route.small(Search.queries(emb), Search.NumQueries), Seq("query_id"))
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")),
         Seq("neighbor_id"))
       .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(Search.topK(col("sim").desc, k))
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
   }
@@ -455,40 +390,23 @@ object Ann {
       nCells: Int,
       iters: Int,
       sampleCap: Int = Cluster.TrainCap): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = emb.sparkSession
-    // Lloyd rounds refine over a deterministic bounded sample (the
-    // trainExact/trainCodebooks discipline): one TakeOrdered pass selects
-    // it, each round then scans O(sample). Init stays the first nCells
-    // CORPUS vectors, so the seed is cap-independent.
-    val trainSet = Superstep.pin(emb
-      .orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))), col("vec_id"))
-      .limit(sampleCap))
-    var cents: Seq[(Long, Seq[Float])] = emb.filter(col("vec_id") < nCells)
-      .orderBy("vec_id")
+    // Lloyd rounds refine over the deterministic bounded sample: one
+    // TakeOrdered pass selects it, each round then scans O(sample). Init
+    // is the frame's first nCells vectors in vec_id order, so the seed is
+    // cap-independent and every cell starts with a vector.
+    val trainSet = Cluster.trainingSample(emb, sampleCap)
+    var cents: Seq[(Long, Seq[Float])] = emb.orderBy("vec_id")
+      .limit(nCells)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
       .toSeq
     for (_ <- 1 to iters) {
       val cdf = spark.createDataFrame(cents).toDF("cent_id", "c_emb")
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_sim").desc, col("cent_id").asc)
-      val assigned = trainSet
-        .crossJoin(Route.small(cdf, cents.size))
-        .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-        .withColumn("arn", row_number().over(wAssign))
-        .filter(col("arn") === 1)
-        .select(col("cent_id").as("cell"), col("embedding"))
-      val means = assigned
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(avg(col("v")).as("m"))
-        .collect()
-        .groupBy(_.getAs[Long]("cell"))
-        .map { case (cell, rows) =>
-          val vec = rows.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("m").toFloat).toSeq
-          cell -> vec
-        }
+      val means = Cluster.perCellDims(
+        Search.inCell(Search.cellRanks(trainSet, "vec_id", "embedding", Route.small(cdf, cents.size))),
+        "emb", avg(col("v")).as("m"))
+        .map { case (cell, rows) => cell -> rows.map(_.getAs[Double]("m").toFloat).toSeq }
       cents = cents.map { case (id, old) => (id, means.getOrElse(id, old)) }
     }
     spark.createDataFrame(cents).toDF("cent_id", "c_emb")
@@ -507,31 +425,14 @@ object Ann {
       nCells: Int = 8,
       iters: Int = 3,
       nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
     val centroids = trainedCentroids(spark, dir, nCells, iters)
       .select(col("cent_id"), col("c_emb"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
-    val ranked = t.embeddings
-      .crossJoin(centroids)
-      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(wAssign))
-    val assigned = ranked.filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell"))
-    val queries = ranked.filter(col("vec_id") < 10 && col("arn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cent_id").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned
-      .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell"))
-      .join(queries, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    val ranked = Search.cellRanks(t.embeddings, "vec_id", "embedding", centroids)
+    cellTopK(
+      Search.inCell(ranked)
+        .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell")),
+      probeSet(ranked, nProbe), k)
   }
 
   /** s3: IVF-style ANN — assign every vector to its nearest of `nCells`
@@ -542,31 +443,13 @@ object Ann {
     * fixed ones — assignment stays a broadcast scan.
     */
   def s3CentroidIvf(spark: SparkSession, dir: String, k: Int = 10, nCells: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = Tables(spark, dir)
-    val centroids = t.embeddings.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
-    val assigned = t.embeddings
-      .crossJoin(Route.small(centroids, nCells))
-      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell"))
-    val queries = assigned.filter(col("vec_id") < 10)
+    val assigned = Search.inCell(Search.cellRanks(t.embeddings, "vec_id", "embedding",
+      Route.small(seedCentroids(t.embeddings, nCells), nCells)))
+    val queries = assigned.filter(Search.isQuery)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned
-      .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell"))
-      .join(queries, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    cellTopK(assigned.select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell")),
+      queries, k)
   }
 
   /** s9: PROBE-ROUTED ANN — the q15/q20 adaptive boundary generalized to

@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Route, Tables}
+import graft.Tables
 
 /** Binary quantization (BQ) ANN — the 1-bit floor of the quantization
   * ladder the suite now covers end to end (s1 exact → s16 SQ8 1 B/dim →
@@ -75,51 +75,18 @@ object Bq {
 
   /** Per-dimension midrange thresholds from one exact min/max pass. */
   private[graft] def midrange(emb: DataFrame): Seq[Double] =
-    emb.select(posexplode(col("embedding"))).toDF("d", "v")
-      .groupBy("d")
-      .agg(min(col("v").cast("double")).as("lo"), max(col("v").cast("double")).as("hi"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getDouble(1) + r.getDouble(2)) / 2.0).toSeq
+    Search.dimBounds(emb).map { case (lo, hi) => (lo + hi) / 2.0 }
 
-  /** s17: binary-quantized top-k for the bounded query set (vec_id < 10)
-    * — 1-bit sign codes, integer Hamming shortlist, exact cosine refine.
+  /** s17: binary-quantized top-k for the bounded query set — 1-bit sign
+    * codes, integer Hamming shortlist, exact cosine refine
+    * ([[Search.codeShortlistRefine]]).
     */
   def s17BinarySearch(
       spark: SparkSession,
       dir: String,
       k: Int = 10,
       shortlistK: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val t = Tables(spark, dir)
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val mid = midrange(t.embeddings)
-    val codes = t.embeddings.repartition(nPart)
-      .select(col("vec_id"), bqCodes(col("embedding"), mid).as("codes"))
-    val qCodes = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("codes").as("q_codes"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    val shortlist = codes
-      .select(col("vec_id").as("neighbor_id"), col("codes").as("n_codes"))
-      .crossJoin(Route.small(qCodes, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist",
-        org.apache.spark.sql.graft.VectorExpressions
-          .intSqDistNative(col("q_codes"), col("n_codes")))
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= shortlistK)
-      .select("query_id", "neighbor_id")
-    val qEmb = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val wFinal = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    shortlist
-      .join(t.embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")),
-        Seq("neighbor_id"))
-      .join(Route.small(qEmb, 10), Seq("query_id"))
-      .withColumn("sim", Ann.cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+    val emb = Tables(spark, dir).embeddings
+    Search.codeShortlistRefine(emb, bqCodes(col("embedding"), midrange(emb)), shortlistK, k)
   }
 }

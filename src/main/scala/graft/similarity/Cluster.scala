@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Superstep, Tables}
 
@@ -31,8 +31,8 @@ import graft.{Superstep, Tables}
   * Scale shape: assignment is a broadcast of the k×dim centroid table
   * against an embarrassingly-parallel corpus scan (no shuffle); the
   * update is one (cell, dimension) map-side-combined integer aggregate
-  * whose k·dim result is the only thing the driver ever holds — the same
-  * loop shape as [[Ann.trainedCentroidsOf]], exact instead of float.
+  * whose k·dim result is all that is collected ([[perCellDims]]).
+  * [[Pq]] trains each subspace codebook with this loop.
   *
   * Reference behavior: the loader's region/type grouping of organizations
   * before pairwise derivation (mysql2neo4j.py:229-253) — grouping as a
@@ -40,22 +40,20 @@ import graft.{Superstep, Tables}
   */
 object Cluster {
 
-  /** Quantized integer embedding: floor(x·512 + 0.5) per element. */
-  private def quantize(emb: Column): Column =
-    transform(emb, x => floor(x.cast("double") * lit(512.0) + lit(0.5)).cast("long"))
-
   /** Exact squared distance |n·q − s|² over two long arrays (left fold,
-    * pure integer arithmetic).
+    * pure integer arithmetic); [[IvfPq]] ranks probe cells by it.
     */
-  private def scaledSqDist(n: Column, q: Column, s: Column): Column =
+  private[similarity] def scaledSqDist(n: Column, q: Column, s: Column): Column =
     aggregate(
       zip_with(q, s, (x, si) => (n * x - si) * (n * x - si)),
       lit(0L),
       (acc, v) => acc + v)
 
-  /** (vec_id, qv) quantized corpus. */
+  /** (vec_id, qv) quantized corpus: floor(x·512 + 0.5) per element. */
   def quantized(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    emb.select(col("vec_id"),
+      transform(col("embedding"), x => floor(x.cast("double") * lit(512.0) + lit(0.5)).cast("long"))
+        .as("qv"))
 
   /** Assign every vector to its nearest centroid: one codegen'd
     * allocation-free kernel
@@ -104,11 +102,13 @@ object Cluster {
     */
   val TrainCap: Int = 256
 
-  /** Deterministic bounded training sample over a quantized (vec_id, qv)
-    * frame: the `cap` rows FIRST in md5('ktrain:'||vec_id) order (ties on
-    * vec_id) — the t13/t28 content-hash-order discipline, so the sample
-    * is a pure function of the id set (reproducible on any engine, no
-    * RNG state) and uniformly spread regardless of id clustering. One
+  /** Deterministic bounded training sample over a frame keyed by `vec_id`
+    * (the quantized (vec_id, qv) corpus here, the float corpus in
+    * [[Ann.trainedCentroidsOf]]): the `cap` rows FIRST in
+    * md5('ktrain:'||vec_id) order (ties on vec_id) — the t13/t28
+    * content-hash-order discipline, so the sample is a pure function of
+    * the id set (reproducible on any engine, no RNG state) and uniformly
+    * spread regardless of id clustering. One
     * bounded TakeOrdered pass over the corpus; the checkpoint pins the
     * sample so every Lloyd iteration re-reads `cap` rows, never the
     * corpus.
@@ -137,7 +137,8 @@ object Cluster {
 
   /** [[trainExact]] with the quantized corpus and training sample
     * supplied by the caller — [[IvfPq]] shares one checkpointed corpus
-    * scan and one sample between the coarse and PQ tiers.
+    * scan and one sample between the coarse and PQ tiers, and [[Pq]]
+    * trains each subspace on the sliced frames.
     */
   def trainExactOn(
       q: DataFrame, sample: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Long], Long)] = {
@@ -147,25 +148,31 @@ object Cluster {
       .map(r => (r.getLong(0), r.getSeq[Long](1), 1L))
       .toSeq
     for (_ <- 1 to iters) {
-      val sums = assign(sample, cents)
-        .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getAs[Long]("cell"))
-        .map { case (cell, rows) =>
-          val sorted = rows.sortBy(_.getAs[Int]("pos"))
-          cell -> ((sorted.map(_.getAs[Long]("sv")).toSeq, sorted.head.getAs[Long]("n")))
-        }
+      val sums = perCellDims(assign(sample, cents), "qv",
+        sum(col("v")).as("sv"), count(lit(1)).as("n"))
       cents = cents.map { case (id, s0, n0) =>
         sums.get(id) match {
-          case Some((s, n)) => (id, s, n)
-          case None         => (id, s0, n0)
+          case Some(rows) => (id, rows.map(_.getAs[Long]("sv")), rows.head.getAs[Long]("n"))
+          case None       => (id, s0, n0)
         }
       }
     }
     cents
   }
+
+  /** The Lloyd update's aggregate: `aggs` over each element `v` of the
+    * array column `vec`, per (cell, dimension) of an assigned frame. The
+    * k×dim result is collected and returned per cell in dimension order.
+    */
+  private[similarity] def perCellDims(
+      assigned: DataFrame, vec: String, aggs: Column*): Map[Long, Seq[Row]] =
+    assigned
+      .select(col("cell"), posexplode(col(vec)).as(Seq("pos", "v")))
+      .groupBy("cell", "pos")
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .groupBy(_.getAs[Long]("cell"))
+      .map { case (cell, rows) => cell -> rows.sortBy(_.getAs[Int]("pos")).toSeq }
 
   /** Assignment against a FROZEN centroid state — the serving half of the
     * clustering loop (train batch-side, assign anywhere): a pure

@@ -55,9 +55,7 @@ object IvfPq {
     val centRows = queries.sparkSession
       .createDataFrame(cents.map { case (cell, s, n) => (cell, s, n) })
       .toDF("cell", "s", "n")
-    val distd = aggregate(
-      zip_with(col("qv"), col("s"), (x, si) => (col("n") * x - si) * (col("n") * x - si)),
-      lit(0L), (acc, v) => acc + v)
+    val distd = Cluster.scaledSqDist(col("n"), col("qv"), col("s"))
       .cast("double") / (col("n") * col("n")).cast("double")
     val w = Window.partitionBy(col("query_id")).orderBy(col("distd").asc, col("cell").asc)
     queries.crossJoin(Route.small(centRows, cents.size))
@@ -79,7 +77,6 @@ object IvfPq {
       nProbe: Int = 2,
       kCells: Int = 8,
       cellIters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables(spark, dir).embeddings
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
@@ -99,24 +96,15 @@ object IvfPq {
     // encode ⋈ assign join would cost two scans plus a shuffle. The
     // embedding column is never read past this point except by the
     // bounded refine join.
-    val codeCols = books.zipWithIndex.map { case (book, sub) =>
-      org.apache.spark.sql.graft.VectorExpressions.kmeansAssignExact(
-        slice(col("qv"), sub * Pq.SubDim + 1, Pq.SubDim),
-        book.map { case (code, c) => (code, c, 1L) })
-    }
     val corpus = q.select(
         col("vec_id").as("neighbor_id"),
         org.apache.spark.sql.graft.VectorExpressions
           .kmeansAssignExact(col("qv"), cents).as("cell"),
-        array(codeCols: _*).as("codes"))
+        Pq.codes(books).as("codes"))
       .repartition(nPart)
 
     // Query side: bounded set, each carrying its probe cells and ADC LUT.
-    val queryRows = q.filter(col("vec_id") < 10)
-      .orderBy("vec_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1)))
-      .toSeq
+    val queryRows = Pq.queryRows(q)
     val queries = spark.createDataFrame(queryRows).toDF("query_id", "qv")
     val probes = probeCells(queries, cents, nProbe)
       .collect()
@@ -129,34 +117,16 @@ object IvfPq {
     // ADC shortlist INSIDE probed cells: the join key is the cell — the
     // corpus-side scan of unprobed cells is pruned by the equijoin, and
     // each surviving row pays M lookups into the broadcast LUT.
-    val adc = (0 until Pq.M)
-      .map { sub =>
-        element_at(col("lut"),
-          (element_at(col("codes"), sub + 1) + lit(sub * Pq.K) + 1).cast("int"))
-      }
-      .reduce(_ + _)
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    val shortlist = corpus.join(probeLut, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", adc)
-      .withColumn("arn", row_number().over(wShort))
-      .filter(col("arn") <= Pq.Shortlist)
+    val shortlist = Pq.adcShortlist(corpus.join(probeLut, Seq("cell")))
       .select("query_id", "neighbor_id")
 
     // Exact integer refine over the bounded shortlist (s7's stage 2).
     val queryVecs = queries.select(col("query_id"), col("qv").as("qqv"))
-    val exactDist = aggregate(
-      zip_with(col("qqv"), col("nqv"), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
     shortlist
       .join(q.select(col("vec_id").as("neighbor_id"), col("qv").as("nqv")), Seq("neighbor_id"))
       .join(queryVecs, Seq("query_id"))
-      .withColumn("dist", exactDist)
-      .withColumn("rank", row_number().over(wTop).cast("int"))
-      .filter(col("rank") <= topK)
+      .withColumn("dist", Pq.exactDist)
+      .transform(Search.topK(col("dist").asc, topK))
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
       .orderBy("query_id", "rank")
   }

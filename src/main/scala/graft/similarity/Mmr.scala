@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Route
 
 /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein SIGIR'98)
   * diversified re-ranking — the serving-side step between retrieval and
@@ -86,22 +85,11 @@ object Mmr {
     */
   def s13MmrRerank(
       spark: SparkSession, dir: String, kCand: Int = 10, kSel: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val t = graft.Tables(spark, dir)
-    val queries = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val corpus = t.embeddings.repartition(nPart)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id").asc)
-    val cands = corpus
-      .crossJoin(Route.small(queries, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val cands = Search.pairs(Search.corpus(t.embeddings), Search.queries(t.embeddings))
       .withColumn("rel", Ann.cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kCand)
+      .transform(Search.topK(col("rel").desc, kCand))
       .select(col("query_id"), col("neighbor_id"), col("rel"), col("n_emb").as("emb"))
       .as[Cand]
     cands.groupByKey(_.query_id)

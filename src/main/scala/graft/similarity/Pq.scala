@@ -17,9 +17,11 @@ import graft.{Route, Superstep, Tables}
   * Everything is EXACT integer arithmetic end to end, extending the
   * [[Cluster]] discipline so any engine reproduces bit-identical codes:
   *
-  *   - subvectors are quantized to the same `floor(x·512 + 0.5)` grid;
-  *   - per-subspace codebooks train with the exact Lloyd loop (integer
-  *     SUM + count centroid state, D/n² single-division compares);
+  *   - vectors are quantized by [[Cluster.quantized]] (the
+  *     `floor(x·512 + 0.5)` grid) and sliced into subvectors;
+  *   - per-subspace codebooks train with [[Cluster.trainExactOn]], the
+  *     exact Lloyd loop (integer SUM + count centroid state, D/n²
+  *     single-division compares);
   *   - the trained (sum, n) centroids are then ROUNDED to integer
   *     vectors with one exact half-up division —
   *     `(2·(s + off·n) + n) div (2·n) − off` with `off` shifting the
@@ -57,13 +59,6 @@ object Pq {
   val Offset: Long = 512L // shifts rounding numerators non-negative
   val Shortlist: Int = 100 // ADC candidates refined per query
 
-  private def quantize(emb: Column): Column =
-    transform(emb, x => floor(x.cast("double") * lit(512.0) + lit(0.5)).cast("long"))
-
-  /** (vec_id, qv) quantized corpus — shared with [[Cluster]]. */
-  private def quantized(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-
   /** Half-up rounding of the exact centroid mean s/n to the integer grid,
     * in pure Long arithmetic: shift by `Offset` so the numerator is
     * non-negative (|s_i| ≤ 512·n by construction of the quantization
@@ -72,42 +67,16 @@ object Pq {
   private[graft] def roundCentroid(s: Seq[Long], n: Long): Seq[Long] =
     s.map(si => (2L * (si + Offset * n) + n) / (2L * n) - Offset)
 
-  /** Train one subspace's codebook with the exact Lloyd loop over the
-    * sliced TRAINING SAMPLE; init = the first K CORPUS vectors'
-    * subvectors (sample-independent seed). Only the k×SubDim integer sum
-    * matrix ever reaches the driver, and each refinement scans the
-    * bounded sample, not the corpus.
+  /** Train one subspace's codebook: [[Cluster.trainExactOn]] over the
+    * subspace slices of the corpus (init = the first K corpus vectors'
+    * subvectors, sample-independent) and of the training sample, with the
+    * trained (sum, n) centroids rounded to the integer grid.
     */
   private def trainSubspace(q: DataFrame, sample: DataFrame, sub: Int): Codebook = {
-    val sq = sample.select(col("vec_id"), slice(col("qv"), sub * SubDim + 1, SubDim).as("qv"))
-    var cents: Seq[(Long, Seq[Long], Long)] = q
-      .select(col("vec_id"), slice(col("qv"), sub * SubDim + 1, SubDim).as("qv"))
-      .filter(col("vec_id") < K)
-      .orderBy("vec_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1), 1L))
-      .toSeq
-    for (_ <- 1 to Iters) {
-      val assigned = sq.withColumn("cell",
-        org.apache.spark.sql.graft.VectorExpressions.kmeansAssignExact(col("qv"), cents))
-      val sums = assigned
-        .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getAs[Long]("cell"))
-        .map { case (cell, rows) =>
-          val sorted = rows.sortBy(_.getAs[Int]("pos"))
-          cell -> ((sorted.map(_.getAs[Long]("sv")).toSeq, sorted.head.getAs[Long]("n")))
-        }
-      cents = cents.map { case (id, s0, n0) =>
-        sums.get(id) match {
-          case Some((s, n)) => (id, s, n)
-          case None         => (id, s0, n0)
-        }
-      }
-    }
-    cents.map { case (code, s, n) => (code, roundCentroid(s, n)) }
+    def sliced(df: DataFrame): DataFrame =
+      df.select(col("vec_id"), slice(col("qv"), sub * SubDim + 1, SubDim).as("qv"))
+    Cluster.trainExactOn(sliced(q), sliced(sample), K, Iters)
+      .map { case (code, s, n) => (code, roundCentroid(s, n)) }
   }
 
   /** All M codebooks, trained independently per subspace. The ADC LUT is
@@ -119,7 +88,7 @@ object Pq {
     * than silently misaddress the LUT.
     */
   def trainCodebooks(emb: DataFrame, sampleCap: Int = Cluster.TrainCap): Seq[Codebook] = {
-    val q = quantized(emb)
+    val q = Cluster.quantized(emb)
     trainCodebooksOn(q, Cluster.trainingSample(q, sampleCap))
   }
 
@@ -145,19 +114,33 @@ object Pq {
     * output is (vec_id, codes[M]).
     */
   def encode(emb: DataFrame, books: Seq[Codebook]): DataFrame =
-    encodeQuantized(quantized(emb), books)
+    encodeQuantized(Cluster.quantized(emb), books)
 
   /** [[encode]] over an already-quantized (vec_id, qv) frame — callers
     * holding a checkpointed quantized corpus skip the re-scan.
     */
-  def encodeQuantized(q: DataFrame, books: Seq[Codebook]): DataFrame = {
-    val codeCols = books.zipWithIndex.map { case (book, sub) =>
+  def encodeQuantized(q: DataFrame, books: Seq[Codebook]): DataFrame =
+    q.select(col("vec_id"), codes(books).as("codes"))
+
+  /** The PQ code column over a quantized `qv` column: per subspace, the
+    * argmin code of the slice against the book's rounded centroids.
+    */
+  private[similarity] def codes(books: Seq[Codebook]): Column =
+    array(books.zipWithIndex.map { case (book, sub) =>
       org.apache.spark.sql.graft.VectorExpressions.kmeansAssignExact(
         slice(col("qv"), sub * SubDim + 1, SubDim),
         book.map { case (code, c) => (code, c, 1L) })
-    }
-    q.select(col("vec_id"), array(codeCols: _*).as("codes"))
-  }
+    }: _*)
+
+  /** The bounded query set of a quantized (vec_id, qv) frame, collected
+    * in vec_id order as (query_id, qv).
+    */
+  private[similarity] def queryRows(q: DataFrame): Seq[(Long, Seq[Long])] =
+    q.filter(Search.isQuery)
+      .orderBy("vec_id")
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1)))
+      .toSeq
 
   /** ADC lookup table for one query: flat m·k longs, entry
     * `sub·K + code` = squared distance between the query's subvector and
@@ -171,33 +154,32 @@ object Pq {
       }
     }
 
-  /** ADC shortlist: per query, the `Shortlist` best candidates by the
-    * pure-integer ADC sum over their codes (distance asc, neighbor id asc
-    * — a bounded WindowGroupLimit). Queries are collected once as a
-    * bounded m·k-long LUT each and broadcast; the corpus side streams
-    * codes only — the embedding column is never read here.
+  /** ADC shortlist: per query, the `Shortlist` best of its candidate rows
+    * (`codes` and the query's `lut` side by side) by the pure-integer ADC
+    * sum — M lookups into the broadcast m·k-long LUT, no embedding read —
+    * ranked by [[Search.topK]] (distance asc, neighbor id asc).
     */
-  private[similarity] def adcShortlist(
-      codes: DataFrame, books: Seq[Codebook], queryLuts: Seq[(Long, Seq[Long])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = codes.sparkSession
-    val queries = spark.createDataFrame(queryLuts).toDF("query_id", "lut")
-    val dist = (0 until M)
+  private[similarity] def adcShortlist(candidates: DataFrame): DataFrame = {
+    val adcDist = (0 until M)
       .map { sub =>
         element_at(col("lut"),
           (element_at(col("codes"), sub + 1) + lit(sub * K) + 1).cast("int"))
       }
       .reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    codes
-      .crossJoin(queries)
+    candidates
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", dist)
-      .withColumn("arn", row_number().over(w))
-      .filter(col("arn") <= Shortlist)
-      .select("query_id", "neighbor_id", "adc_dist")
+      .withColumn("adc_dist", adcDist)
+      .transform(Search.topK(col("adc_dist").asc, Shortlist))
   }
+
+  /** Exact integer squared distance between the query's `qqv` and the
+    * candidate's `nqv`, the refine stage's score.
+    */
+  private[similarity] def exactDist: Column =
+    aggregate(
+      zip_with(col("qqv"), col("nqv"), (x, y) => (x - y) * (x - y)),
+      lit(0L),
+      (acc, v) => acc + v)
 
   /** s7: PQ search with exact refinement — the FAISS IVFPQ-with-refine
     * shape. Stage 1 prunes the corpus to `Shortlist` candidates per query
@@ -210,38 +192,28 @@ object Pq {
     * Output distances are exact integers — bit-identical on any engine.
     */
   def s7PqSearch(spark: SparkSession, dir: String, topK: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables(spark, dir).embeddings
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // One checkpointed quantized scan feeds the sample selection, the
     // K-row init reads, the encode projection, and the refine join.
-    val q = Superstep.pin(quantized(emb))
+    val q = Superstep.pin(Cluster.quantized(emb))
     val books = trainCodebooksOn(q, Cluster.trainingSample(q))
-    val codes = encodeQuantized(q, books).repartition(nPart)
+    val coded = encodeQuantized(q, books).repartition(nPart)
       .select(col("vec_id").as("neighbor_id"), col("codes"))
-    val queryRows = q.filter(col("vec_id") < 10)
-      .orderBy("vec_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1)))
-      .toSeq
-    val shortlist = adcShortlist(
-      codes, books, queryRows.map { case (id, qv) => (id, adcLut(qv, books)) })
-    val queryVecs = spark.createDataFrame(queryRows).toDF("query_id", "qqv")
-    val exactDist = aggregate(
-      zip_with(col("qqv"), col("nqv"), (x, y) => (x - y) * (x - y)),
-      lit(0L),
-      (acc, v) => acc + v)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
+    val queries = queryRows(q)
+    val luts = spark.createDataFrame(queries.map { case (id, qv) => (id, adcLut(qv, books)) })
+      .toDF("query_id", "lut")
+    val shortlist = adcShortlist(coded.crossJoin(luts))
+      .select("query_id", "neighbor_id", "adc_dist")
+    val queryVecs = spark.createDataFrame(queries).toDF("query_id", "qqv")
     // The shortlist holds at most nq×Shortlist rows: sized by that bound,
     // it is the broadcast side when it fits; the quantized
     // corpus is scanned once and only candidate rows survive the join.
     q.select(col("vec_id").as("neighbor_id"), col("qv").as("nqv"))
-      .join(Route.small(shortlist, queryRows.size.toLong * Shortlist), Seq("neighbor_id"))
+      .join(Route.small(shortlist, queries.size.toLong * Shortlist), Seq("neighbor_id"))
       .join(queryVecs, Seq("query_id"))
       .withColumn("dist", exactDist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .transform(Search.topK(col("dist").asc, topK))
       .select("query_id", "rank", "neighbor_id", "dist")
       .orderBy("query_id", "rank")
   }

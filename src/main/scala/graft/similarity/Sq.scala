@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Route, Tables}
+import graft.Tables
 
 /** Scalar quantization (SQ8) ANN — the serving tier between brute force
   * (s1) and product quantization (s7): each dimension quantizes
@@ -57,55 +57,18 @@ object Sq {
     })
   }
 
-  /** s16: SQ8 top-k for the bounded query set (vec_id < 10) — integer
-    * symmetric shortlist over 1 B/dim codes, exact cosine refine.
+  /** s16: SQ8 top-k for the bounded query set — integer symmetric
+    * shortlist over 1 B/dim codes, exact cosine refine
+    * ([[Search.codeShortlistRefine]]).
     */
   def s16Sq8Search(
       spark: SparkSession,
       dir: String,
       k: Int = 10,
       shortlistK: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val t = Tables(spark, dir)
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Per-dimension exact corpus bounds: one pass, 64 rows out.
-    val bounds = t.embeddings
-      .select(posexplode(col("embedding")))
-      .toDF("d", "v")
-      .groupBy("d").agg(min(col("v").cast("double")).as("lo"), max(col("v").cast("double")).as("hi"))
-      .collect().sortBy(_.getInt(0))
-    val lo = bounds.map(_.getDouble(1)).toSeq
-    val hi = bounds.map(_.getDouble(2)).toSeq
-    val codes = t.embeddings.repartition(nPart)
-      .select(col("vec_id"), sq8Codes(col("embedding"), lo, hi).as("codes"))
-    val qCodes = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("codes").as("q_codes"))
-    // Integer shortlist: ties on id, bit-identical to the oracle.
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist2").asc, col("neighbor_id").asc)
-    val shortlist = codes
-      .select(col("vec_id").as("neighbor_id"), col("codes").as("n_codes"))
-      .crossJoin(Route.small(qCodes, 10))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist2",
-        org.apache.spark.sql.graft.VectorExpressions
-          .intSqDistNative(col("q_codes"), col("n_codes")))
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= shortlistK)
-      .select("query_id", "neighbor_id")
-    // Exact refine: only |queries|·shortlistK rows read the float vectors.
-    val qEmb = t.embeddings.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val wFinal = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    shortlist
-      .join(t.embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")),
-        Seq("neighbor_id"))
-      .join(Route.small(qEmb, 10), Seq("query_id"))
-      .withColumn("sim", Ann.cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+    val emb = Tables(spark, dir).embeddings
+    val (lo, hi) = Search.dimBounds(emb).unzip
+    Search.codeShortlistRefine(emb, sq8Codes(col("embedding"), lo, hi), shortlistK, k)
       .orderBy("query_id", "rank")
   }
 }

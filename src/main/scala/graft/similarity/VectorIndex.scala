@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.GraftInternals
 import org.apache.spark.sql.functions._
 
@@ -46,20 +45,11 @@ object VectorIndex {
   }
 
   /** The argmax-cell assignment of a vector batch against a centroid
-    * matrix — the ONE definition both [[build]] and [[append]] write
-    * through (and the spec replays), so the incremental path can never
-    * drift from the bulk one.
+    * matrix, which both [[build]] and [[append]] write through (and the
+    * spec replays), so the incremental path cannot drift from the bulk one.
     */
-  private[graft] def assignCells(embeddings: DataFrame, cdf: DataFrame): DataFrame = {
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
-    embeddings
-      .crossJoin(cdf)
-      .withColumn("c_sim", Ann.cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding").as("emb"), col("cent_id").as("cell"))
-  }
+  private[graft] def assignCells(embeddings: DataFrame, cdf: DataFrame): DataFrame =
+    Search.inCell(Search.cellRanks(embeddings, "vec_id", "embedding", cdf))
 
   /** Train deterministic spherical k-means centroids on `embeddings`
     * ((vec_id, embedding) rows) and persist centroids + the bucketed
@@ -245,26 +235,13 @@ object VectorIndex {
       k: Int,
       nProbe: Int,
       restrict: DataFrame => DataFrame): DataFrame = {
-    val cdf = centroids(spark, path)
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("c_sim").desc, col("cent_id").asc)
-    val probes = queries
-      .crossJoin(cdf)
-      .withColumn("c_sim", Ann.cosine(col("q_emb"), col("c_emb")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nProbe)
+    val probes = Search.cellRanks(queries, "query_id", "q_emb", centroids(spark, path))
+      .filter(col("arn") <= nProbe)
       .select(col("query_id"), col("q_emb"), col("cent_id").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    restrict(
-      cellTable(spark, path)
-        .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell")))
-      .join(probes, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", Ann.cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    Ann.cellTopK(
+      restrict(
+        cellTable(spark, path)
+          .select(col("vec_id").as("neighbor_id"), col("emb").as("n_emb"), col("cell"))),
+      probes, k)
   }
 }

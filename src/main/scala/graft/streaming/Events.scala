@@ -185,8 +185,8 @@ object Events {
     * reduces already-distinct rows with a plain count (a countDistinct
     * here would re-pay a two-phase distinct aggregate for nothing).
     * `hours_since` ≥ 0 by construction; exact integer hour buckets from
-    * the ns timestamp keep the matrix bit-stable. Plan verified in
-    * ExplainDump: one fact Exchange, cohorts via BroadcastExchange.
+    * the ns timestamp keep the matrix bit-stable. The physical plan has
+    * one fact Exchange, with the cohorts joined through a BroadcastExchange.
     */
   def e8RetentionCohorts(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events

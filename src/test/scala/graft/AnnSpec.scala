@@ -227,6 +227,40 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(postQ === preQ, "compaction changed query answers")
   }
 
+  test("vector index seeds nCells cells from a frame without ids 0..nCells-1") {
+    import org.apache.spark.sql.functions._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-vecidx-high").toString
+    val emb = Tables(spark, dir).embeddings.filter(col("vec_id") >= 100)
+    similarity.VectorIndex.build(spark, emb, s"$tmp/idx", nCells = 8)
+    // The seed is the frame's first 8 ids in vec_id order, one cell each.
+    val seed = emb.orderBy("vec_id").limit(8).collect().map(_.getLong(0)).toSeq
+    val cents = similarity.VectorIndex.centroids(spark, s"$tmp/idx")
+      .collect().map(_.getAs[Long]("cent_id")).sorted.toSeq
+    assert(cents === seed)
+    val queries = emb.filter(col("vec_id") < 110)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val got = similarity.VectorIndex.query(spark, queries, s"$tmp/idx").collect()
+    assert(got.nonEmpty)
+    assert(got.map(_.getAs[Long]("query_id")).toSet === (100L until 110L).toSet)
+  }
+
+  test("each similarity search step is written in one member of src/main/scala") {
+    // The ranking tie-break, the cosine cell window, the 512-grid
+    // quantizer, the Lloyd (cell, dimension) update and the hyperplane
+    // signature bit each have one definition the keys call.
+    val steps = Seq(
+      "per-query top-k tie-break" -> "col(\"neighbor_id\").asc",
+      "cosine cell window" -> "col(\"c_sim\").desc",
+      "512-grid quantizer" -> "lit(512.0)",
+      "Lloyd update" -> "groupBy(\"cell\", \"pos\")",
+      "hyperplane signature" -> "shiftleft(CAST(1 AS BIGINT)")
+    steps.foreach { case (step, text) =>
+      val members = MainSources.lines.filter(l => l.isCode && l.text.contains(text))
+        .map(l => l.fileName -> l.member).distinct
+      assert(members.size === 1, s"$step ($text) in ${members.mkString(", ")}")
+    }
+  }
+
   test("filtered query inside the IVF tier: pre-filter under the cell probe, post-filter starves") {
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft-vecidx-filt").toString

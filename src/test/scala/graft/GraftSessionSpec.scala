@@ -31,6 +31,21 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("RunOne and Verify refuse an unknown key or a bad reps count by name, before a session") {
+    // Each throws from its argument check; a session would be started
+    // only after it.
+    val e1 = intercept[IllegalArgumentException](RunOne.main(Array("no_such_key", "/nowhere")))
+    assert(e1.getMessage.contains("RunOne has unknown keys: no_such_key"), e1.getMessage)
+    Seq("0", "-1", "two", "1.5").foreach { v =>
+      val e = intercept[IllegalArgumentException](RunOne.main(Array("q1_pricing_agg", "/nowhere", v)))
+      assert(e.getMessage.contains("reps") && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    val e2 = intercept[IllegalArgumentException](
+      Verify.main(Array("/nowhere", "/nowhere", "q1_pricing_agg,no_such_key,zz")))
+    assert(e2.getMessage.contains("unknown keys: no_such_key,zz"), e2.getMessage)
+    SparkEntry.requireKnown(Seq("q1_pricing_agg", "s1_cosine_topk"), "known")
+  }
+
   test("memo: builds once per application; a new application evicts the old one's entries") {
     var builds = 0
     def build(): Int = { builds += 1; builds }
