@@ -632,7 +632,7 @@ object SparkEntry {
        |  FROM embeddings),
        |qtr AS (SELECT vec_id, qv FROM q
        |        ORDER BY md5('ktrain:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT $cap),
-       |c0 AS (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM q WHERE vec_id < 8),
+       |c0 AS (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM q ORDER BY vec_id LIMIT 8),
        |${assignCte("a1", "c0", "qtr")},
        |${updateCte("c1", "a1", "c0")},
        |${assignCte("a2", "c1", "qtr")},
@@ -762,7 +762,7 @@ object SparkEntry {
            |          FROM $cPrev LEFT JOIN ${name}u USING (cell))""".stripMargin
       s"""qs$s AS MATERIALIZED (SELECT vec_id, qv[$lo:$hi] AS qv FROM qz),
          |ts$s AS MATERIALIZED (SELECT vec_id, qv[$lo:$hi] AS qv FROM qztr),
-         |c0x$s AS MATERIALIZED (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM qs$s WHERE vec_id < $k),
+         |c0x$s AS MATERIALIZED (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM qs$s ORDER BY vec_id LIMIT $k),
          |${assignCte(s"a1x$s", s"c0x$s")},
          |${updateCte(s"c1x$s", s"a1x$s", s"c0x$s")},
          |${assignCte(s"a2x$s", s"c1x$s")},
@@ -2356,7 +2356,7 @@ object SparkEntry {
            |            COALESCE(${name}u.n, $cPrev.n) AS n
            |          FROM $cPrev LEFT JOIN ${name}u USING (cell))""".stripMargin
       s"""$pqCtes,
-         |cg0 AS MATERIALIZED (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM qz WHERE vec_id < 8),
+         |cg0 AS MATERIALIZED (SELECT vec_id AS cell, qv AS s, CAST(1 AS BIGINT) AS n FROM qz ORDER BY vec_id LIMIT 8),
          |${gAssign("ag1", "cg0", "qztr", "", "= 1")},
          |${gUpdate("cg1", "ag1", "cg0")},
          |${gAssign("ag2", "cg1", "qztr", "", "= 1")},

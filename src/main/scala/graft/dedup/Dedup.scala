@@ -105,9 +105,8 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 128,
       bands: Int = 32,
-      blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame =
-    verifiedPairs(spark, dir, threshold, numHashes, bands, blockThreshold, candFactor)
+    verifiedPairs(spark, dir, threshold, numHashes, bands, candFactor)
 
   /** Public face of the memoized pair set for downstream consumers that
     * want the default detection product without d3's terminal verify
@@ -134,12 +133,10 @@ object Dedup {
       threshold: Double,
       numHashes: Int,
       bands: Int,
-      blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame =
-    graft.GraftSession.memo(spark, ("verifiedPairs", dir, threshold, numHashes, bands,
-        blockThreshold, candFactor)) {
+    graft.GraftSession.memo(spark, ("verifiedPairs", dir, threshold, numHashes, bands, candFactor)) {
       graft.GraftSession.retainCheckpoint(verifiedPairsOf(Tables(spark, dir).documents,
-        threshold, numHashes, bands, blockThreshold, candFactor))
+        threshold, numHashes, bands, candFactor))
     }
 
   /** The d3 detection pipeline parametrized by its corpus: banded-LSH
@@ -154,7 +151,6 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 128,
       bands: Int = 32,
-      blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame = {
     val spark = source.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -204,17 +200,11 @@ object Dedup {
     // can't see. The explicit key repartition restores compute parallelism
     // for the verification stage (profiled: the whole verify ran in ONE
     // task without it).
-    // Size-triggered skew routing, same armed knob as d9/m6/g1: a band
-    // bucket at or above blockThreshold (a near-duplicated corpus slice
-    // all hashing to one band value) spreads over the salted blocked
-    // formulation instead of one reducer. grp is the EXACT
-    // (band_id, band_hash) struct, so candidate semantics are unchanged.
-    // The keyed table is materialized ONCE at its chosen band width: the
-    // routing consumes it in several plan branches (probe, small, big),
-    // and without the checkpoint each branch would re-run the banding
-    // over the corpus. 16 bytes/row of block storage vs k re-scans.
-    // grp packs the exact (band_id, band_hash) pair into one long —
-    // single-word join keys, identical candidate semantics.
+    // Candidates are the within-bucket pairs (`GraphOps.sameGroupPairs`);
+    // a hot band bucket (a near-duplicated corpus slice all hashing to one
+    // band value) is AQE's skew split to make. grp packs the exact
+    // (band_id, band_hash) pair into one long — single-word join keys,
+    // identical candidate semantics.
     def keyedAt(b: Int): DataFrame = bandedAt(b).select(
       (col("band_id").cast("long").multiply(lit(4294967296L))
         .plus(col("band_hash").cast("long").bitwiseAND(lit(0xFFFFFFFFL)))).as("grp"),
@@ -224,8 +214,7 @@ object Dedup {
     // the probe; an adversarial low-vocabulary corpus auto-widens toward
     // 16×8 before the candidate join can go quadratic.
     val keyed = autoWidenBands(keyedAt, bands, candFactor, numHashes)
-    val candidates = graft.operators.GraphOps
-      .sameGroupPairsSkewSafe(keyed, blockThreshold)
+    val candidates = graft.operators.GraphOps.sameGroupPairs(keyed)
       .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"))
       .distinct()
       .repartition(nPart, col("doc_id1"), col("doc_id2"))
@@ -491,15 +480,14 @@ object Dedup {
   def d9SimhashPairs(
       spark: SparkSession,
       dir: String,
-      maxHamming: Int = 15,
-      blockThreshold: Int = 100000): DataFrame = {
+      maxHamming: Int = 15): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fp = Tables(spark, dir).documents
       .filter(length(col("text")) >= 5)
       .repartition(nPart)
       .select(col("doc_id"),
         org.apache.spark.sql.graft.VectorExpressions.simhash60(col("text")).as("simhash"))
-    bandedHammingPairs(fp, "simhash", maxHamming, blockThreshold)
+    bandedHammingPairs(fp, "simhash", maxHamming)
   }
 
   /** The 4×15-bit band array of a 60-bit fingerprint — the single
@@ -531,8 +519,8 @@ object Dedup {
     * replication, a net win only when 2^w clears s with real margin. At
     * m12's radius 6 the shape is 7 sub-bands of ≥6 bits (gain ~s/2^w ≈
     * 0.11); at d9/m6's radius 15 it would be 16 sub-bands of 2 bits —
-    * 4× WORSE than not splitting, so those tiers stay on the salted
-    * path and their volume knob remains `blockThreshold` alone.
+    * 4× WORSE than not splitting, so those tiers pair their band buckets
+    * as they are.
     */
   private[graft] def subSplitViable(maxHamming: Int): Boolean = {
     val (s, w, _) = subBandShape(maxHamming)
@@ -568,15 +556,13 @@ object Dedup {
     *     split is adopted only if a re-probe of the split keys measures
     *     at least a 2× mass reduction (a true near-dup mega-cluster
     *     shrinks nothing — its pairs all verify — and reverts to the
-    *     salted path), and only at radii where refinement can win at all
-    *     ([[subSplitViable]]).
-    *  2. SKEW salting — bands whose population reaches `blockThreshold`
-    *     route through the salted blocked formulation
-    *     ([[graft.operators.GraphOps.sameGroupPairsSkewSafe]]), so one
-    *     pathological bucket spreads over s·(s+1)/2 tasks
-    *     instead of one reducer. Salting bounds TASK size, the router
-    *     bounds candidate VOLUME; an adopted split feeds its (smaller)
-    *     sub-buckets through the same salted stage.
+    *     direct band keys), and only at radii where refinement can win at
+    *     all ([[subSplitViable]]).
+    *  2. SKEW split — both pair stages are the plain within-group
+    *     self-join ([[graft.operators.GraphOps.sameGroupPairs]]), whose
+    *     skewed bucket partitions AQE splits. That bounds TASK size; the
+    *     router bounds candidate VOLUME, and an adopted split feeds its
+    *     (smaller) sub-buckets through the same join.
     *
     * The fingerprint rides inside the pair id (a struct), so
     * verification needs no join back to the corpus.
@@ -585,13 +571,14 @@ object Dedup {
       fp: DataFrame,
       fpCol: String,
       maxHamming: Int,
-      blockThreshold: Int,
       subSplit: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
-    // Materialize the fingerprints once (16 bytes/row): the skew routing
-    // consumes its input in several plan branches, and each would
-    // otherwise re-run the fingerprint kernel over the corpus.
-    val fpCp = Superstep.pin(fp.select(col("doc_id"), col(fpCol).as("fp")))
+    // Materialize the fingerprints once (16 bytes/row): the collapse
+    // route consumes them in several plan branches, and each would
+    // otherwise re-run the fingerprint kernel over the corpus. The pin job
+    // also estimates the distinct fingerprints, for the route below.
+    val (fpCp, Seq(approxDistinct)) = Superstep.pin(
+      fp.select(col("doc_id"), col(fpCol).as("fp")), approx_count_distinct(col("fp")))
     // The band/verify stage over any (doc_id, fp) set — shared by the
     // direct and collapsed routes; the sub-band router runs inside it.
     def bandStage(rows: DataFrame): DataFrame = {
@@ -604,15 +591,14 @@ object Dedup {
       val keyed =
         if (!subSplit || !subSplitViable(maxHamming)) keyed0
         else subSplitKeys(keyed0, maxHamming, candFactor)
-      graft.operators.GraphOps.sameGroupPairsSkewSafe(keyed, blockThreshold)
+      graft.operators.GraphOps.sameGroupPairs(keyed)
     }
     // Measure-then-route on the duplicate ratio: the exact-dup COLLAPSE
     // below pays two extra aggregates and two expansion joins, which a
     // corpus of (near-)unique fingerprints never earns back — one
-    // approximate-distinct probe decides (the routes answer identically
+    // approximate-distinct count decides (the routes answer identically
     // either way, so the estimator's ~2% error only moves the cost knee).
-    val st = fpCp.agg(count(lit(1)), approx_count_distinct(col("fp"))).head()
-    val (nRows, approxDistinct) = (st.getLong(0), st.getLong(1))
+    val nRows = Superstep.rows(fpCp)
     // The collapse pays when duplicate MASS is concentrated — Σ C(m,2)
     // grows with cluster size, and scattered 2-row dups save less than
     // the expansion joins cost. Average cluster size ≥ 2 (half the rows
@@ -651,12 +637,9 @@ object Dedup {
         .filter(col("hamming") <= maxHamming)
         .distinct()
       // Identical-fingerprint member pairs (hamming 0): a fp-keyed
-      // salted self-pairing — output-shaped work, no verify needed by
-      // definition.
+      // self-pairing — output-shaped work, no verify needed by definition.
       val intra = graft.operators.GraphOps
-        .sameGroupPairsSkewSafe(
-          fpCp.select(col("fp").as("grp"), col("doc_id").as("id")),
-          blockThreshold)
+        .sameGroupPairs(fpCp.select(col("fp").as("grp"), col("doc_id").as("id")))
         .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"),
           lit(0L).as("hamming"))
       // Cross-cluster expansion: each verified DISTINCT-fp pair fans out
@@ -683,7 +666,7 @@ object Dedup {
     * mass reduction. Returns a (grp, id) frame whose self-equijoin emits
     * a SUPERSET of exactly the qualifying pairs (dedup + hamming verify
     * downstream are unchanged); split keys live at ≥ 2^17, disjoint from
-    * the 17-bit direct band keys, so the union feeds one salted stage.
+    * the 17-bit direct band keys, so the union feeds one pair join.
     */
   private[graft] def subSplitKeys(keyed0: DataFrame, maxHamming: Int, candFactor: Long): DataFrame = {
     val k = Superstep.pin(keyed0)
@@ -702,8 +685,7 @@ object Dedup {
     // corpus' candidate budget: gsz ≥ √(2·candFactor·n).
     val gszCut = math.max(2L, math.ceil(math.sqrt(2.0 * candFactor * nItems)).toLong)
     // Within budget (or no single bucket dominates): the direct band
-    // keys, already checkpointed — the salted stage's own probe and its
-    // join branches reuse the same blocks.
+    // keys, already checkpointed.
     if (mass <= candFactor * nItems || maxSz < gszCut) k
     else {
       val (s, w, maxW) = subBandShape(maxHamming)
@@ -736,10 +718,6 @@ object Dedup {
     }
   }
 
-  /** The explode + grouped-vote reference formulation of d4, kept as the
-    * executable spec oracle for [[d4SimHash]]'s native expression: one md5
-    * per distinct gram, 60 codegen'd ±1 sum aggregates.
-    */
   /** d12: gram-containment near-dup pairs — the ASYMMETRIC relation the
     * Jaccard family misses: `containment(A→B) = |g(A)∩g(B)| / |g(A)|`
     * flags a short document quoted or templated inside a longer one even
@@ -807,8 +785,8 @@ object Dedup {
     * `len+1` per name; the join is an equijoin on the variant string, so
     * candidate volume is Σ block² over variant buckets — governed by how
     * many names share a deletion, not by the corpus². A pathological
-    * shared-prefix bucket routes through the same salted blocked-pairs
-    * escape hatch as d9/m6. Verification cost is candidates only, and
+    * shared-prefix bucket is a skewed join partition, which AQE splits
+    * as it does d9/m6's band buckets. Verification cost is candidates only, and
     * the O(len²) DP runs on strings already known to share `len-1`
     * characters.
     */
@@ -910,7 +888,7 @@ object Dedup {
     * newline-delimited corpus would chunk at paragraph boundaries through
     * the same plan) and the d3 machinery runs at chunk granularity:
     * one-pass native MinHash signatures per chunk, banded LSH candidates
-    * (with the shared salted skew escape, and a candidate-volume probe
+    * (the shared within-bucket pair join, and a candidate-volume probe
     * that auto-widens the bands when the corpus's background similarity
     * makes the default shape quadratic — see the routing note in the
     * body), exact char-5-gram Jaccard verification. Cross-document pairs only (intra-document repetition
@@ -965,18 +943,14 @@ object Dedup {
       s"band widths must divide numHashes=$numHashes: startBands=$startBands minBands=$minBands")
     var b = startBands
     var keyed = Superstep.pin(keyedAt(b))
-    def probe(k: DataFrame): (Long, Long) = {
-      val r = k.groupBy("grp").agg(count(lit(1)).as("gsz"))
-        .agg(
-          coalesce(sum(expr("gsz * (gsz - 1) DIV 2")), lit(0L)),
-          coalesce(sum(col("gsz")), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var (mass, rows) = probe(keyed)
+    def probe(k: DataFrame): Long =
+      k.groupBy("grp").agg(count(lit(1)).as("gsz"))
+        .agg(coalesce(sum(expr("gsz * (gsz - 1) DIV 2")), lit(0L)))
+        .head().getLong(0)
+    var mass = probe(keyed)
     // Items being banded is band-width-invariant; take it from the first
-    // probe so later iterations only re-measure the candidate mass.
-    val nItems = math.max(rows / math.max(b, 1), 1L)
+    // pin so later iterations only re-measure the candidate mass.
+    val nItems = math.max(Superstep.rows(keyed) / math.max(b, 1), 1L)
     while (mass > candFactor * nItems && b > minBands) {
       // The next width re-slices the stored signatures, not `keyed`.
       Superstep.release(keyed)
@@ -986,7 +960,7 @@ object Dedup {
       val next = math.max(b / 2, minBands)
       b = if (numHashes % next == 0) next else minBands
       keyed = Superstep.pin(keyedAt(b))
-      mass = probe(keyed)._1
+      mass = probe(keyed)
     }
     keyed
   }
@@ -998,7 +972,6 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 128,
       bands: Int = 32,
-      blockThreshold: Int = 100000,
       candFactor: Long = 20L): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val chunks = Superstep.pin(Tables(spark, dir).documents
@@ -1033,8 +1006,7 @@ object Dedup {
           col("cid").as("id"))
     }
     val keyed = autoWidenBands(keyedAt, bands, candFactor, numHashes)
-    val candidates = graft.operators.GraphOps
-      .sameGroupPairsSkewSafe(keyed, blockThreshold)
+    val candidates = graft.operators.GraphOps.sameGroupPairs(keyed)
       .select(col("id1").as("cid1"), col("id2").as("cid2"))
       .distinct()
       // cross-document only; packed ids keep doc order: cid1 < cid2 with
@@ -1156,6 +1128,10 @@ object Dedup {
         expr("array_join(transform(keep, p -> w[p - 1]), ' ')").as("clean_text"))
   }
 
+  /** The explode + grouped-vote reference formulation of d4, kept as the
+    * executable spec oracle for [[d4SimHash]]'s native expression: one md5
+    * per distinct gram, 60 codegen'd ±1 sum aggregates.
+    */
   def d4SimHashAgg(spark: SparkSession, dir: String): DataFrame = {
     val nBits = 60
     val exploded = Tables(spark, dir).documents

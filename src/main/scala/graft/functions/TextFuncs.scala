@@ -238,8 +238,8 @@ object TextFuncs {
     * across runs, engines and cluster sizes — the property a corpus
     * rebuild needs). This is the downsampling half of corpus balancing:
     * over-represented strata are truncated, small strata pass whole. One
-    * window rank per stratum; the shuffle key is the stratum, so skew
-    * routing (salting) applies unchanged if one language dominates.
+    * window rank per stratum; the shuffle key is the stratum, so one
+    * dominant language lands its whole stratum in one task.
     */
   def t13StratifiedSample(spark: SparkSession, dir: String, cap: Int = 50): DataFrame =
     stratifiedSampleCore(Tables(spark, dir).documents, cap)

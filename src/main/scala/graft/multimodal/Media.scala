@@ -179,26 +179,18 @@ object Media {
     * `bit_count(xor)` verification, the same never-all-pairs scale shape
     * as the text-side d9. Candidate volume is governed by band
     * cardinality; perceptual bands are less uniform than SimHash's (block
-    * means of similar media correlate), so bands at or above
-    * `blockThreshold` automatically route through the salted blocked
-    * formulation (same knob as g1/d9 — see
+    * means of similar media correlate), so a hot band bucket is a skewed
+    * join partition, which AQE splits as it does g1/d9's (see
     * [[graft.dedup.Dedup.bandedHammingPairs]]).
     */
-  def m6PhashPairs(
-      spark: SparkSession,
-      dir: String,
-      maxHamming: Int = 15,
-      blockThreshold: Int = 100000): DataFrame = {
+  def m6PhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 15): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fp = Tables(spark, dir).documents
       .repartition(nPart)
       .select(col("doc_id"),
         org.apache.spark.sql.graft.VectorExpressions
           .blockAvgHash60(payload(col("doc_id"), col("text"))).as("phash"))
-    // Shared pairing stage with d9 — incl. the size-triggered salted
-    // routing for oversized perceptual bands (the skew knob the previous
-    // revision only documented).
-    graft.dedup.Dedup.bandedHammingPairs(fp, "phash", maxHamming, blockThreshold)
+    graft.dedup.Dedup.bandedHammingPairs(fp, "phash", maxHamming)
   }
 
   /** m7: media dedup RESOLUTION — d6's detect→cluster→resolve applied to
@@ -222,8 +214,8 @@ object Media {
     * re-captioned images must not merge distinct records.
     *
     * Scale shape: candidates come from the UNION of the two banded tiers
-    * — each already a band equijoin with the salted skew escape (m6's
-    * perceptual bands ∪ d9's SimHash bands), never all-pairs — then one
+    * — each already a band equijoin (m6's perceptual bands ∪ d9's
+    * SimHash bands), never all-pairs — then one
     * equijoin back to the two fingerprint tables (8 bytes per doc per
     * tier) verifies BOTH hamming predicates. Verified pairs go through
     * d6's resolve tail ([[graft.dedup.Dedup.resolveKeepMin]]); each
@@ -306,11 +298,11 @@ object Media {
       .join(existing.select(col("pl"), col("doc_id").as("ex_id")), Seq("pl"))
       .groupBy("doc_id")
       .agg(min(col("ex_id")).as("exact_dup_of"))
-    // Shared 4×15-bit banding layout (Dedup.bands15). NOTE: unlike the
-    // symmetric m6/d9 pair stage there is no salted skew escape here —
-    // the probe is asymmetric (incoming × existing per band), so a hot
-    // band costs |incoming∩band|·|existing∩band|, bounded by the incoming
-    // batch size per band; the same posture as the text-side d7.
+    // Shared 4×15-bit banding layout (Dedup.bands15). Unlike the
+    // symmetric m6/d9 pair stage the probe is asymmetric (incoming ×
+    // existing per band), so a hot band costs |incoming∩band|·|existing∩band|,
+    // bounded by the incoming batch size per band; the same posture as
+    // the text-side d7.
     def banded(df: DataFrame, idAs: String): DataFrame = df
       .select(col("doc_id").as(idAs),
         org.apache.spark.sql.graft.VectorExpressions
@@ -587,8 +579,8 @@ object Media {
     * `BlockAvgHash60` per frame SLICE (the codegen'd kernel runs on the
     * binary substring — no frame bytes ever leave their row before the
     * fingerprint), frame ids packed `doc_id·2²⁰ + frame_no` so the shared
-    * banded pairing stage ([[graft.dedup.Dedup.bandedHammingPairs]],
-    * salted-skew escape included) moves 8-byte keys, then cross-MEDIA
+    * banded pairing stage ([[graft.dedup.Dedup.bandedHammingPairs]])
+    * moves 8-byte keys, then cross-MEDIA
     * pairs only (intra-payload repetition is the byte-level analog of
     * t14's domain). Fan-out is n_bytes/stride frames per payload —
     * linear in payload volume, the m2 bound.
@@ -598,13 +590,12 @@ object Media {
       dir: String,
       frameBytes: Int = 64,
       strideBytes: Int = 256,
-      maxHamming: Int = 6,
-      blockThreshold: Int = 100000): DataFrame = {
+      maxHamming: Int = 6): DataFrame = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val media = Tables(spark, dir).documents
       .repartition(nPart)
       .select(col("doc_id"), payload(col("doc_id"), col("text")).as("payload"))
-    frameNearDupOf(media, frameBytes, strideBytes, maxHamming, blockThreshold)
+    frameNearDupOf(media, frameBytes, strideBytes, maxHamming)
   }
 
   /** The frame pipeline over an arbitrary (doc_id, payload) frame —
@@ -616,7 +607,6 @@ object Media {
       frameBytes: Int = 64,
       strideBytes: Int = 256,
       maxHamming: Int = 6,
-      blockThreshold: Int = 100000,
       subSplit: Boolean = true,
       candFactor: Long = 20L): DataFrame = {
     val frames = media
@@ -632,8 +622,7 @@ object Media {
         org.apache.spark.sql.graft.VectorExpressions
           .blockAvgHash60(expr(s"substring(payload, col + 1, $frameBytes)"))
           .as("phash"))
-    graft.dedup.Dedup.bandedHammingPairs(frames, "phash", maxHamming, blockThreshold,
-        subSplit, candFactor)
+    graft.dedup.Dedup.bandedHammingPairs(frames, "phash", maxHamming, subSplit, candFactor)
       .select(
         expr("doc_id1 DIV 1048576").as("media_id1"),
         pmod(col("doc_id1"), lit(1048576L)).as("frame1"),

@@ -19,92 +19,49 @@ object GraphOps {
 
   /** g1: all-pairs within a group with id1 < id2 dedup — SAME_HOMETOWN
     * (birth_place → nation as the grouping attribute).
-    * Scale note: group-keyed self-equijoin; the shuffle key is the group
-    * attribute and output is bounded by sum(|group|^2); pathological groups
-    * would be capped/salted upstream.
+    * Scale note: group-keyed self-equijoin ([[sameGroupPairs]]); the
+    * shuffle key is the group attribute and output is bounded by
+    * sum(|group|^2).
     */
-  def g1SameGroupPairs(
-      spark: SparkSession,
-      dir: String,
-      blockThreshold: Int = 100000): DataFrame = {
+  def g1SameGroupPairs(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     // Self-join on the compact int key; the group's display name is
     // broadcast-joined onto the (much larger) pair set afterwards, so the
-    // pair shuffle carries three ints instead of strings. Groups larger
-    // than `blockThreshold` are routed through the blocked (salted)
-    // formulation automatically — the production skew knob (the
-    // reference's answer was to hard-exclude its known mega-hub,
-    // mysql2neo4j.py:265; size-triggered blocking handles any hub without
-    // a denylist).
+    // pair shuffle carries three ints instead of strings. A hub group
+    // (the reference hard-excludes its known mega-hub, mysql2neo4j.py:265)
+    // needs no denylist: AQE splits its skewed join partition.
     val c = t.customer.select(col("c_nationkey").as("grp"), col("c_custkey").as("id"))
     // No terminal sort: the output is the quadratic pair set itself — a
     // global order over it would dominate the whole job at scale (sf1: a
     // total sort of ~450 M rows appended to an output-bound operator).
     // Deterministic ordering for verification is applied by Verify at
     // write time; production consumers get the unsorted pair stream.
-    sameGroupPairsSkewSafe(c, blockThreshold)
+    sameGroupPairs(c)
       .join(t.nation.select(col("n_nationkey").as("grp"), col("n_name")), Seq("grp"))
       .select(col("n_name").as("nation_name"),
         col("id1").as("custkey1"), col("id2").as("custkey2"))
   }
 
-  /** Group-size-triggered skew routing for within-group pair generation:
-    * an exact max-group-size probe picks the plan — below `blockThreshold`
-    * everywhere, the plain direct self-equijoin (zero overhead); any group
-    * at or above it, the split formulation where big groups take
-    * [[blockedSameGroupPairs]] and spread over s·(s+1)/2 tasks instead
-    * of one reducer. Output is exactly the (grp, id1 < id2) pair set of
-    * the direct formulation (spec-checked with the threshold forced to 1).
+  /** Within-group pairs: the `(grp, id)` self-equijoin with `id1 < id2`,
+    * one row `(grp, id1, id2)` per unordered pair of ids sharing a group.
+    * `df` must have columns (grp, id).
     *
-    * The salt width s is DERIVED FROM THE PROBE: the same aggregate that
-    * decides whether to route also measures how big the biggest group
-    * is, and the salt width is sized
-    * so one block holds ~`blockThreshold` rows — each block-pair task
-    * then does at most ~blockThreshold² comparisons, the exact work
-    * bound that defined "too big" in the first place. A fixed width
-    * can't do that: 16 blocks tame a 10⁶-row hub (62k rows/block) but
-    * leave a 10⁸-row hub at 6M rows per block — the q16-probe→knob
-    * derivation replaces the constant with the measurement. Clamped to
-    * [2, 256] (256 blocks ≈ 33k tasks for one group — past that the
-    * task count, not the per-task size, is the limit).
-    *
-    * `df` must have columns (grp, id); expensive `df` pipelines should be
-    * checkpointed by the caller so the probe action and the join branches
-    * share one materialization.
+    * A hot group is left to AQE's skew join (on in every
+    * [[graft.GraftSession]]), which splits a join partition by its
+    * shuffle BYTES at Spark's `spark.sql.adaptive.skewJoin.*` thresholds
+    * (256 MB and 5× the median partition by default), not by a group's
+    * row count. So a hub whose input stays below those thresholds pairs
+    * in one task, and its output is quadratic either way: the output is
+    * the semantics. Those session settings are the one place to move the
+    * split point. Shrinking the candidate MASS is a different job, done
+    * before the join by the callers' volume routers (d3/d15's
+    * `autoWidenBands`, the hamming tiers' `subSplitKeys` and exact-dup
+    * collapse), which AQE cannot do.
     */
-  def sameGroupPairsSkewSafe(df: DataFrame, blockThreshold: Int): DataFrame = {
-    // Exact size probe first (one tiny aggregate action — the g4
-    // measure-then-route pattern): when NO group reaches the threshold,
-    // which is the overwhelmingly common case, emit the plain direct
-    // self-equijoin with ZERO routing overhead. The probe is why callers
-    // with expensive inputs should checkpoint `df` first — the action
-    // and the join branches then all read the same blocks.
-    val maxSz = df.groupBy("grp").agg(count(lit(1)).as("gsz"))
-      .agg(max(col("gsz"))).head.getLong(0)
-    if (maxSz < blockThreshold) {
-      df.select(col("grp"), col("id").as("id1"))
-        .join(df.select(col("grp"), col("id").as("id2")), Seq("grp"))
-        .filter(col("id1") < col("id2"))
-    } else {
-      val blocks = derivedBlocks(maxSz, blockThreshold)
-      val sizes = df.groupBy("grp").agg(count(lit(1)).as("gsz"))
-      val tagged = df.join(sizes, Seq("grp"))
-      val small = tagged.filter(col("gsz") < blockThreshold).select("grp", "id")
-      val big   = tagged.filter(col("gsz") >= blockThreshold).select("grp", "id")
-      val smallPairs = small.select(col("grp"), col("id").as("id1"))
-        .join(small.select(col("grp"), col("id").as("id2")), Seq("grp"))
-        .filter(col("id1") < col("id2"))
-      smallPairs.unionByName(blockedSameGroupPairs(big, blocks))
-    }
-  }
-
-  /** Probe→knob derivation for the salt width: one block ≈
-    * `blockThreshold` rows of the measured biggest group, clamped to
-    * [2, 256]. Pure so the spec pins the measurement→knob map directly.
-    */
-  private[graft] def derivedBlocks(maxSz: Long, blockThreshold: Int): Int =
-    math.min(256L, math.max(2L,
-      (maxSz + blockThreshold - 1) / math.max(blockThreshold, 1))).toInt
+  def sameGroupPairs(df: DataFrame): DataFrame =
+    df.select(col("grp"), col("id").as("id1"))
+      .join(df.select(col("grp"), col("id").as("id2")), Seq("grp"))
+      .filter(col("id1") < col("id2"))
 
   /** g1b: current-relationship pairs — the COLLEAGUES no-interval
     * WORKS_FOR branch (mysql2neo4j.py:381-399): people *currently* at the
@@ -140,36 +97,6 @@ object GraphOps {
       .filter(col("suppkey1") < col("suppkey2"))
       .select(col("workplace"), col("suppkey1"), col("position1"),
         col("suppkey2"), col("position2"), lit("till now").as("overlap_period"))
-  }
-
-  /** Skew-safe variant of within-group pair generation: block each group
-    * into `nBlocks` salt buckets by id hash and enumerate the
-    * (blockA ≤ blockB) block pairs, so one pathological group (a mega-city
-    * birth_place, a giant employer) spreads over nBlocks·(nBlocks+1)/2
-    * tasks instead of landing on a single reducer. Emits exactly the same
-    * (grp, id1 < id2) pair set as the direct self-join — the equivalence
-    * spec checks it against [[g1SameGroupPairs]]'s plain formulation.
-    *
-    * `df` must have columns (grp, id).
-    */
-  def blockedSameGroupPairs(df: DataFrame, nBlocks: Int): DataFrame = {
-    val withBlock = df.select(col("grp"), col("id"), pmod(hash(col("id")), lit(nBlocks)).as("blk"))
-    // Enumerate ordered block pairs (bA, bB) with bA <= bB; within equal
-    // blocks the id1 < id2 filter dedups, across blocks the (bA, bB)
-    // assignment is already unordered-unique.
-    val blockPairs = (0 until nBlocks).flatMap(a => (a until nBlocks).map(b => (a, b)))
-    val bp = df.sparkSession.createDataFrame(blockPairs).toDF("blkA", "blkB")
-    val left = withBlock.select(col("grp"), col("id").as("id1"), col("blk").as("blkA"))
-    val right = withBlock.select(col("grp"), col("id").as("id2"), col("blk").as("blkB"))
-    left
-      .join(bp, Seq("blkA"))
-      .join(right, Seq("grp", "blkB"))
-      .filter(
-        (col("blkA") < col("blkB") && col("id1") =!= col("id2")) ||
-          (col("blkA") === col("blkB") && col("id1") < col("id2")))
-      .select(col("grp"),
-        least(col("id1"), col("id2")).as("id1"),
-        greatest(col("id1"), col("id2")).as("id2"))
   }
 
   /** g2: interval-overlap pairs — COLLEAGUES/SCHOOLMATES semantics
@@ -743,34 +670,28 @@ object GraphOps {
     * Bipartite Networks", KDD — their wedge-side choice argmin Σ deg²).
     *
     * The residual worst case — ONE mega-degree center (a customer on
-    * 10⁵ suppliers yields ~5×10⁹ wedges in a single key group) — is
-    * handled EXACTLY by routing wedge generation through
-    * [[sameGroupPairsSkewSafe]]: wedges ARE within-group pairs with
-    * (grp = center, id = supplier), so the same probe-then-route
-    * machinery applies verbatim — below `blockThreshold` everywhere the
-    * plain c-keyed self-equijoin runs with zero overhead; any hot center
-    * spreads over s·(s+1)/2 salted tasks. Counts are
-    * bit-identical either way (the forced-routing spec pins it). The
-    * wedge MASS is semantic — for a lossy cap there is `centerCap`
+    * 10⁵ suppliers yields ~5×10⁹ wedges in a single key group) — stays
+    * exact: wedges ARE within-group pairs with (grp = center, id =
+    * supplier), generated by [[sameGroupPairs]], whose c-keyed join
+    * partition AQE splits when it is skewed. The wedge MASS is semantic —
+    * for a lossy cap there is `centerCap`
     * (the g13 `hubCutoff` lever / GDS degreeCutoff analog): when set,
     * centers with degree > cap are anti-joined out of wedge generation
     * entirely, undercounting butterflies that ride only on mega-hubs —
     * the documented exactness trade, OFF on the keyed/oracle path.
-    * Shuffles: the wedge stage keys by center (salted when routed), the
-    * count by supplier pair, the fold by supplier — never a 4-tuple
-    * anywhere.
+    * Shuffles: the wedge stage keys by center, the count by supplier
+    * pair, the fold by supplier — never a 4-tuple anywhere.
     */
   def g19ButterflyCount(
       spark: SparkSession,
       dir: String,
-      blockThreshold: Int = 10000,
       centerCap: Option[Int] = None): DataFrame = {
     val t = Tables(spark, dir)
     val edges = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .distinct()
-    butterflyCount(edges, blockThreshold, centerCap)
+    butterflyCount(edges, centerCap)
       .join(t.supplier.select(col("s_suppkey").as("suppkey")), Seq("suppkey"), "right")
       .select(col("suppkey"), coalesce(col("n_butterflies"), lit(0L)).as("n_butterflies"))
   }
@@ -780,24 +701,20 @@ object GraphOps {
     * `s` nodes in ≥1 butterfly (callers zero-fill against their vertex
     * table). Factored out for crafted-graph specs.
     */
-  def butterflyCount(
-      edges: DataFrame,
-      blockThreshold: Int,
-      centerCap: Option[Int] = None): DataFrame = {
+  def butterflyCount(edges: DataFrame, centerCap: Option[Int] = None): DataFrame = {
     val kept = centerCap.fold(edges) { cap =>
       val hot = edges.groupBy("c").agg(count(lit(1)).as("cd"))
         .filter(col("cd") > cap).select("c")
       edges.join(hot, Seq("c"), "left_anti")
     }
-    // Checkpointed + pre-partitioned on the center key so the routing
-    // probe inside sameGroupPairsSkewSafe and the join branches all read
-    // one materialization, exchange-free on the common (direct) path.
+    // Pinned so both sides of the wedge self-join read one stored edge
+    // list and plan with its measured size, not the estimate of the
+    // join-and-distinct that built it.
     // (Pair generation via the c-keyed self-equijoin, not the g11 in-row
     // HOF combination — measured 2.4× faster at sf0.1, where hot centers
     // carry thousands of pairs vs g11's short per-item mention lists.)
-    val ec = Superstep.pin(kept.select(col("c").as("grp"), col("s").as("id"))
-      .repartition(col("grp")))
-    val wedges = sameGroupPairsSkewSafe(ec, blockThreshold)
+    val ec = Superstep.pin(kept.select(col("c").as("grp"), col("s").as("id")))
+    val wedges = sameGroupPairs(ec)
       .groupBy(col("id1").as("s1"), col("id2").as("s2"))
       .agg(count(lit(1)).as("w"))
     val perPair = wedges

@@ -392,16 +392,16 @@ object Relational {
     columnProfile(Tables(spark, dir).orders)
 
   /** q16: SKEW PROBE — the group-size distribution of a join/agg key,
-    * the operational measurement every salting/blocking knob in this
-    * engine is tuned from (blockThreshold in g1/d3/d9/m6, AQE skew-join
-    * thresholds, bucket counts). One hash-agg per key computes group
+    * the operational measurement the engine's skew settings are tuned
+    * from (AQE skew-join thresholds, which split g1/d3/d9/m6's pair joins
+    * and Louvain's, bucket counts). One hash-agg per key computes group
     * sizes; a second tiny agg folds them into a power-of-two histogram
     * (bucket = ⌊log2 size⌋ via integer bit length — float log2 would
     * drift across engines near exact powers) with group count, row mass
     * and max group per bucket. Run over three representative keys: the
     * fact join key (l_orderkey — well-behaved), the mid-cardinality
     * dimension key (l_suppkey), and a low-cardinality attribute
-    * (documents.lang — the mega-group shape that forces salting).
+    * (documents.lang — the mega-group shape that makes a join skewed).
     *
     * At 100 TB this is a pre-flight scan whose cost is one map-side
     * combined aggregate per key — the cheap measurement that decides

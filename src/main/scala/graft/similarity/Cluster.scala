@@ -119,7 +119,8 @@ object Cluster {
 
   /** Centroid state after `iters` exact Lloyd refinements over a
     * DETERMINISTIC BOUNDED SAMPLE (md5-of-id order, `sampleCap` rows).
-    * Init = the first k CORPUS vectors (n=1 sums) — independent of the
+    * Init = the first k CORPUS vectors in vec_id order (n=1 sums), so a
+    * frame without ids 0..k-1 still seeds k cells — independent of the
     * sample, so the model seed is the same at any cap. Empty cells keep
     * their previous state. Only the k×dim sum matrix reaches the driver,
     * and after the one sampling pass each refinement touches `sampleCap`
@@ -142,8 +143,8 @@ object Cluster {
     */
   def trainExactOn(
       q: DataFrame, sample: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Long], Long)] = {
-    var cents: Seq[(Long, Seq[Long], Long)] = q.filter(col("vec_id") < k)
-      .orderBy("vec_id")
+    var cents: Seq[(Long, Seq[Long], Long)] = q.orderBy("vec_id")
+      .limit(k)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), 1L))
       .toSeq

@@ -244,6 +244,18 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(_.getAs[Long]("query_id")).toSet === (100L until 110L).toSet)
   }
 
+  test("exact k-means seeds k cells from a frame without ids 0..k-1") {
+    import org.apache.spark.sql.functions._
+    val emb = Tables(spark, dir).embeddings.filter(col("vec_id") >= 100)
+    val cents = similarity.Cluster.trainExact(emb, k = 8)
+    // The seed is the frame's first 8 ids in vec_id order, one cell each.
+    assert(cents.map(_._1) === (100L until 108L))
+    val clusters = similarity.Cluster.assignFrozen(emb, cents)
+      .groupBy("cluster").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(!clusters.contains(-1L), s"vectors with no cell: ${clusters.get(-1L)}")
+    assert(clusters.values.sum === emb.count())
+  }
+
   test("each similarity search step is written in one member of src/main/scala") {
     // The ranking tie-break, the cosine cell window, the 512-grid
     // quantizer, the Lloyd (cell, dimension) update and the hyperplane
@@ -344,7 +356,7 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"corpus ${vecs.size} must exceed TrainCap ${similarity.Cluster.TrainCap}")
     val train = vecs.filter(v => trainIds.contains(v._1))
     var cents: Seq[(Long, Array[Long], Long)] =
-      vecs.filter(_._1 < k).map { case (id, q) => (id, q, 1L) }
+      vecs.take(k).map { case (id, q) => (id, q, 1L) }
     def assignOf(rows: Seq[(Long, Array[Long])]): Map[Long, Long] = rows.map { case (id, q) =>
       val best = cents.minBy { case (cell, s, n) =>
         var d = 0L

@@ -47,12 +47,47 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.filter(col("custkey1") >= col("custkey2")).count() === 0)
   }
 
-  test("g1 with blocking forced on emits exactly the plain pair set") {
-    val plain = operators.GraphOps.g1SameGroupPairs(spark, dir).collect().toSet
-    // blockThreshold=1 routes EVERY group through the salted blocked path.
-    val blocked = operators.GraphOps.g1SameGroupPairs(spark, dir, blockThreshold = 1)
-      .collect().toSet
-    assert(blocked === plain)
+  test("sameGroupPairs skew: AQE splits the hot group's join, pair set exact") {
+    val ss = spark
+    import ss.implicits._
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    // One hot group of 600 ids next to 200 cold groups of 5 ids each.
+    val hot = (1L to 600L).map(i => (0L, i))
+    val cold = for (g <- 1L to 200L; j <- 0L until 5L) yield (g, 1000L * g + j)
+    val rows = (hot ++ cold).toDF("grp", "id")
+    def closedForm(ids: Seq[(Long, Long)]) = ids.groupBy(_._1).toSeq.flatMap { case (g, m) =>
+      m.map(_._2).combinations(2).map(p => (g, p.min, p.max))
+    }.toSet
+    var got = Set.empty[(Long, Long, Long)]
+    // Skew thresholds a few kB of shuffle cross, broadcast off, over 8
+    // partitions that AQE does not coalesce: the hot group's partition
+    // is skewed on both sides of the self-join.
+    val plans = TestConf.spreadState(spark) {
+      TestConf.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2") {
+        adaptivePlansDuring {
+          got = operators.GraphOps.sameGroupPairs(rows).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        }
+      }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    val splitKeys = plans.flatMap(nodes)
+      .filter(_.nodeName == "SortMergeJoin(skew=true)")
+      .flatMap(j => "\\[(\\w+)#".r.findFirstMatchIn(j.simpleString).map(_.group(1)))
+      .toSet
+    assert(splitKeys === Set("grp"), s"skew-split joins on $splitKeys over ${plans.size} adaptive plans")
+    assert(got.size === 600 * 599 / 2 + 200 * 10)
+    assert(got === closedForm(hot ++ cold))
+  }
+
+  test("within-group pairs have one formulation: no salted path or size knob in src/main/scala") {
+    val gone = Seq("blockThreshold", "sameGroupPairsSkewSafe", "blockedSameGroupPairs", "derivedBlocks")
+    val offenders = MainSources.lines.filter(l => gone.exists(l.text.contains))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("g1b current pairs carry the till-now property shape") {

@@ -65,20 +65,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expands.isEmpty, s"Expand (count-distinct rewrite) in d14 plan:\n$d14Plan")
   }
 
-  test("blocked pair generation emits exactly the plain self-join pair set") {
-    val t = Tables(spark, dir)
-    val grouped = t.customer.select(col("c_nationkey").as("grp"), col("c_custkey").as("id"))
-    val plain = grouped.as("a")
-      .join(grouped.as("b"), Seq("grp"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("grp"), col("a.id").as("id1"), col("b.id").as("id2"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val blocked = operators.GraphOps.blockedSameGroupPairs(grouped, nBlocks = 4)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(blocked === plain)
-    assert(blocked.nonEmpty)
-  }
-
   test("d4 simhash plans as a shuffle-free projection (sort exchange only)") {
     // The native one-pass fingerprint must keep d4 scan-bound: the only
     // exchange allowed in the physical plan is the range partitioning of
@@ -177,25 +163,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getString(1) === "exact" && r.getLong(2) === probeId)
   }
 
-  test("banded hamming pairs: forced salted routing emits exactly the direct pair set") {
-    // Threshold 1 routes EVERY band through the blocked formulation; the
-    // pair set (and the verified hamming values) must be unchanged — the
-    // skew knob is a plan change, never a result change.
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    val direct = dedup.Dedup.d9SimhashPairs(spark, dir).collect().map(key).toSet
-    val blocked = dedup.Dedup.d9SimhashPairs(spark, dir, blockThreshold = 1)
-      .collect().map(key).toSet
-    assert(blocked === direct)
-    assert(direct.nonEmpty)
-    // Same guarantee for the MinHash tier's candidate stage (exact
-    // (band_id, band_hash) groups, so verified pairs must be identical).
-    val d3Direct = dedup.Dedup.d3MinHashLsh(spark, dir).collect().map(key).toSet
-    val d3Blocked = dedup.Dedup.d3MinHashLsh(spark, dir, blockThreshold = 1)
-      .collect().map(key).toSet
-    assert(d3Blocked === d3Direct)
-    assert(d3Direct.nonEmpty)
-  }
-
   test("hamming sub-band router: pigeonhole split preserves the exact pair set, adopt and revert measured") {
     val ss = spark
     import ss.implicits._
@@ -205,13 +172,13 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dedup.Dedup.subBandShape(3) === ((4, 11, 12)))
     assert(dedup.Dedup.subBandShape(0) === ((1, 45, 45)))
     assert(dedup.Dedup.subSplitViable(6) && dedup.Dedup.subSplitViable(3))
-    // d9/m6's radius: 16 sub-bands of 2 bits NEVER reduce — stays salted.
+    // d9/m6's radius: 16 sub-bands of 2 bits NEVER reduce — stays unsplit.
     assert(!dedup.Dedup.subSplitViable(15))
 
     def pairsOf(fps: Seq[(Long, Long)], subSplit: Boolean, candFactor: Long = 20L) =
       dedup.Dedup.bandedHammingPairs(
         fps.toDF("doc_id", "fp"), "fp", maxHamming = 6,
-        blockThreshold = 100000, subSplit = subSplit, candFactor = candFactor)
+        subSplit = subSplit, candFactor = candFactor)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     // ADOPT branch — a coincidental perceptual bucket: 200 fingerprints
@@ -253,7 +220,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // REVERT branch — a true near-dup mega-cluster (identical
     // fingerprints): every sub-bucket holds the whole cluster, the
     // re-probe measures no reduction, and the router falls back to the
-    // salted path. Pair set again identical (all C(40,2) at hamming 0).
+    // direct band keys. Pair set again identical (all C(40,2) at hamming 0).
     val cluster = (0 until 40).map(i => (i.toLong, 0x0123456789ABCL))
     val cDirect = pairsOf(cluster, subSplit = false)
     val cRouted = pairsOf(cluster, subSplit = true, candFactor = 0L)
@@ -261,7 +228,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cDirect.size === 40 * 39 / 2 && cDirect.forall(_._3 == 0L))
     val revertMax = dedup.Dedup.subSplitKeys(keyedOf(cluster), 6, 0L)
       .agg(max(col("grp"))).head().getLong(0)
-    assert(revertMax < (1L << 17), "mega-cluster must REVERT to the salted path")
+    assert(revertMax < (1L << 17), "mega-cluster must REVERT to the direct band keys")
 
     // Route-independence of the SEMANTICS: a mixed corpus (two
     // identical-fp clusters — one pair of clusters within radius — plus
@@ -566,18 +533,8 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(joins.size === 1, s"expected exactly one shuffled join:\n$plan")
   }
 
-  test("g19: forced salted wedge routing emits exactly the direct butterfly counts") {
-    // Threshold 1 routes EVERY center through the blocked formulation —
-    // counts must be unchanged (the skew knob is a plan change, never a
-    // result change), on the driver data and on a crafted hub graph with
-    // hand-computed counts.
+  test("g19: crafted hub graph butterfly counts, exact and under centerCap") {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
-    val direct = operators.GraphOps.g19ButterflyCount(spark, dir).collect().map(key).toSet
-    val routed = operators.GraphOps
-      .g19ButterflyCount(spark, dir, blockThreshold = 1)
-      .collect().map(key).toSet
-    assert(routed === direct)
-    assert(direct.exists(_._2 > 0))
     // Crafted graph: centers 1..3 on suppliers {10,20}; hub center 4 on
     // {10,20,30}. Wedge (10,20) has w=4 shared centers -> C(4,2)=6
     // butterflies on each of 10 and 20; (10,30)/(20,30) have w=1 -> none.
@@ -587,36 +544,12 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L), (3L, 10L), (3L, 20L),
       (4L, 10L), (4L, 20L), (4L, 30L)).toDF("c", "s")
     val expected = Map(10L -> 6L, 20L -> 6L)
-    for (bt <- Seq(1, 1000)) {
-      val got = operators.GraphOps.butterflyCount(edges, blockThreshold = bt)
-        .collect().map(key).toMap
-      assert(got === expected, s"blockThreshold=$bt")
-    }
+    assert(operators.GraphOps.butterflyCount(edges).collect().map(key).toMap === expected)
     // centerCap is the LOSSY lever (off on the keyed path): cap 2 drops
     // hub center 4 from wedge generation, so w(10,20)=3 -> 3 butterflies.
-    val capped = operators.GraphOps
-      .butterflyCount(edges, blockThreshold = 1000, centerCap = Some(2))
+    val capped = operators.GraphOps.butterflyCount(edges, centerCap = Some(2))
       .collect().map(key).toMap
     assert(capped === Map(10L -> 3L, 20L -> 3L))
-  }
-
-  test("probe-derived salt width: measurement picks the knob, pair set unchanged") {
-    // The knob map itself: one block ~ blockThreshold rows, clamped.
-    assert(operators.GraphOps.derivedBlocks(maxSz = 50, blockThreshold = 100) === 2)
-    assert(operators.GraphOps.derivedBlocks(maxSz = 1000, blockThreshold = 100) === 10)
-    assert(operators.GraphOps.derivedBlocks(maxSz = 1001, blockThreshold = 100) === 11)
-    assert(operators.GraphOps.derivedBlocks(maxSz = 1000000, blockThreshold = 100) === 256)
-    // Forced-degenerate end-to-end: ONE group holding every row with
-    // blockThreshold=1 routes everything through the derived-width
-    // blocked formulation (width = clamp(200/1) = 200 here, not the old
-    // constant 16) — the pair set must be exactly the plain self-join's.
-    val ss = spark
-    import ss.implicits._
-    val rows = (1L to 200L).map(i => (1L, i)).toDF("grp", "id")
-    val auto = operators.GraphOps.sameGroupPairsSkewSafe(rows, blockThreshold = 1)
-      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    val plain = (1L to 200L).flatMap(a => (a + 1 to 200L).map(b => (a, b))).toSet
-    assert(auto === plain)
   }
 
   test("d15: forced band escalation still finds every crafted near-dup chunk pair") {
